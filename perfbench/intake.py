@@ -15,8 +15,10 @@ from vmware_sd_wan_velocloud_bi_intake_spark.plans import velocloud
 
 from . import fleet as fl
 
-# VCOs x enterprises per VCO x edges per enterprise
-SHAPE = (8, 10, 10)
+# VCOs x enterprises per VCO x edges per enterprise. Calls scale with the
+# enterprises (one edge and one event endpoint each), and every call sleeps
+# SERVICE_DELAY_S, so the fleet is wide in edges and narrow in enterprises.
+SHAPE = (8, 2, 25)
 SINK_TIER = {"edge": "silver", "links": "silver", "events": "silver", "customer": "gold"}
 
 
@@ -88,6 +90,9 @@ class Intake:
     def uninstall_tracing(self) -> None:
         for n, fn in self._saved.items():
             setattr(velocloud, n, fn)
+
+    def traced_extras(self) -> tuple[list[str], dict, dict]:
+        return [], {}, {}
 
     def layer_metrics(self, ops: list, groups: dict):
         traced_ops = [o.id for o in ops if o.traced]

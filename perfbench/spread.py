@@ -2,7 +2,7 @@
 
 Usage (from the repository root)::
 
-    python3 perfbench/spread.py --workload stream --seeds 101-110 --seconds 10
+    python3 perfbench/spread.py --workload stream --seeds 101-110 --seconds 18
 
 Runs ``perfbench/run.py`` once per seed, one after the other, and prints per
 run its end-to-end metrics and wall time, then per metric the median and the
@@ -31,7 +31,7 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", required=True, help="e.g. 101-110 or 1,5,9")
-    p.add_argument("--seconds", default="10")
+    p.add_argument("--seconds", default="18")
     args = p.parse_args(argv)
     sys.path.insert(0, ROOT)
     from perfbench.stats import median, quartiles, relative_iqr

@@ -19,14 +19,19 @@ from vmware_sd_wan_velocloud_bi_intake_spark.operators import dedup
 from vmware_sd_wan_velocloud_bi_intake_spark.streaming.neardup import make_near_dup_ingest
 
 from . import corpus
+from .catalog import CatalogProbe
 from .stats import median, quarter_medians
 
 BATCH = 200
 # compaction fires on batch ids divisible by COMPACT_EVERY; a run measures
 # whole cycles of COMPACT_EVERY ops, so each holds the same compaction share
 COMPACT_EVERY = 2
-WARMUP_BATCHES = 1  # run in set-up
-REPLAY_BATCHES = 1  # re-ingested into a fresh index by the replay check
+WARMUP_BATCHES = 1  # live batches run in set-up
+# Set-up first ingests these batches into a separate index of their own,
+# whose survivors the replay check compares with the live index's after the
+# measured ops. The replay needs that ingest anyway; in set-up it also warms
+# the ingest path before the live index sees its first batch.
+REPLAY_BATCHES = 1
 SCHEMA = "doc_id long, text string"
 
 
@@ -58,6 +63,9 @@ class Stream:
         return self.spark.createDataFrame(corpus.batch(self.seed, b, BATCH), SCHEMA)
 
     def setup(self) -> None:
+        replay = make_near_dup_ingest(*self._dirs("replay"), compact_summary_every=COMPACT_EVERY)
+        for b in range(REPLAY_BATCHES):
+            replay(self._batch_df(b), b)
         for b in range(WARMUP_BATCHES):
             self.ingest(self._batch_df(b), b)
 
@@ -81,11 +89,8 @@ class Stream:
         return corpus.survivor_issues(self.seed, n_docs, self._survivors(self.surv_dir))
 
     def replay_check(self) -> tuple[list[str], str]:
-        """Re-ingest the first batches into a fresh index: same survivors."""
-        index_dir, surv_dir = self._dirs("replay")
-        ingest = make_near_dup_ingest(index_dir, surv_dir, compact_summary_every=COMPACT_EVERY)
-        for b in range(REPLAY_BATCHES):
-            ingest(self._batch_df(b), b)
+        """The first batches, ingested into a fresh index: same survivors."""
+        _, surv_dir = self._dirs("replay")
         limit = REPLAY_BATCHES * BATCH
         live = self._survivors(self.surv_dir)
         live_ids = sorted(int(x) for x in live["doc_id"] if x < limit)
@@ -104,6 +109,7 @@ class Stream:
         return {
             "batch_docs": BATCH,
             "warmup_batches": WARMUP_BATCHES,
+            "replay_batches": REPLAY_BATCHES,
             "compact_summary_every": COMPACT_EVERY,
             "exact_share": corpus.EXACT_SHARE,
             "near_share": corpus.NEAR_SHARE,
@@ -117,6 +123,10 @@ class Stream:
 
     def uninstall_tracing(self) -> None:
         pass
+
+    def traced_extras(self) -> tuple[list[str], dict, dict]:
+        """The catalog probe: the ``queries`` layer, after the measured ops."""
+        return CatalogProbe(self.spark, self.seed, self.work_dir, self.tracer).run()
 
     def side_probes(self, op: str) -> None:
         """Time the dedup operators on the next batch, outside the op.

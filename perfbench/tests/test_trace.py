@@ -86,3 +86,16 @@ def test_union_of_intervals():
     assert eventlog.union_s([(0, 2), (1, 3), (5, 6)]) == 4
     assert eventlog.union_s([(0, 10), (2, 3)]) == 10
     assert eventlog.union_s([]) == 0
+
+
+def test_overhead_counts_the_tracer_not_the_traced_work():
+    import time
+
+    t = Tracer(FakeSc(), enabled=True)
+    with t.span("op", group="op1", op="op1"):
+        time.sleep(0.05)
+    assert 0 < t.overhead_s < 0.01
+    off = Tracer(FakeSc(), enabled=False)
+    with off.span("op", group="op1", op="op1"):
+        pass
+    assert off.overhead_s == 0

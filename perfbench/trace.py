@@ -5,6 +5,10 @@ op share its ``op`` id. Spans stay in memory and are written out once, at
 the end of the run. Entering a span that names a ``group`` also tags the
 Spark jobs started inside it with that job group, so the event log can be
 folded per layer call. A disabled tracer records nothing and sets no group.
+
+The tracer times its own work (span bookkeeping and the job-group calls
+into the JVM) in :attr:`Tracer.overhead_s`; that is the tracing overhead a
+traced op pays on top of an untraced one.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ class Tracer:
         self.enabled = enabled
         self.spans: list[Span] = []
         self._stack: list[_Open] = []
+        self.overhead_s = 0.0
 
     def _set_group(self, group: str | None) -> None:
         if self.sc is None:
@@ -57,6 +62,7 @@ class Tracer:
         if not self.enabled:
             yield
             return
+        t0 = time.perf_counter()
         parent = self._stack[-1] if self._stack else None
         if op is None and parent is not None:
             op = parent.op
@@ -65,13 +71,16 @@ class Tracer:
         self._stack.append(_Open(len(self.spans) + len(self._stack), op, group))
         self._set_group(group)
         start = time.time()
+        self.overhead_s += time.perf_counter() - t0
         try:
             yield
         finally:
+            t1 = time.perf_counter()
             end = time.time()
             sid = self._stack.pop().id
             self.spans.append(Span(sid, name, start, end, parent and parent.id, op, attrs))
             self._set_group(parent.group if parent else None)
+            self.overhead_s += time.perf_counter() - t1
 
     def current_op(self) -> str | None:
         return self._stack[-1].op if self._stack else None
