@@ -5,7 +5,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from perfbench import catalog, tables
+from perfbench import catalog, run, tables
 from vmware_sd_wan_velocloud_bi_intake_spark.queries import all_queries
 from vmware_sd_wan_velocloud_bi_intake_spark.queries.base import Q
 from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import TABLE_NAMES
@@ -64,6 +64,7 @@ def test_probe_takes_one_query_per_module_each_with_an_oracle():
     mods = [catalog.module_of(cat[n]) for n in catalog.QUERIES]
     assert sorted(mods) == sorted(catalog.MODULES)
     assert all(cat[n].oracle for n in catalog.QUERIES)
+    assert {f"queries.{m}_s" for m in catalog.MODULES} <= set(run.PER_LAYER)
 
 
 class _Frame:
