@@ -116,7 +116,7 @@ def test_streamed_semdedup_matches_replay_on_random_corpora(
     assert srows == orows
 
 
-# slow tier (r14 re-tier, VERDICT r13 #2): degenerate-split replication: the two-phase SQL replay + random-corpus[11] keep the semdedup oracle class in the default tier
+# slow tier (r14 re-tier, VERDICT r13 #2): degenerate-split replication: test_streamed_semdedup_matches_two_phase_sql_replay keeps the semdedup oracle class in the default tier
 @pytest.mark.slow
 def test_degenerate_split_single_batch_agrees(spark, tmp_path):
     """No vec_id clears the midpoint: ONE file → one micro-batch → the

@@ -8,6 +8,7 @@ from __future__ import annotations
 from vmware_sd_wan_velocloud_bi_intake_spark.queries.base import (
     _STAGED_CHECKPOINTS,
     stage_checkpoint,
+    stage_checkpoints_concurrent,
 )
 
 
@@ -45,3 +46,8 @@ def test_vehicle_reinvocation_releases_prior_checkpoint(spark, sf_smoke):
     assert out2.count() == n1
     # the rebuild staged a fresh checkpoint AND released the prior one
     assert _n_cached(spark) == cached_after_first
+
+
+def test_stage_checkpoints_concurrent_empty_list():
+    # nothing to stage is not an error (a 0-worker pool would raise)
+    assert stage_checkpoints_concurrent([]) == []

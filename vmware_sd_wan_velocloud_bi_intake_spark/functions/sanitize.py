@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-NAME_PATTERN = "^[A-Za-z0-9_ -]{1,60}$"
 POSTAL_REJECT_PATTERN = "[^A-Za-z0-9_ .-]"
 INVALID = "Invalid"
 

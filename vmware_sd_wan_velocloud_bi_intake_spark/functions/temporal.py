@@ -7,8 +7,9 @@ canonical ``TimestampType`` and derives the rest as expressions:
 - F9 epoch-ms conversions (reference ``powerbi_main_fun.py:1700-1706``).
 - F10 month-start truncation (reference ``powerbi_main_fun.py:886-887``).
 - F11 day-key (reference ``powerbi_main_fun.py:1823``).
-- F12 date diff in days + %%6 cadence (reference ``powerbi_main_fun.py:1117-1122``,
-  ``:439``).
+- F12 date diff in days (reference ``powerbi_main_fun.py:1117-1122``, ``:439``);
+  its %%6 cadence is the creation-day term of
+  ``streaming.incremental.staleness_filter``.
 - F13 minutes-since recency predicate (reference ``powerbi_main_fun.py:412-416``).
 """
 
@@ -35,14 +36,6 @@ def month_key(ts: Column | str) -> Column:
 def days_between(end: Column, start: Column) -> Column:
     """Whole-day difference end - start."""
     return F.datediff(end, start)
-
-
-def cadence_match(anchor: Column, asof: Column, every_n_days: int) -> Column:
-    """True when (asof - anchor) in days is a multiple of ``every_n_days``.
-
-    Mirrors the reference's 6-day secondary refresh cadence.
-    """
-    return F.pmod(F.datediff(asof, anchor), F.lit(every_n_days)) == 0
 
 
 def epoch_ms_to_ts(col: Column | str) -> Column:

@@ -3,7 +3,6 @@ from . import (
     dedup,
     enrichment,
     multimodal,
-    rollups,
     sequences,
     similarity,
     text,
@@ -14,7 +13,6 @@ __all__ = [
     "dedup",
     "enrichment",
     "multimodal",
-    "rollups",
     "sequences",
     "similarity",
     "text",

@@ -1,12 +1,10 @@
-"""Array / higher-order-function operators (SURVEY.md §2.4 A10–A13, §2.2 P8).
+"""Array operators (SURVEY.md §2.4 A11).
 
-The reference manipulates per-link numeric sample arrays with index loops
-(element-wise sums across links ``powerbi_main_fun.py:1957-1968``, null→0
-fill ``:1959-1961``, top-k from the summed series ``:1970-1978``) and selects
-config-module structs by name from arrays (``:1215-1218``). Spark expresses
-all of it with higher-order functions that run inside codegen — ``zip_with``,
-``transform``, ``aggregate``, ``filter`` — with decimal accumulators so fold
-results are exact and order-stable.
+The reference takes the top-1/5/10 of a summed per-link sample series with
+index loops (``powerbi_main_fun.py:1970-1978``). Here the k-th highest element
+is one ``array_sort`` + index expression that runs inside codegen. The
+element-wise series sum and null→0 fill it reads (A10/F17, ``:1957-1968``)
+are ``zip_with`` + ``coalesce`` inline in ``queries/nested.a10_series_zipsum``.
 """
 
 from __future__ import annotations
@@ -15,55 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def fill_nulls_zero(arr: Column) -> Column:
-    """F17: ``[0 if v is None else v for v in xs]`` as a transform."""
-    return F.transform(arr, lambda x: F.coalesce(x, F.lit(0).cast("decimal(18,2)")))
-
-
-def elementwise_sum(a: Column, b: Column) -> Column:
-    """A10: element-wise sum of two sample arrays, nulls as zero."""
-    zero = F.lit(0).cast("decimal(18,2)")
-    return F.zip_with(a, b, lambda x, y: F.coalesce(x, zero) + F.coalesce(y, zero))
-
-
-def fold_elementwise_sum(arrays: Column, length: int) -> Column:
-    """Element-wise sum across an array of sample arrays (A10 over N links).
-
-    ``aggregate`` folds with a zero-array accumulator; decimal addition makes
-    the fold exact, so the (nondeterministic) collect order of the outer array
-    cannot change the result.
-    """
-    zero_arr = F.array_repeat(F.lit(0).cast("decimal(28,2)"), length)
-    return F.aggregate(
-        arrays,
-        zero_arr,
-        lambda acc, arr: F.zip_with(
-            acc,
-            arr,
-            # re-cast each step: decimal addition widens precision by 1 and
-            # would otherwise break the fold's accumulator-type contract
-            lambda x, y: (
-                x + F.coalesce(y.cast("decimal(28,2)"), F.lit(0).cast("decimal(28,2)"))
-            ).cast("decimal(28,2)"),
-        ),
-    )
-
-
 def kth_highest(arr: Column, k: int) -> Column:
     """A11: k-th highest element of a numeric array (1-based); NULL if the
     array has fewer than k elements."""
     return F.try_element_at(F.reverse(F.array_sort(arr)), F.lit(k))
-
-
-def count_equal(arr: Column, value) -> Column:
-    """A13: number of elements equal to ``value``."""
-    return F.size(F.filter(arr, lambda x: x == F.lit(value)))
-
-
-def select_named_struct(arr: Column, name_field: str, name: str) -> Column:
-    """P8/P9: first struct in an array whose ``name_field`` equals ``name``.
-
-    The reference scans ``modules[]`` for ``name == 'deviceSettings'`` etc.
-    (powerbi_main_fun.py:1215-1218); here it is an array ``filter`` + index.
-    """
-    return F.element_at(F.filter(arr, lambda m: m[name_field] == F.lit(name)), 1)

@@ -461,13 +461,6 @@ def simhash_expr(sh: Column, bits: int) -> Column:
     )
 
 
-def simhash_table(df: DataFrame, doc_id: str, text: str, bits: int = 32, shingle_n: int = 2) -> DataFrame:
-    """(doc_id, simhash) per-bit majority fingerprint (narrow, no shuffle)."""
-    return df.select(
-        F.col(doc_id).alias("doc_id"), shingles(F.col(text), shingle_n).alias("_sh")
-    ).select("doc_id", simhash_expr(F.col("_sh"), bits).alias("simhash"))
-
-
 def contamination_ratios(
     suspects: DataFrame,
     blocklist: DataFrame,

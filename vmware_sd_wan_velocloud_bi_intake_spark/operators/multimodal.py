@@ -38,17 +38,6 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("codec", T.StringType()),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, n_bytes long, byte_mean double, byte_hist array<long>"

@@ -1,16 +1,19 @@
-"""Sequence / window analytics (SURVEY.md §2.5 W1–W5).
+"""Sequence / window analytics (SURVEY.md §2.5 W1–W4).
 
 The reference's most algorithmically interesting code is its QoE time-series
 loops: brownout/blackout transition detection (``powerbi_main_fun.py:1709-1775``),
-run-length extension of degraded states, tumbling-hour minimum scores
-(``powerbi_main_fun.py:1778-1804``), and the 30-day idempotent daily backfill
-(``powerbi_main_fun.py:1890-1921``). Those imperative loops are re-derived here
+run-length extension of degraded states, and tumbling-hour minimum scores
+(``powerbi_main_fun.py:1778-1804``). Those imperative loops are re-derived here
 as their mathematical specs over ordered partitions:
 
-- transition events  := ``state[t] == target AND state[t-1] == from`` (lag)
-- run lengths        := gaps-and-islands (difference of two row_numbers)
+- islands            := gaps-and-islands (difference of two row_numbers),
+  each with its run length and predecessor state (lag)
+- transition events  := islands of ``target`` state whose predecessor is
+  ``from``
 - tumbling windows   := ``date_trunc`` grouping
-- idempotent backfill:= expected-key grid ANTI JOIN existing keys
+
+The 30-day idempotent daily backfill (W5, ``powerbi_main_fun.py:1890-1921``)
+is the ``w05_backfill_missing`` catalog query (``queries/events.py``).
 
 Scale notes: every operator here is a single shuffle on the partition key
 (entity id) followed by in-partition window evaluation — the natural layout
@@ -26,9 +29,6 @@ from pyspark.sql import functions as F
 # QoE quality-state codes from the reference (powerbi_main_fun.py:1813-1846):
 # 0=black, 2=red, 3=yellow, 4=green.
 STATE_BLACK, STATE_RED, STATE_YELLOW, STATE_GREEN = 0, 2, 3, 4
-
-# One QoE sample ≈ 7.12 minutes (200 samples / 24 h; powerbi_main_fun.py:1875).
-SAMPLE_MINUTES_X100 = 712
 
 
 def discretize_state(value: Column, thresholds=(50.0, 100.0, 150.0)) -> Column:
@@ -50,82 +50,6 @@ def with_prev_state(
     """Attach ``prev_state`` via lag over (partition by key, ordered)."""
     w = Window.partitionBy(key).orderBy(*order)
     return df.withColumn("prev_state", F.lag(F.col(state)).over(w))
-
-
-def transition_counts(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    state: str = "state",
-) -> DataFrame:
-    """Count brownout and blackout transitions per key.
-
-    Brownout (W1, reference CalculateBrownouts powerbi_main_fun.py:1709-1741):
-    a green→red transition — ``prev == 4 AND cur == 2``.
-    Blackout (W2, reference CalculateBlackouts powerbi_main_fun.py:1744-1775,
-    summed over start-states at :1855-1879): any entry into state 0 —
-    ``cur == 0 AND prev != 0``.
-    """
-    staged = with_prev_state(df, key, order, state)
-    s, p = F.col(state), F.col("prev_state")
-    return staged.groupBy(key).agg(
-        F.sum(
-            F.when((s == STATE_RED) & (p == STATE_GREEN), 1).otherwise(0)
-        ).alias("brownouts"),
-        F.sum(
-            F.when((s == STATE_BLACK) & p.isNotNull() & (p != STATE_BLACK), 1).otherwise(0)
-        ).alias("blackouts"),
-    )
-
-
-def run_lengths(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    state: str = "state",
-) -> DataFrame:
-    """Gaps-and-islands run-length table: one row per (key, island).
-
-    W3 (reference powerbi_main_fun.py:1727-1735): consecutive same-state
-    samples form an island; ``island_id = row_number(all) - row_number(state)``
-    identifies it without any iteration.
-
-    Returns columns: key, state, island_id, run_len.
-    """
-    w_all = Window.partitionBy(key).orderBy(*order)
-    w_state = Window.partitionBy(key, state).orderBy(*order)
-    islands = df.withColumn(
-        "island_id", F.row_number().over(w_all) - F.row_number().over(w_state)
-    )
-    return islands.groupBy(key, state, "island_id").agg(
-        F.count("*").alias("run_len")
-    )
-
-
-def degraded_run_summary(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    state: str = "state",
-    degraded_state: int = STATE_RED,
-) -> DataFrame:
-    """Per-key summary of degraded-state runs (count, longest, total samples).
-
-    ``duration_min_x100`` carries the reference's 7.12-minute sample duration
-    (powerbi_main_fun.py:1875-1882) as an exact integer (×100) so downstream
-    consumers choose their own float formatting.
-    """
-    runs = run_lengths(df, key, order, state).filter(
-        F.col(state) == F.lit(degraded_state)
-    )
-    return runs.groupBy(key).agg(
-        F.count("*").alias("n_runs"),
-        F.max("run_len").alias("max_run_len"),
-        F.sum("run_len").cast("long").alias("total_samples"),
-        (F.max("run_len") * F.lit(SAMPLE_MINUTES_X100)).cast("long").alias(
-            "max_run_min_x100"
-        ),
-    )
 
 
 def island_table(
@@ -240,33 +164,3 @@ def tumbling_min_score(
         F.count("*").alias("n_hours"),
     )
 
-
-def backfill_missing_keys(
-    entities: DataFrame,
-    existing: DataFrame,
-    entity_key: str,
-    date_col: str,
-    start,
-    end,
-) -> DataFrame:
-    """Idempotent daily-backfill key set (W5/T3).
-
-    The reference loops 30 days per edge and skips days already present
-    (powerbi_main_fun.py:1890-1921). Set-oriented form: build the expected
-    (entity, day) grid with ``sequence`` × ``explode`` and ANTI JOIN the
-    already-materialized day keys. The anti join shuffles on the composite
-    key; the grid side is generated, never materialized on the driver.
-    """
-    grid = (
-        entities.select(entity_key)
-        .distinct()
-        .withColumn(
-            date_col,
-            F.explode(F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"))),
-        )
-    )
-    return grid.join(
-        existing.select(entity_key, date_col).distinct(),
-        on=[entity_key, date_col],
-        how="left_anti",
-    )

@@ -347,7 +347,6 @@ def _assign_cells(
     base: DataFrame,
     cents: DataFrame,
     round_decimals: int | None = None,
-    kernel: str | None = None,
 ) -> DataFrame:
     """Argmax-cosine cell per vector via map-side partial aggregation.
 
@@ -365,9 +364,8 @@ def _assign_cells(
     differences in dot-product accumulation can no longer flip a cell),
     which is what lets a TRAINED index stay oracle-hash-checkable.
 
-    ``kernel``: the QUANTIZED path defaults to an Arrow-batched numpy
-    matmul — the 64× scale point measured the expression form's candidate
-    fold at ~8 µs/pair (n × n_cells interpreted lambda evaluations
+    The QUANTIZED path runs an Arrow-batched numpy matmul — the 64×
+    scale point measured the expression form's candidate fold at ~8 µs/pair (n × n_cells interpreted lambda evaluations
     dominated the whole IVF family's wall clock), while BLAS pays ~ns,
     and :func:`spark_round_array` keeps the rounded cosines bit-identical
     so the argmax (ties → lowest cell, argmax-first on a cell-sorted
@@ -379,9 +377,7 @@ def _assign_cells(
 
     Returns (vid, cell, v, nrm).
     """
-    if kernel is None:
-        kernel = "numpy" if round_decimals is not None else "expr"
-    if kernel == "numpy":
+    if round_decimals is not None:
         import numpy as np
 
         rows = sorted(
@@ -603,7 +599,6 @@ def semantic_dedup_survivors(
     train_iters: int = 4,
     round_decimals: int | None = 6,
     cents: DataFrame | None = None,
-    kernel: str = "numpy",
 ) -> DataFrame:
     """SemDeDup semantic deduplication (Abbas et al. 2023, arXiv:2303.09540).
 
@@ -617,9 +612,8 @@ def semantic_dedup_survivors(
     Scale shape — identical to the IVF probe (the pair space is n²/cells,
     ≈ linear with ⌈√n⌉ cells; raise ``n_cells`` for tighter clusters on a
     bigger corpus): one broadcast-assign pass, ONE cell-keyed shuffle into
-    in-array pair expansion (the :func:`_cell_topk` pattern — vectors ride
-    with their ids, no join back to the corpus), one distinct on the loser
-    ids, one anti-join. No all-pairs stage anywhere.
+    a per-cell pandas pass (vectors ride with their ids, no join back to
+    the corpus). No all-pairs stage anywhere.
 
     With ``round_decimals`` (default 6) both the assignment cosines and the
     pair cosines round before any comparison, so — paired with quantized
@@ -656,89 +650,58 @@ def semantic_dedup_survivors(
     scored = assigned.join(F.broadcast(cents), "cell").select(
         "cell", "vid", "v", "nrm", ccos.alias("ccos")
     )
-    if kernel == "numpy":
-        # The in-cell pair space is n²/cells ≈ n·√n with ⌈√n⌉ cells; the
-        # JVM fold pays ~8 µs per pair (interpreted lambda per element —
-        # the 64× scale point measured ratio 287 on the expression form),
-        # while a per-cell BLAS matmul pays ~ns. Dense per-row linear
-        # algebra is ground rule 1's explicit carve-out, and
-        # spark_round_array keeps the rounded pair cosines bit-identical
-        # to the expression form, so the oracle contract is unchanged.
-        # Memory is chunked: the score matrix never exceeds ~32 MB.
-        rd = round_decimals
-        tau = float(threshold)
-        out_schema = f"{vec_id} long, cell long, centroid_cos double"
+    # The in-cell pair space is n²/cells ≈ n·√n with ⌈√n⌉ cells; a JVM
+    # higher-order-function fold pays ~8 µs per pair (interpreted lambda
+    # per element — the 64× scale point measured ratio 287 on that form),
+    # while a per-cell BLAS matmul pays ~ns. Dense per-row linear algebra
+    # is ground rule 1's explicit carve-out, and spark_round_array rounds
+    # the pair cosines bit-identically to Spark's ``round``, so the SQL
+    # oracle replays the survivor set exactly. Members are ordered by
+    # (ccos, vid): member y survives iff NO earlier member (farther from
+    # the centroid, or same distance with a lower id) clears the pair
+    # threshold against it. Memory is chunked: the score matrix never
+    # exceeds ~32 MB.
+    rd = round_decimals
+    tau = float(threshold)
+    out_schema = f"{vec_id} long, cell long, centroid_cos double"
 
-        def cell_survivors(pdf):
-            import numpy as np
-            import pandas as pd
+    def cell_survivors(pdf):
+        import numpy as np
+        import pandas as pd
 
-            m = len(pdf)
-            keep_cols = pd.DataFrame(
-                {
-                    vec_id: pdf["vid"].to_numpy(),
-                    "cell": pdf["cell"].to_numpy(),
-                    "centroid_cos": pdf["ccos"].to_numpy(),
-                }
-            )
-            if m <= 1:
-                return keep_cols
-            order = np.lexsort(
-                (pdf["vid"].to_numpy(), pdf["ccos"].to_numpy())
-            )
-            V = np.stack(pdf["v"].to_numpy())[order]
-            nrm = np.maximum(pdf["nrm"].to_numpy()[order], 1e-12)
-            Xn = V / nrm[:, None]
-            loser = np.zeros(m, dtype=bool)
-            chunk = max(1, 4_000_000 // m)
-            for s in range(1, m, chunk):
-                e = min(s + chunk, m)
-                sims = Xn[:e] @ Xn[s:e].T  # (e, c)
-                if rd is not None:
-                    sims = spark_round_array(sims, rd)
-                hit = sims >= tau
-                # only STRICTLY EARLIER members count against column j
-                rows = np.arange(e)[:, None]
-                cols = np.arange(s, e)[None, :]
-                loser[s:e] = (hit & (rows < cols)).any(axis=0)
-            keep = np.sort(order[~loser])  # positional, original row order
-            return keep_cols.iloc[keep]
-
-        return scored.groupBy("cell").applyInPandas(
-            cell_survivors, schema=out_schema
+        m = len(pdf)
+        keep_cols = pd.DataFrame(
+            {
+                vec_id: pdf["vid"].to_numpy(),
+                "cell": pdf["cell"].to_numpy(),
+                "centroid_cos": pdf["ccos"].to_numpy(),
+            }
         )
+        if m <= 1:
+            return keep_cols
+        order = np.lexsort(
+            (pdf["vid"].to_numpy(), pdf["ccos"].to_numpy())
+        )
+        V = np.stack(pdf["v"].to_numpy())[order]
+        nrm = np.maximum(pdf["nrm"].to_numpy()[order], 1e-12)
+        Xn = V / nrm[:, None]
+        loser = np.zeros(m, dtype=bool)
+        chunk = max(1, 4_000_000 // m)
+        for s in range(1, m, chunk):
+            e = min(s + chunk, m)
+            sims = Xn[:e] @ Xn[s:e].T  # (e, c)
+            if rd is not None:
+                sims = spark_round_array(sims, rd)
+            hit = sims >= tau
+            # only STRICTLY EARLIER members count against column j
+            rows = np.arange(e)[:, None]
+            cols = np.arange(s, e)[None, :]
+            loser[s:e] = (hit & (rows < cols)).any(axis=0)
+        keep = np.sort(order[~loser])  # positional, original row order
+        return keep_cols.iloc[keep]
 
-    groups = scored.groupBy("cell").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ccos", "vid", "v", "nrm"))
-        ).alias("ms")
-    )
-    ms = F.col("ms")
-
-    def pair_cos(x, y):
-        c = dot(x["v"], y["v"]) / (x["nrm"] * y["nrm"])
-        return F.round(c, round_decimals) if round_decimals is not None else c
-
-    # ms ascends by (ccos, vid); member y survives iff NO earlier member x
-    # (farther from the centroid, or same distance with a lower id) clears
-    # the pair threshold against it. Emitting survivors in the same
-    # in-array pass avoids the losers-distinct + anti-join form, which
-    # would recompute the whole assignment on the anti-join side (or force
-    # a corpus-sized persist); singleton cells pass trivially.
-    surv_arr = F.filter(
-        ms,
-        lambda y: ~F.exists(
-            ms,
-            lambda x: (
-                F.struct(x["ccos"], x["vid"]) < F.struct(y["ccos"], y["vid"])
-            )
-            & (pair_cos(x, y) >= F.lit(threshold)),
-        ),
-    )
-    return groups.select("cell", F.explode(surv_arr).alias("s")).select(
-        F.col("s.vid").alias(vec_id),
-        "cell",
-        F.col("s.ccos").alias("centroid_cos"),
+    return scored.groupBy("cell").applyInPandas(
+        cell_survivors, schema=out_schema
     )
 
 
@@ -1147,21 +1110,6 @@ def _hyperplane(plane: int, dim: int) -> float:
 
     h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()
     return (int(h[:8], 16) / float(0xFFFFFFFF)) * 2.0 - 1.0
-
-
-def srp_signature(embedding: Column, dims: int, planes: int = 16) -> Column:
-    """Signed-random-projection bit signature as a bigint.
-
-    bit_p = 1 iff ⟨v, h_p⟩ ≥ 0 with h_p a fixed pseudo-random hyperplane.
-    The plane matrix is generated as literals (constant-folded; no shuffle,
-    no broadcast variable needed at this size).
-    """
-    acc = F.lit(0).cast("long")
-    for p in range(planes):
-        plane = F.array(*[F.lit(_hyperplane(p, d)) for d in range(dims)])
-        proj = dot(embedding, plane)
-        acc = acc + F.when(proj >= 0, F.lit(2 ** p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return acc
 
 
 def srp_band_keys(embedding: Column, dims: int, planes: int, bands: int) -> Column:

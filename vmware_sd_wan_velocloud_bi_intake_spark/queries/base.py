@@ -114,8 +114,8 @@ def stage_checkpoints_concurrent(
 
     from pyspark import inheritable_thread_target
 
-    if len(named) == 1:
-        return [stage_checkpoint(named[0][1], named[0][0])]
+    if len(named) <= 1:  # nothing to overlap (and no pool of 0 workers)
+        return [stage_checkpoint(d, k) for k, d in named]
     with ThreadPoolExecutor(max_workers=len(named)) as pool:
         futs = [
             pool.submit(

@@ -34,10 +34,9 @@ def _with_state(events: DataFrame) -> DataFrame:
 # W1+W2+W3+F15 composite: the reference's full QoE sequence suite per entity
 # in one vehicle — lag-based transition counts (the W1/W2 literal form),
 # island-predecessor outage counts + durations (the faithful loop
-# semantics), and degraded-state run-length stats (gaps-and-islands).
-# Consolidates the former w01_transitions / w03_runlengths entries: same
-# operators (transition_counts / qoe_outage_summary / run_lengths), one
-# catalog row. Three per-user aggregates share one shuffle key.
+# semantics), and degraded-state run-length stats (gaps-and-islands), all
+# from one ``sequences.island_table`` pass. Consolidates the former
+# w01_transitions / w03_runlengths entries into one catalog row.
 # Reference: CalculateBrownouts/Blackouts powerbi_main_fun.py:1709-1775,
 # summation over start-states :1855-1879, 7.12-min samples :1875-1882.
 # --------------------------------------------------------------------------

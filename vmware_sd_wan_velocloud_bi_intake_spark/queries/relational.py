@@ -137,9 +137,9 @@ def a06_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     flag = lambda pred: F.max(F.when(pred, 1).otherwise(0))
-    # counts + any-child flags in ONE groupBy (flag_rollup semantics inlined:
-    # a separate flags aggregate would scan and shuffle orders twice just to
-    # join it back on the same key)
+    # counts + any-child flags (max of a 0/1 predicate == BOOL_OR) in ONE
+    # groupBy: a separate flags aggregate would scan and shuffle orders
+    # twice just to join it back on the same key
     rolled = orders.groupBy("o_custkey").agg(
         F.count("*").alias("n_orders"),
         F.sum(dec("o_totalprice")).cast("double").alias("total_spend"),

@@ -28,8 +28,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Parquet scans parallelize at row-group granularity, and the fixture files
 # are written as a SINGLE row group each — so everything Catalyst fuses into
 # the scan stage (shingling, per-row hashing, array folds) serializes into

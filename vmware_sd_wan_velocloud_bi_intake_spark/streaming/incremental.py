@@ -7,7 +7,8 @@ work shedding. Set-oriented restatements, all single-shuffle:
 - staleness gate  = join batch ⨝ state snapshot, filter on lastUpdated age /
   creation-day cadence / force flag. The state snapshot replaces N point
   queries with one broadcast (small) or shuffle (large) join.
-- backfill        = ``operators.sequences.backfill_missing_keys`` (anti-join).
+- backfill        = the ``w05_backfill_missing`` catalog query (expected-key
+  grid anti-join, ``queries/events.py``).
 - work shedding   = deterministic hash-bucket filter (stable across runs,
   unlike the reference's ``random()`` — see O4 in the catalog).
 """
