@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -24,16 +25,23 @@ from vmware_sd_wan_velocloud_bi_intake_spark.queries import all_queries
 from vmware_sd_wan_velocloud_bi_intake_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# min-of-N: this box shows bursty multi-second CPU-steal spikes; interleaved
-# passes (whole catalog per pass, so a burst hits different queries each
-# time) give a stable minimum. Default raised 3→5 in round 6 (VERDICT r5
-# "Next round" #2): r4↔r5 showed ±40% uniform host drift that min-of-3
-# could not fully reject.
+# min-of-N: interleaved passes (whole catalog per pass, so a CPU-steal
+# burst hits different queries each time) give a stable minimum
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+
+# per-pass sentinel at or under this is a clean-host pass: truly clean
+# passes on this box probe ~0.67-0.72 s, and probes at 0.76 already came
+# with catalog walls ~20% over a clean run's (SCALE.md)
+CLEAN_HOST_SENTINEL_BAND = 0.75
+
+# the published bar: 2× the r2 catalog envelope at sf0.1 (25.35 s →
+# 50.7 s); SCALE.md carries the envelope → composition ledger
+R2_ENVELOPE_SF01 = 25.35
+BAR_MULTIPLE = 2.0
 
 
 def _sentinel_once(spark) -> float:
-    """One un-minimized sentinel execution (the drift-trace probe)."""
+    """One un-minimized sentinel execution (the per-pass probe)."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()
@@ -50,196 +58,26 @@ def _sentinel_once(spark) -> float:
 
 def sentinel_sec(spark) -> float:
     """Fixed-cost host-speed probe: a deterministic all-core md5 fold whose
-    plan never changes across rounds. Recorded in the bench JSON so
-    cross-round comparisons can normalize host drift (same-box contention
-    moved entire catalogs ±40% between rounds 4 and 5) instead of arguing
-    about it: query_r6 / sentinel_r6 vs query_r5 / sentinel_r5 cancels the
-    common factor. min-of-3, same noise defense as the queries."""
+    plan never changes across rounds, so query / sentinel ratios cancel
+    same-box host drift between runs. min-of-3, same noise defense as the
+    queries."""
     return round(min(_sentinel_once(spark) for _ in range(3)), 3)
 
 
-def _load_prev_bench(bench_dir: str | None = None) -> dict | None:
-    """Latest BENCH_r{N}.json next to this file (or in ``bench_dir``),
-    reduced to {"round", "queries", "flag_sentinel_sec", "sf"}. Driver
-    bench artifacts wrap the bench stdout in a "tail" field; the JSON
-    line is the last '{"metric"...' in it. Returns None when no prior
-    round or the artifact is unparseable (first round, stripped
-    checkout)."""
-    import glob
-    import re
-
-    here = bench_dir or os.path.dirname(os.path.abspath(__file__))
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = p, int(m.group(1))
-    if best is None:
-        return None
-    try:
-        with open(best) as f:
-            outer = json.load(f)
-        inner = outer if "queries" in outer else None
-        if inner is None and isinstance(outer.get("tail"), str):
-            starts = [
-                m.start() for m in re.finditer(r'\{"metric"', outer["tail"])
-            ]
-            for s in reversed(starts):
-                try:
-                    inner = json.loads(outer["tail"][s:].splitlines()[0])
-                    break
-                except Exception:
-                    continue
-        if not inner or "queries" not in inner or "sentinel_sec" not in inner:
-            return None
-        if inner.get("drift_retries"):
-            # a drift-retried round is not a stable baseline: its pass
-            # medians include slow-window probes while its query MINIMA
-            # come from the fast passes, so every ratio against it would
-            # be inflated by the prior round's drift factor — exactly the
-            # false-flag mode the median statistic exists to prevent,
-            # reintroduced from the prev side. Skip auto-A/B that round.
-            return None
-        import statistics
-
-        # the FLAG statistic uses the median of the per-pass sentinels
-        # (host speed DURING the timed passes) when available — the
-        # start probe is a 3-shot minimum that can catch a momentarily
-        # fast window and make every normalized ratio look regressed
-        # (observed r11: start 0.53 vs pass median 0.81 → 42/50 false
-        # flags). Falls back to the start probe for pre-r10 artifacts.
-        per_pass = inner.get("sentinel_per_pass") or []
-        return {
-            "round": best_n,
-            "queries": inner["queries"],
-            # named for what it is: the FLAG-rule normalizer, not the
-            # round's published start-probe sentinel
-            "flag_sentinel_sec": statistics.median(per_pass)
-            if per_pass
-            else inner["sentinel_sec"],
-            "sf": inner.get("sf"),
-        }
-    except Exception:
-        return None
-
-
-# a per-query sentinel-normalized r-over-r ratio above this triggers an
-# automatic interleaved A/B (tools/ab_check.py discipline) whose table is
-# published in the bench JSON — VERDICT r10 "Next round" #7
-AB_FLAG_RATIO = 1.3
-
-# r13: the sentinel-normalized trigger over-fires on probe-clean/wall-hot
-# windows (both r13 previews: 4–5 flags whose same-session A/B minima sat
-# within 1–6 % of the prev round's RAW walls — weather, not regression;
-# the normalization divides two different hosts' probe medians, which the
-# documented probe-vs-wall divergence can skew either way). The embedded
-# A/B already contains the exculpating evidence, so publish the verdict
-# machine-readably: an entry whose interleaved A/B min lands within this
-# factor of the previous round's raw wall is marked cleared.
-AB_CLEAR_FACTOR = 1.10
-
-
-def ab_cleared(ab_min, prev_raw) -> bool:
-    """Weather-vs-regression verdict for a flagged entry: the interleaved
-    A/B min landing at (or within AB_CLEAR_FACTOR of) last round's RAW
-    wall says the code path did not regress, whatever the cross-round
-    sentinel arithmetic claimed. Fold-carrying vehicles read False by
-    construction (honest new work); their attribution is the published
-    folds declaration."""
-    return bool(
-        ab_min is not None and prev_raw and ab_min <= AB_CLEAR_FACTOR * prev_raw
+def clean_window(per_pass: list[float]) -> bool:
+    """True when the recorded minima have seen a clean-host window:
+    (a) the median per-pass sentinel is inside the band — most passes ran
+    on a clean host; or (b) at least TWO individual passes probed clean —
+    the minima were refreshed on a clean window even if the median stays
+    hot. Single-shot probes can catch a momentary idle gap mid-burst,
+    hence two, not one. A zero-pass run has nothing to judge."""
+    if not per_pass:
+        return True
+    band = CLEAN_HOST_SENTINEL_BAND
+    return (
+        statistics.median(per_pass) <= band
+        or sum(1 for s in per_pass if s <= band) >= 2
     )
-
-
-# --- whole-run hot-host gating (VERDICT r11 "Next round" #1) -------------
-# The published bar is evaluated on the RAW total, but the recorded
-# artifact is whatever host weather the driver's run caught: r11's
-# recorded pass-median sentinel was 0.784-1.087 while same-tree clean
-# runs sat at 0.72-0.78 and swung the raw total 44.8→53.8 s with zero
-# code change. The per-pass drift retry only fires on a >2× END-probe
-# collapse; a UNIFORMLY hot window sails through it. This gate extends
-# the defense to the whole run: when the median of the per-pass
-# sentinels says the host never gave a clean pass, run bounded extra
-# passes (minima keep absorbing) until either a clean window is caught
-# or the budget is spent — the attempt count is published either way.
-# Band: truly clean pass sentinels on this box are ~0.67-0.72 (r10
-# 0.721; the r12 preview's gate-added clean passes probed 0.674-0.714).
-# The band started at 0.80 and was TIGHTENED to 0.75 after a same-tree
-# preview pair: a run whose probes read 0.758/0.759 (inside 0.80) still
-# carried catalog walls ~20% over the gated run's minima (54.1 vs
-# 45.1 s total) — single-shot probes can dip below the minute's real
-# load, so the band must sit near the clean floor, not at the hot edge.
-CLEAN_HOST_SENTINEL_BAND = float(
-    os.environ.get("SPARK_GRAFT_CLEAN_SENTINEL_BAND", "0.75")
-)
-MAX_HOT_EXTRA_PASSES = int(os.environ.get("SPARK_GRAFT_MAX_HOT_EXTRA", "4"))
-
-# --- bar accounting (VERDICT r12 "Next round" #4) -------------------------
-# The published bar is "within 2× of the r2 envelope at sf0.1" (25.35 s →
-# 50.7 s). That envelope priced the r2 catalog COMPOSITION; every fold
-# round since has absorbed honest new rider work into the same bar, so the
-# artifact now self-describes the bar math (bar_seconds / headroom_seconds
-# at sf0.1) and SCALE.md carries the envelope → composition ledger mapping
-# each rider family to its measured add — a reader can decompose ratio
-# growth into weather / new-work / regression without reconstruction.
-R2_ENVELOPE_SF01 = 25.35
-BAR_MULTIPLE = 2.0
-
-
-def needs_hot_host_pass(
-    per_pass_sentinels: list[float],
-    extra_done: int,
-    band: float = CLEAN_HOST_SENTINEL_BAND,
-    max_extra: int = MAX_HOT_EXTRA_PASSES,
-) -> bool:
-    """True when the recorded minima have not yet seen a clean-host pass
-    and the extra-pass budget remains. Two exits besides the budget:
-    (a) the run's pass-median sentinel is inside the clean band — the
-    majority of passes ran on a clean host, the minima are trustworthy;
-    (b) at least TWO individual passes probed clean — the minima were
-    refreshed on a clean window even if the median stays hot (a median
-    over a mostly-hot history needs more clean passes than the budget
-    allows to move, but the MINIMA only need the clean passes
-    themselves). Single-shot probes can catch a momentary idle gap
-    mid-burst, hence two, not one."""
-    import statistics
-
-    if not per_pass_sentinels:  # zero-pass smoke run: nothing to judge
-        return False
-    if extra_done >= max_extra:
-        return False
-    if statistics.median(per_pass_sentinels) <= band:
-        return False
-    if sum(1 for s in per_pass_sentinels if s <= band) >= 2:
-        return False
-    return True
-
-
-def _catalog_pass(spark, catalog, timings: dict[str, float]) -> None:
-    """One full catalog pass through the noop sink; per-query minima keep
-    absorbing. The single timing body shared by the configured passes,
-    the drift retries, and the hot-host gate — so a change to how a
-    query is timed cannot silently diverge between the three loops."""
-    for name, q in sorted(catalog.items()):
-        t0 = time.perf_counter()
-        q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        elapsed = round(time.perf_counter() - t0, 3)
-        timings[name] = min(timings.get(name, elapsed), elapsed)
-
-
-def flag_ratios(
-    timings: dict[str, float], flag_sentinel: float, prev: dict
-) -> dict[str, float]:
-    """Sentinel-normalized round-over-round ratio per query — the auto-A/B
-    trigger's exact formula, extracted so the unit test exercises the
-    SHIPPED logic instead of a re-implementation:
-    (cur / flag_sentinel) / (prev_query / prev_flag_sentinel)."""
-    return {
-        name: (cur / flag_sentinel)
-        / (prev["queries"][name] / prev["flag_sentinel_sec"])
-        for name, cur in timings.items()
-        if name in prev["queries"] and prev["queries"][name] > 0
-    }
 
 
 def infer_sf(path: str) -> float:
@@ -263,6 +101,47 @@ def skip_list(catalog: dict) -> list[str]:
         for n in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",")
         if n and n in catalog
     )
+
+
+def bench_record(
+    timings: dict[str, float],
+    first_pass_queries: dict[str, float],
+    sentinel: float,
+    per_pass: list[float],
+    sf: float,
+    master: str,
+    default_parallelism: int,
+    cpus_env: str | None,
+    skipped: list[str],
+) -> dict:
+    """The published JSON record. The bar keys are null off sf0.1: the bar
+    prices the sf0.1 catalog composition."""
+    total = round(sum(timings.values()), 3)
+    bar = round(R2_ENVELOPE_SF01 * BAR_MULTIPLE, 3) if sf == 0.1 else None
+    return {
+        "metric": "catalog_total_runtime",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        # the effective master and the scheduler's actual parallelism, so a
+        # flat per-query cpus ratio at sf0.1 (driver-action floors) is
+        # distinguishable from an ignored core count
+        "master": master,
+        "default_parallelism": default_parallelism,
+        "cpus_env": cpus_env,
+        # training-inclusive pass-1 walls: vehicles that memoize trained
+        # index artifacts per application train on pass 1 only, so the
+        # min-of-N figure excludes training cost by construction
+        "first_pass_queries": first_pass_queries,
+        "sentinel_sec": sentinel,
+        "sentinel_per_pass": per_pass,
+        "runs": len(per_pass),
+        "gate_satisfied": clean_window(per_pass),
+        "bar_seconds": bar,
+        "headroom_seconds": None if bar is None else round(bar - total, 3),
+        "skipped": skipped,
+    }
 
 
 def main() -> None:
@@ -289,219 +168,32 @@ def main() -> None:
     sentinel = sentinel_sec(spark)
 
     timings: dict[str, float] = {}
-    # one single-shot probe between passes (not min-of-3 — this is a drift
-    # TRACE, not the normalization statistic): the r9 verdict's tail-drift
-    # question ("did the host slow mid-run?") becomes answerable per pass
-    # instead of only start-vs-end
-    per_pass_sentinels: list[float] = []
-    # pass-1 walls, published separately (VERDICT r13 "What's wrong" #5):
-    # vehicles that memoize trained index artifacts per (application,
-    # sf_dir) — sim_ann_ivf/dedup_semantic centroids, the PQ codebooks —
-    # train on pass 1 only, so the min-of-N figure excludes training cost
-    # by construction. The first-pass wall is the training-INCLUSIVE
-    # number for every vehicle; the delta vs the min is visible per query
-    # instead of needing archaeology.
     first_pass_queries: dict[str, float] = {}
-    for _pass_i in range(N_RUNS):
-        _catalog_pass(spark, catalog, timings)
-        if _pass_i == 0:
+    # one single-shot probe after each pass: a host-drift trace per pass
+    per_pass: list[float] = []
+    for pass_i in range(N_RUNS):
+        for name, q in sorted(catalog.items()):
+            t0 = time.perf_counter()
+            q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            elapsed = round(time.perf_counter() - t0, 3)
+            timings[name] = min(timings.get(name, elapsed), elapsed)
+        if pass_i == 0:
             first_pass_queries = dict(timings)
-        per_pass_sentinels.append(_sentinel_once(spark))
+        per_pass.append(_sentinel_once(spark))
 
-    # a second probe AFTER the passes: host drift during the run (the box
-    # shows ±20% swings over minutes) is visible as start≠end. The
-    # NORMALIZATION keeps using the start-of-run probe — r6's recorded
-    # 1.498 s was exactly that statistic, and dividing r7 by a min-of-two
-    # while r6 used a single probe would bias the ratio upward (mixed
-    # methodologies defeat the drift cancellation they exist for)
-    sentinel_end = sentinel_sec(spark)
-
-    # drift defense (VERDICT r9 "What's wrong" #2): when the end probe
-    # says the host slowed >2× during the run, queries benched in the
-    # slow window never saw a fair pass — r9's dedup family "regressed"
-    # 1.2× exactly this way (attribution pinned in SCALE.md). One extra
-    # full pass (mins keep absorbing) under a re-probe; bounded retries
-    # so a persistently-loaded host terminates with the flag visible in
-    # the published sentinels rather than looping.
-    drift_retries = 0
-    while sentinel_end > 2.0 * sentinel and drift_retries < 2:
-        drift_retries += 1
-        _catalog_pass(spark, catalog, timings)
-        per_pass_sentinels.append(_sentinel_once(spark))
-        sentinel_end = sentinel_sec(spark)
-
-    # whole-run hot-host gate (VERDICT r11 #1): bounded extra passes until
-    # the minima have seen a clean-host window — see needs_hot_host_pass
-    hot_extra_passes = 0
-    while needs_hot_host_pass(per_pass_sentinels, hot_extra_passes):
-        hot_extra_passes += 1
-        _catalog_pass(spark, catalog, timings)
-        per_pass_sentinels.append(_sentinel_once(spark))
-    if hot_extra_passes:
-        # the end probe above predates these passes; re-probe so
-        # sentinel_end_sec describes the actual end of the run and the
-        # sentinels_clean A/B gate certifies a window it measured
-        sentinel_end = sentinel_sec(spark)
-
-    # auto A/B (VERDICT r10 #7): at CLEAN sentinels (no drift retries,
-    # end probe within 2× of start), a query whose sentinel-normalized
-    # ratio moved >AB_FLAG_RATIO vs the previous round's bench gets the
-    # interleaved ab_check discipline run in THIS session, table embedded
-    # below — so "regression or host weather?" is answered in the
-    # artifact instead of next round's archaeology. Skipped entirely when
-    # the run itself was drift-flagged (nothing to separate) or when the
-    # env kill-switch is set (sf1 one-off runs where wall-clock matters).
-    ab_checks: dict[str, dict] = {}
-    ab_flagged_total = 0
-    prev = _load_prev_bench()
-    sentinels_clean = drift_retries == 0 and sentinel_end <= 2.0 * sentinel
-    # flag statistic: host speed DURING the passes (median of the
-    # per-pass probes), on both sides — see _load_prev_bench. The
-    # published normalization stays the start probe (methodology
-    # continuity across rounds); only the flag rule uses the median.
-    import statistics
-
-    flag_sentinel = (
-        statistics.median(per_pass_sentinels) if per_pass_sentinels else sentinel
+    sc = spark.sparkContext
+    record = bench_record(
+        timings,
+        first_pass_queries,
+        sentinel,
+        per_pass,
+        infer_sf(SF_DIR),
+        sc.master,
+        sc.defaultParallelism,
+        os.environ.get("SPARK_GRAFT_CPUS"),
+        skipped,
     )
-    if (
-        prev
-        and prev.get("sf") == infer_sf(SF_DIR)  # r-over-r only at same sf
-        and sentinels_clean
-        and not os.environ.get("SPARK_GRAFT_BENCH_NO_AB")
-    ):
-        ratios = flag_ratios(timings, flag_sentinel, prev)
-        over = sorted(
-            (n for n, r in ratios.items() if r > AB_FLAG_RATIO),
-            key=lambda n: -ratios[n],
-        )
-        ab_flagged_total = len(over)
-        # cap the interleave at the worst 8: a host-wide artifact that
-        # somehow clears the median statistic should not turn the bench
-        # into a 50-query A/B marathon; the count is published so a
-        # truncation is visible
-        flagged = over[:8]
-        if flagged:
-            from tools.ab_check import interleaved_check
-
-            table = interleaved_check(
-                spark, catalog, flagged, SF_DIR, runs=3, echo=False,
-                warm=False,  # 5+ catalog passes just ran in this session
-            )
-            for name in flagged:
-                # a vehicle that absorbed new rider work this round
-                # (declared in Q.folds) flags against its pre-fold
-                # baseline by construction — carry the declaration so
-                # the artifact attributes the move without archaeology
-                folds = list(getattr(catalog[name], "folds", ()) or ())
-                ab_checks[name] = {
-                    **({"folds": folds} if folds else {}),
-                    "prev_round": prev["round"],
-                    # both ratios below are normalized by the FLAG
-                    # sentinel (per-pass median), not the published
-                    # start probe — they are the trigger's own inputs
-                    "prev_ratio_vs_flag_sentinel": round(
-                        prev["queries"][name] / prev["flag_sentinel_sec"], 3
-                    ),
-                    "bench_ratio_vs_flag_sentinel": round(
-                        timings[name] / flag_sentinel, 3
-                    ),
-                    "ab": table["queries"][name],
-                    "ab_sentinel": table["sentinel"],
-                }
-                ab_checks[name]["ab_cleared_vs_prev_raw"] = ab_cleared(
-                    table["queries"][name].get("min"), prev["queries"][name]
-                )
-
-    total = round(sum(timings.values()), 3)
-    # r6 recorded the first sentinel (1.498 s, BENCH_r06.json) — publishing
-    # the ratio AND the r6-host-equivalent total makes cross-round
-    # comparison numeric: total_r7/sentinel_r7 vs total_r6/sentinel_r6
-    # cancels same-box contention drift (±40% between rounds 4 and 5)
-    R6_SENTINEL = 1.498
-    print(
-        json.dumps(
-            {
-                "metric": "catalog_total_runtime",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": infer_sf(SF_DIR),
-                # scaling self-description (VERDICT r13 #3): the env
-                # contract is honored in session.py, but the artifact
-                # must say so itself — effective master and the
-                # scheduler's actual parallelism, so a flat per-query
-                # cpus ratio at sf0.1 (driver-action floors) is
-                # distinguishable from an ignored core count. The
-                # sentinel (a fixed 32-partition all-core fold) is the
-                # CPU-proportional canary: its cross-run ratio tracks
-                # the core count even where floor-bound queries don't.
-                "master": spark.sparkContext.master,
-                "default_parallelism": spark.sparkContext.defaultParallelism,
-                "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
-                # training-inclusive pass-1 walls (min-of-N excludes
-                # per-application trained-artifact memos — see the loop)
-                "first_pass_queries": first_pass_queries,
-                "sentinel_sec": sentinel,
-                "sentinel_end_sec": sentinel_end,
-                "sentinel_per_pass": per_pass_sentinels,
-                "drift_retries": drift_retries,
-                "total_over_sentinel": round(total / sentinel, 3),
-                # the host-weather-stable comparator (SCALE.md r11 note:
-                # two same-tree runs 20% apart raw agree within 3% on
-                # this) — published so the artifact carries the right
-                # statistic, not just the raw total
-                "pass_median_sentinel": round(flag_sentinel, 3),
-                "total_over_pass_median": round(total / flag_sentinel, 3),
-                "r6_host_equivalent_total": round(
-                    total / sentinel * R6_SENTINEL, 3
-                ),
-                # effective full passes the mins absorbed (configured +
-                # drift retries + hot-host extras) — always ==
-                # len(sentinel_per_pass), so a consumer pairing the two
-                # fields stays consistent
-                "runs": len(per_pass_sentinels),
-                "configured_runs": N_RUNS,
-                # whole-run hot-host gate: extra passes spent chasing a
-                # clean window (0 = the configured passes already probed
-                # clean) and the band they were judged against
-                "hot_extra_passes": hot_extra_passes,
-                "clean_host_band": CLEAN_HOST_SENTINEL_BAND,
-                # clean-exit vs budget-exit (VERDICT r12 #4): True when the
-                # clean-window conditions were actually MET (median inside
-                # the band, or ≥2 clean passes); False records that the
-                # gate spent its whole budget without catching a clean
-                # window — weaker evidence, now self-described. Computed by
-                # the gate's own predicate with the budget stripped.
-                "gate_satisfied": not needs_hot_host_pass(
-                    per_pass_sentinels, extra_done=0, max_extra=10**9
-                ),
-                # bar math (sf0.1 only — the bar prices the sf0.1
-                # composition): the 2× envelope and the headroom this run
-                # left under it (negative = over the bar)
-                **(
-                    {
-                        "bar_seconds": round(
-                            R2_ENVELOPE_SF01 * BAR_MULTIPLE, 3
-                        ),
-                        "headroom_seconds": round(
-                            R2_ENVELOPE_SF01 * BAR_MULTIPLE - total, 3
-                        ),
-                    }
-                    if infer_sf(SF_DIR) == 0.1
-                    else {}
-                ),
-                "ab_checks": ab_checks,
-                "ab_flagged_total": ab_flagged_total,
-                "ab_cleared_total": sum(
-                    1
-                    for v in ab_checks.values()
-                    if v.get("ab_cleared_vs_prev_raw")
-                ),
-                "skipped": skipped,
-            }
-        )
-    )
+    print(json.dumps(record))
     spark.stop()
 
 

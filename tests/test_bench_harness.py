@@ -1,98 +1,10 @@
-"""bench.py harness plumbing that runs without Spark: previous-round
-artifact parsing and the auto-A/B flag rule (VERDICT r10 #7 + r10 ADVICE
-on runs/sentinel_per_pass consistency)."""
+"""bench.py and tools/ab_check.py plumbing that runs without Spark: the
+skip hook, the clean-window predicate, the published record's key set and
+the A/B tool's name expansion."""
 
 from __future__ import annotations
 
-import json
-
 import bench
-
-
-def test_load_prev_bench_parses_driver_wrapped_artifact(tmp_path):
-    inner = {
-        "metric": "catalog_total_runtime",
-        "value": 10.0,
-        "queries": {"q": 1.0},
-        "sentinel_sec": 0.5,
-        "sf": 0.1,
-    }
-    # the driver wraps bench stdout (progress bars + the JSON line) in
-    # a "tail" field; earlier braces in the noise must not confuse the
-    # parser
-    wrapped = {
-        "n": 3,
-        "tail": "[Stage 1:>  ]\rnoise {\"metric\" broken\n"
-        + json.dumps(inner)
-        + "\n",
-    }
-    (tmp_path / "BENCH_r03.json").write_text(json.dumps(wrapped))
-    # an older round with a DIRECT inner layout must lose to r03
-    (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({**inner, "sentinel_sec": 9.9})
-    )
-    prev = bench._load_prev_bench(str(tmp_path))
-    assert prev == {
-        "round": 3,
-        "queries": {"q": 1.0},
-        "flag_sentinel_sec": 0.5,
-        "sf": 0.1,
-    }
-
-
-def test_load_prev_bench_prefers_per_pass_median(tmp_path):
-    """The flag statistic normalizes by host speed DURING the passes —
-    the start probe is a 3-shot minimum that can catch a momentarily
-    fast window (observed: 42/50 false flags)."""
-    inner = {
-        "metric": "catalog_total_runtime",
-        "queries": {"q": 1.0},
-        "sentinel_sec": 0.5,
-        "sentinel_per_pass": [0.9, 0.7, 0.8],
-        "sf": 0.1,
-    }
-    (tmp_path / "BENCH_r05.json").write_text(json.dumps(inner))
-    assert bench._load_prev_bench(str(tmp_path))["flag_sentinel_sec"] == 0.8
-
-
-def test_load_prev_bench_absent_or_malformed(tmp_path):
-    assert bench._load_prev_bench(str(tmp_path)) is None
-    (tmp_path / "BENCH_r02.json").write_text("{not json")
-    assert bench._load_prev_bench(str(tmp_path)) is None
-    # artifact without the fields the comparison needs
-    (tmp_path / "BENCH_r04.json").write_text(json.dumps({"tail": "no json"}))
-    assert bench._load_prev_bench(str(tmp_path)) is None
-
-
-def test_ab_flag_rule_is_sentinel_normalized():
-    """The trigger is the RATIO of sentinel-normalized ratios, not walls:
-    a query 2x slower on a 2x-slower host must not flag; a genuinely
-    1.5x-slower query must. Exercises the SHIPPED formula
-    (bench.flag_ratios), not a re-implementation."""
-    prev = {"queries": {"a": 1.0, "b": 1.0}, "flag_sentinel_sec": 0.5}
-    sentinel = 1.0  # host is 2x slower than prev round
-    timings = {"a": 2.0, "b": 3.0}  # a: unchanged normalized; b: 1.5x
-    ratios = bench.flag_ratios(timings, sentinel, prev)
-    flagged = sorted(n for n, r in ratios.items() if r > bench.AB_FLAG_RATIO)
-    assert flagged == ["b"]
-    # a query absent from prev (new vehicle) never flags
-    assert "c" not in bench.flag_ratios({"c": 9.0}, sentinel, prev)
-
-
-def test_load_prev_bench_skips_drift_retried_rounds(tmp_path):
-    """A drift-retried prior round is not a stable flag baseline (its pass
-    medians include slow-window probes while its minima came from fast
-    passes) — auto-A/B must sit that round out."""
-    inner = {
-        "metric": "catalog_total_runtime",
-        "queries": {"q": 1.0},
-        "sentinel_sec": 0.5,
-        "sentinel_per_pass": [0.5, 2.1, 2.3],
-        "drift_retries": 2,
-        "sf": 0.1,
-    }
-    (tmp_path / "BENCH_r06.json").write_text(json.dumps(inner))
-    assert bench._load_prev_bench(str(tmp_path)) is None
 
 
 def test_ab_check_family_expansion():
@@ -118,37 +30,6 @@ def test_ab_check_family_expansion():
         expand_names(cat, ["unknown_query"], [])
 
 
-def test_hot_host_gate_decision_table():
-    """Whole-run hot-host gate (VERDICT r11 #1): extra passes run only
-    while the minima have seen no clean window AND budget remains."""
-    need = bench.needs_hot_host_pass
-    band, mx = 0.80, 4
-    # uniformly hot run: gate fires
-    assert need([0.9, 0.95, 1.0, 0.9, 0.92], 0, band, mx)
-    # budget exhausted: stop even if still hot
-    assert not need([0.9] * 9, 4, band, mx)
-    # median inside the clean band: minima are trustworthy, no gate
-    assert not need([0.75, 0.78, 0.79, 0.9, 0.95], 0, band, mx)
-    # two individual clean passes refresh the minima even when the
-    # median stays hot (a mostly-hot history can't move its median
-    # inside the budget, but the minima only need the clean passes)
-    assert not need([0.95, 0.9, 0.76, 1.0, 0.74], 0, band, mx)
-    # ONE clean probe is not enough (momentary idle gap mid-burst)
-    assert need([0.95, 0.9, 0.76, 1.0, 0.96], 0, band, mx)
-
-
-def test_hot_host_gate_converges_as_host_cools():
-    """Simulated hot start that cools: the gate stops requesting passes
-    as soon as two extra passes probe clean, well inside the budget."""
-    sentinels = [1.1, 1.0, 1.05, 0.98, 1.02]  # the 5 configured passes
-    cooled = iter([0.75, 0.74, 0.73, 0.72])  # host recovers
-    extra = 0
-    while bench.needs_hot_host_pass(sentinels, extra, 0.80, 4):
-        extra += 1
-        sentinels.append(next(cooled))
-    assert extra == 2
-
-
 def test_bench_skip_env(monkeypatch):
     """SPARK_GRAFT_BENCH_SKIP drops named queries (unknown names ignored)
     and the selection is what the JSON publishes as `skipped`."""
@@ -159,32 +40,36 @@ def test_bench_skip_env(monkeypatch):
     assert bench.skip_list(cat) == ["a", "c"]
 
 
-def test_hot_host_gate_empty_pass_list_is_noop():
-    """SPARK_GRAFT_BENCH_RUNS=0 smoke runs reach the gate with no pass
-    sentinels; it must decline rather than raise (review finding r12)."""
-    assert not bench.needs_hot_host_pass([], 0, 0.80, 4)
-
-
 def test_gate_satisfied_is_budgetless_gate_predicate():
-    """gate_satisfied (VERDICT r12 #4) must report whether the clean-window
-    CONDITIONS were met, independent of the extra-pass budget."""
-    from bench import needs_hot_host_pass
-
-    sat = lambda s: not needs_hot_host_pass(s, extra_done=0, max_extra=10**9)
+    """gate_satisfied reports whether the clean-window CONDITIONS were met:
+    median per-pass sentinel inside the band, or two clean passes."""
+    sat = bench.clean_window
     assert sat([])  # zero-pass smoke: nothing to judge
     assert sat([0.7, 0.71, 1.4])  # two clean passes
     assert sat([0.74, 0.74, 0.9])  # median inside the band
-    assert not sat([1.0, 1.1, 0.9, 1.2])  # uniformly hot: budget-exit shape
+    assert not sat([1.0, 1.1, 0.9, 1.2])  # uniformly hot
     assert not sat([0.7, 1.1, 1.2, 1.3])  # ONE clean pass is not enough
 
 
-def test_ab_cleared_verdict_rule():
-    """A flagged entry whose interleaved A/B min sits within
-    AB_CLEAR_FACTOR of the previous round's RAW wall is cleared as
-    weather (both r13 previews: flags at +1-6% raw); a genuinely slower
-    min is not; missing evidence never clears."""
-    assert bench.ab_cleared(1.05, 1.0)           # within 10% of prev raw
-    assert bench.ab_cleared(0.9, 1.0)            # faster than prev
-    assert not bench.ab_cleared(1.2, 1.0)        # real slowdown
-    assert not bench.ab_cleared(None, 1.0)       # A/B produced no min
-    assert not bench.ab_cleared(1.0, 0.0)        # no prev baseline
+def test_bench_record_key_set():
+    """The published JSON carries exactly these keys at every sf; the bar
+    keys are filled at sf0.1 only, and runs == len(sentinel_per_pass)."""
+    keys = {
+        "metric", "value", "unit", "queries", "sf", "master",
+        "default_parallelism", "cpus_env", "first_pass_queries",
+        "sentinel_sec", "sentinel_per_pass", "runs", "gate_satisfied",
+        "bar_seconds", "headroom_seconds", "skipped",
+    }
+
+    def record(sf):
+        return bench.bench_record(
+            {"a": 1.0, "b": 2.5}, {"a": 3.0, "b": 2.5}, 0.7, [0.8, 1.0],
+            sf, "local[4]", 4, "4", [],
+        )
+
+    small, bar = record(0.001), record(0.1)
+    assert set(small) == keys and set(bar) == keys
+    assert small["value"] == 3.5 and small["runs"] == 2
+    assert small["bar_seconds"] is None and small["headroom_seconds"] is None
+    assert small["gate_satisfied"] is False
+    assert bar["bar_seconds"] == 50.7 and bar["headroom_seconds"] == 47.2

@@ -1,7 +1,8 @@
-"""Dead-code guard: every top-level definition in the package is referenced.
+"""Dead-code guard: every top-level definition in the package, ``bench.py``
+and ``tools/*.py`` is referenced.
 
 A pure-``ast`` scan, no Spark session. A top-level function, class or
-assigned name in the package is *referenced* when its name appears, outside
+assigned name in those files is *referenced* when its name appears, outside
 its own definition, anywhere in the package, ``tests/``, ``tools/``,
 ``perfbench/``, ``bench.py`` or ``__spark_entry__.py`` as one of:
 
@@ -33,6 +34,9 @@ REFERENCE_ROOTS = (
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 )
+# outside the package, only these files' definitions are checked: the
+# bench harness and the tools
+CHECKED_FILES = {ROOT / "bench.py", *(ROOT / "tools").glob("*.py")}
 
 
 def _python_files(root: Path) -> list[Path]:
@@ -76,18 +80,18 @@ def _is_dunder(name: str) -> bool:
 
 
 def unreferenced_definitions() -> list[str]:
-    """``file:line name`` for every unreferenced top-level package definition."""
+    """``file:line name`` for every unreferenced checked top-level definition."""
     # each top-level statement is one "owner" of the references inside it;
-    # a package definition's own statement is dropped once it is found dead
+    # a checked definition's own statement is dropped once it is found dead
     owners = []  # (defined names, refs, (file, line))
     for root in REFERENCE_ROOTS:
         for path in _python_files(root):
             tree = ast.parse(path.read_text(), filename=str(path))
-            in_package = PACKAGE in path.parents
+            checked = path in CHECKED_FILES or PACKAGE in path.parents
             for stmt in tree.body:
                 names = [
                     n for n in _defined_names(stmt) if not _is_dunder(n)
-                ] if in_package else []
+                ] if checked else []
                 where = (str(path.relative_to(ROOT)), stmt.lineno)
                 owners.append((names, _referenced_names(stmt), where))
     # how many live owners reference each name

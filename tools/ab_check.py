@@ -18,10 +18,7 @@ sentinel_median) — the statistic that survives host drift. Compare
 ratios, not walls, across sessions.
 
 ``--family PREFIX`` expands to every catalog query whose name starts
-with PREFIX (``--family dedup`` → the dedup vehicles). bench.py calls
-``interleaved_check`` directly (same live session) when a query's
-sentinel-normalized ratio moved >1.3× vs the previous round at clean
-sentinels, and embeds the table as ``ab_checks`` in the bench JSON.
+with PREFIX (``--family dedup`` → the dedup vehicles).
 
 The sentinel is IMPORTED from bench.py — one probe definition, so the
 ratios printed here are always comparable to the published bench
@@ -50,16 +47,11 @@ def interleaved_check(
     names,
     sf_dir: str,
     runs: int = 5,
-    echo: bool = True,
-    warm: bool = True,
 ) -> dict:
     """One interleaved sentinel-normalized A/B table over ``names``:
-    per pass, one sentinel probe then each query once, so a host burst
-    hits all arms equally. Returns the summary dict (the same shape the
-    CLI prints). Shared by the CLI below and bench.py's auto-flag path —
-    which passes ``warm=False``: its session just ran 5+ full catalog
-    passes, so the warm lap would only re-execute the flagged (slowest)
-    queries once more for no statistical benefit."""
+    after one unrecorded warm lap, per pass, one sentinel probe then each
+    query once, so a host burst hits all arms equally. Echoes one row per
+    pass and returns the summary dict the CLI prints."""
 
     def run(name: str) -> float:
         t0 = time.perf_counter()
@@ -68,11 +60,10 @@ def interleaved_check(
         ).save()
         return round(time.perf_counter() - t0, 3)
 
-    if warm:
-        # warm pass (unrecorded): JVM, parquet footers, Python worker pool
-        _sentinel_once(spark)
-        for q in names:
-            run(q)
+    # warm pass (unrecorded): JVM, parquet footers, Python worker pool
+    _sentinel_once(spark)
+    for q in names:
+        run(q)
 
     sents: list[float] = []
     walls: dict[str, list[float]] = {q: [] for q in names}
@@ -84,8 +75,7 @@ def interleaved_check(
             w = run(q)
             walls[q].append(w)
             row.append(f"{q} {w:7.3f}")
-        if echo:
-            print("  ".join(row), flush=True)
+        print("  ".join(row), flush=True)
 
     s_med = statistics.median(sents)
     return {

@@ -109,7 +109,12 @@ def stage_checkpoints_concurrent(
     Each entry gets the full :func:`stage_checkpoint` contract (eager
     localCheckpoint, prior invocation's blocks dropped per key). Order of
     the returned list matches the input. Thread count = len(named): these
-    are per-vehicle decision tables (2–4), not a fan-out."""
+    are per-vehicle decision tables (2–4), not a fan-out.
+
+    Must not be called inside a scoped-conf context
+    (:func:`micro_batch_confs` / ``functions.conf.iterative_loop_confs``):
+    the scope's session-conf mutation and restore would race the
+    concurrently submitted jobs."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
