@@ -3,12 +3,19 @@ bronze fetch → silver conformance → gold rollups, plus sink idempotency."""
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import functions as F
 
 from vmware_sd_wan_velocloud_bi_intake_spark.plans.velocloud import run_pipeline
-from vmware_sd_wan_velocloud_bi_intake_spark.sources.api import build_params
+from vmware_sd_wan_velocloud_bi_intake_spark.sources.api import (
+    build_params,
+    fetch_payloads,
+    fetch_payloads_from,
+)
 from vmware_sd_wan_velocloud_bi_intake_spark.sources.fake_transport import (
     FakeVcoTransport,
 )
@@ -18,6 +25,40 @@ VCOS = ["vco0", "vco1"]
 
 def _factory():
     return FakeVcoTransport(n_enterprises=3, n_edges=4)
+
+
+def _counting_factory(spark):
+    """(transport factory, accumulator of ``{"<method>|<endpoint>": calls}``).
+
+    The transport is :func:`_factory`'s, counting every call it answers.
+    Built inside a function so the Python workers unpickle it by value.
+    """
+
+    class CallCounts(AccumulatorParam):
+        def zero(self, value):
+            return Counter()
+
+        def addInPlace(self, a, b):
+            a.update(b)
+            return a
+
+    calls = spark.sparkContext.accumulator(Counter(), CallCounts())
+
+    def factory():
+        inner = _factory()
+
+        def transport(method, params):
+            endpoint = json.dumps(params.get("endpoint", {}), sort_keys=True)
+            calls.add(Counter({f"{method}|{endpoint}": 1}))
+            return inner(method, params)
+
+        return transport
+
+    return factory, calls
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -65,6 +106,52 @@ def test_pipeline_idempotent_rerun(spark, tmp_path):
         for t in ["edge", "links", "events", "customer"]
     }
     assert first == second
+
+
+def test_landing_fetches_each_endpoint_once_and_releases_bronze(spark, tmp_path):
+    """A landing calls each endpoint once, however many sinks read the
+    bronze, and leaves no persisted RDD behind (the session is shared, so
+    the count is compared, not pinned)."""
+    for _ in range(2):
+        factory, calls = _counting_factory(spark)
+        before = _persistent_rdds(spark)
+        run_pipeline(spark, VCOS, factory, out_dir=str(tmp_path))
+        assert _persistent_rdds(spark) == before
+        # 2 enterprise endpoints + 6 enterprises x (edges, events)
+        assert sum(calls.value.values()) == len(calls.value) == 14
+
+
+def test_pipeline_without_out_dir_stays_lazy(spark):
+    """Without ``out_dir`` nothing is fetched or persisted until the caller
+    evaluates a frame."""
+    factory, calls = _counting_factory(spark)
+    before = _persistent_rdds(spark)
+    out = run_pipeline(spark, VCOS, factory)
+    assert sum(calls.value.values()) == 0
+    assert _persistent_rdds(spark) == before
+    assert out.edges.count() == 24
+    assert sum(calls.value.values()) > 0
+
+
+def test_fetch_fan_out_capped_at_task_slots(spark):
+    """``max_parallelism`` is a maximum: partitions beyond the task slots
+    add tasks, not concurrent calls."""
+    slots = spark.sparkContext.defaultParallelism
+    eps = [{"vco": "vco0", "enterpriseId": e} for e in range(16)]
+    eps_df = spark.createDataFrame(
+        [(json.dumps(e, sort_keys=True),) for e in eps], "endpoint string"
+    )
+    wide = fetch_payloads_from(
+        eps_df, "enterprise/getEnterpriseEdges", build_params(), FakeVcoTransport,
+        max_parallelism=32,
+    )
+    assert wide.rdd.getNumPartitions() == min(32, slots)
+    for n, cap in [(3, 10), (16, 10), (16, 2), (16, 64)]:
+        out = fetch_payloads(
+            spark, eps[:n], "enterprise/getEnterpriseEdges", build_params(),
+            FakeVcoTransport, max_parallelism=cap,
+        )
+        assert out.rdd.getNumPartitions() == min(n, cap, slots), (n, cap)
 
 
 def test_projection_and_interval_pushdown():

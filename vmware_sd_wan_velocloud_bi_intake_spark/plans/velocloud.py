@@ -13,10 +13,17 @@ per-statement MySQL commits become one idempotent upsert per output table
 (sinks.upsert). Bronze fetch parallelism is the Spark scheduler (T6), with
 request pushdown in the source adapter (S3/S4).
 
-At scale: bronze fan-out is one task per (vco, enterprise); silver transforms
-are shuffle-free per-edge projections plus one explode; gold is a single
-groupBy on customer — the whole pipeline has exactly two wide dependencies
-(events dedup, customer rollup).
+One landing fetches each endpoint once, like the reference's cycle: with
+``out_dir``, ``run_pipeline`` persists the three bronze fetches, forces
+each with one count, runs the four sinks over them, and releases them
+after. Without ``out_dir`` it only builds the plan: nothing runs and
+nothing is persisted until the caller evaluates a frame.
+
+At scale: bronze fan-out is at most one task per task slot and per (vco,
+enterprise) (``sources.api``); silver transforms are shuffle-free per-edge
+projections plus one explode; gold is a single groupBy on customer — the
+whole pipeline has exactly two wide dependencies (events dedup, customer
+rollup).
 """
 
 from __future__ import annotations
@@ -155,7 +162,7 @@ def bronze_enterprises(
 def bronze_edges(
     spark: SparkSession, enterprises: DataFrame, transport_factory
 ) -> DataFrame:
-    # one fetch task per (vco, enterprise) — the reference's nested loops
+    # one fetch per (vco, enterprise) — the reference's nested loops
     # become a partitioned endpoint COLUMN (T6): the discovered fleet flows
     # straight from the bronze enterprises DataFrame into the fetch stage,
     # no driver round-trip (a collect here is a funnel at 100× fleet)
@@ -323,9 +330,15 @@ def run_pipeline(
     out_dir: str | None = None,
     interval_ms: tuple[int, int] = (1704067200000, 1706745600000),
 ) -> PipelineOutput:
-    """Execute bronze → silver → gold; optionally upsert to parquet tables."""
+    """Build bronze → silver → gold; with ``out_dir``, upsert them to parquet.
+
+    With ``out_dir`` the enterprise, edge and event fetches are persisted
+    and forced in that order, once each, before the four sinks run, and
+    released after them, so a landing makes one call per endpoint. The
+    returned frames stay valid: evaluated after return, they fetch again.
+    Without ``out_dir`` nothing runs: the frames are lazy plans.
+    """
     enterprises = bronze_enterprises(spark, vcos, transport_factory)
-    enterprises.cache()  # reused by edges, events, and the gold join
     b_edges = bronze_edges(spark, enterprises, transport_factory)
     b_events = bronze_events(spark, enterprises, transport_factory, interval_ms)
 
@@ -335,18 +348,29 @@ def run_pipeline(
     g_customers = gold_customer_rollup(enterprises, s_edges)
 
     if out_dir:
-        upsert_parquet(spark, s_edges, os.path.join(out_dir, "edge"), ["edge_uuid"])
-        upsert_parquet(spark, s_links, os.path.join(out_dir, "links"), ["link_id"])
-        insert_ignore_parquet(
-            spark,
-            s_events,
-            os.path.join(out_dir, "events"),
-            ["month", "edge_uuid", "event_name"],
-        )
-        upsert_parquet(
-            spark,
-            g_customers,
-            os.path.join(out_dir, "customer"),
-            ["vco", "enterprise_id"],
-        )
+        bronze = [enterprises, b_edges, b_events]
+        try:
+            # in order: the edge and event fetches read the cached enterprises
+            for df in bronze:
+                df.persist()
+                df.count()
+            upsert_parquet(spark, s_edges, os.path.join(out_dir, "edge"), ["edge_uuid"])
+            upsert_parquet(spark, s_links, os.path.join(out_dir, "links"), ["link_id"])
+            insert_ignore_parquet(
+                spark,
+                s_events,
+                os.path.join(out_dir, "events"),
+                ["month", "edge_uuid", "event_name"],
+            )
+            upsert_parquet(
+                spark,
+                g_customers,
+                os.path.join(out_dir, "customer"),
+                ["vco", "enterprise_id"],
+            )
+        finally:
+            # dependents first: releasing enterprises while the edge and
+            # event caches still read it makes Spark re-register them
+            for df in reversed(bronze):
+                df.unpersist()
     return PipelineOutput(enterprises, s_edges, s_links, s_events, g_customers)

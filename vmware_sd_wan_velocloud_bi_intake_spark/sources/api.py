@@ -10,13 +10,18 @@ Spark-first restatement:
 
 - The endpoint list becomes a DataFrame partitioned across executors; each
   partition runs a ``mapInPandas`` fetcher — fan-out parallelism is Spark's
-  task scheduling, not a thread pool (T6). At 1000 executors the same code
-  fans out 1000-wide with locality and retry handled by the scheduler.
+  task scheduling, not a thread pool (T6), with retry handled by the
+  scheduler. The fetch has ``min(endpoints, max_parallelism,
+  defaultParallelism)`` partitions: ``max_parallelism`` is a true maximum,
+  and partitions beyond the cluster's task slots add tasks, not concurrent
+  calls (32 partitions on 4 slots make the same 4 calls at a time as 4
+  partitions, with 8x the tasks). Fewer tasks also means fewer per-task
+  token buckets, so the request rate toward a VCO never rises.
 - Pushdown is explicit in the request builder: ``projection`` → ``with``,
   ``interval`` → ``interval``, ``limit`` → ``limit``. The transform layer
   never re-filters what the source already filtered.
 - Rate limiting is a per-task token bucket (T7) — N tasks × rate budget
-  replaces the reference's global sleeps.
+  replaces the reference's global sleeps; N is capped by the width above.
 - Results surface as a ``payload`` JSON string column; callers apply
   ``F.from_json(payload, schema)`` with an explicit nested StructType —
   schema-on-read with declared nullable schemas instead of the reference's
@@ -105,8 +110,13 @@ def fetch_payloads(
     record ``"... with licenses failed - got without license"``). One heavy
     sub-object failing no longer silently loses a whole endpoint's rows;
     they arrive minus the degraded columns with the degradation recorded.
+
+    The fan-out has ``min(len(endpoints), max_parallelism,
+    defaultParallelism)`` partitions, one task each.
     """
-    n_parts = max(1, min(len(endpoints), max_parallelism))
+    n_parts = max(
+        1, min(len(endpoints), max_parallelism, spark.sparkContext.defaultParallelism)
+    )
     eps = spark.createDataFrame(
         [(json.dumps(e, sort_keys=True),) for e in endpoints], "endpoint string"
     ).repartition(n_parts)
@@ -133,8 +143,13 @@ def fetch_payloads_from(
     discovered fleet costs the same at 10 enterprises and at 10 million
     (the list form's ``collect()`` is a driver funnel at 100× fleet).
     Same output contract as :func:`fetch_payloads`.
+
+    The endpoint count is unknown at plan time, so the fan-out has
+    ``min(max_parallelism, defaultParallelism)`` partitions; with fewer
+    endpoints than that, some partitions are empty and open no connection.
     """
-    eps = endpoints_df.select("endpoint").repartition(max_parallelism)
+    width = endpoints_df.sparkSession.sparkContext.defaultParallelism
+    eps = endpoints_df.select("endpoint").repartition(min(max_parallelism, width))
     return _fetch_over(
         eps, method, params, transport_factory, rate_limit_s, degradable
     )
