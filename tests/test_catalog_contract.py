@@ -66,8 +66,8 @@ def test_micro_batch_confs_restore_even_on_failure(spark):
     """The scoped conf context (queries/base.micro_batch_confs) must
     restore BOTH confs on the exception path — a leaked 'adaptive off /
     4 partitions' would silently deparallelize every later catalog
-    query in the session (the conf-leak class sinks/merge.py documents
-    for partitionOverwriteMode)."""
+    query in the session (the same conf-leak class as a session-wide
+    partitionOverwriteMode)."""
     import pytest
 
     from vmware_sd_wan_velocloud_bi_intake_spark.queries.base import (

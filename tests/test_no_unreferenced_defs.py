@@ -16,6 +16,10 @@ Names are matched by spelling, not by module. The scan repeats until nothing
 changes: a definition used only from the body of an unreferenced one is
 itself unreferenced. Dunder names (``__all__``, ``__getattr__``) are hooks
 the interpreter looks up, so they are never reported.
+
+A second mode scans with ``tests/`` dropped from the reference roots: it
+counts the definitions only tests reach, which no catalog query, pipeline,
+ingest, bench or tool calls. That count is pinned and may only fall.
 """
 
 from __future__ import annotations
@@ -37,6 +41,9 @@ REFERENCE_ROOTS = (
 # outside the package, only these files' definitions are checked: the
 # bench harness and the tools
 CHECKED_FILES = {ROOT / "bench.py", *(ROOT / "tools").glob("*.py")}
+# definitions reached from tests alone; lower it when a change deletes
+# some or gives them a caller, never raise it
+TEST_ONLY_CEILING = 161
 
 
 def _python_files(root: Path) -> list[Path]:
@@ -79,12 +86,13 @@ def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
 
-def unreferenced_definitions() -> list[str]:
-    """``file:line name`` for every unreferenced checked top-level definition."""
+def unreferenced_definitions(roots=REFERENCE_ROOTS) -> list[str]:
+    """``file:line name`` for every checked top-level definition that
+    nothing under ``roots`` references."""
     # each top-level statement is one "owner" of the references inside it;
     # a checked definition's own statement is dropped once it is found dead
     owners = []  # (defined names, refs, (file, line))
-    for root in REFERENCE_ROOTS:
+    for root in roots:
         for path in _python_files(root):
             tree = ast.parse(path.read_text(), filename=str(path))
             checked = path in CHECKED_FILES or PACKAGE in path.parents
@@ -121,4 +129,14 @@ def test_no_unreferenced_top_level_definitions():
     assert not dead, (
         f"{len(dead)} top-level definitions nothing references — delete them "
         "(or reference them):\n" + "\n".join(dead)
+    )
+
+
+def test_test_only_definitions_do_not_grow():
+    roots = tuple(r for r in REFERENCE_ROOTS if r != ROOT / "tests")
+    test_only = unreferenced_definitions(roots)
+    assert len(test_only) <= TEST_ONLY_CEILING, (
+        f"{len(test_only)} top-level definitions are reached only from "
+        f"tests (ceiling {TEST_ONLY_CEILING}) — give new code a caller in "
+        "the system, or delete it with its tests:\n" + "\n".join(test_only)
     )

@@ -78,32 +78,18 @@ def test_profile_rejects_duplicate_columns(spark, sf_smoke):
 # ---------------------------------------------------------------------------
 def test_profile_driven_broadcast_switch(spark, sf_smoke):
     """profile_table output drives the join strategy: a genuinely small
-    dim gets the broadcast hint; the SAME code with a profile claiming a
-    huge relation leaves the join unhinted for AQE. Asserted on the
-    optimized logical plan (hints are consumed before the physical plan
-    prints them on small data)."""
+    dim fits a broadcast; the SAME relation with a profile claiming 100M
+    rows does not, and is left for AQE. (The plan-level hint switch is
+    asserted through a real operator in the decontamination test below.)"""
     from vmware_sd_wan_velocloud_bi_intake_spark.plans import hints
 
     nation = load_table(spark, sf_smoke, "nation")
-    customer = load_table(spark, sf_smoke, "customer")
     prof = profile_table(nation).collect()
     assert hints.broadcast_decision(prof) is True
 
-    def n_hints(dim):
-        plan = (
-            customer.join(dim, customer.c_nationkey == dim.n_nationkey)
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        return plan.count("rightHint=(strategy=broadcast)")
-
-    assert n_hints(hints.broadcast_by_profile(nation, prof)) == 1
-
-    # same relation, a profile that says 100M rows: no hint
+    # same relation, a profile that says 100M rows: no broadcast
     fat = [{**dict(r.asDict()), "n_rows": 100_000_000} for r in prof]
     assert hints.broadcast_decision(fat) is False
-    assert n_hints(hints.broadcast_by_profile(nation, fat)) == 0
 
 
 def test_profile_driven_switch_reaches_decontamination(spark, sf_smoke):
@@ -169,9 +155,7 @@ def test_estimated_bytes_uses_length_not_max_value(spark):
 
 
 # ---------------------------------------------------------------------------
-# Profile-driven SKEW routing (round 7): key_frequency_profile feeds
-# hints.skew_decision, which flips routed_sum / routed_dim_join between the
-# plain and salted forms — the broadcast-switch discipline applied to skew.
+# Heavy-hitter profile: the per-key statistic for picking a shuffle key.
 # ---------------------------------------------------------------------------
 def test_key_frequency_profile_finds_heavy_hitter(spark):
     df = spark.range(10_000).select(
@@ -196,52 +180,3 @@ def test_key_frequency_profile_validation(spark, sf_smoke):
     with pytest.raises(ValueError, match="no key columns"):
         profile.key_frequency_profile(load_table(spark, sf_smoke, "nation"), [])
 
-
-def test_skew_routing_strategy_switch(spark):
-    """The decision must flip the PLAN, not just the numbers: a skewed key
-    profile routes the aggregation through the two-phase salted form (two
-    keyed exchanges) and the join through the exploded-dim salted form;
-    a balanced profile keeps the single-exchange / plain-broadcast plans.
-    Results are identical on both routes."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans import hints
-
-    # 90% of rows share key 7: top count 9000 > 5 x (10000/8 partitions),
-    # comfortably past the AQE-style skew threshold at the test session's
-    # 8 shuffle partitions
-    skewed = spark.range(10_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 97).alias("k"),
-        (F.col("id") % 13).alias("v"),
-    )
-    balanced = spark.range(10_000).select(
-        (F.col("id") % 97).alias("k"), (F.col("id") % 13).alias("v")
-    )
-
-    def agg_plan(df):
-        prof = profile.key_frequency_profile(df, ["k"], top=3)
-        out = hints.routed_sum(df, "k", {"v_sum": F.sum("v")}, prof)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        return out, plan.count("Exchange hashpartitioning")
-
-    out_skew, ex_skew = agg_plan(skewed)
-    out_bal, ex_bal = agg_plan(balanced)
-    assert ex_skew == 2, "skewed key must take the two-phase salted route"
-    assert ex_bal == 1, "balanced key must keep the single-exchange plan"
-    # same answer either way: salted vs plain on the SAME skewed data
-    plain = skewed.groupBy("k").agg(F.sum("v").alias("v_sum"))
-    assert sorted(map(tuple, out_skew.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-    dim = spark.createDataFrame([(7, "hot"), (1, "a"), (2, "b")], "k long, name string")
-    prof_skew = profile.key_frequency_profile(skewed, ["k"], top=3)
-    joined = hints.routed_dim_join(skewed, dim, "k", prof_skew)
-    jplan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Generate explode" in jplan or "explode" in jplan, (
-        "skewed fact must take the salted-dim route"
-    )
-    prof_bal = profile.key_frequency_profile(balanced, ["k"], top=3)
-    jplain = hints.routed_dim_join(balanced, dim, "k", prof_bal)
-    assert "explode" not in jplain._jdf.queryExecution().executedPlan().toString()
-    # row-for-row equality with the unsalted join on the same input
-    want = skewed.join(F.broadcast(dim), "k")
-    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, want.collect()))

@@ -7,8 +7,8 @@ Two invariants the 100 TB design depends on:
 - IVF assignment: map-side ``max_by`` partial aggregation, never a window
   over the n × n_cells candidate join (the n^1.5 shuffle).
 
-Plus the quantified approximation contract: recall@k of both ANN paths
-against the exact brute-force ground truth.
+Plus the quantified approximation contract: recall@k of the trained IVF
+path against the exact brute-force ground truth.
 """
 
 from __future__ import annotations
@@ -63,7 +63,9 @@ def test_blocked_topk_refuses_driver_funnel(spark, emb):
 
 
 def test_ivf_assignment_is_partial_agg_not_window(spark, emb):
-    df = similarity.ann_ivf_topk(emb, n_cells=12, k=3)
+    # unrounded assignment takes the expression (max_by) path of
+    # _assign_cells; the rounded default runs an Arrow-batched matmul
+    df = similarity.ann_ivf_topk_trained(emb, n_cells=12, k=3, round_decimals=None)
     qe = df._jdf.queryExecution()
     plan = qe.explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -76,38 +78,6 @@ def test_ivf_assignment_is_partial_agg_not_window(spark, emb):
 
     assert "partial_max_by" in plan
     assert len(re.findall(r"\) Window$", plan, re.M)) == 1, plan
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): quantization recall property; the pq encode/decode equivalence unit tests keep the roundtrip class default
-@pytest.mark.slow
-def test_int8_quantization_roundtrip_and_recall(spark, emb):
-    """float→int8→float must bound per-coordinate error by scale/2 and keep
-    brute-force cosine top-k ranking close to the float ground truth."""
-    from pyspark.sql import functions as FF
-
-    q = similarity.quantize_embeddings(emb)
-    # quantization is narrow: no exchange in the plan
-    plan = q._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "Exchange hashpartitioning" not in plan
-    deq = q.select(
-        "vec_id",
-        similarity.dequantize_expr(FF.col("qvec"), FF.col("scale")).alias("embedding"),
-        "scale",
-    )
-    orig = {r["vec_id"]: r["embedding"] for r in emb.select("vec_id", "embedding").collect()}
-    for r in deq.collect():
-        ov = orig[r["vec_id"]]
-        bound = r["scale"] / 2 + 1e-12
-        assert all(abs(a - float(b)) <= bound for a, b in zip(r["embedding"], ov))
-    truth = similarity.cosine_topk_pairs_hof(emb, k=3).collect()
-    qtop = similarity.cosine_topk_pairs_hof(
-        deq.select("vec_id", "embedding"), k=3
-    ).collect()
-    r_q = _recall_at_k(qtop, truth, 3)
-    print(f"\nint8-quantized brute-force recall@3 vs float: {r_q:.3f}")
-    assert r_q >= 0.9, r_q  # 4x memory cut, marginal ranking loss
 
 
 def _recall_at_k(approx_rows, truth_rows, k):
@@ -126,73 +96,23 @@ def _recall_at_k(approx_rows, truth_rows, k):
     return hits / max(total, 1)
 
 
-# slow tier (r14 re-tier, VERDICT r13 #2): recall-quality property (not correctness); trained-vs-untrained recall is re-measured per round in SCALE.md
+# slow tier (r14 re-tier, VERDICT r13 #2): recall-quality property (not correctness)
 @pytest.mark.slow
 def test_ann_recall_floors_vs_brute_force(spark, emb):
-    """Quantified approximation contract: recall@3 of each ANN path against
-    exact brute force, at the knobs the catalog queries use.
+    """Quantified approximation contract: recall@3 of the trained IVF path
+    against exact brute force, at the knobs the catalog query uses
+    (quantized Lloyd, 4 iterations, rounded assignment, nprobe=1).
 
-    Context for the absolute numbers: the synthetic embeddings are
+    Context for the absolute number: the synthetic embeddings are
     ISOTROPIC random vectors (measured intra-label mean cos ≈ inter-label
     ≈ 0), the hardest case for ANN — neighbors aren't localized, so recall
-    is purely what the amplification knobs buy. Measured on this corpus:
-    banded LSH 48/12 ≈ 0.84; IVF trained nprobe=4 ≈ 0.55. On real clustered
-    embeddings both paths do strictly better at the same cost.
+    is what the cell structure alone buys. On real clustered embeddings
+    the same knobs do strictly better.
     """
     truth = similarity.cosine_topk_pairs_hof(emb, k=3).collect()
-    # the catalog query's knobs: 12 bands × 4 bits OR-amplified SRP
-    lsh = similarity.ann_lsh_topk(emb, dims=64, k=3, planes=48, bands=12).collect()
-    r_lsh = _recall_at_k(lsh, truth, 3)
-    # the oracle-checkable catalog IVF (untrained centroids, nprobe=1)
-    ivf = similarity.ann_ivf_topk(emb, n_cells=None, k=3).collect()
-    r_ivf = _recall_at_k(ivf, truth, 3)
-    print(f"\nANN recall@3 vs brute force: lsh(48/12)={r_lsh:.3f} ivf(raw)={r_ivf:.3f}")
-    assert r_lsh >= 0.75, r_lsh  # measured 0.836
-
-    # k-means training must beat lowest-id centroids at the same nprobe,
-    # and nprobe must monotonically buy recall
-    cents_t, members_t = similarity.ivf_index(emb, n_cells=None, train_iters=8)
-    r_t1 = _recall_at_k(
-        similarity.ann_ivf_query(emb, cents_t, members_t, k=3, nprobe=1).collect(),
-        truth, 3,
-    )
-    r_t4 = _recall_at_k(
-        similarity.ann_ivf_query(emb, cents_t, members_t, k=3, nprobe=4).collect(),
-        truth, 3,
-    )
-    print(f"ANN recall@3 ivf trained: nprobe=1 {r_t1:.3f}, nprobe=4 {r_t4:.3f}")
-    assert r_t1 > r_ivf, (r_t1, r_ivf)  # training helps (measured .26 vs .18)
-    assert r_t4 >= r_t1, (r_t4, r_t1)   # probing more cells never hurts
-    assert r_t4 >= 0.45, r_t4           # measured 0.554
-
-    # the catalog vehicle's exact knobs (quantized Lloyd, 4 iters, rounded
-    # assignment): the oracle-checkable TRAINED quantizer must still beat
-    # the lowest-id stand-in — reproducibility rounding must not eat the
-    # training gain
     trained_cat = similarity.ann_ivf_topk_trained(
         emb, n_cells=None, k=3, train_iters=4, round_decimals=6
     ).collect()
     r_cat = _recall_at_k(trained_cat, truth, 3)
-    print(f"ANN recall@3 ivf trained (catalog knobs, quantized): {r_cat:.3f}")
-    assert r_cat > r_ivf, (r_cat, r_ivf)
-
-
-def test_distributed_training_matches_driver_side_exactly(spark, emb):
-    """Quantized Lloyd makes the distributed (posexplode+avg recentring,
-    broadcast assignment) and driver-side (numpy) trainers produce
-    BIT-IDENTICAL centroids: every step depends only on values rounded to
-    6 decimals, so ulp-level accumulation differences between the two
-    execution strategies cannot survive a step boundary."""
-    a = sorted(
-        (r["cell"], tuple(r["cv"]))
-        for r in similarity.train_centroids(
-            emb, 12, iters=3, round_decimals=6
-        ).collect()
-    )
-    b = sorted(
-        (r["cell"], tuple(r["cv"]))
-        for r in similarity.train_centroids_distributed(
-            emb, 12, iters=3, round_decimals=6
-        ).collect()
-    )
-    assert a == b
+    print(f"\nANN recall@3 ivf trained (catalog knobs, quantized): {r_cat:.3f}")
+    assert r_cat >= 0.24, r_cat  # measured 0.260 (deterministic: quantized Lloyd)

@@ -16,20 +16,58 @@ def _rows(spark, path):
 
 def test_upsert_new_rows_win(spark, tmp_path):
     path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    df1 = spark.createDataFrame([(1, "a"), (2, "b"), (None, "n")], "k int, v string")
     upsert_parquet(spark, df1, path, ["k"])
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
+    df2 = spark.createDataFrame([(2, "B"), (3, "c"), (None, "N")], "k int, v string")
     upsert_parquet(spark, df2, path, ["k"])
-    assert _rows(spark, path) == {(1, "a"), (2, "B"), (3, "c")}
+    # null keys never match: both null-key rows survive
+    assert _rows(spark, path) == {
+        (1, "a"), (2, "B"), (3, "c"), (None, "n"), (None, "N")
+    }
 
 
 def test_insert_ignore_old_rows_win(spark, tmp_path):
     path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    df1 = spark.createDataFrame([(1, "a"), (2, "b"), (None, "n")], "k int, v string")
     insert_ignore_parquet(spark, df1, path, ["k"])
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
+    df2 = spark.createDataFrame([(2, "B"), (3, "c"), (None, "N")], "k int, v string")
     insert_ignore_parquet(spark, df2, path, ["k"])
-    assert _rows(spark, path) == {(1, "a"), (2, "b"), (3, "c")}
+    # null keys never match: both null-key rows survive
+    assert _rows(spark, path) == {
+        (1, "a"), (2, "b"), (3, "c"), (None, "n"), (None, "N")
+    }
+
+
+def test_warm_sinks_evaluate_their_batch_once(spark, tmp_path):
+    """A warm call of either keyed sink computes each batch row once: one
+    full-outer join of target and batch, not an anti-join plus a union
+    that plans the batch twice. An accumulator in the batch's UDF counts
+    the row evaluations."""
+    from pyspark.sql import functions as F
+
+    for sink in (upsert_parquet, insert_ignore_parquet):
+        path = str(tmp_path / sink.__name__)
+        old = spark.range(400).select(
+            F.col("id").cast("int").alias("k"), F.lit("old").alias("v")
+        )
+        sink(spark, old, path, ["k"])
+        acc = spark.sparkContext.accumulator(0)
+
+        def counted(k, acc=acc):
+            acc.add(1)
+            return k
+
+        batch = spark.range(350, 450).select(
+            F.udf(counted, "int")(F.col("id")).alias("k"), F.lit("new").alias("v")
+        )
+        sink(spark, batch, path, ["k"])
+        assert acc.value == 100, (sink.__name__, acc.value)
+        want_overlap = "new" if sink is upsert_parquet else "old"
+        assert _rows(spark, path) == (
+            {(k, "old") for k in range(350)}
+            | {(k, want_overlap) for k in range(350, 400)}
+            | {(k, "new") for k in range(400, 450)}
+        )
 
 
 def test_upsert_dedups_batch_deterministically(spark, tmp_path):

@@ -21,7 +21,7 @@ Design rules (see SURVEY.md §7): DataFrame/SQL only — no RDDs; no ``collect()
 inside operators; built-in ``pyspark.sql.functions`` over Python UDFs; pandas
 UDFs only where built-ins cannot express the semantics; every operator designed
 for partition-parallel execution at 100 TB (broadcast small dims, pre-aggregate
-before shuffles, salted/AQE skew handling).
+before shuffles, AQE skew handling).
 """
 
 __version__ = "0.1.0"

@@ -6,7 +6,8 @@ Two recurring engine needs live here:
    handling of previously-UNSET keys (restore unsets them again instead
    of pinning a stale value). Session confs are process-global; every
    engine-internal override must be scoped or it leaks into the caller's
-   later queries (the ``sinks/merge.py`` dynamic-overwrite lesson).
+   later queries (a session-wide ``partitionOverwriteMode=dynamic`` would
+   make every later overwrite-partitionBy write keep stale partitions).
 
 2. ``iterative_loop_confs`` / ``loop_partition_count`` — the
    partitioning rule for DRIVER-ITERATED loops (BPE merge rounds, GD

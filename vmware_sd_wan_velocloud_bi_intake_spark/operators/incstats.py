@@ -188,8 +188,9 @@ def write_stats_part(
     part = stats_part(df, columns, length_of=length_of).withColumn(
         "_batch_id", F.lit(int(batch_id))
     )
-    # per-WRITE dynamic overwrite (sinks/merge.py discipline): scoped to
-    # this write, never mutates the session conf
+    # per-WRITE dynamic overwrite: scoped to this write, never mutates
+    # the session conf (a session-level 'dynamic' would leak into every
+    # later overwrite-partitionBy write on this driver)
     (
         part.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -106,8 +106,8 @@ def key_frequency_profile(
 ) -> DataFrame:
     """Heavy-hitter statistics for candidate shuffle keys: the ``top``
     most frequent values per key column, with their absolute counts and
-    corpus fractions — the statistic :mod:`..plans.hints` needs to route
-    a plan through the salted forms in :mod:`.skew`.
+    corpus fractions: the statistic for picking a shuffle key before AQE's
+    runtime skew-join splitting (``session.py``) has to step in.
 
     (column, value_str, key_count, key_frac, n_rows) — ``top`` rows per
     requested column, counts over the (optionally sampled) input and

@@ -1,4 +1,4 @@
-"""Embedding similarity search: brute-force cosine top-k + LSH-bucketed ANN.
+"""Embedding similarity search: brute-force cosine top-k + trained IVF ANN.
 
 Beyond-reference surface (SURVEY.md §7 step 10) over the ``embeddings`` table
 (``vec_id bigint, embedding array<float>, label int``).
@@ -8,11 +8,10 @@ Scale design:
   query set vs. a huge corpus the query side is broadcast, so the corpus is
   scanned once with no shuffle; top-k per query via window ranking with
   partial aggregation.
-- **Random-hyperplane LSH (SRP)** is the scale path: each vector maps to a
-  B-bit signature; candidate pairs share a signature prefix bucket, turning
-  the quadratic pair space into Σ bucket². Hyperplanes are derived
-  deterministically from md5 of (plane, dim) so signatures are reproducible
-  without shipping a random matrix.
+- **IVF** is the scale path: a sample-trained coarse quantizer
+  (:func:`train_centroids`) assigns every vector to one cell, and search
+  runs inside cells only, turning the quadratic pair space into Σ cell².
+  ``operators/pq.py`` adds product-quantized codes on the same cells.
 - All dot products run as ``zip_with``/``aggregate`` over ``double`` arrays —
   JVM expressions, no Python. float→double upcast is exact, and a fixed
   left-to-right fold order makes results bit-stable across engines.
@@ -75,10 +74,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def cosine_topk_pairs(
     emb: DataFrame,
     k: int = 5,
@@ -106,13 +101,15 @@ def cosine_topk_pairs(
     Driver-resident memory is bounded by contract: a collected block that
     exceeds 4× the target (hash skew cannot plausibly produce this) raises
     rather than silently funneling. When even per-block relay through the
-    driver is too much (truly unbounded both sides), use ``ann_ivf_topk`` /
-    ``ann_lsh_topk`` — brute force at that scale is the wrong operator.
+    driver is too much (truly unbounded both sides), use
+    ``ann_ivf_topk_trained`` — brute force at that scale is the wrong
+    operator.
 
     Lifecycle: the per-block broadcasts live until the returned DataFrame is
     garbage-collected (they back its lazy partials) — a long-lived service
     looping over corpora should drop references promptly (Spark's
-    ContextCleaner then reclaims them) or call ``ann_ivf_topk`` instead.
+    ContextCleaner then reclaims them) or call ``ann_ivf_topk_trained``
+    instead.
     With more than one block the query side is ``persist()``-ed (each block
     contributes a mapInPandas stage over it — without the cache the query
     scan repeats once per block); it stays cached until the caller
@@ -251,8 +248,9 @@ def cosine_topk_pairs_hof(
 ) -> DataFrame:
     """Expression-only variant of :func:`cosine_topk_pairs` (no Python).
 
-    Bit-stable sequential fold — used to cross-check the vectorized path.
-    O(n·m) pair join; correct but not the scale path.
+    Kept as the exact ground truth the blocked path and the IVF/PQ recall
+    tests compare against. Bit-stable sequential fold; O(n·m) pair join,
+    correct but not the scale path.
     """
     corpus = emb.select(
         F.col(vec_id).alias("neighbor_id"),
@@ -266,7 +264,10 @@ def cosine_topk_pairs_hof(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        cosine(F.col("__emb_a"), F.col("__emb_b")).alias("cos_sim"),
+        (
+            dot(F.col("__emb_a"), F.col("__emb_b"))
+            / (l2_norm(F.col("__emb_a")) * l2_norm(F.col("__emb_b")))
+        ).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
@@ -282,9 +283,10 @@ def sign_block_key(embedding: Column, block_dims: int = 6) -> Column:
     """Deterministic ANN blocking key: md5 of the sign pattern of the first
     ``block_dims`` dimensions.
 
-    Unlike SRP (whose hyperplanes are engine-side literals), the sign pattern
-    is a pure function of the data — any engine reproduces the same buckets,
-    which makes the blocked near-dup join fully oracle-checkable. Vectors
+    Unlike random-hyperplane LSH (whose hyperplanes are engine-side
+    literals), the sign pattern is a pure function of the data — any
+    engine reproduces the same buckets, which makes the blocked near-dup
+    join fully oracle-checkable. Vectors
     with high cosine similarity agree on the sign of every high-magnitude
     coordinate, so recall loss concentrates on near-zero coordinates (the
     standard LSH trade-off; more dims → smaller buckets → lower recall).
@@ -480,65 +482,6 @@ def _cell_topk(assigned: DataFrame, k: int) -> DataFrame:
     )
 
 
-def ann_ivf_topk(
-    emb: DataFrame,
-    n_cells: int | None = None,
-    k: int = 3,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> DataFrame:
-    """IVF-style approximate kNN: coarse quantizer + cell-restricted search.
-
-    Structure of a production IVF index, deterministically:
-    1. **Coarse centroids** — here the ``n_cells`` lowest-id vectors (a
-       deterministic stand-in for k-means training; the index *structure*,
-       not the centroid quality, is what this operator contributes). The
-       centroid set is tiny and broadcast.
-    2. **Assignment** — every vector joins the broadcast centroids and keeps
-       its argmax-cosine cell (ties → lowest centroid id) via ``max_by``
-       partial aggregation: candidates reduce map-side, so only n rows reach
-       the exchange (a window over the join would shuffle all n × n_cells).
-    3. **Probe** — neighbors are ranked by exact cosine *within the cell
-       only* (nprobe=1): the pair space is Σ cell², never n²; vectors ride
-       with ids through the single cell shuffle, so there is no join back.
-
-    ``n_cells`` MUST grow with the corpus — fixed cells make in-cell search
-    quadratic in occupancy (measured 25× at 8× data in tools/scale_check.py
-    before this default). The default ``max(8, ⌈√n⌉)`` is the standard IVF
-    sizing: cell occupancy ≈ √n, total probe cost ≈ n^1.5 / constant.
-
-    At 100 TB: assignment is a broadcast join (no shuffle of the corpus
-    beyond the cell groupBy); cells are the partitioning key for the search,
-    so the shuffle is keyed and skew-bounded by centroid fan-out.
-
-    Returns (query_id, neighbor_id, cos_sim, rk), rk 1-based within cell.
-    """
-    import math
-
-    base = emb.select(
-        F.col(vec_id).alias("vid"),
-        as_double_array(F.col(embedding)).alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    if n_cells is None:
-        # the count doubles as the cache materializer: base is read three
-        # more times below (centroids, assignment, scoring) — cached, those
-        # are memory reads, so sizing costs no extra source scan. The cache
-        # lives while the result DataFrame does (it backs the lazy plan);
-        # MEMORY_AND_DISK + LRU bound repeated-call pressure, and callers
-        # that know n can pass n_cells to skip the persist entirely.
-        base.persist()
-        n_cells = max(8, math.ceil(math.sqrt(base.count())))
-    cents = base.orderBy("vid").limit(n_cells).select(
-        F.col("vid").alias("cell"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    assigned = _assign_cells(base, cents)
-    # the probe: one wide dependency over the Σ cell² pair space (see
-    # _cell_topk), shared with the trained variant
-    return _cell_topk(assigned, k)
-
-
 def ann_ivf_topk_trained(
     emb: DataFrame,
     n_cells: int | None = None,
@@ -549,12 +492,21 @@ def ann_ivf_topk_trained(
     round_decimals: int | None = 6,
     cents: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF kNN with a TRAINED (sample k-means) coarse quantizer.
+    """IVF-style approximate kNN with a TRAINED (sample k-means) coarse
+    quantizer.
 
-    Same index structure and probe as :func:`ann_ivf_topk`, but the cells
-    come from :func:`train_centroids` — better-shaped cells buy measurably
-    higher recall at identical query cost (quantified against the untrained
-    quantizer in tests/test_similarity_scale.py).
+    1. **Coarse centroids** — :func:`train_centroids` (bounded-sample
+       spherical k-means); the centroid set is tiny and broadcast.
+    2. **Assignment** — every vector keeps its argmax-cosine cell (ties →
+       lowest centroid id, see :func:`_assign_cells`).
+    3. **Probe** — neighbors are ranked by exact cosine *within the cell
+       only* (nprobe=1): the pair space is Σ cell², never n²; vectors ride
+       with ids through the single cell shuffle, so there is no join back.
+
+    ``n_cells`` defaults to ``max(8, ⌈√n⌉)``, the standard IVF sizing: it
+    must grow with the corpus, or in-cell search turns quadratic in cell
+    occupancy. Recall against brute force is pinned in
+    tests/test_similarity_scale.py.
 
     With the default ``round_decimals``, training runs in QUANTIZED
     arithmetic: assignment cosines and recentred centroids round to 6
@@ -717,9 +669,10 @@ def semantic_dedup_incremental(
     """Semantic near-dups of a NEW batch against a persisted IVF index —
     the vector-family twin of ``dedup.near_dup_pairs_incremental``.
 
-    ``cents``/``members`` come from :func:`ivf_index` (write ``members``
-    bucketed on ``cell`` via ``sinks.bucketed.write_bucketed`` and the
-    corpus side of the join needs no shuffle at query time). The batch
+    ``cents`` come from :func:`train_centroids` and ``members`` from
+    :func:`ivf_members` (write ``members`` bucketed on ``cell`` via
+    ``sinks.bucketed.write_bucketed`` and the corpus side of the join
+    needs no shuffle at query time). The batch
     broadcast-assigns to its cells (batch-sized), equi-joins the matching
     cell's members, and keeps pairs whose cosine clears ``threshold`` —
     cost is O(|batch| × cell size), never corpus²; the corpus is neither
@@ -729,8 +682,8 @@ def semantic_dedup_incremental(
     the canonical policy drops matched batch rows (the corpus is already
     curated). Batch-internal duplicates are a separate concern — run
     :func:`semantic_dedup_survivors` over the batch with the SAME
-    ``cents`` first, exactly like the LSH incremental flow runs in-batch
-    dedup before the index probe.
+    ``cents`` first, exactly like the MinHash incremental flow runs
+    in-batch dedup before the index probe.
     """
     b = batch.select(
         F.col(vec_id).alias("vid"),
@@ -759,8 +712,8 @@ def semantic_dedup_incremental(
     )
 
 
-# the layout train_centroids (and its distributed twin) publishes — the
-# ingests' per-batch centroid reads declare it instead of re-inferring
+# the layout train_centroids publishes — the ingests' per-batch centroid
+# reads declare it instead of re-inferring
 TRAINED_CENTROIDS_SCHEMA = "cell long, cv array<double>, cnrm double"
 
 
@@ -794,7 +747,7 @@ def train_centroids(
     are absorbed by the rounding instead of compounding across iterations.
 
     Returns a broadcastable (cell, cv, cnrm) DataFrame compatible with
-    :func:`ann_ivf_query` / :func:`_assign_cells`; cells are 0..n_cells-1.
+    :func:`_assign_cells`; cells are 0..n_cells-1.
     """
     import numpy as np
 
@@ -839,144 +792,6 @@ def train_centroids(
     return spark.createDataFrame(rows, "cell long, cv array<double>, cnrm double")
 
 
-def train_centroids_distributed(
-    emb: DataFrame,
-    n_cells: int,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-    iters: int = 8,
-    sample_rows: int | None = 16384,
-    round_decimals: int | None = None,
-) -> DataFrame:
-    """Fully distributed spherical k-means — no training funnel at all.
-
-    :func:`train_centroids` is driver-resident by bounded contract (the
-    faiss sample discipline); this form removes even that: every Lloyd
-    iteration is Spark jobs — broadcast-centroid assignment via
-    :func:`_assign_cells` (map-side ``max_by``, n rows to the exchange)
-    and element-wise recentring via ``posexplode`` + ``avg`` (one keyed
-    shuffle of (cell, dim) partials). Only the ``n_cells`` centroid rows
-    ever reach the driver, once per iteration (they must materialize
-    anyway to seed the next broadcast). ``sample_rows=None`` trains on
-    the FULL corpus — the option the driver-side form cannot offer.
-
-    With ``round_decimals`` set, each step depends only on rounded values
-    (same quantized-Lloyd contract as the driver-side form), so the two
-    implementations produce BIT-IDENTICAL centroids — asserted in
-    tests/test_similarity_scale.py — and either can be swapped in under
-    the oracle-checked catalog vehicle.
-
-    Returns (cell, cv, cnrm), cells 0..n_cells-1.
-    """
-    import math
-
-    spark = emb.sparkSession
-    base = emb.select(
-        F.col(vec_id).alias("vid"),
-        as_double_array(F.col(embedding)).alias("v"),
-    )
-    ordered = base.orderBy(F.md5(F.col("vid").cast("string")), F.col("vid"))
-    sample = (
-        ordered.limit(sample_rows) if sample_rows is not None else ordered
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    persisted = sample_rows is not None and sample_rows <= 4 * 16384
-    if persisted:
-        sample = sample.persist()  # bounded; reused iters+1 times below
-
-    init = sample.limit(n_cells).select("v").collect()  # n_cells rows only
-    n_cells = min(n_cells, len(init))
-    cent_rows = [(i, list(init[i]["v"])) for i in range(n_cells)]
-
-    def cents_df(rows):
-        return spark.createDataFrame(
-            [(c, v, math.sqrt(sum(x * x for x in v)) or 1e-12) for c, v in rows],
-            "cell long, cv array<double>, cnrm double",
-        )
-
-    for _ in range(iters):
-        assigned = _assign_cells(sample, cents_df(cent_rows), round_decimals)
-        means = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("m"))
-        )
-        if round_decimals is not None:
-            means = means.withColumn("m", F.round("m", round_decimals))
-        new_cv = (
-            means.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", F.transform("pm", lambda s: s["m"]).alias("cv"))
-        )
-        updated = {r["cell"]: list(r["cv"]) for r in new_cv.collect()}  # ≤ n_cells
-        # empty cells keep their previous centroid — same contract as the
-        # driver-side form and its oracle replay
-        cent_rows = [(c, updated.get(c, v)) for c, v in cent_rows]
-
-    if persisted:
-        # the iterations fully consumed the sample; don't pin it for the
-        # session's lifetime (a quantizer-training service would otherwise
-        # accumulate a cached sample per corpus)
-        sample.unpersist()
-
-    import numpy as np
-
-    return spark.createDataFrame(
-        [
-            (c, v, float(np.linalg.norm(np.asarray(v))))
-            for c, v in cent_rows
-        ],
-        "cell long, cv array<double>, cnrm double",
-    )
-
-
-def ivf_index(
-    emb: DataFrame,
-    n_cells: int | None = None,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-    train_iters: int = 0,
-    distributed_training: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Build the persistable IVF index: (centroids, members).
-
-    centroids = (cell, cv, cnrm) — tiny, broadcastable.
-    members   = (cell, vid, v, nrm) — the corpus partitioned by cell; write
-    it bucketed on ``cell`` (sinks.bucketed) and query batches search it
-    without re-assigning the corpus.
-
-    ``train_iters=0`` keeps the deterministic lowest-id coarse quantizer of
-    :func:`ann_ivf_topk` — bit-reproducible in any engine, which is what
-    makes the catalog query oracle-checkable. ``train_iters>0`` runs
-    :func:`train_centroids` (sample-based spherical k-means) instead:
-    better-shaped cells → higher recall at the same nprobe, identical query
-    contract.
-    """
-    import math
-
-    base = emb.select(
-        F.col(vec_id).alias("vid"),
-        as_double_array(F.col(embedding)).alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    if n_cells is None:
-        base.persist()  # sizing count doubles as the cache materializer
-        n_cells = max(8, math.ceil(math.sqrt(base.count())))
-    if train_iters > 0:
-        trainer = (
-            train_centroids_distributed if distributed_training else train_centroids
-        )
-        cents = trainer(
-            emb, n_cells, vec_id=vec_id, embedding=embedding, iters=train_iters
-        )
-    else:
-        cents = base.orderBy("vid").limit(n_cells).select(
-            F.col("vid").alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cnrm"),
-        )
-    members = _assign_cells(base, cents).select("cell", "vid", "v", "nrm")
-    return cents, members
-
-
 def ivf_members(
     emb: DataFrame,
     cents: DataFrame,
@@ -984,10 +799,10 @@ def ivf_members(
     embedding: str = "embedding",
     round_decimals: int | None = None,
 ) -> DataFrame:
-    """Member rows (cell, vid, v, nrm) for ``emb`` at GIVEN centroids —
-    the append-side counterpart of :func:`ivf_index` (which trains its
-    own quantizer): new batches assign at the index's frozen coarse
-    quantizer and their rows append to the persisted members relation.
+    """Member rows (cell, vid, v, nrm) for ``emb`` at GIVEN centroids
+    (from :func:`train_centroids`): new batches assign at the index's
+    frozen coarse quantizer and their rows append to the persisted
+    members relation.
     Broadcast assignment, map-only — O(batch × n_cells), no shuffle."""
     base = emb.select(
         F.col(vec_id).alias("vid"),
@@ -995,222 +810,4 @@ def ivf_members(
     ).withColumn("nrm", l2_norm(F.col("v")))
     return _assign_cells(base, cents, round_decimals=round_decimals).select(
         "cell", "vid", "v", "nrm"
-    )
-
-
-def ann_ivf_query(
-    queries: DataFrame,
-    centroids: DataFrame,
-    members: DataFrame,
-    k: int = 3,
-    nprobe: int = 1,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> DataFrame:
-    """Search a query batch against a prebuilt IVF index (incremental form).
-
-    Each query broadcasts against the centroid table, keeps its ``nprobe``
-    closest cells, joins the member lists of just those cells, and ranks by
-    exact cosine. Cost: |queries| × nprobe × avg-cell-size — independent of
-    corpus size beyond cell occupancy; the only shuffle is keyed by cell
-    (none on the corpus side if members were written bucketed on cell).
-    ``nprobe > 1`` trades compute for recall — the standard IVF knob the
-    self-indexing form doesn't expose.
-
-    Returns (query_id, neighbor_id, cos_sim, rk); self-matches (same id)
-    are excluded.
-    """
-    q = queries.select(
-        F.col(vec_id).alias("query_id"),
-        as_double_array(F.col(embedding)).alias("qv"),
-    ).withColumn("qnrm", l2_norm(F.col("qv")))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell")
-    )
-    probed = (
-        q.join(F.broadcast(centroids))
-        .withColumn(
-            "cell_cos",
-            dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")),
-        )
-        .withColumn("prn", F.row_number().over(probe_w))
-        .where(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "qnrm", "cell")
-    )
-    scored = (
-        probed.join(members, "cell")
-        .where(F.col("query_id") != F.col("vid"))
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rk")
-    )
-
-
-def quantize_embeddings(
-    emb: DataFrame,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization of an embedding column.
-
-    The standard memory step for vector corpora at 100 TB: float32 → int8
-    cuts the stored/shuffled bytes 4× while cosine ranking degrades only
-    marginally (per-vector max-abs scaling keeps relative magnitudes). Pure
-    array expressions — quantization fuses into the scan, no Python, no
-    shuffle:
-
-        scale = max(|v_i|) / 127        (0-vectors keep scale 0)
-        q_i   = round(v_i / scale)      as tinyint in [-127, 127]
-
-    Returns (vec_id, qvec array<tinyint>, scale double); reconstruct with
-    :func:`dequantize_expr` (q_i · scale). Quantization error is bounded by
-    scale/2 per coordinate — the recall impact is measured, not assumed, in
-    tests/test_similarity_scale.py.
-    """
-    v = as_double_array(F.col(embedding))
-    scale = (
-        F.aggregate(v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x)))
-        / F.lit(127.0)
-    )
-    staged = emb.select(
-        F.col(vec_id).alias("vec_id"), v.alias("v"), scale.alias("scale")
-    )
-    qvec = F.transform(
-        F.col("v"),
-        lambda x: F.when(F.col("scale") == 0, F.lit(0))
-        .otherwise(F.round(x / F.col("scale")))
-        .cast("tinyint"),
-    )
-    return staged.select("vec_id", qvec.alias("qvec"), "scale")
-
-
-def dequantize_expr(qvec: Column, scale: Column) -> Column:
-    """Reconstruct a double array from (qvec, scale)."""
-    return F.transform(qvec, lambda q: q.cast("double") * scale)
-
-
-def _hyperplane(plane: int, dim: int) -> float:
-    """Deterministic pseudo-random hyperplane coefficient in [-1, 1).
-
-    Derived from md5(plane:dim) — reproducible everywhere, no RNG state.
-    """
-    import hashlib
-
-    h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()
-    return (int(h[:8], 16) / float(0xFFFFFFFF)) * 2.0 - 1.0
-
-
-def srp_band_keys(embedding: Column, dims: int, planes: int, bands: int) -> Column:
-    """Per-band SRP bucket keys — the OR-amplification construction.
-
-    ``planes`` hyperplane bits split into ``bands`` independent hash tables
-    of ``planes // bands`` bits each; two vectors are candidates if they
-    collide in ANY band. With per-bit agreement p = 1 − θ/π, candidate
-    probability is 1 − (1 − p^bits)^bands — the same S-curve amplification
-    MinHash-LSH banding uses, and the knob recall is tuned with: more bands
-    → higher recall; more bits per band → smaller buckets (less work).
-    Returns an array of ``bands`` string keys ("band:signature").
-    """
-    if bands < 1 or bands > planes or planes % bands != 0:
-        raise ValueError(
-            f"bands must divide planes with bands <= planes; got "
-            f"planes={planes}, bands={bands} (a silent remainder would drop "
-            f"hyperplanes; bands > planes would collide every vector)"
-        )
-    bpb = planes // bands
-    keys = []
-    for b in range(bands):
-        acc = F.lit(0).cast("long")
-        for i in range(bpb):
-            p = b * bpb + i
-            plane = F.array(*[F.lit(_hyperplane(p, d)) for d in range(dims)])
-            proj = dot(embedding, plane)
-            acc = acc + F.when(proj >= 0, F.lit(2 ** i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        keys.append(F.concat_ws(":", F.lit(str(b)), acc.cast("string")))
-    return F.array(*keys)
-
-
-def ann_lsh_topk(
-    emb: DataFrame,
-    dims: int,
-    k: int = 5,
-    planes: int = 16,
-    bands: int = 1,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-    max_bucket: int = 4096,
-) -> DataFrame:
-    """Approximate kNN: exact cosine ranking within SRP-LSH buckets.
-
-    Vectors colliding in any of ``bands`` independent SRP hash tables are
-    compared exactly; everything else is pruned. The vector payload rides
-    WITH its id through the bucket shuffle (the near_dup_pairs pattern):
-    one corpus scan, one wide dependency (bucket groupBy), in-array pair
-    expansion + exact cosine, then a distinct over cross-band repeats — no
-    join back to the corpus. ``bands=1`` is plain single-table SRP;
-    ``bands>1`` OR-amplifies recall (see :func:`srp_band_keys`). Buckets
-    larger than ``max_bucket`` are sidelined (degenerate-hash guard, same
-    rationale as dedup's cap). Pair space is Σ bucket² per band, never n².
-
-    Returns (query_id, neighbor_id, cos_sim, rk).
-    """
-    base = emb.select(
-        F.col(vec_id).alias("vid"),
-        as_double_array(F.col(embedding)).alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    rows = base.select(
-        "vid", "v", "nrm",
-        F.explode(srp_band_keys(F.col("v"), dims, planes, bands)).alias("bkey"),
-    )
-    groups = (
-        rows.groupBy("bkey")
-        .agg(F.array_sort(F.collect_list(F.struct("vid", "v", "nrm"))).alias("ms"))
-        .where((F.size("ms") > 1) & (F.size("ms") <= F.lit(max_bucket)))
-    )
-    ms = F.col("ms")
-    # all ordered pairs (a ≠ b) within the bucket — each is its own query
-    pair_structs = F.flatten(
-        F.transform(
-            ms,
-            lambda x: F.filter(
-                F.transform(
-                    ms,
-                    lambda y: F.struct(
-                        x["vid"].alias("query_id"),
-                        y["vid"].alias("neighbor_id"),
-                        (dot(x["v"], y["v"]) / (x["nrm"] * y["nrm"])).alias(
-                            "cos_sim"
-                        ),
-                    ),
-                ),
-                lambda p: p["query_id"] != p["neighbor_id"],
-            ),
-        )
-    )
-    scored = (
-        groups.select(F.explode(pair_structs).alias("p"))
-        .select("p.query_id", "p.neighbor_id", "p.cos_sim")
-        .distinct()  # cross-band repeats carry identical cos_sim
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rk")
     )

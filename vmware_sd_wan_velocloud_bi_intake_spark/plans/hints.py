@@ -16,7 +16,8 @@ fits ``max_bytes`` — mirroring ``spark.sql.autoBroadcastJoinThreshold``
 semantics but driven by EXACT row counts from the profile rather than
 file sizes, which is what makes it usable for aggregated/derived
 relations. Above the bound the relation is left unhinted and AQE picks
-the strategy from measured runtime sizes.
+the strategy from measured runtime sizes. Hot-key skew is AQE's job too:
+``session.py`` turns on ``adaptive.skewJoin`` and partition coalescing.
 
 Scale: decisions read the profile relation — one row per column,
 bounded by schema width, never by data — so the driver-side collect here
@@ -26,7 +27,6 @@ is O(columns).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # conservative default: well under the ~200 MB executor-broadcast comfort
 # zone, comfortably above the 10 MB autoBroadcastJoinThreshold default
@@ -87,101 +87,3 @@ def broadcast_decision(
     rows = [r.asDict() if hasattr(r, "asDict") else dict(r) for r in profile]
     return estimated_bytes(rows) <= max_bytes
 
-
-def broadcast_by_profile(
-    df: DataFrame,
-    profile: DataFrame | list[dict],
-    max_bytes: int = DEFAULT_BROADCAST_MAX_BYTES,
-) -> DataFrame:
-    """Return ``df`` with a broadcast hint iff its profile says it fits;
-    otherwise unhinted (AQE decides from runtime sizes)."""
-    return F.broadcast(df) if broadcast_decision(profile, max_bytes) else df
-
-
-# ---------------------------------------------------------------------------
-# Skew routing: the hot-key half of the ANALYZE loop (round 7). AQE's
-# skew handling splits oversized SORT-MERGE join partitions at runtime; it
-# cannot help the two shapes operators/skew.py covers — a hash aggregation
-# whose hot key pins one reducer, and a broadcast join whose POST-join
-# partitioning concentrates a hot key. The decision statistic comes from
-# operators.profile.key_frequency_profile, mirroring AQE's own rule
-# (skewedPartitionFactor): a key is hot when its count exceeds
-# ``skew_factor`` × the mean per-partition row share.
-# ---------------------------------------------------------------------------
-DEFAULT_SKEW_FACTOR = 5.0
-
-
-def skew_decision(
-    key_profile: "DataFrame | list[dict]",
-    key: str,
-    shuffle_partitions: int,
-    skew_factor: float = DEFAULT_SKEW_FACTOR,
-) -> bool:
-    """True iff the profiled key column carries a heavy hitter.
-
-    A balanced shuffle gives each of ``shuffle_partitions`` reducers
-    n_rows / partitions rows; the top key's whole count lands on ONE
-    reducer, so it is hot when count > factor × that share. Reading the
-    profile is O(top × columns) driver-side rows.
-    """
-    if hasattr(key_profile, "collect"):
-        key_profile = key_profile.collect()
-    rows = [
-        r.asDict() if hasattr(r, "asDict") else dict(r)
-        for r in key_profile
-    ]
-    rows = [r for r in rows if r["column"] == key]
-    if not rows:
-        raise ValueError(f"skew_decision: no profile rows for key {key!r}")
-    top = max(int(r["key_count"]) for r in rows)
-    n_rows = int(rows[0]["n_rows"])
-    share = max(n_rows / max(shuffle_partitions, 1), 1.0)
-    return top > skew_factor * share
-
-
-def routed_sum(
-    df: DataFrame,
-    key: str,
-    value_aggs: "dict[str, Column]",
-    key_profile: "DataFrame | list[dict]",
-    n_salts: int = 16,
-    skew_factor: float = DEFAULT_SKEW_FACTOR,
-) -> DataFrame:
-    """groupBy(key).agg(...) that self-routes through the salted two-phase
-    form when the key profile shows a heavy hitter. Same result either
-    way (salted_sum's contract); the profile only picks the plan.
-
-    Inherits salted_sum's merge-naming convention: aggregates must be
-    algebraic, and non-sum merges tag the output name suffix (``_min`` /
-    ``_max`` / ``_count``) so the phase-2 re-merge picks the right
-    combiner — a bare ``F.max(...)`` named without the suffix would be
-    re-merged by SUM on the salted route while the plain route returns
-    the true max."""
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if skew_decision(key_profile, key, parts, skew_factor):
-        from ..operators.skew import salted_sum
-
-        return salted_sum(df, key, value_aggs, n_salts=n_salts)
-    return df.groupBy(key).agg(
-        *[expr.alias(name) for name, expr in value_aggs.items()]
-    )
-
-
-def routed_dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    key_profile: "DataFrame | list[dict]",
-    n_salts: int = 8,
-    skew_factor: float = DEFAULT_SKEW_FACTOR,
-) -> DataFrame:
-    """fact ⋈ broadcast(dim) that self-routes through the salted-dim form
-    (dim exploded per salt, fact salted deterministically) when the FACT
-    key profile shows a heavy hitter — post-join partitioning by
-    (key, salt) then spreads the hot key across ``n_salts`` tasks."""
-    parts = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if skew_decision(key_profile, key, parts, skew_factor):
-        from ..operators.skew import salted_broadcast_join
-
-        return salted_broadcast_join(fact, dim, key, n_salts=n_salts)
-    return fact.join(F.broadcast(dim), key)

@@ -1944,11 +1944,6 @@ FROM feat f CROSS JOIN {prev} w
 TXT_CLF_ORACLE = _clf_oracle(_CLF_ITERS, _CLF_LR, _CLF_RD)
 
 
-# NOTE: the SRP-LSH ANN path (operators/similarity.ann_lsh_topk, 12-band
-# OR-amplified) is no longer a catalog entry: its driver check was rows-only
-# by necessity (hyperplane literals live engine-side), which the quantified
-# recall@3 ≥ 0.75 floor in tests/test_similarity_scale.py strictly dominates.
-
 QUERIES: dict[str, Q] = {
     "txt_profile": Q(
         txt_profile,

@@ -184,8 +184,8 @@ def compact_parquet(
     ]
     if part_dirs:
         # a flat rewrite would silently destroy the hive layout that
-        # partition-pruned readers and merge.py's dynamic overwrite depend
-        # on — compact each partition directory instead
+        # partition-pruned readers and the ingests' batch-keyed dynamic
+        # overwrites depend on — compact each partition directory instead
         raise ValueError(
             f"compact_parquet: {path} is hive-partitioned "
             f"(e.g. {part_dirs[0]}); compact per-partition directory"
@@ -260,8 +260,8 @@ def compact_partitioned(
     Partition values live in the directory names, so each leaf can be
     rewritten independently with the same staged-swap protocol as
     :func:`compact_parquet` — the operation is atomic PER PARTITION (the
-    same granularity at which streaming sinks fragment the table and at
-    which ``merge.py``'s dynamic overwrite commits), and a crash leaves
+    same granularity at which streaming sinks fragment the table and
+    commit their dynamic overwrites), and a crash leaves
     every partition either old or new, never mixed. Leaves already at or
     under their planned file count are skipped — the maintenance loop
     touches only fragmented partitions, so repeated runs are cheap no-ops.

@@ -4,9 +4,9 @@ The reference writes one MySQL statement per value with ``INSERT … ON
 DUPLICATE KEY UPDATE`` / ``INSERT IGNORE`` (``fun_mysql_inserts.py:16-374``).
 Set-oriented equivalents:
 
-- **upsert**        = new batch wins per PK: anti-join old vs new, union, write
+- **upsert**        = new batch wins per PK
                       (``MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT``).
-- **insert-ignore** = old wins per PK: anti-join new vs old, append survivors.
+- **insert-ignore** = old wins per PK, new PKs appended.
 - **CSV report**    = ``df.write.csv`` (reference S12 ``/tmp/*.csv`` dumps).
 
 Harness storage is parquet (TESTDATA.md); on a warehouse stack the same
@@ -14,7 +14,9 @@ functions target Delta ``MERGE INTO`` or a JDBC ``foreachBatch`` upsert — the
 batch-building logic (dedup by PK, deterministic survivor choice) is
 identical, only the final writer changes.
 
-Scale notes: both operations shuffle once on the PK. Writing is
+Scale notes: both keyed sinks are one full-outer join of old and new on
+the PK that keeps the winning side per row, so each side is read once and
+shuffled once on the PK. Writing is
 overwrite-into-staging + atomic swap so a failed job never leaves a
 half-written table; re-running the same batch is a no-op by construction
 (the reference achieves the same via per-row upsert idempotency).
@@ -50,6 +52,41 @@ def _dedup_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
+def _merge_by_keys(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    keys: Sequence[str],
+    batch_wins: bool,
+) -> None:
+    """The one body of both keyed sinks: ONE full-outer join of the target
+    and the PK-deduped batch on the keys, then per row the winning side's
+    values — the batch side when ``batch_wins`` (upsert), else the target
+    side (insert-ignore). Each input is read once; an anti-join plus union
+    would read the batch (upsert) or the target (insert-ignore) twice.
+
+    Null keys never match (SQL ``=``), so a null-key row from either side
+    survives on its own — the anti-join's behaviour.
+    """
+    batch = _dedup_by_keys(df, keys)
+    if os.path.exists(path):
+        t = spark.read.parquet(path).withColumn("__t", F.lit(True)).alias("t")
+        b = batch.withColumn("__b", F.lit(True)).alias("b")
+        on = [F.col(f"t.{k}") == F.col(f"b.{k}") for k in keys]
+        take_b = F.col("b.__b").isNotNull() if batch_wins else F.col("t.__t").isNull()
+        # the batch's column order, so repeated calls write byte-identical
+        # table schemas
+        merged = t.join(b, on, "full_outer").select(
+            *[
+                F.when(take_b, F.col(f"b.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+                for c in batch.columns
+            ]
+        )
+    else:
+        merged = batch
+    _atomic_overwrite(spark, merged, path)
+
+
 def upsert_parquet(
     spark: SparkSession, df: DataFrame, path: str, keys: Sequence[str]
 ) -> None:
@@ -58,16 +95,7 @@ def upsert_parquet(
     Existing rows whose PK collides with the batch are replaced; everything
     else is kept. Atomic via staging-dir swap.
     """
-    batch = _dedup_by_keys(df, keys)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        kept = existing.join(batch.select(*keys).distinct(), list(keys), "left_anti")
-        # join moves key columns first; restore the batch's column order so
-        # repeated upserts produce byte-identical table schemas
-        merged = kept.unionByName(batch).select(*batch.columns)
-    else:
-        merged = batch
-    _atomic_overwrite(spark, merged, path)
+    _merge_by_keys(spark, df, path, keys, batch_wins=True)
 
 
 def insert_ignore_parquet(
@@ -78,14 +106,7 @@ def insert_ignore_parquet(
     Mirrors the reference's events sink (unique (Date, EdgeID, Name) +
     INSERT IGNORE, ``fun_mysql_inserts.py:282-288``).
     """
-    batch = _dedup_by_keys(df, keys)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        fresh = batch.join(existing.select(*keys).distinct(), list(keys), "left_anti")
-        merged = existing.unionByName(fresh).select(*batch.columns)
-    else:
-        merged = batch
-    _atomic_overwrite(spark, merged, path)
+    _merge_by_keys(spark, df, path, keys, batch_wins=False)
 
 
 def write_csv_report(df: DataFrame, path: str) -> None:

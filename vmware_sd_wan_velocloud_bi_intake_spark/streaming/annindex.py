@@ -144,8 +144,9 @@ def make_ann_index_ingest(
 
     def _publish_parts(spark, members: DataFrame, batch_id: int) -> None:
         """Members partition + its drift part, each a batch-keyed
-        per-WRITE dynamic overwrite (sinks/merge.py discipline — scoped
-        to the write, never a session-conf mutation). The baseline is
+        per-WRITE dynamic overwrite (scoped to the write, never a
+        session-conf mutation: a session-level 'dynamic' would leak into
+        every later overwrite-partitionBy write on this driver). The baseline is
         read BEFORE anything lands: a malformed pre-built layout (e.g.
         missing occupancy.json) must fail the batch before it publishes,
         not strand an orphaned members partition behind a wedged

@@ -462,11 +462,11 @@ def make_near_dup_ingest(
                 record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
                 return
         # ---- idempotent writes, keyed by the replayable batch id -------
-        # per-WRITE dynamic overwrite (sinks/merge.py discipline): scoped
-        # to each write, never mutates the session conf — a session-level
-        # set would leak 'dynamic' into every later overwrite-partitionBy
-        # write on this driver (e.g. a re-export with fewer shards would
-        # keep stale shard partitions)
+        # per-WRITE dynamic overwrite: scoped to each write, never
+        # mutates the session conf — a session-level set would leak
+        # 'dynamic' into every later overwrite-partitionBy write on this
+        # driver (e.g. a re-export with fewer shards would keep stale
+        # shard partitions)
         novel = novel.withColumn("_batch_id", F.lit(int(batch_id))).persist()
         rows = None
         try:

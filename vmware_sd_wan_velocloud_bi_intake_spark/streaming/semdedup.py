@@ -1,7 +1,7 @@
 """Streaming semantic dedup ingest — the SemDeDup incremental flow
 (operators/similarity.py, Abbas et al. 2023, arXiv:2303.09540) on
 Structured Streaming ``foreachBatch``, completing the dedup family's
-streaming story: exact (streaming/stateful.py, streaming/tws.py),
+streaming story: exact (streaming/stateful.py),
 near-dup LSH (streaming/neardup.py), and now embedding-semantic.
 
 Per micro-batch: (1) in-batch SemDeDup at the index's FROZEN coarse
