@@ -7,6 +7,7 @@ import json
 import os
 from collections import Counter
 
+import pytest
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import functions as F
 
@@ -121,6 +122,54 @@ def test_landing_fetches_each_endpoint_once_and_releases_bronze(spark, tmp_path)
         assert sum(calls.value.values()) == len(calls.value) == 14
 
 
+def test_cycle_job_budget(spark, tmp_path):
+    """A landing runs at most 14 Spark jobs and a warm cycle at most 18: one
+    fetch stage for the enterprises and one for their edges and events, no
+    forcing action, and no schema-inference job in the sinks."""
+    sc = spark.sparkContext
+    jobs = []
+    for cycle in ("landing", "warm"):
+        group = f"test_cycle_job_budget/{cycle}"
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+        finally:
+            sc.setJobGroup(None, None)
+        # the status store learns of jobs from the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] <= 14 and jobs[1] <= 18, jobs
+
+
+def test_failed_fetch_leaves_landed_tables_untouched(spark, tmp_path):
+    """One VCO's events call failing fails the cycle before any sink
+    replaces its table, and leaves no persisted RDD behind."""
+    tables = ["customer", "edge", "events", "links"]
+    run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+
+    def part_files():
+        return {t: sorted(os.listdir(tmp_path / t)) for t in tables}
+
+    landed = part_files()
+    before = _persistent_rdds(spark)
+
+    def failing_factory():
+        inner = _factory()
+
+        def transport(method, params):
+            if method == "event/getEnterpriseEvents" and params["endpoint"]["vco"] == "vco1":
+                raise RuntimeError("vco1 events call failed")
+            return inner(method, params)
+
+        return transport
+
+    with pytest.raises(Exception, match="vco1 events call failed"):
+        run_pipeline(spark, VCOS, failing_factory, out_dir=str(tmp_path))
+    assert sorted(os.listdir(tmp_path)) == tables  # no staging dir left
+    assert part_files() == landed
+    assert _persistent_rdds(spark) == before
+
+
 def test_pipeline_without_out_dir_stays_lazy(spark):
     """Without ``out_dir`` nothing is fetched or persisted until the caller
     evaluates a frame."""
@@ -142,7 +191,7 @@ def test_fetch_fan_out_capped_at_task_slots(spark):
         [(json.dumps(e, sort_keys=True),) for e in eps], "endpoint string"
     )
     wide = fetch_payloads_from(
-        eps_df, "enterprise/getEnterpriseEdges", build_params(), FakeVcoTransport,
+        eps_df, [("enterprise/getEnterpriseEdges", build_params())], FakeVcoTransport,
         max_parallelism=32,
     )
     assert wide.rdd.getNumPartitions() == min(32, slots)

@@ -152,31 +152,3 @@ def test_estimated_bytes_uses_length_not_max_value(spark):
     assert doc["max_len"] == 50_000      # width stat: longest value
     # 2 rows x (50_000 + 8) — the 50 KB row drives the estimate
     assert estimated_bytes(prof) == 2 * 50_008
-
-
-# ---------------------------------------------------------------------------
-# Heavy-hitter profile: the per-key statistic for picking a shuffle key.
-# ---------------------------------------------------------------------------
-def test_key_frequency_profile_finds_heavy_hitter(spark):
-    df = spark.range(10_000).select(
-        F.when(F.col("id") % 2 == 0, F.lit(7)).otherwise(F.col("id") % 97).alias("k")
-    )
-    prof = profile.key_frequency_profile(df, ["k"], top=3)
-    rows = {r["value_str"]: r for r in prof.collect()}
-    assert "7" in rows
-    top = rows["7"]
-    assert top["key_count"] > 5_000  # half the rows + the id%97==7 tail
-    assert 0.5 <= top["key_frac"] <= 0.6
-    assert top["n_rows"] == 10_000
-
-
-def test_key_frequency_profile_validation(spark, sf_smoke):
-    from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
-
-    with pytest.raises(ValueError, match="unknown columns"):
-        profile.key_frequency_profile(
-            load_table(spark, sf_smoke, "nation"), ["nope"]
-        )
-    with pytest.raises(ValueError, match="no key columns"):
-        profile.key_frequency_profile(load_table(spark, sf_smoke, "nation"), [])
-

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from vmware_sd_wan_velocloud_bi_intake_spark.sinks.upsert import (
     insert_ignore_parquet,
     upsert_parquet,
@@ -68,6 +72,22 @@ def test_warm_sinks_evaluate_their_batch_once(spark, tmp_path):
             | {(k, want_overlap) for k in range(350, 400)}
             | {(k, "new") for k in range(400, 450)}
         )
+
+
+def test_batch_column_missing_from_table_raises(spark, tmp_path):
+    """A batch column the stored table lacks fails loud, for either sink,
+    and leaves the table as it was: it is never read back as nulls."""
+    from pyspark.errors import AnalysisException
+
+    for sink in (upsert_parquet, insert_ignore_parquet):
+        path = str(tmp_path / sink.__name__)
+        sink(spark, spark.createDataFrame([(1, "a")], "k int, v string"), path, ["k"])
+        parts = sorted(os.listdir(path))
+        wider = spark.createDataFrame([(2, "b", 0.5)], "k int, v string, w double")
+        with pytest.raises((AnalysisException, ValueError)):
+            sink(spark, wider, path, ["k"])
+        assert sorted(os.listdir(path)) == parts
+        assert _rows(spark, path) == {(1, "a")}
 
 
 def test_upsert_dedups_batch_deterministically(spark, tmp_path):

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vmware_sd_wan_velocloud_bi_intake_spark.plans.velocloud import (
     bronze_edges,
+    bronze_enterprise_payloads,
     bronze_enterprises,
     bronze_events,
 )
@@ -41,10 +42,12 @@ def main() -> None:
     vcos = ["vco0", "vco1"]
     ents = bronze_enterprises(spark, vcos, transport_factory)
     ents.cache()
-    edges = bronze_edges(spark, ents, transport_factory)
-    events = bronze_events(
-        spark, ents, transport_factory, (1704067200000, 1706745600000)
+    payloads = bronze_enterprise_payloads(
+        ents, transport_factory, (1704067200000, 1706745600000)
     )
+    payloads.cache()
+    edges = bronze_edges(payloads)
+    events = bronze_events(payloads)
     os.makedirs(OUT, exist_ok=True)
     for name, df in (("enterprises", ents), ("edges", edges), ("events", events)):
         path = os.path.join(OUT, f"{name}.parquet")

@@ -97,60 +97,3 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         )
     return row.select(F.explode(F.array(*entries)).alias("p")).select("p.*")
 
-
-def key_frequency_profile(
-    df: DataFrame,
-    key_cols: list[str],
-    top: int = 5,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    """Heavy-hitter statistics for candidate shuffle keys: the ``top``
-    most frequent values per key column, with their absolute counts and
-    corpus fractions: the statistic for picking a shuffle key before AQE's
-    runtime skew-join splitting (``session.py``) has to step in.
-
-    (column, value_str, key_count, key_frac, n_rows) — ``top`` rows per
-    requested column, counts over the (optionally sampled) input and
-    fractions of its row count, so ``key_frac`` is sample-invariant in
-    expectation.
-
-    Shape: one groupBy per requested key column over a 2-column
-    projection (map-side combined; the shuffle is O(distinct keys) — the
-    same key shuffle the aggregation being planned would pay once, run
-    here at ANALYZE time, or over a thin sample via ``sample_fraction``
-    when even that is too dear), then a per-column top-``top`` rank. The
-    per-column relations union AFTER their local limits, so the combined
-    result stays ``top × len(key_cols)`` rows.
-    """
-    if not key_cols:
-        raise ValueError("key_frequency_profile: no key columns")
-    missing = [c for c in key_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"key_frequency_profile: unknown columns {missing}")
-    src = (
-        df.sample(fraction=sample_fraction, seed=7)
-        if sample_fraction is not None
-        else df
-    )
-    total = src.agg(F.count(F.lit(1)).alias("n_rows"))
-    outs = []
-    for c in key_cols:
-        counted = (
-            src.groupBy(F.col(c).cast("string").alias("value_str"))
-            .agg(F.count(F.lit(1)).alias("key_count"))
-            .orderBy(F.desc("key_count"), F.asc("value_str"))
-            .limit(top)
-            .select(F.lit(c).alias("column"), "value_str", "key_count")
-        )
-        outs.append(counted)
-    merged = outs[0]
-    for o in outs[1:]:
-        merged = merged.unionByName(o)
-    return merged.crossJoin(F.broadcast(total)).select(
-        "column",
-        "value_str",
-        "key_count",
-        (F.col("key_count").cast("double") / F.greatest(F.col("n_rows"), F.lit(1)))
-        .alias("key_frac"),
-        "n_rows",
-    )

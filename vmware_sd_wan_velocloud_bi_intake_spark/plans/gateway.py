@@ -144,8 +144,7 @@ def gateway_metrics_max(
     )
     raw = fetch_payloads_from(
         eps,
-        "metrics/getGatewayStatusMetrics",
-        build_params(interval=interval_ms),
+        [("metrics/getGatewayStatusMetrics", build_params(interval=interval_ms))],
         transport_factory,
         max_parallelism=32,
     )

@@ -13,11 +13,13 @@ per-statement MySQL commits become one idempotent upsert per output table
 (sinks.upsert). Bronze fetch parallelism is the Spark scheduler (T6), with
 request pushdown in the source adapter (S3/S4).
 
-One landing fetches each endpoint once, like the reference's cycle: with
-``out_dir``, ``run_pipeline`` persists the three bronze fetches, forces
-each with one count, runs the four sinks over them, and releases them
-after. Without ``out_dir`` it only builds the plan: nothing runs and
-nothing is persisted until the caller evaluates a frame.
+One landing fetches each endpoint once, like the reference's cycle: one
+stage fetches the enterprises, and one more fetches each enterprise's
+edges and then its events in the same task (``process_customer``). With
+``out_dir``, ``run_pipeline`` persists both fetches without forcing them:
+the first sink's query builds the caches, the four sinks read them, and
+they are released after. Without ``out_dir`` it only builds the plan:
+nothing runs and nothing is persisted until the caller evaluates a frame.
 
 At scale: bronze fan-out is at most one task per task slot and per (vco,
 enterprise) (``sources.api``); silver transforms are shuffle-free per-edge
@@ -37,12 +39,7 @@ from pyspark.sql import types as T
 
 from ..functions.sanitize import valid_name
 from ..sinks.upsert import insert_ignore_parquet, upsert_parquet
-from ..sources.api import (
-    Transport,
-    build_params,
-    fetch_payloads,
-    fetch_payloads_from,
-)
+from ..sources.api import build_params, fetch_payloads, fetch_payloads_from
 
 # ---------------------------------------------------------------------------
 # Declared nested schemas for the API payloads (SURVEY.md §1.4: explicit
@@ -127,6 +124,9 @@ EVENTS_SCHEMA = T.StructType(
 
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
+EDGES_METHOD = "enterprise/getEnterpriseEdges"
+EVENTS_METHOD = "event/getEnterpriseEvents"
+
 # Reference skip list analog (P5, powerbi_main_fun.py:845-851).
 EVENTS_TO_SKIP = ["LINK_ALIVE"]
 
@@ -159,57 +159,51 @@ def bronze_enterprises(
     )
 
 
-def bronze_edges(
-    spark: SparkSession, enterprises: DataFrame, transport_factory
+def bronze_enterprise_payloads(
+    enterprises: DataFrame, transport_factory, interval_ms: tuple[int, int]
 ) -> DataFrame:
-    # one fetch per (vco, enterprise) — the reference's nested loops
-    # become a partitioned endpoint COLUMN (T6): the discovered fleet flows
-    # straight from the bronze enterprises DataFrame into the fetch stage,
-    # no driver round-trip (a collect here is a funnel at 100× fleet)
+    """Each (vco, enterprise)'s edges, then its events, in one fetch stage.
+
+    The reference's per-customer thread (``process_customer``,
+    powerbi_main_fun.py:150-278) as one task per endpoint row that makes
+    both calls: the discovered fleet flows straight from the bronze
+    enterprises DataFrame into the fetch (T6), no driver round-trip (a
+    collect here is a funnel at 100× fleet). Rows carry their ``method``;
+    :func:`bronze_edges` and :func:`bronze_events` project them apart.
+    """
     eps = enterprises.select(
         F.to_json(
             F.struct(F.col("vco"), F.col("enterprise_id").alias("enterpriseId"))
         ).alias("endpoint")
     )
-    params = build_params(
-        base_params={},
-        projection=["site", "recentLinks", "licenses"],  # S3 projection push
-    )
-    raw = fetch_payloads_from(
-        eps, "enterprise/getEnterpriseEdges", params, transport_factory,
-        max_parallelism=32,
-    )
+    # S3 projection and S4 interval pushdown; enterpriseId rides in the endpoint
+    calls = [
+        (EDGES_METHOD, build_params(projection=["site", "recentLinks", "licenses"])),
+        (EVENTS_METHOD, build_params(interval=interval_ms)),
+    ]
+    raw = fetch_payloads_from(eps, calls, transport_factory, max_parallelism=32)
     return raw.select(
         F.get_json_object("endpoint", "$.vco").alias("vco"),
         F.get_json_object("endpoint", "$.enterpriseId").cast("long").alias(
             "enterprise_id"
         ),
+        "method",
+        "payload",
+    )
+
+
+def bronze_edges(payloads: DataFrame) -> DataFrame:
+    return payloads.filter(F.col("method") == EDGES_METHOD).select(
+        "vco",
+        "enterprise_id",
         F.explode(F.from_json("payload", EDGE_SCHEMA)).alias("edge"),
     )
 
 
-def bronze_events(
-    spark: SparkSession,
-    enterprises: DataFrame,
-    transport_factory,
-    interval_ms: tuple[int, int],
-) -> DataFrame:
-    eps = enterprises.select(
-        F.to_json(
-            F.struct(F.col("vco"), F.col("enterprise_id").alias("enterpriseId"))
-        ).alias("endpoint")
-    )
-    # NOTE: enterpriseId rides in the endpoint; interval is pushed down (S4)
-    params = build_params(interval=interval_ms)
-    raw = fetch_payloads_from(
-        eps, "event/getEnterpriseEvents", params, transport_factory,
-        max_parallelism=32,
-    )
-    return raw.select(
-        F.get_json_object("endpoint", "$.vco").alias("vco"),
-        F.get_json_object("endpoint", "$.enterpriseId").cast("long").alias(
-            "enterprise_id"
-        ),
+def bronze_events(payloads: DataFrame) -> DataFrame:
+    return payloads.filter(F.col("method") == EVENTS_METHOD).select(
+        "vco",
+        "enterprise_id",
         F.explode(F.from_json("payload", EVENTS_SCHEMA)["data"]).alias("ev"),
     )
 
@@ -332,28 +326,29 @@ def run_pipeline(
 ) -> PipelineOutput:
     """Build bronze → silver → gold; with ``out_dir``, upsert them to parquet.
 
-    With ``out_dir`` the enterprise, edge and event fetches are persisted
-    and forced in that order, once each, before the four sinks run, and
-    released after them, so a landing makes one call per endpoint. The
-    returned frames stay valid: evaluated after return, they fetch again.
-    Without ``out_dir`` nothing runs: the frames are lazy plans.
+    With ``out_dir`` the enterprise fetch and the fused edge + event fetch
+    are persisted, not forced: the edge sink's query builds both caches
+    before it writes, the other three sinks read them, and the ``finally``
+    releases them, so a landing makes one call per endpoint. A failed
+    fetch fails the edge sink before any table is replaced. The returned
+    frames stay valid: evaluated after return, they fetch again. Without
+    ``out_dir`` nothing runs: the frames are lazy plans.
     """
     enterprises = bronze_enterprises(spark, vcos, transport_factory)
-    b_edges = bronze_edges(spark, enterprises, transport_factory)
-    b_events = bronze_events(spark, enterprises, transport_factory, interval_ms)
+    payloads = bronze_enterprise_payloads(enterprises, transport_factory, interval_ms)
+    b_edges = bronze_edges(payloads)
 
     s_edges = silver_edges(b_edges)
     s_links = silver_links(b_edges)
-    s_events = silver_events(b_events)
+    s_events = silver_events(bronze_events(payloads))
     g_customers = gold_customer_rollup(enterprises, s_edges)
 
     if out_dir:
-        bronze = [enterprises, b_edges, b_events]
+        bronze = [enterprises, payloads]
         try:
-            # in order: the edge and event fetches read the cached enterprises
+            # in order: the payloads cache then plans over the enterprises one
             for df in bronze:
                 df.persist()
-                df.count()
             upsert_parquet(spark, s_edges, os.path.join(out_dir, "edge"), ["edge_uuid"])
             upsert_parquet(spark, s_links, os.path.join(out_dir, "links"), ["link_id"])
             insert_ignore_parquet(
@@ -369,8 +364,8 @@ def run_pipeline(
                 ["vco", "enterprise_id"],
             )
         finally:
-            # dependents first: releasing enterprises while the edge and
-            # event caches still read it makes Spark re-register them
+            # dependents first: releasing enterprises while the payloads
+            # cache still reads it makes Spark re-register that cache
             for df in reversed(bronze):
                 df.unpersist()
     return PipelineOutput(enterprises, s_edges, s_links, s_events, g_customers)

@@ -70,7 +70,13 @@ def _merge_by_keys(
     """
     batch = _dedup_by_keys(df, keys)
     if os.path.exists(path):
-        t = spark.read.parquet(path).withColumn("__t", F.lit(True)).alias("t")
+        # the batch's schema spares a schema-inference job; a batch column
+        # the table lacks must still fail loud, not read back as nulls
+        missing = set(batch.columns) - set(_stored_columns(path))
+        if missing:
+            raise ValueError(f"{path} lacks the batch's columns {sorted(missing)}")
+        t = spark.read.schema(batch.schema).parquet(path)
+        t = t.withColumn("__t", F.lit(True)).alias("t")
         b = batch.withColumn("__b", F.lit(True)).alias("b")
         on = [F.col(f"t.{k}") == F.col(f"b.{k}") for k in keys]
         take_b = F.col("b.__b").isNotNull() if batch_wins else F.col("t.__t").isNull()
@@ -85,6 +91,17 @@ def _merge_by_keys(
     else:
         merged = batch
     _atomic_overwrite(spark, merged, path)
+
+
+def _stored_columns(path: str) -> list[str]:
+    """Column names of the parquet table at ``path``, read on the driver from
+    one part file's footer."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    if not parts:
+        raise ValueError(f"{path} holds no parquet part file")
+    return pq.read_schema(os.path.join(path, parts[0])).names
 
 
 def upsert_parquet(

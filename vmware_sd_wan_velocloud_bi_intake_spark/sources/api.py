@@ -11,12 +11,13 @@ Spark-first restatement:
 - The endpoint list becomes a DataFrame partitioned across executors; each
   partition runs a ``mapInPandas`` fetcher — fan-out parallelism is Spark's
   task scheduling, not a thread pool (T6), with retry handled by the
-  scheduler. The fetch has ``min(endpoints, max_parallelism,
-  defaultParallelism)`` partitions: ``max_parallelism`` is a true maximum,
-  and partitions beyond the cluster's task slots add tasks, not concurrent
-  calls (32 partitions on 4 slots make the same 4 calls at a time as 4
-  partitions, with 8x the tasks). Fewer tasks also means fewer per-task
-  token buckets, so the request rate toward a VCO never rises.
+  scheduler. A task makes every call an endpoint needs, in order (the
+  reference's per-customer thread). The fetch has ``min(endpoints,
+  max_parallelism, defaultParallelism)`` partitions: ``max_parallelism`` is
+  a true maximum, and partitions beyond the cluster's task slots add tasks,
+  not concurrent calls (32 partitions on 4 slots make the same 4 calls at a
+  time as 4 partitions, with 8x the tasks). Fewer tasks also means fewer
+  per-task token buckets, so the request rate toward a VCO never rises.
 - Pushdown is explicit in the request builder: ``projection`` → ``with``,
   ``interval`` → ``interval``, ``limit`` → ``limit``. The transform layer
   never re-filters what the source already filtered.
@@ -93,9 +94,9 @@ def fetch_payloads(
 ) -> DataFrame:
     """Fan the endpoint list across partitions and fetch one payload each.
 
-    Returns columns (endpoint: string JSON, payload: string JSON,
-    status: string). ``status`` is the per-row side-channel: null for a
-    clean full-projection fetch, a degradation record when the heavy call
+    Returns columns (endpoint: string JSON, method: string, payload: string
+    JSON, status: string). ``status`` is the per-row side-channel: null for
+    a clean full-projection fetch, a degradation record when the heavy call
     failed and the narrowed retry succeeded. Failures degradation cannot
     answer RAISE (a visible, Spark-retryable task error) rather than
     producing a null payload a downstream ``explode`` would silently drop.
@@ -112,29 +113,34 @@ def fetch_payloads(
     they arrive minus the degraded columns with the degradation recorded.
 
     The fan-out has ``min(len(endpoints), max_parallelism,
-    defaultParallelism)`` partitions, one task each.
+    defaultParallelism)`` partitions, one task each. The list enters as a
+    pandas frame, which Arrow plans as a ``LocalTableScan``; a Python list
+    would plan ``Scan ExistingRDD``, a Python worker round trip per slice.
     """
+    import pandas as pd
+
     n_parts = max(
         1, min(len(endpoints), max_parallelism, spark.sparkContext.defaultParallelism)
     )
     eps = spark.createDataFrame(
-        [(json.dumps(e, sort_keys=True),) for e in endpoints], "endpoint string"
+        pd.DataFrame({"endpoint": [json.dumps(e, sort_keys=True) for e in endpoints]}),
+        "endpoint string",
     ).repartition(n_parts)
     return _fetch_over(
-        eps, method, params, transport_factory, rate_limit_s, degradable
+        eps, [(method, params)], transport_factory, rate_limit_s, degradable
     )
 
 
 def fetch_payloads_from(
     endpoints_df: DataFrame,
-    method: str,
-    params: dict,
+    calls: list[tuple[str, dict]],
     transport_factory: Callable[[], Transport],
     rate_limit_s: float = 0.0,
     max_parallelism: int = 10,
     degradable: list[str] | None = None,
 ) -> DataFrame:
-    """DataFrame-native :func:`fetch_payloads`: endpoints stay distributed.
+    """DataFrame-native :func:`fetch_payloads`: endpoints stay distributed,
+    and each endpoint makes every ``(method, params)`` call in ``calls``.
 
     ``endpoints_df`` carries one JSON-string ``endpoint`` column (build it
     with ``F.to_json(F.struct(...))`` from any parent DataFrame). The
@@ -142,7 +148,10 @@ def fetch_payloads_from(
     round-trips through the driver, so planning per-entity work over a
     discovered fleet costs the same at 10 enterprises and at 10 million
     (the list form's ``collect()`` is a driver funnel at 100× fleet).
-    Same output contract as :func:`fetch_payloads`.
+    Same output contract as :func:`fetch_payloads`, one row per endpoint
+    and call: a task makes an endpoint's calls in order, serially, through
+    its one transport and token bucket (``process_customer``: edges, then
+    events), so one stage fetches them all at an unchanged request rate.
 
     The endpoint count is unknown at plan time, so the fan-out has
     ``min(max_parallelism, defaultParallelism)`` partitions; with fewer
@@ -150,23 +159,19 @@ def fetch_payloads_from(
     """
     width = endpoints_df.sparkSession.sparkContext.defaultParallelism
     eps = endpoints_df.select("endpoint").repartition(min(max_parallelism, width))
-    return _fetch_over(
-        eps, method, params, transport_factory, rate_limit_s, degradable
-    )
+    return _fetch_over(eps, calls, transport_factory, rate_limit_s, degradable)
 
 
 def _fetch_over(
     eps: DataFrame,
-    method: str,
-    params: dict,
+    calls: list[tuple[str, dict]],
     transport_factory: Callable[[], Transport],
     rate_limit_s: float,
     degradable: list[str] | None,
 ) -> DataFrame:
     import pandas as pd
 
-    method_ = method
-    params_json = json.dumps(params, sort_keys=True)
+    calls_json = json.dumps(calls, sort_keys=True)
     rl_s = rate_limit_s
     degradable_ = list(degradable or [])
 
@@ -176,27 +181,26 @@ def _fetch_over(
         # plan time) and those must not open useless connections
         transport = None
         bucket = TokenBucket(rl_s)
-        req_params = json.loads(params_json)
+        req_calls = json.loads(calls_json)
         for pdf in batches:
-            out_ep, out_pl, out_st = [], [], []
+            rows = []
             for ep_json in pdf["endpoint"]:
                 if transport is None:
                     transport = transport_factory()
                 endpoint = json.loads(ep_json)
-                bucket.acquire()
-                result, status = _call_with_degrade(
-                    transport, method_, {**req_params, "endpoint": endpoint},
-                    degradable_, bucket,
-                )
-                out_ep.append(ep_json)
-                out_pl.append(json.dumps(result, sort_keys=True))
-                out_st.append(status)
-            yield pd.DataFrame(
-                {"endpoint": out_ep, "payload": out_pl, "status": out_st}
-            )
+                for method, params in req_calls:
+                    bucket.acquire()
+                    result, status = _call_with_degrade(
+                        transport, method, {**params, "endpoint": endpoint},
+                        degradable_, bucket,
+                    )
+                    rows.append(
+                        (ep_json, method, json.dumps(result, sort_keys=True), status)
+                    )
+            yield pd.DataFrame(rows, columns=["endpoint", "method", "payload", "status"])
 
     return eps.mapInPandas(
-        fetch, schema="endpoint string, payload string, status string"
+        fetch, schema="endpoint string, method string, payload string, status string"
     )
 
 
