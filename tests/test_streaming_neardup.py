@@ -646,3 +646,148 @@ def test_backlog_start_is_bounded_and_state_identical(spark, tmp_path):
     assert len(bounded_batches) > 1, "backlog was not split into batches"
     assert unbounded_batches == {0}, "unbounded run should be one batch"
     assert bounded_rows == unbounded_rows == _expected_batch_survivors(docs)
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` runs, counted by job group (pool threads
+    inherit the caller's group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    # the status store learns of jobs from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _three_batches(docs):
+    # every batch has a novel doc, so batch 2's compaction folds two parts
+    # of every table
+    return [
+        docs.where("doc_id IN (0, 1)"),
+        docs.where("doc_id IN (2, 3)"),
+        docs.where("doc_id IN (4, 5)"),
+    ]
+
+
+def test_batch_job_budget(spark, tmp_path):
+    """A plain batch runs at most 8 Spark jobs and a compaction batch at
+    most 17 (36 and 63 before the batch ran at its own size): AQE is off
+    and shuffles are sized to the batch, compaction finds its parts by
+    listing and verifies in one job per table, and a single-part
+    directory is refused before any read."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.sinks.compact import (
+        compact_rows_parts,
+    )
+
+    idx = str(tmp_path / "idx_budget")
+    surv = str(tmp_path / "surv_budget")
+    ingest = make_near_dup_ingest(idx, surv, compact_summary_every=2, **_KNOBS)
+    b0, b1, b2 = _three_batches(_docs(spark))
+    ingest(b0, 0)
+    # batch 0 wrote one part per table: nothing to fold, and no job to see it
+    assert _jobs_in_group(
+        spark, "test_batch_job_budget/single", lambda: compact_rows_parts(spark, surv, 1)
+    ) == 0
+    assert compact_rows_parts(spark, surv, 1) is False
+    plain = _jobs_in_group(spark, "test_batch_job_budget/plain", lambda: ingest(b1, 1))
+    compaction = _jobs_in_group(
+        spark, "test_batch_job_budget/compaction", lambda: ingest(b2, 2)
+    )
+    assert plain <= 8 and compaction <= 17, (plain, compaction)
+    assert {r["doc_id"] for r in read_survivors(spark, surv).collect()} == (
+        _expected_batch_survivors(_docs(spark))
+    )
+
+
+def test_ingests_do_not_accrue_threads(spark, tmp_path):
+    """Each batch's thread pool closes with the batch: twenty live ingests
+    that ran a batch each hold no more Python threads than one did."""
+    import threading
+
+    b0 = _docs(spark).where("doc_id IN (0, 2)")
+    ingests = []
+    counts = []
+    for i in range(20):
+        ingests.append(
+            make_near_dup_ingest(
+                str(tmp_path / f"idx{i}"), str(tmp_path / f"surv{i}"), **_KNOBS
+            )
+        )
+        ingests[-1](b0, 0)
+        counts.append(threading.active_count())
+    assert counts[-1] == counts[0], counts
+
+
+def test_failed_concurrent_compaction_leaves_tables_and_replays(
+    spark, tmp_path, monkeypatch
+):
+    """One of the concurrent compactions refuses its swap: the batch raises
+    before writing any partition of its own, every table keeps its
+    pre-batch rows, and the batch's replay converges to a clean run."""
+    import os
+
+    from vmware_sd_wan_velocloud_bi_intake_spark.sinks import compact
+
+    idx = str(tmp_path / "idx_cf")
+    surv = str(tmp_path / "surv_cf")
+    tables = [idx, idx + "_summary_parts", surv]
+    ingest = make_near_dup_ingest(idx, surv, compact_summary_every=2, **_KNOBS)
+    b0, b1, b2 = _three_batches(_docs(spark))
+    ingest(b0, 0)
+    ingest(b1, 1)
+
+    def rows(path):
+        df = spark.read.parquet(path).drop("_batch_id")
+        if path.endswith("_summary_parts"):  # compaction refolds the counts
+            df = df.groupBy("bucket").agg(F.sum("n_members"))
+        return sorted(map(tuple, df.collect()))
+
+    before = [rows(t) for t in tables]
+    real = compact.compact_parts
+
+    def refusing(spark_, parts_dir, before_batch_id, fold, verify, **kw):
+        if parts_dir == surv:
+
+            def verify(parts, staged):
+                raise RuntimeError("injected verify failure")
+
+        return real(spark_, parts_dir, before_batch_id, fold, verify, **kw)
+
+    monkeypatch.setattr(compact, "compact_parts", refusing)
+    with pytest.raises(RuntimeError, match="injected verify failure"):
+        ingest(b2, 2)
+    for t in tables:
+        assert "_batch_id=2" not in os.listdir(t), t
+    assert [rows(t) for t in tables] == before
+    monkeypatch.setattr(compact, "compact_parts", real)
+    ingest(b2, 2)  # the replay
+
+    clean_idx = str(tmp_path / "idx_cf_clean")
+    clean_surv = str(tmp_path / "surv_cf_clean")
+    clean = make_near_dup_ingest(
+        clean_idx, clean_surv, compact_summary_every=2, **_KNOBS
+    )
+    for i, b in enumerate((b0, b1, b2)):
+        clean(b, i)
+    assert rows(surv) == rows(clean_surv)
+    assert rows(idx) == rows(clean_idx)
+    assert rows(idx + "_summary_parts") == rows(clean_idx + "_summary_parts")
+
+
+def test_ingest_restores_session_confs(spark, tmp_path):
+    """The batch-sized conf scope never leaks into the caller's session,
+    whether the batch succeeds or raises."""
+    keys = ["spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"]
+    before = [spark.conf.get(k) for k in keys]
+    idx = str(tmp_path / "idx_confs")
+    surv = str(tmp_path / "surv_confs")
+    ingest = make_near_dup_ingest(idx, surv, **_KNOBS)
+    docs = _docs(spark)
+    ingest(docs.where("doc_id < 3"), 0)
+    assert [spark.conf.get(k) for k in keys] == before
+    with pytest.raises(ValueError, match="reserved column"):
+        ingest(docs.where("doc_id >= 3").withColumn("_keep", F.lit(1)), 1)
+    assert [spark.conf.get(k) for k in keys] == before

@@ -49,9 +49,12 @@ def micro_batch_confs(spark, shuffle_partitions: int = 4):
     near-empty tasks of scheduling per micro-batch — interleaved A/B on
     the streaming vehicle: 9.7→5.5 s). Delegates to the shared
     get→set→restore scope (functions/conf.py — same rule, batch-sized
-    instead of loop-sized). Production deployments size these to the
-    batch volume instead; the catalog runs serially, so a scoped
+    instead of loop-sized). The catalog runs serially, so a scoped
     override cannot race another query.
+
+    The semantic-dedup stream and the incremental-stats vehicles use it.
+    The near-dup stream vehicle does not: its ingest opens the same
+    scope per micro-batch, sized from the batch's own row count.
     """
     from ..functions.conf import iterative_loop_confs
 

@@ -536,22 +536,20 @@ def dedup_stream_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh per-RUN state (index/survivors/checkpoint) — only the split is
     # cacheable; reusing a checkpoint would make the second run a no-op
     root = _stream_scratch_dir("dedup_stream_run_")
-    # micro-batch conf scope (queries/base.micro_batch_confs): AQE off +
-    # few shuffle partitions for the hundreds-of-rows batches — the
-    # interleaved A/B behind both choices is in the helper's docstring
-    with micro_batch_confs(spark):
-        run_file_ingest(
-            spark,
-            os.path.join(src, "arr=*"),
-            "doc_id long, text string",
-            make_near_dup_ingest(
-                os.path.join(root, "idx"),
-                os.path.join(root, "surv"),
-                **_STREAM_SNAP_KNOBS,
-            ),
-            os.path.join(root, "ckpt"),
-            max_files_per_trigger=1,
-        )
+    # no micro_batch_confs scope: the ingest sizes each batch's execution
+    # to the batch's own row count
+    run_file_ingest(
+        spark,
+        os.path.join(src, "arr=*"),
+        "doc_id long, text string",
+        make_near_dup_ingest(
+            os.path.join(root, "idx"),
+            os.path.join(root, "surv"),
+            **_STREAM_SNAP_KNOBS,
+        ),
+        os.path.join(root, "ckpt"),
+        max_files_per_trigger=1,
+    )
     surv = spark.read.parquet(os.path.join(root, "surv"))
     return surv.select(
         "doc_id",

@@ -32,6 +32,20 @@ DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the HDFS-block-ish sweet spot
 BASE_PART = -1  # reserved _batch_id for a compacted parts-table base
 
 
+def _part_ids(parts_dir: str, before_batch_id: int) -> list[int]:
+    """The ``_batch_id`` values below ``before_batch_id`` that have a
+    partition directory under ``parts_dir`` (empty when it is missing)."""
+    if not os.path.isdir(parts_dir):
+        return []
+    ids = []
+    for d in os.listdir(parts_dir):
+        key, _, value = d.partition("=")
+        if key == "_batch_id" and value.lstrip("-").isdigit():
+            if int(value) < before_batch_id:
+                ids.append(int(value))
+    return ids
+
+
 def compact_parts(
     spark: SparkSession,
     parts_dir: str,
@@ -59,22 +73,21 @@ def compact_parts(
     base part sorts below every real batch id, so it is folded into the
     new base rather than orphaned, and re-running is idempotent.
 
-    Returns False for the no-op cases (missing dir, <2 foldable parts).
+    The foldable parts are found by listing the ``_batch_id=<n>``
+    directories on the driver — no Spark job — and the no-op cases
+    (missing dir, <2 foldable parts) return False before any read.
     Callers own the replay-safety argument: pass the CURRENT foreachBatch
     id, whose predecessors can no longer replay.
     """
     from pyspark.sql import functions as F
 
-    if not os.path.isdir(parts_dir):
-        return False
+    if len(_part_ids(parts_dir, before_batch_id)) < 2:
+        return False  # zero/one foldable part: compaction buys nothing
     reader = (
         spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     )
     parts = reader.parquet(parts_dir)
     old = parts.where(F.col("_batch_id") < F.lit(int(before_batch_id)))
-    old_ids = [r["_batch_id"] for r in old.select("_batch_id").distinct().collect()]
-    if len(old_ids) < 2:
-        return False  # zero/one foldable part: compaction buys nothing
     keep = parts.where(F.col("_batch_id") >= F.lit(int(before_batch_id)))
     base = fold(old).withColumn("_batch_id", F.lit(BASE_PART))
     merged = base.unionByName(
@@ -86,7 +99,9 @@ def compact_parts(
     )
     try:
         merged.write.mode("overwrite").partitionBy("_batch_id").parquet(staging)
-        verify(parts, reader.parquet(staging))
+        # the staged layout was just written from ``parts``: declare its
+        # schema instead of paying an inference job to rediscover it
+        verify(parts, reader.schema(parts.schema).parquet(staging))
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
@@ -112,7 +127,8 @@ def compact_rows_parts(
     staging/verify/swap skeleton, identity fold. Verification is a
     row-multiset check: count plus an order-independent mod-2^64 sum of
     per-row hashes over every non-bookkeeping column — a dropped,
-    duplicated, or mutated row changes it.
+    duplicated, or mutated row changes it. Both sides' signatures come
+    from ONE aggregation over the union of the parts and the staged copy.
 
     Safe for batches that can no longer replay (pass the CURRENT
     foreachBatch id); the base partition (id −1) sorts below every real
@@ -126,20 +142,27 @@ def compact_rows_parts(
 
     def verify(parts, staged) -> None:
         cols = sorted(c for c in parts.columns if c != "_batch_id")
+        side = "__compact_side"
+        h = F.xxhash64(F.struct(*[F.col(c) for c in cols])).cast("decimal(38,0)")
+        both = parts.select(*cols, F.lit(0).alias(side)).unionByName(
+            staged.select(*cols, F.lit(1).alias(side))
+        )
+        row = both.agg(
+            *[
+                agg
+                for k in (0, 1)
+                for agg in (
+                    F.count(F.when(F.col(side) == k, 1)).alias(f"n{k}"),
+                    F.sum(F.when(F.col(side) == k, h)).alias(f"s{k}"),
+                )
+            ]
+        ).head()
 
-        def sig(df):
-            row = df.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.xxhash64(F.struct(*[F.col(c) for c in cols])).cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("s"),
-            ).head()
-            s = int(row["s"]) % (1 << 64) if row["s"] is not None else 0
-            return (int(row["n"]), s)
+        def sig(k: int) -> tuple[int, int]:
+            s = row[f"s{k}"]
+            return (int(row[f"n{k}"]), int(s) % (1 << 64) if s is not None else 0)
 
-        if sig(parts) != sig(staged):
+        if sig(0) != sig(1):
             raise RuntimeError(
                 "compact_rows_parts: row multiset changed; refusing the swap"
             )

@@ -68,14 +68,19 @@ def batch_fingerprint(batch_df: DataFrame, id_col: str) -> str:
     return f"{row['n']}:{s}"
 
 
-def fingerprint_is_empty(fp: str) -> bool:
-    """True when a :func:`batch_fingerprint` describes an empty batch.
+def fingerprint_rows(fp: str) -> int:
+    """The row count of the batch a :func:`batch_fingerprint` describes.
 
     The fingerprint's leading field IS the row count, so the ingests'
-    empty-batch guards read it instead of running a separate
-    ``limit(1).isEmpty()`` job — one fewer Spark job on every micro-batch
-    of every ingest, for free."""
-    return fp.startswith("0:")
+    empty-batch guards and batch-sized execution scopes read it instead of
+    running a separate ``count()`` or ``limit(1).isEmpty()`` job — one
+    fewer Spark job on every micro-batch of every ingest, for free."""
+    return int(fp.split(":", 1)[0])
+
+
+def fingerprint_is_empty(fp: str) -> bool:
+    """True when a :func:`batch_fingerprint` describes an empty batch."""
+    return fingerprint_rows(fp) == 0
 
 
 def check_knobs(

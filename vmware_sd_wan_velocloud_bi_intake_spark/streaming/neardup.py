@@ -45,6 +45,15 @@ the viral-bucket cap O(|batch|). State lives in storage, not the state
 store: executors hold nothing between batches, so this composes with any
 cluster size and survives restarts through the checkpoint + the
 batch-id-keyed writes alone.
+
+Per-batch execution is sized to the batch. The content fingerprint (one
+job) runs first; its leading field is the batch's row count, and the rest
+of the batch runs under ``functions.conf.iterative_loop_confs`` at a
+partition count derived from it (AQE off, shuffles sized to the rows in
+flight). On the perfbench stream corpus a 200-doc batch is 9 Spark jobs
+and a compaction batch 18 (SCALE.md, "stream: the near-dup batch sized to
+its rows"): the summary, index, survivors and stats compactions run
+concurrently on the batch's own thread pool, which closes with the batch.
 """
 
 from __future__ import annotations
@@ -84,6 +93,22 @@ def _summary(spark, parts_dir: str, exclude_batch_id: int) -> DataFrame | None:
 
 
 _BASE_PART = -1  # reserved _batch_id for the compacted summary base
+
+
+def _run_together(spark, pool, fns) -> None:
+    """Run independent actions concurrently on ``pool`` and wait for ALL
+    of them before raising the first failure — no action is still running
+    when the caller unwinds. Actions are only sequential because a driver
+    calls them sequentially; ``inheritable_thread_target`` keeps the
+    caller's job group, local properties and tags on the pool threads."""
+    from concurrent.futures import wait
+
+    from pyspark import inheritable_thread_target
+
+    futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    wait(futures)
+    for f in futures:
+        f.result()
 
 
 def compact_summary_parts(spark, index_dir: str, before_batch_id: int) -> bool:
@@ -175,8 +200,14 @@ def make_near_dup_ingest(
     index and the survivors table by row-preserving concatenation
     (``sinks.compact.compact_rows_parts``), and the stats parts when
     enabled — without this a long-lived stream's every read pays an
-    O(batches) partition listing. Pass None to disable (e.g. when an
+    O(batches) partition listing. The tables compact concurrently, each
+    with its own staging, verify and swap, after the guards and before
+    the batch's reads are planned. Pass None to disable (e.g. when an
     external maintenance job owns compaction).
+
+    Each call runs the fingerprint guard first, then the rest of the
+    batch under a conf scope sized from the fingerprint's row count, and
+    restores the session's confs on the way out, also when it raises.
 
     ``stats_dir``: when set, each batch also publishes an incremental
     statistics part for its NOVEL rows (operators/incstats.py — same
@@ -259,14 +290,9 @@ def make_near_dup_ingest(
             "batches; keep stats_dir set (or rebuild the index)"
         )
 
-    # r14: per-stream hoisted pieces — built ONCE per ingest instead of
-    # once per micro-batch. Column expressions are immutable and reusable
-    # across batches (the _lsh_row_exprs argument in operators/dedup.py);
-    # the 2-worker pool overlaps the fingerprint guard job with driver-side
-    # plan construction and runs the independent index/summary writes
-    # concurrently (guide §2.6 — actions are only sequential because the
-    # driver calls them sequentially). foreachBatch serializes epochs, so
-    # one pool per ingest never sees two batches at once.
+    # per-stream hoisted pieces — built ONCE per ingest instead of once
+    # per micro-batch. Column expressions are immutable and reusable
+    # across batches (the _lsh_row_exprs argument in operators/dedup.py).
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Window
@@ -275,16 +301,38 @@ def make_near_dup_ingest(
 
     _dedup_key_col = F.md5(normalize_text(F.col(text_col))).alias("_dedup_key")
     _keep_window = Window.partitionBy("_dedup_key")
-    _pool = ThreadPoolExecutor(max_workers=2)
+
+    def _compact_all(spark, pool, batch_id: int) -> None:
+        """Fold every table's parts below ``batch_id`` into its base, all
+        tables at once: each compaction reads, stages, verifies and swaps
+        its OWN directory, so they are independent. A failure in one
+        leaves "some subset compacted" — a state the replay discipline
+        already accepts, because compaction folds only batches that can
+        no longer replay."""
+        from ..sinks.compact import compact_rows_parts
+
+        jobs = [
+            lambda: compact_summary_parts(spark, index_dir, batch_id),
+            # the row tables (band rows, survivors) fold by concatenation
+            # — without it every batch's index read pays an O(batches)
+            # partition listing on a long-lived stream
+            lambda: compact_rows_parts(spark, index_dir, batch_id),
+            lambda: compact_rows_parts(spark, survivors_dir, batch_id),
+        ]
+        if stats_dir is not None:
+            from ..operators.incstats import compact_stats_parts
+
+            jobs.append(lambda: compact_stats_parts(spark, stats_dir, batch_id))
+        _run_together(spark, pool, jobs)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark import inheritable_thread_target
-
+        from ..functions.conf import iterative_loop_confs, loop_partition_count
         from .ingestbase import (
             batch_fingerprint,
             check_knobs,
             check_sequence,
             fingerprint_is_empty,
+            fingerprint_rows,
             record_head,
         )
 
@@ -306,53 +354,51 @@ def make_near_dup_ingest(
         # Spark numbers batches per CHECKPOINT — a fresh-checkpoint
         # restart would hide, then overwrite, committed partitions. The
         # shared guard (ingestbase) fails those loudly and lets true
-        # replays (same id, same content) through.
-        #
-        # r14: the fingerprint is one tiny aggregation JOB while the
-        # dedup chain below is pure driver-side plan construction (zero
-        # jobs) — run the job on a pool thread so the two overlap, and
-        # await it (check_sequence + the empty guard) BEFORE the first
-        # side effect (compaction or a write). Semantics are unchanged:
-        # no write ever precedes the guards; an invalid batch still fails
-        # before touching the index, having merely wasted plan
-        # construction. inheritable_thread_target keeps job-group/
-        # description attribution on the pool thread.
-        fp_future = _pool.submit(
-            inheritable_thread_target(
-                lambda: batch_fingerprint(batch_df, doc_id)
-            )
-        )
-        if (
-            compact_summary_every
-            and batch_id > 0
-            and batch_id % compact_summary_every == 0
-        ):
-            # compaction is a side effect → await the guards first (this
-            # is the rare every-Nth-batch path; the overlap matters on
-            # the common path). Must run before the summary/index reads
-            # below: batches < batch_id are all committed (foreachBatch
-            # serializes epochs) — never this batch's own part, so
-            # replay exclusion is unaffected. The row tables (band rows,
-            # survivors) fold by concatenation — without it every
-            # batch's index read pays an O(batches) partition listing on
-            # a long-lived stream.
-            fp = fp_future.result()
-            check_sequence(knobs_path, "neardup-knobs/v1", batch_id, fp)
-            from ..sinks.compact import compact_rows_parts
+        # replays (same id, same content) through. It runs before the
+        # first side effect (compaction or a write), with AQE off: its
+        # one global aggregation is then one job, not two.
+        current = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        with iterative_loop_confs(spark, current):
+            fp = batch_fingerprint(batch_df, doc_id)
+        check_sequence(knobs_path, "neardup-knobs/v1", batch_id, fp)
+        # The rest of the batch runs at the batch's own size: shuffles
+        # sized to its row count and AQE off (functions/conf.py's rule for
+        # data in flight). Under AQE each of the dedup chain's ~20 small
+        # exchanges and broadcasts is its own job — 26 jobs for the
+        # survivors write of a 200-row batch. The count is the
+        # fingerprint's, so sizing costs no job. The scope opens before
+        # the first persist (a persist plans its cached query eagerly),
+        # and the per-batch pool closes inside it, so no pool thread
+        # outlives the batch or runs under the restored confs.
+        partitions = loop_partition_count(fingerprint_rows(fp), current)
+        with iterative_loop_confs(spark, partitions), ThreadPoolExecutor(
+            max_workers=4
+        ) as pool:
+            if (
+                compact_summary_every
+                and batch_id > 0
+                and batch_id % compact_summary_every == 0
+            ):
+                # batches < batch_id are all committed (foreachBatch
+                # serializes epochs) — never this batch's own part, so
+                # the replay exclusion below is unaffected. Awaited
+                # before the summary/index reads are planned.
+                _compact_all(spark, pool, batch_id)
+            # empty-batch guard (mirrors annindex/semdedup): an empty
+            # FIRST batch would otherwise dynamic-overwrite zero
+            # partitions, leaving index_dir/survivors_dir as
+            # _SUCCESS-only directories — the next batch's
+            # os.path.isdir(index_dir) then routes into a
+            # spark.read.parquet that fails schema inference
+            # (UNABLE_TO_INFER_SCHEMA) on EVERY replay, wedging the stream
+            # until someone deletes the directory. Skip all writes, but
+            # record the head so replay and collision guards still see
+            # the batch.
+            if not fingerprint_is_empty(fp):
+                _dedup_and_publish(spark, pool, batch_df, batch_id)
+            record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
 
-            compact_summary_parts(spark, index_dir, batch_id)
-            compact_rows_parts(spark, index_dir, batch_id)
-            compact_rows_parts(spark, survivors_dir, batch_id)
-            if stats_dir is not None:
-                from ..operators.incstats import compact_stats_parts
-
-                compact_stats_parts(spark, stats_dir, batch_id)
-            if fingerprint_is_empty(fp):
-                record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
-                return
-            fp_checked = True
-        else:
-            fp_checked = False
+    def _dedup_and_publish(spark, pool, batch_df: DataFrame, batch_id: int) -> None:
         # ---- within-batch exact dedup: ONE window shuffle ---------------
         # min-id-per-content via a window over the content digest — one
         # exchange, where groupBy(digest) + two semi-join-backs cost
@@ -442,25 +488,6 @@ def make_near_dup_ingest(
             novel = batch2.join(corpus_losers, doc_id, "left_anti")
         else:
             novel = batch2
-        # guards settled before the first write (the overlap window ends
-        # here; on the compaction path they were settled above)
-        if not fp_checked:
-            fp = fp_future.result()
-            check_sequence(knobs_path, "neardup-knobs/v1", batch_id, fp)
-            # empty-batch guard (mirrors annindex/semdedup): an empty
-            # FIRST batch would otherwise dynamic-overwrite zero
-            # partitions, leaving index_dir/survivors_dir as
-            # _SUCCESS-only directories — the next batch's
-            # os.path.isdir(index_dir) then routes into a
-            # spark.read.parquet that fails schema inference
-            # (UNABLE_TO_INFER_SCHEMA) on EVERY replay, wedging the
-            # stream until someone deletes the directory. Record the
-            # head so replay and collision guards still see the batch,
-            # then skip all writes (the plan built above dies unexecuted
-            # — zero jobs).
-            if fingerprint_is_empty(fp):
-                record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
-                return
         # ---- idempotent writes, keyed by the replayable batch id -------
         # per-WRITE dynamic overwrite: scoped to each write, never
         # mutates the session conf — a session-level set would leak
@@ -492,14 +519,14 @@ def make_near_dup_ingest(
                 .persist()
             )
 
-            # r14: the index write, the summary part, and the stats part
-            # are INDEPENDENT sinks over already-persisted relations —
-            # run them concurrently instead of serially (guide §2.6).
-            # Each write is still its own batch-keyed idempotent dynamic
+            # the index write, the summary part, and the stats part are
+            # INDEPENDENT sinks over already-persisted relations — run
+            # them concurrently instead of serially (guide §2.6). Each
+            # write is still its own batch-keyed idempotent dynamic
             # overwrite, so the crash-window states are exactly the ones
             # the replay discipline already covers (any subset of the
-            # three published); a failure in either thread propagates
-            # through .result() before the head is recorded. The summary
+            # three published); a failure in either thread is raised
+            # after both finish and before the head is recorded. The summary
             # part comes from the SAME in-memory rows relation (counts
             # are deterministic) — not a read-back of what was just
             # written: on object stores the listing+read round trip
@@ -536,13 +563,7 @@ def make_near_dup_ingest(
                         length_of=[text_col],
                     )
 
-            fi = _pool.submit(inheritable_thread_target(_write_index))
-            fs = _pool.submit(inheritable_thread_target(_write_summary))
-            try:
-                fi.result()
-            finally:
-                fs.result()
-            record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
+            _run_together(spark, pool, [_write_index, _write_summary])
         finally:
             novel.unpersist()
             band_rows_all.unpersist()

@@ -88,14 +88,6 @@ def make_semantic_dedup_ingest(
         "round_decimals": round_decimals,
         "retrain_threshold": retrain_threshold,
     }
-    # r14: pool for the one independent per-batch action (the neardup
-    # ingest's §2.6 pattern): the full-batch occupancy-profile job has no
-    # data dependency on the batch's writes, so it runs concurrently with
-    # them. foreachBatch serializes epochs, so one pool per ingest is safe
-    from concurrent.futures import ThreadPoolExecutor
-
-    _pool = ThreadPoolExecutor(max_workers=1)
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from ..functions.artifacts import read_json_artifact
         from .ingestbase import (
@@ -290,10 +282,16 @@ def make_semantic_dedup_ingest(
         # two writes instead of before them; that partial-publish state
         # is the same crash window the batch's replay already rewrites
         # byte-identically (the seed_baseline path pins the build case).
+        # The pool is per BATCH and shut down with it: a pool per ingest
+        # would hold its thread for the process's lifetime.
+        from concurrent.futures import ThreadPoolExecutor
+
         from pyspark import inheritable_thread_target
 
-        profile_future = _pool.submit(
-            inheritable_thread_target(
+        novel = novel.persist()
+        pool = ThreadPoolExecutor(max_workers=1)
+        profile_future = pool.submit(
+            inheritable_thread_target(spark)(
                 lambda: cell_occupancy_profile(
                     sim.ivf_members(
                         batch_df,
@@ -305,7 +303,6 @@ def make_semantic_dedup_ingest(
                 )
             )
         )
-        novel = novel.persist()
         try:
             member_rows = sim.ivf_members(
                 novel,
@@ -363,6 +360,7 @@ def make_semantic_dedup_ingest(
             record_head(knobs_path, "semdedup-knobs/v1", batch_id, fp)
         finally:
             novel.unpersist()
+            pool.shutdown()
 
     return ingest
 
