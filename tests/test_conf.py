@@ -16,6 +16,7 @@ from vmware_sd_wan_velocloud_bi_intake_spark.functions.conf import (
     iterative_loop_confs,
     loop_partition_count,
     scoped_confs,
+    sized_partition_count,
 )
 from vmware_sd_wan_velocloud_bi_intake_spark.operators import bpe, classifier
 from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
@@ -32,6 +33,22 @@ def test_loop_partition_count_bounds():
     # shrink-only: never exceeds what the relation already has
     assert loop_partition_count(10**9, 32) == 32
     assert loop_partition_count(10**9, 4) == 4
+
+
+def test_sized_partition_count_floors_the_rows_rule_at_bytes(spark):
+    """Wide rows get the partitions their bytes need at the session's
+    advisory partition size; narrow rows keep the rows rule; both stay
+    at most the session's shuffle partitions (8 in the test session)."""
+    with scoped_confs(
+        spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m"}
+    ):
+        assert sized_partition_count(spark, 200, 0) == 1
+        assert sized_partition_count(spark, 200, 1 << 20) == 1
+        assert sized_partition_count(spark, 200, (1 << 20) + 1) == 2
+        assert sized_partition_count(spark, 200, 5 << 20) == 5
+        assert sized_partition_count(spark, 200, 1 << 40) == 8
+        # the rows rule still applies when the bytes are small
+        assert sized_partition_count(spark, 3 * LOOP_ROWS_PER_PARTITION, 0) == 3
 
 
 def test_scoped_confs_restores_set_and_unset_keys(spark):

@@ -791,3 +791,64 @@ def test_ingest_restores_session_confs(spark, tmp_path):
     with pytest.raises(ValueError, match="reserved column"):
         ingest(docs.where("doc_id >= 3").withColumn("_keep", F.lit(1)), 1)
     assert [spark.conf.get(k) for k in keys] == before
+
+
+def _scope_partitions(monkeypatch):
+    """Record the partition count each ingest call sizes its scope to."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.functions import conf
+
+    seen = []
+    real = conf.sized_partition_count
+
+    def recording(spark_, n_rows, n_bytes):
+        seen.append(real(spark_, n_rows, n_bytes))
+        return seen[-1]
+
+    monkeypatch.setattr(conf, "sized_partition_count", recording)
+    return seen
+
+
+def test_scope_sized_from_bytes_not_rows(spark, tmp_path, monkeypatch):
+    """Two batches of two docs each: the narrow one runs at one partition,
+    the one with ~1,900-word docs at the partitions its band rows' bytes
+    need (capped at the session's 8), at the same advisory size."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.functions.conf import (
+        scoped_confs,
+    )
+
+    seen = _scope_partitions(monkeypatch)
+    narrow = _docs(spark).where("doc_id IN (0, 2)")
+    wide = narrow.withColumn(
+        "text", F.concat_ws(" ", F.array_repeat(F.col("text"), 100))
+    )
+    with scoped_confs(
+        spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k"}
+    ):
+        for tag, batch in (("narrow", narrow), ("wide", wide)):
+            ingest = make_near_dup_ingest(
+                str(tmp_path / f"idx_{tag}"), str(tmp_path / f"surv_{tag}"), **_KNOBS
+            )
+            ingest(batch, 0)
+    assert seen == [1, 8]
+
+
+def test_scope_grows_with_index_and_summary(spark, tmp_path, monkeypatch):
+    """The index a batch probes and the summary it aggregates count toward
+    its scope: at an advisory size the first batch fits in one partition,
+    a later batch of the same docs' size gets more once the corpus tables
+    exist."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.functions.conf import (
+        scoped_confs,
+    )
+
+    seen = _scope_partitions(monkeypatch)
+    ingest = make_near_dup_ingest(
+        str(tmp_path / "idx_grow"), str(tmp_path / "surv_grow"), **_KNOBS
+    )
+    docs = _docs(spark)
+    with scoped_confs(
+        spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k"}
+    ):
+        ingest(docs.where("doc_id IN (0, 2)"), 0)
+        ingest(docs.where("doc_id IN (3, 4)"), 1)
+    assert seen[0] == 1 and seen[1] > 1, seen

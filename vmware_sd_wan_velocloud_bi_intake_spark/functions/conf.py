@@ -23,7 +23,8 @@ Two recurring engine needs live here:
    both trainers. The same rule at 100 TB: a 32k-merge BPE run's vocab
    is ~100 M rows while its corpus is billions — the loop should run at
    vocab-scale parallelism (hundreds of tasks), not corpus-scale
-   (hundreds of thousands).
+   (hundreds of thousands). ``sized_partition_count`` adds a bytes floor
+   for scopes whose rows are wide (the near-dup ingest's documents).
 
 AQE is disabled inside loop scopes for the same reason as
 ``queries/base.micro_batch_confs`` (which delegates here): per-exchange
@@ -83,6 +84,24 @@ def loop_partition_count(
     upstream's, which the cluster sized)."""
     need = max(1, (n_rows + rows_per_partition - 1) // rows_per_partition)
     return max(1, min(need, current))
+
+
+def sized_partition_count(spark, n_rows: int, n_bytes: int) -> int:
+    """Shuffle partitions for work of ``n_rows`` rows and ``n_bytes``
+    bytes in flight: the larger of :func:`loop_partition_count`'s rows
+    need and a bytes need at the session's advisory partition size (the
+    size AQE's coalescing packs partitions to), never more than the
+    session's shuffle partitions. Rows alone suit narrow loop rows; a
+    relation of wide rows (documents, shingle arrays) needs the bytes
+    floor, or an AQE-off scope would pack GBs into one task."""
+    current = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target = int(
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+    )
+    by_bytes = (n_bytes + target - 1) // target
+    return max(loop_partition_count(n_rows, current), min(by_bytes, current))
 
 
 @contextmanager

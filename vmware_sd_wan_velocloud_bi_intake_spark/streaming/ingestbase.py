@@ -58,14 +58,27 @@ def read_engine_parts(spark, path: str, schema) -> DataFrame:
 def batch_fingerprint(batch_df: DataFrame, id_col: str) -> str:
     """Order-independent, multiplicity-sensitive content id of a
     micro-batch (see module doc for why sum beats XOR here)."""
-    row = batch_df.agg(
+    return batch_profile(batch_df, id_col)[0]
+
+
+def batch_profile(
+    batch_df: DataFrame, id_col: str, text_col: str | None = None
+) -> tuple[str, int]:
+    """:func:`batch_fingerprint` plus the UTF-8 bytes of ``text_col``
+    (0 when None), from the SAME one-job aggregation — what an ingest
+    sizes its batch's execution from without a second pass."""
+    aggs = [
         F.count("*").alias("n"),
         F.sum(
             F.xxhash64(F.col(id_col).cast("string")).cast("decimal(38,0)")
         ).alias("s"),
-    ).head()
+    ]
+    if text_col is not None:
+        aggs.append(F.sum(F.octet_length(F.col(text_col))).alias("b"))
+    row = batch_df.agg(*aggs).head()
     s = int(row["s"]) % (1 << 64) if row["s"] is not None else 0
-    return f"{row['n']}:{s}"
+    n_bytes = int(row["b"] or 0) if text_col is not None else 0
+    return f"{row['n']}:{s}", n_bytes
 
 
 def fingerprint_rows(fp: str) -> int:

@@ -46,14 +46,19 @@ store: executors hold nothing between batches, so this composes with any
 cluster size and survives restarts through the checkpoint + the
 batch-id-keyed writes alone.
 
-Per-batch execution is sized to the batch. The content fingerprint (one
-job) runs first; its leading field is the batch's row count, and the rest
-of the batch runs under ``functions.conf.iterative_loop_confs`` at a
-partition count derived from it (AQE off, shuffles sized to the rows in
-flight). On the perfbench stream corpus a 200-doc batch is 9 Spark jobs
-and a compaction batch 18 (SCALE.md, "stream: the near-dup batch sized to
-its rows"): the summary, index, survivors and stats compactions run
-concurrently on the batch's own thread pool, which closes with the batch.
+Per-batch execution is sized to the data it touches. The content
+fingerprint (one job) runs first and also sums the batch's text bytes;
+the rest of the batch runs under ``functions.conf.iterative_loop_confs``
+(AQE off) at ``functions.conf.sized_partition_count`` of the batch's rows
+and of the bytes its exchanges can carry: the batch's band rows, estimated
+from its text bytes, plus the index and summary it joins and aggregates,
+estimated from their on-disk bytes (a listing, no job). A small batch over
+a small corpus runs at one partition; a wide batch or a large summary gets
+the partitions its bytes need. On the perfbench stream corpus a 200-doc
+batch is 9 Spark jobs and a compaction batch 18 (SCALE.md, "stream: the
+near-dup batch sized to its rows"): the summary, index, survivors and
+stats compactions run concurrently on the batch's own thread pool, which
+closes with the batch.
 """
 
 from __future__ import annotations
@@ -93,6 +98,13 @@ def _summary(spark, parts_dir: str, exclude_batch_id: int) -> DataFrame | None:
 
 
 _BASE_PART = -1  # reserved _batch_id for the compacted summary base
+
+# In-memory bytes per on-disk parquet byte of the index and summary
+# tables: dictionary and run-length encoding shrink band rows (one doc's
+# shingle array repeats once per band) 2.8-5.7x on disk, measured on the
+# perfbench stream corpus and on 5-word and 2,000-word synthetic docs.
+# The summary's md5 bucket strings compress less, so it is over-counted.
+_PARQUET_EXPANSION = 6
 
 
 def _run_together(spark, pool, fns) -> None:
@@ -206,8 +218,10 @@ def make_near_dup_ingest(
     external maintenance job owns compaction).
 
     Each call runs the fingerprint guard first, then the rest of the
-    batch under a conf scope sized from the fingerprint's row count, and
-    restores the session's confs on the way out, also when it raises.
+    batch under a conf scope sized from the batch's rows and text bytes
+    (both from the fingerprint's job) and the index and summary's on-disk
+    bytes, and restores the session's confs on the way out, also when it
+    raises.
 
     ``stats_dir``: when set, each batch also publishes an incremental
     statistics part for its NOVEL rows (operators/incstats.py — same
@@ -302,6 +316,21 @@ def make_near_dup_ingest(
     _dedup_key_col = F.md5(normalize_text(F.col(text_col))).alias("_dedup_key")
     _keep_window = Window.partitionBy("_dedup_key")
 
+    def _bytes_in_flight(text_bytes: int) -> int:
+        """What the batch's exchanges can carry, estimated without a job.
+        The batch side is its band rows: one per doc per band, each with
+        the doc's whole shingle array, in which every word sits in
+        ``shingle_n`` shingles and each shingle costs its bytes rounded up
+        to 8 plus an 8-byte slot — about ``shingle_n + 2`` bytes per text
+        byte per band (measured 4.5-5.2 at shingle_n=3 on docs of 5 to
+        2,000 words). The corpus side is the index the probe joins and the
+        summary it aggregates (and compaction refolds): their on-disk
+        bytes, a listing, times the parquet expansion."""
+        from ..sinks.compact import dataset_bytes
+
+        state = dataset_bytes(index_dir) + dataset_bytes(summary_dir)
+        return text_bytes * bands * (shingle_n + 2) + _PARQUET_EXPANSION * state
+
     def _compact_all(spark, pool, batch_id: int) -> None:
         """Fold every table's parts below ``batch_id`` into its base, all
         tables at once: each compaction reads, stages, verifies and swaps
@@ -326,9 +355,9 @@ def make_near_dup_ingest(
         _run_together(spark, pool, jobs)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from ..functions.conf import iterative_loop_confs, loop_partition_count
+        from ..functions.conf import iterative_loop_confs, sized_partition_count
         from .ingestbase import (
-            batch_fingerprint,
+            batch_profile,
             check_knobs,
             check_sequence,
             fingerprint_is_empty,
@@ -359,18 +388,24 @@ def make_near_dup_ingest(
         # one global aggregation is then one job, not two.
         current = int(spark.conf.get("spark.sql.shuffle.partitions"))
         with iterative_loop_confs(spark, current):
-            fp = batch_fingerprint(batch_df, doc_id)
+            fp, text_bytes = batch_profile(batch_df, doc_id, text_col)
         check_sequence(knobs_path, "neardup-knobs/v1", batch_id, fp)
-        # The rest of the batch runs at the batch's own size: shuffles
-        # sized to its row count and AQE off (functions/conf.py's rule for
-        # data in flight). Under AQE each of the dedup chain's ~20 small
-        # exchanges and broadcasts is its own job — 26 jobs for the
-        # survivors write of a 200-row batch. The count is the
-        # fingerprint's, so sizing costs no job. The scope opens before
-        # the first persist (a persist plans its cached query eagerly),
-        # and the per-batch pool closes inside it, so no pool thread
-        # outlives the batch or runs under the restored confs.
-        partitions = loop_partition_count(fingerprint_rows(fp), current)
+        # The rest of the batch runs at the size of the data it touches,
+        # with AQE off (functions/conf.py's rule for data in flight).
+        # Under AQE each of the dedup chain's ~20 small exchanges and
+        # broadcasts is its own job — 26 jobs for the survivors write of
+        # a 200-row batch. The rows and text bytes are the fingerprint's
+        # and the corpus side is a listing, so sizing costs no job; the
+        # bytes keep a wide batch, a large index (a sort-merge probe
+        # shuffles it) and a large summary (aggregated every batch,
+        # refolded by compaction) at the partitions their bytes need. The
+        # scope opens before the first persist (a persist plans its
+        # cached query eagerly), and the per-batch pool closes inside
+        # it, so no pool thread outlives the batch or runs under the
+        # restored confs.
+        partitions = sized_partition_count(
+            spark, fingerprint_rows(fp), _bytes_in_flight(text_bytes)
+        )
         with iterative_loop_confs(spark, partitions), ThreadPoolExecutor(
             max_workers=4
         ) as pool:
