@@ -170,6 +170,66 @@ def test_failed_fetch_leaves_landed_tables_untouched(spark, tmp_path):
     assert _persistent_rdds(spark) == before
 
 
+def test_failed_concurrent_sink_lets_the_others_land(spark, tmp_path, monkeypatch):
+    """The events sink failing after the edge sink: the cycle raises its
+    error only after the links and customer sinks have returned, those
+    tables hold the new cycle's rows, and no staging directory or
+    persisted RDD is left behind."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans import velocloud
+
+    run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+    landed = {
+        t: spark.read.parquet(str(tmp_path / t)).count() for t in ("links", "customer")
+    }
+    events = sorted(os.listdir(tmp_path / "events"))
+    before = _persistent_rdds(spark)
+
+    def grown():  # more enterprises and edges: rows the landing lacks
+        return FakeVcoTransport(n_enterprises=4, n_edges=5)
+
+    returned = []
+    real_upsert = velocloud.upsert_parquet
+
+    def recording_upsert(spark_, df, path, keys):
+        real_upsert(spark_, df, path, keys)
+        returned.append(os.path.basename(path))
+
+    def failing_insert_ignore(*args):
+        raise RuntimeError("events sink failed")
+
+    monkeypatch.setattr(velocloud, "upsert_parquet", recording_upsert)
+    monkeypatch.setattr(velocloud, "insert_ignore_parquet", failing_insert_ignore)
+    with pytest.raises(RuntimeError, match="events sink failed"):
+        run_pipeline(spark, VCOS, grown, out_dir=str(tmp_path))
+    assert sorted(returned) == ["customer", "edge", "links"]
+    assert not [d for d in os.listdir(tmp_path) if ".staging." in d]
+    assert sorted(os.listdir(tmp_path / "events")) == events
+    assert _persistent_rdds(spark) == before
+    # the fake fleet repeats edge ids across VCOs, so links are compared
+    # by key: the sink keeps one row per link_id
+    new = run_pipeline(spark, VCOS, grown)  # lazy: the cycle's own frames
+    for table, frame, keys in [
+        ("links", new.links, ["link_id"]),
+        ("customer", new.customer_rollup, ["vco", "enterprise_id"]),
+    ]:
+        stored = spark.read.parquet(str(tmp_path / table))
+        assert frame.select(keys).subtract(stored.select(keys)).count() == 0, table
+        assert stored.count() > landed[table], table
+
+
+def test_warm_cycles_do_not_accrue_threads(spark, tmp_path):
+    """Each cycle's sink pool closes before ``run_pipeline`` returns: the
+    Python thread count is the same after each of five warm cycles."""
+    import threading
+
+    run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+    counts = []
+    for _ in range(5):
+        run_pipeline(spark, VCOS, _factory, out_dir=str(tmp_path))
+        counts.append(threading.active_count())
+    assert len(set(counts)) == 1, counts
+
+
 def test_pipeline_without_out_dir_stays_lazy(spark):
     """Without ``out_dir`` nothing is fetched or persisted until the caller
     evaluates a frame."""

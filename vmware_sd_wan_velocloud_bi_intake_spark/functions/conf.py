@@ -1,6 +1,7 @@
-"""Scoped SparkSession conf management + data-sized loop parallelism.
+"""Scoped SparkSession conf management, data-sized loop parallelism, and
+concurrent independent actions.
 
-Two recurring engine needs live here:
+Three recurring engine needs live here:
 
 1. ``scoped_confs`` — get→set→restore of session confs with proper
    handling of previously-UNSET keys (restore unsets them again instead
@@ -31,6 +32,10 @@ AQE is disabled inside loop scopes for the same reason as
 query-stage materialization is pure driver latency when every exchange
 is small and there is nothing to re-plan — and the loop's whole premise
 is that its exchanges are small.
+
+3. ``run_together`` — independent actions are only sequential because a
+   driver calls them sequentially; run together, their per-job floors and
+   driver-side planning overlap (Py4J calls release the GIL).
 """
 
 from __future__ import annotations
@@ -118,3 +123,20 @@ def iterative_loop_confs(spark, partitions: int):
         },
     ):
         yield
+
+
+def run_together(spark, fns: list) -> list:
+    """Call the independent ``fns`` concurrently; return their results in
+    order. Waits for ALL of them before raising the first failure, so a
+    caller's ``finally`` never releases what a running action reads. The
+    pool lives for this call only (one or no fn runs inline), and
+    ``inheritable_thread_target`` keeps the caller's job group on it."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(len(fns)) as pool:  # exiting waits for all
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    return [f.result() for f in futures]

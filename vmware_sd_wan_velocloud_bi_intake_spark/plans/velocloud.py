@@ -17,9 +17,12 @@ One landing fetches each endpoint once, like the reference's cycle: one
 stage fetches the enterprises, and one more fetches each enterprise's
 edges and then its events in the same task (``process_customer``). With
 ``out_dir``, ``run_pipeline`` persists both fetches without forcing them:
-the first sink's query builds the caches, the four sinks read them, and
-they are released after. Without ``out_dir`` it only builds the plan:
-nothing runs and nothing is persisted until the caller evaluates a frame.
+the edge sink's query builds the caches, then the links, events and
+customer sinks read them concurrently, and the caches are released once
+all four have returned. A sink failure after the edge sink lets the other
+two land before the cycle raises; every sink is idempotent, so the next
+cycle converges. Without ``out_dir`` it only builds the plan: nothing
+runs and nothing is persisted until the caller evaluates a frame.
 
 At scale: bronze fan-out is at most one task per task slot and per (vco,
 enterprise) (``sources.api``); silver transforms are shuffle-free per-edge
@@ -37,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.conf import run_together
 from ..functions.sanitize import valid_name
 from ..sinks.upsert import insert_ignore_parquet, upsert_parquet
 from ..sources.api import build_params, fetch_payloads, fetch_payloads_from
@@ -327,10 +331,15 @@ def run_pipeline(
     """Build bronze → silver → gold; with ``out_dir``, upsert them to parquet.
 
     With ``out_dir`` the enterprise fetch and the fused edge + event fetch
-    are persisted, not forced: the edge sink's query builds both caches
-    before it writes, the other three sinks read them, and the ``finally``
-    releases them, so a landing makes one call per endpoint. A failed
-    fetch fails the edge sink before any table is replaced. The returned
+    are persisted, not forced: the edge sink runs first and alone, and its
+    query builds both caches before it writes. The links, events and
+    customer sinks read only those caches and write separate directories,
+    so they run together (``functions.conf.run_together``); the
+    ``finally`` releases the caches once all three have returned, so a
+    landing makes one call per endpoint. A failed fetch fails the edge
+    sink before any table is replaced. A sink that fails after the edge
+    sink lets the other two land, and the cycle then raises its error;
+    each sink is idempotent, so the next cycle converges. The returned
     frames stay valid: evaluated after return, they fetch again. Without
     ``out_dir`` nothing runs: the frames are lazy plans.
     """
@@ -350,18 +359,28 @@ def run_pipeline(
             for df in bronze:
                 df.persist()
             upsert_parquet(spark, s_edges, os.path.join(out_dir, "edge"), ["edge_uuid"])
-            upsert_parquet(spark, s_links, os.path.join(out_dir, "links"), ["link_id"])
-            insert_ignore_parquet(
+            # the edge sink built both caches; the other three read only
+            # them and write their own directories. All three have
+            # returned before the finally releases the caches.
+            run_together(
                 spark,
-                s_events,
-                os.path.join(out_dir, "events"),
-                ["month", "edge_uuid", "event_name"],
-            )
-            upsert_parquet(
-                spark,
-                g_customers,
-                os.path.join(out_dir, "customer"),
-                ["vco", "enterprise_id"],
+                [
+                    lambda: upsert_parquet(
+                        spark, s_links, os.path.join(out_dir, "links"), ["link_id"]
+                    ),
+                    lambda: insert_ignore_parquet(
+                        spark,
+                        s_events,
+                        os.path.join(out_dir, "events"),
+                        ["month", "edge_uuid", "event_name"],
+                    ),
+                    lambda: upsert_parquet(
+                        spark,
+                        g_customers,
+                        os.path.join(out_dir, "customer"),
+                        ["vco", "enterprise_id"],
+                    ),
+                ],
             )
         finally:
             # dependents first: releasing enterprises while the payloads

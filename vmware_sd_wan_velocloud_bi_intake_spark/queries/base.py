@@ -111,24 +111,17 @@ def stage_checkpoints_concurrent(
     staging jobs overlap to the wall of the slowest instead of the sum).
     Each entry gets the full :func:`stage_checkpoint` contract (eager
     localCheckpoint, prior invocation's blocks dropped per key). Order of
-    the returned list matches the input. Thread count = len(named): these
-    are per-vehicle decision tables (2–4), not a fan-out.
+    the returned list matches the input; the staging runs on
+    ``functions.conf.run_together``, one thread per entry: these are
+    per-vehicle decision tables (2–4), not a fan-out.
 
     Must not be called inside a scoped-conf context
     (:func:`micro_batch_confs` / ``functions.conf.iterative_loop_confs``):
     the scope's session-conf mutation and restore would race the
     concurrently submitted jobs."""
-    from concurrent.futures import ThreadPoolExecutor
+    from ..functions.conf import run_together
 
-    from pyspark import inheritable_thread_target
-
-    if len(named) <= 1:  # nothing to overlap (and no pool of 0 workers)
-        return [stage_checkpoint(d, k) for k, d in named]
-    with ThreadPoolExecutor(max_workers=len(named)) as pool:
-        futs = [
-            pool.submit(
-                inheritable_thread_target(lambda k=k, d=d: stage_checkpoint(d, k))
-            )
-            for k, d in named
-        ]
-        return [f.result() for f in futs]
+    return run_together(
+        named[0][1].sparkSession if named else None,
+        [lambda k=k, d=d: stage_checkpoint(d, k) for k, d in named],
+    )

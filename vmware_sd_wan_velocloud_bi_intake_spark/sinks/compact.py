@@ -25,7 +25,7 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-from .upsert import swap_into_place
+from .upsert import footer_schema, swap_into_place
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the HDFS-block-ish sweet spot
 
@@ -44,6 +44,20 @@ def _part_ids(parts_dir: str, before_batch_id: int) -> list[int]:
             if int(value) < before_batch_id:
                 ids.append(int(value))
     return ids
+
+
+def _parts_schema(parts_dir: str):
+    """The Spark schema of a ``_batch_id``-partitioned parts table, read on
+    the driver: the data columns Spark wrote into one part file's footer,
+    then the partition column."""
+    import json
+
+    from pyspark.sql.types import IntegerType, StructType
+
+    meta = footer_schema(parts_dir).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"
+    ]
+    return StructType.fromJson(json.loads(meta)).add("_batch_id", IntegerType())
 
 
 def compact_parts(
@@ -75,7 +89,11 @@ def compact_parts(
 
     The foldable parts are found by listing the ``_batch_id=<n>``
     directories on the driver — no Spark job — and the no-op cases
-    (missing dir, <2 foldable parts) return False before any read.
+    (missing dir, <2 foldable parts) return False before any read. Without
+    ``merge_schema`` the parts are read with the schema Spark stored in one
+    part file's footer plus ``_batch_id int`` (the partition type Spark
+    would infer), so the read runs no schema-inference job; with it,
+    Spark infers and merges every part's schema.
     Callers own the replay-safety argument: pass the CURRENT foreachBatch
     id, whose predecessors can no longer replay.
     """
@@ -83,9 +101,10 @@ def compact_parts(
 
     if len(_part_ids(parts_dir, before_batch_id)) < 2:
         return False  # zero/one foldable part: compaction buys nothing
-    reader = (
-        spark.read.option("mergeSchema", "true") if merge_schema else spark.read
-    )
+    if merge_schema:
+        reader = spark.read.option("mergeSchema", "true")
+    else:
+        reader = spark.read.schema(_parts_schema(parts_dir))
     parts = reader.parquet(parts_dir)
     old = parts.where(F.col("_batch_id") < F.lit(int(before_batch_id)))
     keep = parts.where(F.col("_batch_id") >= F.lit(int(before_batch_id)))

@@ -72,7 +72,7 @@ def _merge_by_keys(
     if os.path.exists(path):
         # the batch's schema spares a schema-inference job; a batch column
         # the table lacks must still fail loud, not read back as nulls
-        missing = set(batch.columns) - set(_stored_columns(path))
+        missing = set(batch.columns) - set(footer_schema(path).names)
         if missing:
             raise ValueError(f"{path} lacks the batch's columns {sorted(missing)}")
         t = spark.read.schema(batch.schema).parquet(path)
@@ -93,15 +93,18 @@ def _merge_by_keys(
     _atomic_overwrite(spark, merged, path)
 
 
-def _stored_columns(path: str) -> list[str]:
-    """Column names of the parquet table at ``path``, read on the driver from
-    one part file's footer."""
+def footer_schema(path: str):
+    """The pyarrow schema of one part file of the parquet table at ``path``
+    (the first in sorted order, in a partition directory if the table is
+    partitioned), read on the driver from its footer: no Spark job."""
     import pyarrow.parquet as pq
 
-    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    if not parts:
-        raise ValueError(f"{path} holds no parquet part file")
-    return pq.read_schema(os.path.join(path, parts[0])).names
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        parts = sorted(f for f in files if f.endswith(".parquet"))
+        if parts:
+            return pq.read_schema(os.path.join(root, parts[0]))
+    raise ValueError(f"{path} holds no parquet part file")
 
 
 def upsert_parquet(

@@ -55,10 +55,10 @@ from its text bytes, plus the index and summary it joins and aggregates,
 estimated from their on-disk bytes (a listing, no job). A small batch over
 a small corpus runs at one partition; a wide batch or a large summary gets
 the partitions its bytes need. On the perfbench stream corpus a 200-doc
-batch is 9 Spark jobs and a compaction batch 18 (SCALE.md, "stream: the
+batch is 9 Spark jobs and a compaction batch 15 (SCALE.md, "stream: the
 near-dup batch sized to its rows"): the summary, index, survivors and
-stats compactions run concurrently on the batch's own thread pool, which
-closes with the batch.
+stats compactions run concurrently (``functions.conf.run_together``, a
+pool per call that closes before the call returns).
 """
 
 from __future__ import annotations
@@ -69,6 +69,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.conf import run_together
 from ..operators import dedup
 
 
@@ -105,22 +106,6 @@ _BASE_PART = -1  # reserved _batch_id for the compacted summary base
 # perfbench stream corpus and on 5-word and 2,000-word synthetic docs.
 # The summary's md5 bucket strings compress less, so it is over-counted.
 _PARQUET_EXPANSION = 6
-
-
-def _run_together(spark, pool, fns) -> None:
-    """Run independent actions concurrently on ``pool`` and wait for ALL
-    of them before raising the first failure — no action is still running
-    when the caller unwinds. Actions are only sequential because a driver
-    calls them sequentially; ``inheritable_thread_target`` keeps the
-    caller's job group, local properties and tags on the pool threads."""
-    from concurrent.futures import wait
-
-    from pyspark import inheritable_thread_target
-
-    futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
-    wait(futures)
-    for f in futures:
-        f.result()
 
 
 def compact_summary_parts(spark, index_dir: str, before_batch_id: int) -> bool:
@@ -307,8 +292,6 @@ def make_near_dup_ingest(
     # per-stream hoisted pieces — built ONCE per ingest instead of once
     # per micro-batch. Column expressions are immutable and reusable
     # across batches (the _lsh_row_exprs argument in operators/dedup.py).
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Window
 
     from ..operators.text import normalize_text
@@ -331,7 +314,7 @@ def make_near_dup_ingest(
         state = dataset_bytes(index_dir) + dataset_bytes(summary_dir)
         return text_bytes * bands * (shingle_n + 2) + _PARQUET_EXPANSION * state
 
-    def _compact_all(spark, pool, batch_id: int) -> None:
+    def _compact_all(spark, batch_id: int) -> None:
         """Fold every table's parts below ``batch_id`` into its base, all
         tables at once: each compaction reads, stages, verifies and swaps
         its OWN directory, so they are independent. A failure in one
@@ -352,7 +335,7 @@ def make_near_dup_ingest(
             from ..operators.incstats import compact_stats_parts
 
             jobs.append(lambda: compact_stats_parts(spark, stats_dir, batch_id))
-        _run_together(spark, pool, jobs)
+        run_together(spark, jobs)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from ..functions.conf import iterative_loop_confs, sized_partition_count
@@ -400,15 +383,13 @@ def make_near_dup_ingest(
         # shuffles it) and a large summary (aggregated every batch,
         # refolded by compaction) at the partitions their bytes need. The
         # scope opens before the first persist (a persist plans its
-        # cached query eagerly), and the per-batch pool closes inside
-        # it, so no pool thread outlives the batch or runs under the
-        # restored confs.
+        # cached query eagerly), and each ``run_together`` pool closes
+        # inside it, so no pool thread outlives the batch or runs under
+        # the restored confs.
         partitions = sized_partition_count(
             spark, fingerprint_rows(fp), _bytes_in_flight(text_bytes)
         )
-        with iterative_loop_confs(spark, partitions), ThreadPoolExecutor(
-            max_workers=4
-        ) as pool:
+        with iterative_loop_confs(spark, partitions):
             if (
                 compact_summary_every
                 and batch_id > 0
@@ -418,7 +399,7 @@ def make_near_dup_ingest(
                 # serializes epochs) — never this batch's own part, so
                 # the replay exclusion below is unaffected. Awaited
                 # before the summary/index reads are planned.
-                _compact_all(spark, pool, batch_id)
+                _compact_all(spark, batch_id)
             # empty-batch guard (mirrors annindex/semdedup): an empty
             # FIRST batch would otherwise dynamic-overwrite zero
             # partitions, leaving index_dir/survivors_dir as
@@ -430,10 +411,10 @@ def make_near_dup_ingest(
             # record the head so replay and collision guards still see
             # the batch.
             if not fingerprint_is_empty(fp):
-                _dedup_and_publish(spark, pool, batch_df, batch_id)
+                _dedup_and_publish(spark, batch_df, batch_id)
             record_head(knobs_path, "neardup-knobs/v1", batch_id, fp)
 
-    def _dedup_and_publish(spark, pool, batch_df: DataFrame, batch_id: int) -> None:
+    def _dedup_and_publish(spark, batch_df: DataFrame, batch_id: int) -> None:
         # ---- within-batch exact dedup: ONE window shuffle ---------------
         # min-id-per-content via a window over the content digest — one
         # exchange, where groupBy(digest) + two semi-join-backs cost
@@ -598,7 +579,7 @@ def make_near_dup_ingest(
                         length_of=[text_col],
                     )
 
-            _run_together(spark, pool, [_write_index, _write_summary])
+            run_together(spark, [_write_index, _write_summary])
         finally:
             novel.unpersist()
             band_rows_all.unpersist()
