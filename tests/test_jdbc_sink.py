@@ -9,12 +9,13 @@ from __future__ import annotations
 
 import sqlite3
 
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from vmware_sd_wan_velocloud_bi_intake_spark.sinks.jdbc import (
     build_upsert_sql,
     jdbc_upsert,
+    jdbc_upsert_writer,
 )
 
 
@@ -99,70 +100,65 @@ def test_jdbc_upsert_is_idempotent_on_replay(spark, tmp_path):
 
 
 def test_streaming_foreachbatch_jdbc_upsert(spark, tmp_path):
-    """velocloud stream -> foreachBatch -> JDBC upsert: replayed/overlapping
-    micro-batches converge to one row per PK."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.sinks.jdbc import (
-        jdbc_upsert_writer,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.sources.datasource import (
-        VeloCloudDataSource,
-    )
-
-    spark.dataSource.register(VeloCloudDataSource)
+    """parquet file stream -> foreachBatch -> JDBC upsert: one file per
+    micro-batch, with primary keys that repeat inside a file and overlap
+    across files, converges to exactly one row per distinct PK."""
+    cols = ["month", "edge_uuid", "event_name", "n"]
+    files = [
+        [("2024-01", "e1", "up", 1), ("2024-01", "e2", "up", 1),
+         ("2024-01", "e1", "up", 2)],
+        [("2024-01", "e2", "up", 3), ("2024-01", "e3", "down", 1),
+         ("2024-02", "e1", "up", 1)],
+        [("2024-01", "e1", "up", 4), ("2024-02", "e1", "up", 5),
+         ("2024-02", "e3", "down", 2)],
+    ]
+    src = tmp_path / "events_in"
+    src.mkdir()
+    for i, rows in enumerate(files):
+        pd.DataFrame(rows, columns=cols).to_parquet(
+            src / f"f{i}.parquet", index=False
+        )
     db = str(tmp_path / "stream.db")
     with sqlite3.connect(db) as conn:
         conn.execute(
-            "CREATE TABLE ev (vco TEXT, enterprise_id INTEGER, event_ts TEXT,"
-            " event TEXT, edgeLogicalId TEXT,"
-            " PRIMARY KEY (vco, enterprise_id, event_ts, event))"
+            "CREATE TABLE ev (month TEXT, edge_uuid TEXT, event_name TEXT,"
+            " n INTEGER, PRIMARY KEY (month, edge_uuid, event_name))"
         )
-    start_ms = 1704067200000
     stream = (
-        spark.readStream.format("velocloud")
-        .option("entity", "events")
-        .option("fleet", "vco0")
-        .option("n_enterprises", "2")
-        .option("start_ms", str(start_ms))
-        .option("end_ms", str(start_ms + 6 * 24 * 3600 * 1000))
-        .option("advance_ms", str(2 * 24 * 3600 * 1000))
-        .load()
-        .withColumn("event_ts", F.col("event_ts").cast("string"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            jdbc_upsert_writer(
-                "ev",
-                ["vco", "enterprise_id", "event_ts", "event"],
-                lambda: _connect(db),
-                dialect="ansi",
-                placeholder="?",
-            )
+        spark.readStream.schema(
+            "month string, edge_uuid string, event_name string, n long"
         )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    upsert = jdbc_upsert_writer(
+        "ev",
+        ["month", "edge_uuid", "event_name"],
+        lambda: _connect(db),
+        dialect="ansi",
+        placeholder="?",
+    )
+    batch_ids = []
+
+    def write(batch_df, batch_id):
+        batch_ids.append(batch_id)
+        upsert(batch_df, batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(write)
         .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
         .start()
     )
     try:
-        q.processAllAvailable()
+        assert q.awaitTermination(120), "stream did not drain in time"
     finally:
         q.stop()
+    assert batch_ids == list(range(len(files)))  # one file per micro-batch
 
-    batch_rows = (
-        spark.read.format("velocloud")
-        .option("entity", "events")
-        .option("fleet", "vco0")
-        .option("n_enterprises", "2")
-        .load()
-        .filter(
-            (F.col("event_ts") >= F.timestamp_millis(F.lit(start_ms)))
-            & (
-                F.col("event_ts")
-                < F.timestamp_millis(F.lit(start_ms + 6 * 24 * 3600 * 1000))
-            )
-        )
-        .select("vco", "enterprise_id", F.col("event_ts").cast("string"), "event")
-        .distinct()
-        .count()
-    )
+    want = {(m, e, ev) for rows in files for m, e, ev, _ in rows}
     with sqlite3.connect(db) as conn:
-        n = conn.execute("SELECT COUNT(*) FROM ev").fetchone()[0]
-    assert n == batch_rows > 0
+        got = conn.execute(
+            "SELECT month, edge_uuid, event_name FROM ev"
+        ).fetchall()
+    assert len(got) == len(want) and set(got) == want

@@ -43,7 +43,7 @@ REFERENCE_ROOTS = (
 CHECKED_FILES = {ROOT / "bench.py", *(ROOT / "tools").glob("*.py")}
 # definitions reached from tests alone; lower it when a change deletes
 # some or gives them a caller, never raise it
-TEST_ONLY_CEILING = 160
+TEST_ONLY_CEILING = 118
 
 
 def _python_files(root: Path) -> list[Path]:

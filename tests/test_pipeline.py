@@ -88,9 +88,18 @@ def test_pipeline_end_to_end(spark, tmp_path):
     gold = out.customer_rollup
     assert gold.count() == 6
     assert gold.filter(~F.col("any_wireless").isin(0, 1)).count() == 0
-    # written tables exist
-    for t in ["edge", "links", "events", "customer"]:
-        assert os.path.exists(os.path.join(str(tmp_path), t))
+    # each landed table holds one row per distinct key of its frame: a sink
+    # that drops or duplicates rows fails here, not only a frame count
+    for table, frame, pk in [
+        ("edge", out.edges, ["edge_uuid"]),
+        ("links", out.links, ["link_id"]),
+        ("events", ev, ["month", "edge_uuid", "event_name"]),
+        ("customer", gold, ["vco", "enterprise_id"]),
+    ]:
+        landed = spark.read.parquet(os.path.join(str(tmp_path), table))
+        n = landed.count()
+        assert landed.select(*pk).distinct().count() == n, table
+        assert n == frame.select(*pk).distinct().count(), table
 
 
 def test_pipeline_idempotent_rerun(spark, tmp_path):

@@ -382,31 +382,6 @@ def test_appended_vectors_are_searchable(spark, emb):
     assert all(got[q] == q - 1_000_000 for q in got)
 
 
-def test_pq_artifact_roundtrip(spark, emb, books, tmp_path):
-    """Codebooks reload bit-identically and encode identically; shape
-    tampering fails loudly at load, not as bad encodings."""
-    import json
-
-    p = str(tmp_path / "idx" / "codebooks.json")
-    pq.save_pq_codebooks(books, p)
-    back = pq.load_pq_codebooks(p)
-    assert back == books
-    a = emb.select(
-        similarity.as_double_array(F.col("embedding")).alias("v")
-    ).select(pq.pq_encode_expr("v", books).alias("c")).collect()
-    b = emb.select(
-        similarity.as_double_array(F.col("embedding")).alias("v")
-    ).select(pq.pq_encode_expr("v", back).alias("c")).collect()
-    assert [r["c"] for r in a] == [r["c"] for r in b]
-    with open(p) as f:
-        payload = json.load(f)
-    payload["codebooks"][0] = payload["codebooks"][0][:-1]
-    with open(p, "w") as f:
-        json.dump(payload, f)
-    with pytest.raises(ValueError, match="shape mismatch"):
-        pq.load_pq_codebooks(p)
-
-
 def test_cell_occupancy_profile_counts(spark, emb):
     cents, members, books = pq.ivf_pq_index(emb, n_cells=8, m=8, ksub=16)
     prof = pq.cell_occupancy_profile(members)

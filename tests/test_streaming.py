@@ -127,475 +127,3 @@ def test_staleness_cadence_rule(spark):
         max_age_days=8, cadence_days=6,
     )
     assert {r["edge_uuid"] for r in due.collect()} == {"e1"}
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): containment replication over a long stream; stateful session tests keep session-state coverage default
-@pytest.mark.slow
-def test_streaming_sessions_subset_of_batch_sessions(spark, tmp_path):
-    from vmware_sd_wan_velocloud_bi_intake_spark.sources.datasource import (
-        VeloCloudDataSource,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_sessions,
-    )
-
-    spark.dataSource.register(VeloCloudDataSource)
-    start_ms = 1704067200000  # 2024-01-01
-    end_ms = start_ms + 15 * 24 * 3600 * 1000
-    src_opts = {
-        "entity": "events",
-        "fleet": "vco0",
-        "n_enterprises": "2",
-        "start_ms": str(start_ms),
-        "end_ms": str(end_ms),
-        "advance_ms": str(3 * 24 * 3600 * 1000),
-    }
-    stream = spark.readStream.format("velocloud").options(**src_opts).load()
-    q = (
-        streaming_sessions(
-            stream, ts="event_ts", key="edgeLogicalId", gap="10 hours",
-            watermark="1 hour",
-        )
-        .writeStream.format("memory")
-        .queryName("vc_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    emitted = {
-        (r["edgeLogicalId"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM vc_sessions").collect()
-    }
-    assert emitted, "no sessions emitted before the final watermark"
-
-    batch = spark.read.format("velocloud").options(**src_opts).load()
-    batch_sessions = {
-        (r["edgeLogicalId"], r["session_start"], r["session_end"], r["n_events"])
-        for r in (
-            batch.groupBy(
-                F.session_window(F.col("event_ts"), "10 hours").alias("sw"),
-                "edgeLogicalId",
-            )
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "edgeLogicalId",
-                F.col("sw.start").alias("session_start"),
-                F.col("sw.end").alias("session_end"),
-                "n_events",
-            )
-            .collect()
-        )
-    }
-    # append mode emits only watermark-closed sessions; each one must agree
-    # exactly with the batch sessionization over the same interval
-    assert emitted <= batch_sessions
-
-
-def test_streaming_curation_matches_batch_prefix(spark, sf_smoke, tmp_path):
-    """The streaming curation twin must agree with the batch pipeline's
-    stateless prefix (redact -> gate -> exact dedup) on the same corpus:
-    same survivor count, no PII in output, one row per fingerprint."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import text as text_ops
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_curate_documents,
-    )
-
-    batch = load_table(spark, sf_smoke, "documents")
-    stream_dir = tmp_path / "docs_stream"
-    stream_dir.mkdir()
-    (stream_dir / "documents.parquet").symlink_to(f"{sf_smoke}/documents.parquet")
-    schema = spark.read.parquet(f"{sf_smoke}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(str(stream_dir))
-
-    _run_to_memory(
-        streaming_curate_documents(stream, min_quality=0.3), "curated_docs"
-    )
-    got = spark.sql("SELECT * FROM curated_docs")
-
-    redacted = batch.withColumn("text", text_ops.redact_pii(F.col("text")))
-    gated = redacted.where(text_ops.quality_score(F.col("text")) >= 0.3)
-    expected_fps = {
-        r["fp"]
-        for r in gated.select(
-            text_ops.fingerprint(F.col("text")).alias("fp")
-        ).collect()
-    }
-    got_fps = [r["fp16"] for r in got.select("fp16").collect()]
-    assert set(got_fps) == expected_fps
-    assert len(got_fps) == len(set(got_fps))  # one survivor per fingerprint
-    assert (
-        got.where(F.col("text").rlike(r"[\w.+-]+@[\w-]+\.[\w.]+")).count() == 0
-    )
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): batch-parity replication: the scoring operator is unit-pinned; curation-prefix parity keeps the stream-parity class default
-@pytest.mark.slow
-def test_streaming_quality_scoring_matches_batch(spark, sf_smoke, tmp_path):
-    """Train offline, score online: the streamed p_quality equals the
-    batch scoring bit-for-bit (pure expression), and min_p gates rows."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import classifier
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_score_quality,
-    )
-
-    batch = load_table(spark, sf_smoke, "documents")
-    w, b = classifier.train_quality_classifier(
-        batch, positive_sources={"src0"}, iters=4
-    )
-    stream_dir = tmp_path / "docs_stream_q"
-    stream_dir.mkdir()
-    (stream_dir / "documents.parquet").symlink_to(f"{sf_smoke}/documents.parquet")
-    schema = spark.read.parquet(f"{sf_smoke}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(str(stream_dir))
-
-    _run_to_memory(streaming_score_quality(stream, w, b), "scored_docs")
-    got = {
-        r["doc_id"]: r["p_quality"]
-        for r in spark.sql("SELECT doc_id, p_quality FROM scored_docs").collect()
-    }
-    expected = {
-        r["doc_id"]: r["p_quality"]
-        for r in classifier.score_quality(batch, w, b)
-        .select("doc_id", "p_quality")
-        .collect()
-    }
-    assert got == expected
-
-    thresh = sorted(expected.values())[len(expected) // 2]  # median gate
-    _run_to_memory(
-        streaming_score_quality(stream, w, b, min_p=thresh), "scored_gated"
-    )
-    kept = {
-        r["doc_id"] for r in spark.sql("SELECT doc_id FROM scored_gated").collect()
-    }
-    assert kept == {d for d, p in expected.items() if p >= thresh}
-
-
-def test_streaming_interval_join_matches_batch(spark, events_stream):
-    """Stream-stream inner interval join (the j11 range-join twin): split
-    the events fixture into two streams by event-id parity and join
-    right rows within 30 minutes after each left row per user — the
-    streamed result must equal the identical batch join exactly (inner
-    matches emit as they form; availableNow drains both sides)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_interval_join,
-    )
-
-    batch, stream = events_stream
-    cols = ["event_id", "ts", "user_id"]
-    joined = streaming_interval_join(
-        stream.where("event_id % 2 = 0").select(*cols),
-        stream.where("event_id % 2 = 1").select(*cols),
-        key="user_id",
-        within="30 minutes",
-        watermark="2 hours",
-    )
-    _run_to_memory(joined, "sj")
-    got = {
-        (r["l_event_id"], r["r_event_id"])
-        for r in spark.sql("select l_event_id, r_event_id from sj").collect()
-    }
-    left_b = batch.where("event_id % 2 = 0").select(
-        *[F.col(c).alias(f"l_{c}") for c in cols]
-    )
-    right_b = batch.where("event_id % 2 = 1").select(
-        *[F.col(c).alias(f"r_{c}") for c in cols]
-    )
-    want_df = left_b.join(
-        right_b,
-        (F.col("l_user_id") == F.col("r_user_id"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
-        "inner",
-    )
-    want = {
-        (r["l_event_id"], r["r_event_id"])
-        for r in want_df.select("l_event_id", "r_event_id").collect()
-    }
-    assert got == want and len(want) > 0
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): outer-facet replication: test_streaming_interval_join_matches_batch keeps the interval-join class default
-@pytest.mark.slow
-def test_streaming_interval_join_left_outer(spark, events_stream):
-    """left_outer additionally emits unmatched left rows with NULL right
-    columns once the watermark proves no match can arrive; matched pairs
-    equal the inner join's."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_interval_join,
-    )
-
-    batch, stream = events_stream
-    cols = ["event_id", "ts", "user_id"]
-    joined = streaming_interval_join(
-        stream.where("event_id % 2 = 0").select(*cols),
-        stream.where("event_id % 2 = 1").select(*cols),
-        key="user_id",
-        within="30 minutes",
-        watermark="0 seconds",  # availableNow final watermark = max ts,
-        how="left_outer",       # proving every unmatched row unmatched
-    )
-    _run_to_memory(joined, "sjo")
-    rows = spark.sql("select l_event_id, r_event_id from sjo").collect()
-    matched = {
-        (r["l_event_id"], r["r_event_id"])
-        for r in rows
-        if r["r_event_id"] is not None
-    }
-    outer_only = {r["l_event_id"] for r in rows if r["r_event_id"] is None}
-    left_b = batch.where("event_id % 2 = 0").select(
-        *[F.col(c).alias(f"l_{c}") for c in cols]
-    )
-    right_b = batch.where("event_id % 2 = 1").select(
-        *[F.col(c).alias(f"r_{c}") for c in cols]
-    )
-    cond = (
-        (F.col("l_user_id") == F.col("r_user_id"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes"))
-    )
-    want_matched = {
-        (r["l_event_id"], r["r_event_id"])
-        for r in left_b.join(right_b, cond, "inner")
-        .select("l_event_id", "r_event_id")
-        .collect()
-    }
-    assert matched == want_matched
-    # outer rows emit only once the watermark PROVES no match can
-    # arrive: rows whose match window [l_ts, l_ts+30min] extends past
-    # the stream's final watermark (= max event ts at availableNow with
-    # 0s delay) legitimately stay buffered and never emit — assert
-    # exact equality on the provably-closed set
-    matched_left = {l for l, _ in want_matched}
-    all_left = {r["l_event_id"] for r in left_b.select("l_event_id").collect()}
-    unmatched = all_left - matched_left
-    # Spark's state-eviction boundary at the final watermark is
-    # CONSERVATIVE near the stream tail (rows whose horizon is within
-    # the join's internal state-watermark slack stay buffered — they
-    # would emit on a live stream as the watermark advanced further), so
-    # the exact emitted set isn't pinnable and coverage fractions would
-    # encode the fixture's time spread; the invariants are: outer rows
-    # are exactly never-matched lefts (subset implies disjointness from
-    # matched), and SOME emitted
-    assert outer_only and outer_only <= unmatched
-    with pytest.raises(ValueError, match="flip the sides"):
-        streaming_interval_join(
-            stream.select(*cols), stream.select(*cols), how="right_outer"
-        )
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): dim-enrichment replication: test_streaming_enrich_dim_operator_follows_versioned_swaps keeps the class default
-@pytest.mark.slow
-def test_slowly_changing_dim_enrichment_patterns(spark, tmp_path):
-    """Pin the slowly-changing-dimension enrichment contract BOTH ways.
-
-    The trap: a stream-static join captures the static side's FILE
-    LISTING at plan time, so overwriting the dim under a built plan
-    doesn't refresh it — the resumed/continuing query reads deleted
-    files and dies (FILE_NOT_EXIST). The working pattern — the one every
-    ingest in streaming/ uses — is a fresh ``spark.read`` of the dim
-    INSIDE ``foreachBatch``: each micro-batch re-lists, so an atomic dim
-    swap between triggers changes the very next batch's enrichment with
-    no restart and no checkpoint surgery. The operator form of the
-    working pattern is ``streaming/jobs.streaming_enrich_dim`` (tested
-    below in test_streaming_enrich_dim_operator_follows_versioned_swaps);
-    this test keeps pinning the RAW trap + pattern pair."""
-    dim_dir = str(tmp_path / "dim")
-    spark.createDataFrame(
-        [(0, "old-a"), (1, "old-b")], "k long, label string"
-    ).write.mode("overwrite").parquet(dim_dir)
-    src = tmp_path / "in"
-    src.mkdir()
-    spark.createDataFrame([(0,), (1,)], "k long").coalesce(1).write.parquet(
-        str(src / "b0.parquet")
-    )
-    stream = spark.readStream.schema("k long").parquet(str(src / "*.parquet"))
-
-    seen = []
-
-    def enrich(batch_df, batch_id):
-        dim = batch_df.sparkSession.read.parquet(dim_dir)  # fresh per batch
-        seen.append(
-            {
-                (r["k"], r["label"])
-                for r in batch_df.join(dim, "k", "left").collect()
-            }
-        )
-
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = (
-            stream.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not drain in time"
-
-    run()
-    assert seen[-1] == {(0, "old-a"), (1, "old-b")}
-    # the dim swaps while the stream is parked; new data arrives
-    spark.createDataFrame(
-        [(0, "new-a"), (1, "new-b")], "k long, label string"
-    ).write.mode("overwrite").parquet(dim_dir)
-    spark.createDataFrame([(0,), (1,)], "k long").coalesce(1).write.parquet(
-        str(src / "b1.parquet")
-    )
-    run()
-    assert seen[-1] == {(0, "new-a"), (1, "new-b")}  # fresh dim, no restart
-    # and the TRAP half: a stream-static join built BEFORE the swap holds
-    # the old file listing — running it after another overwrite dies on
-    # deleted files instead of refreshing (why the pattern above exists)
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    frozen = stream.join(spark.read.parquet(dim_dir), "k", "left")
-    spark.createDataFrame(
-        [(0, "newer-a"), (1, "newer-b")], "k long, label string"
-    ).write.mode("overwrite").parquet(dim_dir)
-    spark.createDataFrame([(0,), (1,)], "k long").coalesce(1).write.parquet(
-        str(src / "b2.parquet")
-    )
-    q = (
-        frozen.writeStream.format("memory")
-        .queryName("scd_trap")
-        .option("checkpointLocation", str(tmp_path / "ckpt_trap"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="FILE_NOT_EXIST|does not exist"):
-        q.awaitTermination(120)
-        q.processAllAvailable()
-
-
-def test_streaming_windowed_distinct_matches_batch(spark, events_stream):
-    """Closed windows' distinct counts must match the batch computation:
-    exactly in exact mode, within HLL++ tolerance in sketch mode (the
-    scale default — fixed-size state per window)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_windowed_distinct,
-    )
-
-    batch, stream = events_stream
-    _run_to_memory(
-        streaming_windowed_distinct(stream, window="1 day", exact=True),
-        "wd_exact",
-    )
-    _run_to_memory(
-        streaming_windowed_distinct(stream, window="1 day"), "wd_approx"
-    )
-    want = {
-        r["window_start"]: r["n"]
-        for r in batch.groupBy(F.window("ts", "1 day").alias("win"))
-        .agg(F.countDistinct("user_id").alias("n"))
-        .select(F.col("win.start").alias("window_start"), "n")
-        .collect()
-    }
-    got_exact = {
-        r["window_start"]: r["n_distinct"]
-        for r in spark.sql("select * from wd_exact").collect()
-    }
-    got_approx = {
-        r["window_start"]: r["n_distinct"]
-        for r in spark.sql("select * from wd_approx").collect()
-    }
-    # the emission contract: every clearly-closed window (its end at
-    # least a watermark delay behind the stream max) emitted, in BOTH
-    # modes, and both modes emitted the same window set — a silently
-    # dropped window is a failure, not just a wrong count
-    import datetime
-
-    max_ts = batch.agg(F.max("ts")).head()[0]
-    clearly_closed = {
-        w
-        for w in want
-        if w + datetime.timedelta(days=1, hours=2) < max_ts
-    }
-    assert clearly_closed <= set(got_exact)
-    assert set(got_exact) == set(got_approx)
-    assert set(got_exact) <= set(want)
-    for w, n in got_exact.items():
-        assert n == want[w]  # exact mode: equality on every closed window
-    # approx_count_distinct's default rsd is 0.05 — a STANDARD DEVIATION,
-    # not a bound; 4 sigma keeps a correct sketch from flaking the test
-    for w, n in got_approx.items():
-        assert abs(n - want[w]) <= max(3, 0.2 * want[w])
-
-
-def test_streaming_enrich_dim_operator_follows_versioned_swaps(spark, tmp_path):
-    """streaming_enrich_dim (the operator form of the SCD pattern pinned by
-    test_slowly_changing_dim_enrichment_patterns above): a versioned dim
-    publish between triggers changes the very next micro-batch's
-    enrichment — no restart, no checkpoint surgery — because the dim is
-    re-read through the _latest pointer inside foreachBatch."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.sinks.versioned import (
-        write_version,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.jobs import (
-        streaming_enrich_dim,
-    )
-
-    dim_root = str(tmp_path / "dim_root")
-    write_version(
-        spark.createDataFrame([(0, "old-a"), (1, "old-b")], "k long, label string"),
-        dim_root,
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    spark.createDataFrame([(0,), (1,)], "k long").coalesce(1).write.parquet(
-        str(src / "b0.parquet")
-    )
-    stream = spark.readStream.schema("k long").parquet(str(src / "*.parquet"))
-
-    seen = []
-
-    def apply_fn(enriched, batch_id):
-        seen.append({(r["k"], r["label"]) for r in enriched.collect()})
-
-    body = streaming_enrich_dim(dim_root, "k", apply_fn)
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not drain in time"
-
-    run()
-    assert seen[-1] == {(0, "old-a"), (1, "old-b")}
-    # atomic swap while parked: publish v2, new data arrives, SAME
-    # checkpoint — the next batch enriches against v2
-    write_version(
-        spark.createDataFrame([(0, "new-a"), (1, "new-b")], "k long, label string"),
-        dim_root,
-    )
-    spark.createDataFrame([(2,), (3,)], "k long").coalesce(1).write.parquet(
-        str(src / "b1.parquet")
-    )
-    run()
-    # v2 carries keys 0/1 only; batch keys 2/3 keep left-join NULLs —
-    # proving the batch read v2 (v1 would ALSO give NULLs, so the v3
-    # republish below is the discriminating step)
-    assert seen[-1] == {(2, None), (3, None)}
-    # a key swap visible end to end: republish with keys 2/3, replay more
-    write_version(
-        spark.createDataFrame([(2, "v3-c"), (3, "v3-d")], "k long, label string"),
-        dim_root,
-    )
-    spark.createDataFrame([(2,), (3,)], "k long").coalesce(1).write.parquet(
-        str(src / "b2.parquet")
-    )
-    run()
-    assert seen[-1] == {(2, "v3-c"), (3, "v3-d")}
-    # guard: outward joins against a refreshing dim are refused
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="left/inner/semi"):
-        streaming_enrich_dim(dim_root, "k", apply_fn, how="full_outer")

@@ -424,8 +424,8 @@ def test_knob_fingerprint_blocks_mismatched_ingest(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before
 
 
-@pytest.mark.slow  # two-tier rule: rows-compaction parity stays default-
-# covered by the annindex and semdedup ingests' twins of this test
+# default tier: the rows-compaction parity check the semdedup ingest's
+# slow-tier twin (tests/test_streaming_semdedup.py) names as its sibling
 def test_rows_compaction_bounds_partitions_preserves_results(spark, tmp_path):
     """The auto-compaction also folds the band-row index and the
     survivors table into the base partition: results stay identical to

@@ -153,7 +153,9 @@ def test_guards_fire(spark, emb, tmp_path):
         redeployed(emb.where("vec_id % 2 = 1"), 1)
 
 
-# slow tier (r14 re-tier, VERDICT r13 #2): compaction-preservation class kept default on the neardup ingest (shared sinks/compact skeleton)
+# slow tier: rows-compaction parity stays default-covered by
+# test_streaming_neardup.py::test_rows_compaction_bounds_partitions_preserves_results
+# (the shared sinks/compact skeleton)
 @pytest.mark.slow
 def test_rows_compaction_preserves_survivors(spark, emb, tmp_path):
     import os
@@ -365,7 +367,7 @@ def test_end_to_end_readstream_wiring(spark, emb, tmp_path):
 
 def test_build_crash_before_baseline_replays_clean(spark, emb, tmp_path):
     """Crash inside the BUILD batch after the centroids landed but before
-    anything else (semdedup writes centroids early, unlike annindex):
+    anything else (semdedup writes centroids before its occupancy):
     the replay must re-derive everything deterministically — not demand a
     backfill there is no data for."""
     import json

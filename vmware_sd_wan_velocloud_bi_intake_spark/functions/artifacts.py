@@ -4,8 +4,8 @@ One implementation of the tmp+rename discipline (sinks/upsert.py's swap
 applied to single files): a writer that dies mid-write leaves only an
 unreferenced tmp file, never a torn artifact. Centralized so a future
 hardening (fsync-before-rename, tmp collision policy) lands everywhere at
-once instead of drifting across copies — BPE merge tables, PQ codebooks,
-classifier weights, and the versioned-dataset manifests/pointers all
+once instead of drifting across copies — BPE merge tables, classifier
+weights, ingest knobs, and the versioned-dataset manifests/pointers all
 write through here.
 """
 

@@ -71,10 +71,9 @@ def train_pq_codebooks(
     the init slices, every assignment distance, and every recentred
     coordinate are rounded (``spark_round_array`` — Spark's HALF_UP repr
     rule), so each step depends only on rounded values and a replay in
-    any engine (unrolled SQL in the DuckDB oracle,
-    tests/test_annindex_stream_oracle.py) reproduces the books exactly —
-    ulp-level accumulation differences are absorbed instead of
-    compounding across iterations.
+    any engine (unrolled SQL in ``sim_ann_ivf``'s DuckDB oracle) reproduces
+    the books exactly — ulp-level accumulation differences are absorbed
+    instead of compounding across iterations.
     """
     from .similarity import spark_round_array
 
@@ -645,38 +644,6 @@ def rotate_expr(v: str, rotation: list[list[float]]) -> Column:
         return pd.Series(list(X @ R.T))
 
     return rot(F.col(v))
-
-
-def save_pq_codebooks(codebooks: list[list[list[float]]], path: str) -> None:
-    """Persist trained PQ codebooks as a portable JSON artifact via the
-    shared crash-safe writer (functions/artifacts.py). ``m·ksub·dsub``
-    doubles: driver-held by construction, engine-neutral by design."""
-    from ..functions.artifacts import atomic_write_json
-
-    atomic_write_json(
-        path,
-        {
-            "format": "pq-codebooks/v1",
-            "m": len(codebooks),
-            "ksub": len(codebooks[0]) if codebooks else 0,
-            "dsub": len(codebooks[0][0]) if codebooks and codebooks[0] else 0,
-            "codebooks": codebooks,
-        },
-    )
-
-
-def load_pq_codebooks(path: str) -> list[list[list[float]]]:
-    """Inverse of :func:`save_pq_codebooks`; validates the declared shape
-    so a truncated/mixed-up artifact fails here, not as bad encodings."""
-    from ..functions.artifacts import read_json_artifact
-
-    payload = read_json_artifact(path, "pq-codebooks/v1")
-    books = payload["codebooks"]
-    if len(books) != payload["m"] or any(
-        len(b) != payload["ksub"] for b in books
-    ) or any(len(c) != payload["dsub"] for b in books for c in b):
-        raise ValueError(f"pq artifact shape mismatch in {path}")
-    return books
 
 
 def cell_occupancy_profile(members: DataFrame) -> dict:

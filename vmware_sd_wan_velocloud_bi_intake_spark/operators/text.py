@@ -271,18 +271,10 @@ def top_bigram_fraction(text: Column) -> Column:
 
 
 def fingerprint_from(norm: Column, length: int = 16) -> Column:
-    """:func:`fingerprint` over a pre-staged normalized-text column."""
+    """Deterministic document fingerprint: md5 of a pre-staged
+    normalized-text column, truncated. md5 is byte-identical in Spark,
+    DuckDB and most warehouse engines, so fingerprints are portable."""
     return F.substring(F.md5(norm), 1, length)
-
-
-def fingerprint(text: Column, length: int = 16) -> Column:
-    """Deterministic document fingerprint: md5 of normalized text, truncated.
-
-    Stands in for the reference-era rolling hash; md5 is available and
-    byte-identical in Spark, DuckDB, and most warehouse engines, which makes
-    fingerprints portable across systems.
-    """
-    return fingerprint_from(normalize_text(text), length)
 
 
 def pack_sequences(

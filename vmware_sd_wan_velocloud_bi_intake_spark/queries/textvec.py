@@ -981,8 +981,7 @@ def _trained_centroids(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Data
 # instead of d floats, per-candidate scoring = m table lookups. The rider
 # carries, per result row, the NEIGHBOR's frozen-codebook PQ codes and the
 # query→neighbor ADC approximate cosine under the same hash; the oracle
-# replays the per-subspace quantized Lloyd training as unrolled CTEs (the
-# replay proven in tests/test_annindex_stream_oracle.py, ported here) and
+# replays the per-subspace quantized Lloyd training as unrolled CTEs and
 # recomputes the ADC sum from the replayed books. Same quantized contract
 # as the coarse quantizer: round_decimals=6 at every argmin/mean step.
 _PQ_M = 4
@@ -1165,7 +1164,6 @@ def _codebook_replay_sql(
     ksub: int,
     iters: int,
     dsub: int,
-    residual: bool = False,
     train_where: str = "",
     rd: int = 6,
 ) -> str:
@@ -1176,17 +1174,11 @@ def _codebook_replay_sql(
 
     Mirrors operators/pq.train_pq_codebooks(round_decimals=rd) step for
     step: md5-ordered bounded sample (restricted by ``train_where`` —
-    empty trains on the whole table, the batch-vehicle shape; the stream
-    oracles pass their build-half predicate), first-ksub init, ROUND(d2,
-    rd) argmin with first-min ties, ROUND(mean, rd) recentring, empty
-    codes keep their centroid. ``residual=True`` replays the faiss-default
-    IVF-PQ refinement: the encoded vector is x̂ − centroid(cell)
-    (operators/pq._residualize), trained and encoded with
-    ``normalize=False`` — the subspace source switches from the
-    normalized vector to the residual at the FROZEN replayed coarse
-    centroids; everything downstream is identical. Proven exact against
-    the real streamed ingest in tests/test_annindex_stream_oracle.py
-    (which imports this builder)."""
+    empty trains on the whole table, the batch-vehicle shape), first-ksub
+    init, ROUND(d2, rd) argmin with first-min ties, ROUND(mean, rd)
+    recentring, empty codes keep their centroid. Proven exact by
+    ``sim_ann_ivf``'s oracle and
+    tests/test_pq.py::test_sim_ann_ivf_pq_riders_oracle_on_random_corpus."""
     steps = []
     prev = "cb0"
     for i in range(iters):
@@ -1214,23 +1206,10 @@ def _codebook_replay_sql(
   ) lm USING (s, c)
 )""")
         prev = nxt
-    if residual:
-        src = """, xh0 AS (
-  SELECT vec_id, list_transform(e, x -> x / nrm) AS xh FROM v
-), xh AS (
-  -- residual at the FROZEN replayed coarse centroids: x̂ − cv(cell)
-  SELECT a.vec_id,
-         list_transform(list_zip(x.xh, c.cv), p -> p[1] - p[2]) AS xh
-  FROM assigned a
-  JOIN xh0 x USING (vec_id)
-  JOIN cents c ON c.cell = a.cell
-)"""
-    else:
-        src = """, xh AS (
+    return f""", xh AS (
   -- normalized vectors (the spherical-corpus contract train/encode share)
   SELECT vec_id, list_transform(e, x -> x / nrm) AS xh FROM v
-)"""
-    return f"""{src}, sub AS (
+), sub AS (
   -- per-subspace slices of EVERY vector (encode input; query LUT source)
   SELECT vec_id, sp.s,
          xh[sp.s * {dsub} + 1 : (sp.s + 1) * {dsub}] AS sv

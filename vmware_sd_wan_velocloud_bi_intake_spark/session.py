@@ -57,9 +57,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # let custom Python DataSources (sources/datasource.py) receive
-        # pushFilters during planning; off by default in Spark 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

@@ -1,6 +1,6 @@
 """Shared scaffolding for ``foreachBatch`` ingests that maintain a
 persisted, batch-id-keyed index (streaming/neardup.py's near-dup LSH
-index, streaming/annindex.py's IVF-PQ ANN index).
+index, streaming/semdedup.py's IVF semantic-dedup index).
 
 Every such ingest has the same operational failure modes, so the guards
 live once:

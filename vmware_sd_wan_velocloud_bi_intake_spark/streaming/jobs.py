@@ -36,34 +36,6 @@ def streaming_event_dedup(
     return keyed.dropDuplicates(list(keys))
 
 
-def streaming_sessions(
-    events: DataFrame,
-    ts: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked session windows per key (streaming twin of w07_sessionize).
-
-    ``session_window`` closes a session once event time advances past the
-    last event + ``gap``; the watermark bounds state by expiring sessions
-    older than the allowed lateness. State per key is one open session —
-    O(keys), not O(events) — the same bounded-state story as the batch
-    gaps-and-islands form but maintained incrementally.
-    """
-    return (
-        events.withWatermark(ts, watermark)
-        .groupBy(F.session_window(F.col(ts), gap).alias("sw"), F.col(key))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col(key),
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def streaming_hourly_scores(
     events: DataFrame,
     ts: str = "ts",
@@ -89,240 +61,3 @@ def streaming_hourly_scores(
             "n_samples",
         )
     )
-
-
-def streaming_windowed_distinct(
-    events: DataFrame,
-    ts: str = "ts",
-    distinct_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    exact: bool = False,
-) -> DataFrame:
-    """Distinct entities per tumbling window — the streaming face of the
-    ``a22_sketch_stats`` cardinality story (active users/devices per hour
-    on an unbounded stream).
-
-    Default is ``approx_count_distinct`` (HLL++): its per-window state is
-    one fixed-size sketch regardless of cardinality, which is the ONLY
-    shape that holds at 100 TB — exact streaming distinct needs one state
-    entry per (window, value) pair, O(cardinality) in the state store.
-    ``exact=True`` switches to a watermarked dropDuplicates on
-    (window, value) before a count — correct, and appropriate when the
-    per-window cardinality is genuinely bounded (the reference's
-    entity-census grains) — with that cost stated rather than hidden.
-    Append mode: a window emits once, when the watermark closes it.
-    """
-    win = F.window(F.col(ts), window).alias("win")
-    if exact:
-        deduped = (
-            events.withWatermark(ts, watermark)
-            # NULL is not an entity: countDistinct/approx_count_distinct
-            # both ignore NULLs, and the exact path must agree — without
-            # this filter dropDuplicates keeps one NULL row per window
-            # and count(*) counts it
-            .where(F.col(distinct_col).isNotNull())
-            .select(win, F.col(distinct_col))
-            .dropDuplicates(["win", distinct_col])
-        )
-        out = deduped.groupBy("win").agg(
-            F.count("*").alias("n_distinct")
-        )
-    else:
-        out = (
-            events.withWatermark(ts, watermark)
-            .groupBy(win)
-            .agg(F.approx_count_distinct(distinct_col).alias("n_distinct"))
-        )
-    return out.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        "n_distinct",
-    )
-
-
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream join — the streaming twin of the
-    batch range join (``j11_range_join``): right-side rows land in
-    ``[left_ts, left_ts + within]`` per key. Output columns are the
-    inputs' prefixed ``l_``/``r_`` (both sides commonly share names).
-
-    The scale contract is WHY this exists as a named operator rather
-    than an ad-hoc ``join``: a stream-stream join is stateful on BOTH
-    sides, and unbounded state is the classic way these fall over. The
-    time-range predicate plus both watermarks let Spark derive a state
-    eviction bound — a buffered left row is droppable once the right
-    watermark passes ``l_ts + within``, a right row once the left
-    watermark passes ``r_ts`` — so state is O(rows within the watermark
-    horizon), not O(stream).
-
-    ``how``: ``inner`` emits matches as they form (no watermark wait on
-    the output path); ``left_outer`` additionally emits each unmatched
-    left row with NULL right columns, but only once the watermark has
-    PROVED no match can still arrive (right watermark past
-    ``l_ts + within``) — so outer rows trail the stream by the
-    watermark delay, the price of never retracting.
-    """
-    if how not in ("inner", "left_outer"):
-        raise ValueError(
-            "streaming_interval_join: how must be 'inner' or 'left_outer' "
-            "(right/full outer need the symmetric argument — flip the "
-            "sides for right_outer)"
-        )
-    lp = left.select(
-        *[F.col(c).alias(f"l_{c}") for c in left.columns]
-    ).withWatermark(f"l_{left_ts}", watermark)
-    rp = right.select(
-        *[F.col(c).alias(f"r_{c}") for c in right.columns]
-    ).withWatermark(f"r_{right_ts}", watermark)
-    cond = (
-        (F.col(f"l_{key}") == F.col(f"r_{key}"))
-        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}"))
-        & (
-            F.col(f"r_{right_ts}")
-            <= F.col(f"l_{left_ts}") + F.expr(f"INTERVAL {within}")
-        )
-    )
-    return lp.join(rp, cond, how)
-
-
-def streaming_curate_documents(
-    docs: DataFrame,
-    *,
-    min_quality: float = 0.3,
-    allowed_langs: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Streaming twin of the curation pipeline's stateless prefix
-    (plans/curation.py stages 1–3): redact PII, gate on quality (and
-    optionally language), then exact-dedup on the normalized-content
-    fingerprint — over a streaming documents source (e.g. ``readStream``
-    on an arriving parquet/file drop).
-
-    Redaction and gating are pure per-row expressions, so they stream for
-    free. Dedup state is keyed by the 16-char md5 fingerprint —
-    ``dropDuplicates`` keeps the FIRST arrival and suppresses later exact
-    copies. Documents carry no event time, so there is no watermark and
-    fingerprint state grows with the distinct corpus: bounded and fine
-    under ``Trigger.AvailableNow`` batch-drop deployments (state resets
-    per run over the new drop, while cross-run dedup belongs to the
-    idempotent sink / incremental LSH index); for a long-lived continuous
-    stream, bound state with ``dropDuplicatesWithinWatermark`` on an
-    ingest-time column instead. For cross-run dedup that also reports
-    duplicate counts and the batch engine's min-id survivor — carried
-    across stop/restart via the checkpointed state store — compose with
-    :func:`..streaming.stateful.streaming_exact_dedup`.
-
-    The corpus-wide curation stages (near-dup clustering, LM training,
-    decontamination against a full corpus) are deliberately NOT here —
-    they need global visibility and belong to the batch/incremental
-    layer (operators/dedup.py incremental forms).
-    """
-    from ..operators import text
-
-    redacted = docs.withColumn("text", text.redact_pii(F.col("text")))
-    gate = text.quality_score(F.col("text")) >= F.lit(min_quality)
-    if allowed_langs is not None:
-        gate = gate & text.predict_lang(F.col("text")).isin(*allowed_langs)
-    gated = redacted.where(gate)
-    return gated.withColumn(
-        "fp16", text.fingerprint(F.col("text"))
-    ).dropDuplicates(["fp16"])
-
-
-def streaming_score_quality(
-    docs: DataFrame,
-    weights: list[float],
-    bias: float,
-    min_p: float | None = None,
-) -> DataFrame:
-    """Model-based quality scoring over a document stream.
-
-    The classifier TRAINS in batch (operators/classifier.py — full-corpus
-    gradient descent needs global visibility, like LM training); the
-    trained (weights, bias) are a handful of scalars, so SCORING is a
-    pure per-row expression that streams for free — the standard
-    train-offline / score-online split. ``min_p`` additionally gates the
-    stream on the scored probability (the streaming half of the
-    CCNet-style quality filter).
-    """
-    from ..operators import classifier
-
-    scored = classifier.score_quality(docs, weights, bias)
-    if min_p is not None:
-        scored = scored.where(F.col("p_quality") >= F.lit(min_p))
-    return scored
-
-
-def streaming_enrich_dim(
-    dim_root: str,
-    key: str,
-    apply_fn,
-    *,
-    how: str = "left",
-    versioned: bool = True,
-    broadcast_dim: bool = True,
-):
-    """Slowly-changing-dimension enrichment as a ``foreachBatch`` body —
-    the operator form of the SCD pattern ``tests/test_streaming.py``
-    pins (VERDICT r9 "Next round" #2).
-
-    The trap this wraps: a stream-STATIC join captures the static side's
-    file listing when the plan is built, so overwriting the dim under a
-    running query doesn't refresh it — the query keeps reading the old
-    listing until it dies on deleted files (FILE_NOT_EXIST). The working
-    pattern is a fresh ``spark.read`` INSIDE ``foreachBatch``: every
-    micro-batch re-resolves the dim, so a dim swap between triggers
-    changes the very next batch's enrichment with no restart and no
-    checkpoint surgery.
-
-    ``dim_root`` is read per batch: with ``versioned=True`` (default) it
-    is a ``sinks.versioned`` root and each batch follows the ``_latest``
-    pointer — the ATOMIC swap: a publish mid-batch is invisible until
-    its pointer rename lands, so a batch never sees a half-written dim
-    (publish with ``sinks.versioned.write_version(new_dim, dim_root)``).
-    With ``versioned=False`` it is a bare parquet dir and the swap is
-    only safe BETWEEN triggers (``mode("overwrite")`` deletes files
-    first — a concurrent batch read can die mid-scan; acceptable for
-    parked availableNow pipelines, wrong for continuous ones).
-
-    ``apply_fn(enriched_df, batch_id)`` receives each enriched batch —
-    the caller owns the sink (the ingests' writer discipline applies:
-    batch-id-keyed idempotent writes). The dim side broadcasts by
-    default: SCD dims are fleet/country-sized in every reference flow
-    (the country dim of powerbi_main_fun.py:688-690 under a
-    continuously-running poller is the analog; at 100 TB the STREAM is
-    big, the dim stays small — pass ``broadcast_dim=False`` for the
-    rare huge-dim case and let AQE pick the strategy).
-
-    Wire as ``stream.writeStream.foreachBatch(streaming_enrich_dim(...))``.
-    """
-    if how in ("right", "right_outer", "full", "full_outer", "outer"):
-        raise ValueError(
-            "streaming_enrich_dim: right/full joins against a refreshing "
-            "dim would emit dim-only rows whose set depends on WHEN the "
-            "dim swapped relative to batch boundaries — enrichment is "
-            "left/inner/semi by construction"
-        )
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if versioned:
-            from ..sinks.versioned import read_version
-
-            dim = read_version(spark, dim_root)  # follows _latest, atomic
-        else:
-            dim = spark.read.parquet(dim_root)  # fresh listing per batch
-        if broadcast_dim:
-            dim = F.broadcast(dim)
-        apply_fn(batch_df.join(dim, key, how), batch_id)
-
-    return body

@@ -400,7 +400,7 @@ def make_near_dup_ingest(
                 # the replay exclusion below is unaffected. Awaited
                 # before the summary/index reads are planned.
                 _compact_all(spark, batch_id)
-            # empty-batch guard (mirrors annindex/semdedup): an empty
+            # empty-batch guard (mirrors semdedup): an empty
             # FIRST batch would otherwise dynamic-overwrite zero
             # partitions, leaving index_dir/survivors_dir as
             # _SUCCESS-only directories — the next batch's

@@ -1,8 +1,7 @@
 """Streaming semantic dedup ingest — the SemDeDup incremental flow
 (operators/similarity.py, Abbas et al. 2023, arXiv:2303.09540) on
-Structured Streaming ``foreachBatch``, completing the dedup family's
-streaming story: exact (streaming/stateful.py),
-near-dup LSH (streaming/neardup.py), and now embedding-semantic.
+Structured Streaming ``foreachBatch``, the embedding-semantic sibling of
+the near-dup LSH ingest (streaming/neardup.py).
 
 Per micro-batch: (1) in-batch SemDeDup at the index's FROZEN coarse
 quantizer (``semantic_dedup_survivors(cents=...)`` — keep-the-outlier
@@ -156,9 +155,8 @@ def make_semantic_dedup_ingest(
             )
             if not member_parts:
                 # centroids landed but no member rows exist: a crash
-                # inside the build batch (centroids write precedes the
-                # occupancy write here, unlike annindex where the built-
-                # marker lands last) — the replay re-derives everything
+                # inside the build batch (the centroids write precedes the
+                # occupancy write) — the replay re-derives everything
                 # deterministically, so treat it as still building
                 building = True
             elif member_parts == {f"_batch_id={int(batch_id)}"}:
@@ -265,7 +263,7 @@ def make_semantic_dedup_ingest(
         baseline = None
         if not building and not seed_baseline:
             # read BEFORE any write: a malformed layout fails the batch
-            # before it publishes, not after (the annindex discipline)
+            # before it publishes, not after
             baseline = read_json_artifact(occupancy_path, "ann-occupancy/v1")[
                 "profile"
             ]
@@ -390,8 +388,8 @@ def backfill_occupancy(spark, index_dir: str) -> None:
 
 
 def semantic_drift_history(spark, index_dir: str) -> DataFrame:
-    """The quantizer-drift series of a semantic-dedup index — same
-    contract as ``annindex.drift_history``."""
+    """The quantizer-drift series of a semantic-dedup index: one row per
+    batch's drift part (``ingestbase.drift_parts_history``)."""
     from .ingestbase import drift_parts_history
 
     return drift_parts_history(
