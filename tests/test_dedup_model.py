@@ -96,12 +96,11 @@ def test_degenerate_bucket_cap_bounds_pathological_corpus(spark):
 
     Without the cap, ONE bucket holds the whole corpus and the pair
     expansion is n² — the 100 TB killer. With it, near_dup_pairs sidelines
-    the bucket (bounded work, empty result), oversized_buckets reports it,
-    and exact dedup still accounts for every copy (the survivors contract).
+    the bucket (bounded work, empty result), and exact dedup still accounts
+    for every copy (the survivors contract).
     """
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.dedup import (
         exact_dedup_keys,
-        oversized_buckets,
     )
 
     n = 500
@@ -112,10 +111,6 @@ def test_degenerate_bucket_cap_bounds_pathological_corpus(spark):
     params = dict(num_hashes=4, bands=2, shingle_n=3, max_bucket=100)
     pairs = near_dup_pairs(df, "doc_id", "text", threshold=0.5, **params)
     assert pairs.count() == 0  # sidelined, not expanded to n² pairs
-    over = oversized_buckets(df, "doc_id", "text", **params).collect()
-    assert len(over) > 0
-    assert all(r["n_members"] == n for r in over)
-    assert all(r["sample_doc_id"] == 0 for r in over)
     # every member of the degenerate bucket is an exact duplicate -> the
     # exact pass catches all of them
     keys = exact_dedup_keys(df, "doc_id", "text").collect()
@@ -170,7 +165,6 @@ def test_incremental_cap_mirrors_full_path_on_degenerate_bucket(spark):
         lsh_bucket_table,
         near_dup_pairs,
         near_dup_pairs_incremental,
-        oversized_buckets,
     )
 
     n = 300
@@ -207,23 +201,3 @@ def test_incremental_cap_mirrors_full_path_on_degenerate_bucket(spark):
         corpus_summary=bucket_summary(index), **params
     )
     assert {(r["new_doc"], r["corpus_doc"]) for r in inc_sum.collect()} == got
-    # and the sideline is reportable over the combined band rows
-    new_rows = lsh_bucket_table(new, "doc_id", "text", 4, 2, 3)
-    over = oversized_buckets(
-        docs, "doc_id", "text", band_rows=index.unionByName(new_rows),
-        max_bucket=100,
-    ).collect()
-    assert len(over) > 0 and all(r["n_members"] == n for r in over)
-    # the O(batch) report (summary + batch counts, same inputs as the cap)
-    # must name the same sidelined buckets with the same combined counts
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators.dedup import (
-        bucket_summary,
-        oversized_buckets_incremental,
-    )
-
-    inc_over = oversized_buckets_incremental(
-        new_rows, bucket_summary(index), max_bucket=100
-    ).collect()
-    assert sorted((r["bucket"], r["n_members"]) for r in inc_over) == sorted(
-        (r["bucket"], r["n_members"]) for r in over
-    )

@@ -1,32 +1,15 @@
-"""Training-data export surface (operators/export.py): deterministic
-shuffle keys, hash splits, and the sharded writer."""
+"""Training-data split (operators/export.py): deterministic hash splits
+and the near-dup leakage fix, checked against a direct audit of
+cross-split near-dup pairs."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from vmware_sd_wan_velocloud_bi_intake_spark.operators import export
+from vmware_sd_wan_velocloud_bi_intake_spark.operators.dedup import near_dup_pairs
 from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
-
-
-def test_shuffle_key_deterministic_and_narrow(spark, sf_smoke):
-    docs = load_table(spark, sf_smoke, "documents")
-    k1 = export.with_shuffle_key(docs, "doc_id", seed=7)
-    k2 = export.with_shuffle_key(docs.repartition(13), "doc_id", seed=7)
-    a = {(r["doc_id"], r["shuffle_key"]) for r in k1.select("doc_id", "shuffle_key").collect()}
-    b = {(r["doc_id"], r["shuffle_key"]) for r in k2.select("doc_id", "shuffle_key").collect()}
-    assert a == b
-    # different seed -> different permutation
-    c = export.with_shuffle_key(docs, "doc_id", seed=8)
-    assert a != {
-        (r["doc_id"], r["shuffle_key"]) for r in c.select("doc_id", "shuffle_key").collect()
-    }
-    # narrow: attaching the key must not introduce an exchange
-    plan = k1._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_split_disjoint_covering_stable(spark, sf_smoke):
@@ -59,93 +42,18 @@ def test_split_rejects_bad_weights(spark):
         export.split_by_hash(df, "doc_id", {"a": 0.0})
 
 
-def test_write_shards_one_file_each_and_deterministic(spark, sf_smoke, tmp_path):
-    docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
-    n_docs = docs.count()
-    path = str(tmp_path / "shards")
-    n = export.write_training_shards(docs, path, "doc_id", n_shards=8, seed=3)
-    assert n == 8
-    shard_dirs = sorted(d for d in os.listdir(path) if d.startswith("shard="))
-    assert len(shard_dirs) == 8
-    for d in shard_dirs:
-        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        assert len(files) == 1, f"{d}: expected one file, got {files}"
-    back = spark.read.parquet(path)
-    assert back.count() == n_docs
-    # per-shard membership is a pure function of (id, seed): rerun matches
-    path2 = str(tmp_path / "shards2")
-    export.write_training_shards(docs.repartition(5), path2, "doc_id", n_shards=8, seed=3)
-    m1 = {(r["doc_id"], r["shard"]) for r in back.select("doc_id", "shard").collect()}
-    m2 = {
-        (r["doc_id"], r["shard"])
-        for r in spark.read.parquet(path2).select("doc_id", "shard").collect()
-    }
-    assert m1 == m2
-
-
-def test_write_shards_rows_per_shard_sizing(spark, tmp_path):
-    df = spark.range(1000).withColumnRenamed("id", "doc_id")
-    path = str(tmp_path / "sized")
-    n = export.write_training_shards(df, path, "doc_id", rows_per_shard=300)
-    assert n == 4  # ceil(1000/300)
-
-
-def test_write_shards_arg_validation(spark, tmp_path):
-    df = spark.range(10).withColumnRenamed("id", "doc_id")
-    with pytest.raises(ValueError, match="exactly one"):
-        export.write_training_shards(df, str(tmp_path / "x"), "doc_id")
-    with pytest.raises(ValueError, match="exactly one"):
-        export.write_training_shards(
-            df, str(tmp_path / "y"), "doc_id", n_shards=2, rows_per_shard=5
-        )
-
-
-def test_split_leakage_pairs_cross_split_only(spark):
-    """Leakage audit: near-dup pairs straddling split boundaries surface
-    with both labels; same-split near-dups and cross-split NON-dups do
-    not. Verified against a hand-built corpus where the splits are forced
-    via a crafted split column (the id-hash split itself is irrelevant to
-    the audit's contract)."""
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "watches from the warm windowsill in the morning sun"
-    )
-    rows = [
-        (0, base, "train"),
-        (1, base + " today", "val"),       # near-dup of 0, CROSS split
-        (2, base + " now", "train"),       # near-dup of 0, SAME split
-        (3, "completely different content about spark shuffles and "
-            "partitions and the catalyst optimizer stages", "val"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, split string")
-    got = sorted(
-        (r["doc_a"], r["split_a"], r["doc_b"], r["split_b"])
-        for r in export.split_leakage_pairs(
-            df, "doc_id", "text", threshold=0.4, num_hashes=4, bands=2,
-            shingle_n=3,
-        ).collect()
-    )
-    # pairs are (low id, high id); only the boundary-straddling ones remain
-    assert got == [(0, "train", 1, "val"), (1, "val", 2, "train")]
-
-
-def test_split_leakage_composes_with_hash_split(spark, sf_smoke):
-    """End to end on fixture docs: split by id-hash, audit, and verify
-    every reported pair is genuinely cross-split and above threshold."""
-    docs = load_table(spark, sf_smoke, "documents")
-    labeled = export.split_by_hash(
-        docs, "doc_id", {"train": 0.8, "val": 0.2}, seed=3
-    )
-    out = export.split_leakage_pairs(
-        labeled, "doc_id", "text", threshold=0.4, num_hashes=4, bands=2,
-        shingle_n=3,
-    ).collect()
-    for r in out:
-        assert r["split_a"] != r["split_b"]
-        assert r["jaccard"] >= 0.4
-
-
 _LEAK_KNOBS = dict(threshold=0.4, num_hashes=4, bands=2, shingle_n=3)
+
+
+def _leaks(df, **knobs):
+    """The audit: near-dup pairs whose two documents sit in different
+    splits."""
+    split = {r["doc_id"]: r["split"] for r in df.select("doc_id", "split").collect()}
+    return [
+        (r["doc_a"], r["doc_b"])
+        for r in near_dup_pairs(df, "doc_id", "text", **knobs).collect()
+        if split[r["doc_a"]] != split[r["doc_b"]]
+    ]
 
 
 def _leaky_corpus(spark):
@@ -176,14 +84,11 @@ def test_fix_split_leakage_refold_reaudits_clean(spark):
     """audit → refold → re-audit returns EMPTY, the whole cluster lands in
     the min-id member's split, and untouched docs keep their labels."""
     df = _leaky_corpus(spark)
-    assert export.split_leakage_pairs(df, "doc_id", "text", **_LEAK_KNOBS).count() > 0
+    assert _leaks(df, **_LEAK_KNOBS)
     fixed = export.fix_split_leakage(
         df, "doc_id", "text", mode="refold", **_LEAK_KNOBS
     )
-    assert (
-        export.split_leakage_pairs(fixed, "doc_id", "text", **_LEAK_KNOBS).count()
-        == 0
-    )
+    assert _leaks(fixed, **_LEAK_KNOBS) == []
     got = {r["doc_id"]: r["split"] for r in fixed.collect()}
     # cluster {0,1,2} folds to doc 0's split; everything else unchanged
     assert got == {
@@ -200,10 +105,7 @@ def test_fix_split_leakage_drop_reaudits_clean(spark):
     fixed = export.fix_split_leakage(
         df, "doc_id", "text", mode="drop", **_LEAK_KNOBS
     )
-    assert (
-        export.split_leakage_pairs(fixed, "doc_id", "text", **_LEAK_KNOBS).count()
-        == 0
-    )
+    assert _leaks(fixed, **_LEAK_KNOBS) == []
     got = {r["doc_id"]: r["split"] for r in fixed.collect()}
     # val-side members of the straddling cluster dropped; 4/5 (same-split
     # cluster) and singletons survive with original labels
@@ -225,37 +127,5 @@ def test_fix_split_leakage_end_to_end_with_hash_split(spark, sf_smoke):
     fixed = export.fix_split_leakage(
         labeled, "doc_id", "text", mode="refold", **_LEAK_KNOBS
     )
-    assert (
-        export.split_leakage_pairs(fixed, "doc_id", "text", **_LEAK_KNOBS).count()
-        == 0
-    )
+    assert _leaks(fixed, **_LEAK_KNOBS) == []
     assert fixed.count() == labeled.count()
-
-
-def test_fix_until_clean_drop_mode_with_tight_cap(spark):
-    """The cap caveat: drop mode can un-sideline a bucket, so the loop
-    form must iterate to an audit-empty fixpoint even with a max_bucket
-    small enough to sideline the leaky cluster's buckets on round one."""
-    df = _leaky_corpus(spark)
-    fixed = export.fix_split_leakage_until_clean(
-        df, "doc_id", "text", mode="drop", max_bucket=2, **_LEAK_KNOBS
-    )
-    assert (
-        export.split_leakage_pairs(
-            fixed, "doc_id", "text", max_bucket=2, **_LEAK_KNOBS
-        ).count()
-        == 0
-    )
-    # and at the default (uncapped-in-practice) bucket size too
-    fixed2 = export.fix_split_leakage_until_clean(
-        df, "doc_id", "text", mode="drop", **_LEAK_KNOBS
-    )
-    assert (
-        export.split_leakage_pairs(fixed2, "doc_id", "text", **_LEAK_KNOBS).count()
-        == 0
-    )
-    # refold through the same call site converges round one
-    fixed3 = export.fix_split_leakage_until_clean(
-        df, "doc_id", "text", mode="refold", **_LEAK_KNOBS
-    )
-    assert fixed3.count() == df.count()

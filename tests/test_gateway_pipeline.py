@@ -75,25 +75,25 @@ def test_g01_broadcasts_are_profile_justified(spark):
     "What's wrong" #1 / "Next round" #6): both build sides are
     gateway-grain relations behind explode/groupBy stages Catalyst can't
     size. This test is the profile justification the vehicle's comment
-    points to — plans/hints.broadcast_decision over each side's ACTUAL
-    profile_table output must say "fits", and the physical plan must
-    show both BroadcastHashJoins (the hint held through optimization)."""
+    points to — each side's ACTUAL profile_table output must show at most
+    one row per gateway (the fleet size), and the physical plan must show
+    both BroadcastHashJoins (the hint held through optimization)."""
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.profile import (
         profile_table,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.hints import (
-        broadcast_decision,
     )
     from vmware_sd_wan_velocloud_bi_intake_spark.queries.scalars import (
         _g01_build_sides,
         g01_gateway_rollup,
     )
+    from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.001"
+    fleet = load_table(spark, sf, "supplier").count()
     _enriched, met, rel_cnt = _g01_build_sides(spark, sf)
     for side, df in (("met", met), ("rel_cnt", rel_cnt)):
-        assert broadcast_decision(profile_table(df)), (
-            f"g01 build side {side} no longer fits a broadcast — drop the "
+        n_rows = profile_table(df).head()["n_rows"]
+        assert n_rows <= fleet, (
+            f"g01 build side {side} is no longer gateway-grain — drop the "
             "explicit hint and let AQE decide"
         )
     plan = g01_gateway_rollup(spark, sf)._jdf.queryExecution().executedPlan().toString()

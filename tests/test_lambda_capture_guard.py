@@ -32,6 +32,12 @@ HEAVY_FNS = ("regexp_replace(", "regexp_extract_all(", "split(", "md5(", "conv("
 ATTR_REF = re.compile(r"(?<!lambda )\b\w+#\d+")
 
 
+def _top_bigram_fraction(c):
+    """The catalog's staging of the signal: normalize, split, bigrams."""
+    toks = F.split(text.normalize_text(c), " ")
+    return text.top_bigram_fraction_from(text.bigrams_from(toks))
+
+
 def _balanced_span(s: str, start: int) -> str:
     """Return the contents of the parenthesized span opening at s[start]."""
     assert s[start] == "("
@@ -78,7 +84,7 @@ def docs(spark):
 @pytest.mark.parametrize(
     "name,expr_fn",
     [
-        ("top_bigram_fraction", lambda c: text.top_bigram_fraction(c)),
+        ("top_bigram_fraction", lambda c: _top_bigram_fraction(c)),
         ("dup_token_fraction", lambda c: text.dup_token_fraction(c)),
         ("pii_count", lambda c: text.pii_count(c)),
         ("shingles", lambda c: dedup.shingles(c, 3)),

@@ -1,20 +1,77 @@
 """Multimodal binary-column plumbing and codecs: schema, batch UDF shape,
-frame plan, and the REAL pure-Python PPM/BMP decode + PPM resize paths
-(asserted on actual pixel bytes). Formats needing an absent codec library
-still raise the documented NotImplementedError."""
+and the REAL pure-Python PPM/BMP/PNG decode paths (asserted on actual
+pixel bytes). Formats needing an absent codec library still raise the
+documented NotImplementedError."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
+    _paeth,
     attach_binary_payload,
     extract_features,
     fake_decoder,
-    frame_sample_indices,
 )
 from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
+
+
+
+def ppm_encode(width: int, height: int, pixels: bytes, maxval: int = 255) -> bytes:
+    """Inverse of ``ppm_decode`` (canonical single-newline header)."""
+    return b"P6\n%d %d\n%d\n" % (width, height, maxval) + pixels
+
+
+def png_encode(width: int, height: int, pixels: bytes, filter_type: int = 0) -> bytes:
+    """Minimal stdlib RGB PNG writer (single IDAT, one filter for every
+    scanline) — the round-trip partner ``png_decode``'s tests drive
+    through all five filters; also a real PNG any viewer opens."""
+    import struct
+    import zlib
+
+    if len(pixels) != width * height * 3:
+        raise ValueError("png_encode: pixels must be RGB row-major")
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        )
+
+    stride = width * 3
+    raw = bytearray()
+    for y in range(height):
+        line = bytearray(pixels[y * stride : (y + 1) * stride])
+        prev = pixels[(y - 1) * stride : y * stride] if y else bytes(stride)
+        enc = bytearray(line)
+        if filter_type == 1:
+            for i in range(stride - 1, 2, -1):
+                enc[i] = (line[i] - line[i - 3]) & 0xFF
+        elif filter_type == 2:
+            for i in range(stride):
+                enc[i] = (line[i] - prev[i]) & 0xFF
+        elif filter_type == 3:
+            for i in range(stride):
+                left = line[i - 3] if i >= 3 else 0
+                enc[i] = (line[i] - ((left + prev[i]) >> 1)) & 0xFF
+        elif filter_type == 4:
+            for i in range(stride):
+                left = line[i - 3] if i >= 3 else 0
+                ul = prev[i - 3] if i >= 3 else 0
+                enc[i] = (line[i] - _paeth(left, prev[i], ul)) & 0xFF
+        elif filter_type != 0:
+            raise ValueError(f"bad filter {filter_type}")
+        raw.append(filter_type)
+        raw += enc
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
 
 
 def test_binary_payload_schema(spark, sf_smoke):
@@ -54,58 +111,8 @@ def test_extract_features_default_rejects_unknown_formats(spark, sf_smoke):
         extract_features(media).collect()
 
 
-def test_frame_sample_indices(spark):
-    df = spark.createDataFrame(
-        [(1, 10_000), (2, 0), (3, None)], "vid int, duration_ms long"
-    )
-    out = df.select(
-        "vid",
-        frame_sample_indices(F.col("duration_ms"), fps=1.0, max_frames=16).alias(
-            "frames"
-        ),
-    ).collect()
-    frames = {r["vid"]: r["frames"] for r in out}
-    assert frames[1] == [0, 1000, 2000, 3000, 4000, 5000, 6000, 7000, 8000, 9000]
-    assert frames[2] == []
-    assert frames[3] == []
-
-
-def test_resize_media_with_fake_resizer(spark, sf_smoke):
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
-        attach_binary_payload,
-        fake_resizer,
-        resize_media,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_smoke, "documents").limit(20)
-    media = attach_binary_payload(docs, "doc_id", "text")
-    out = resize_media(media, 32, 16, resizer=fake_resizer)
-    rows = out.collect()
-    assert len(rows) == 20
-    target = (32 * 16) // 64
-    for r in rows:
-        assert len(r["content"]) == target
-        assert r["meta"]["width"] == 32 and r["meta"]["height"] == 16
-        assert r["meta"]["mime"] == "application/octet-stream"  # rest of meta preserved
-
-
-def test_resize_media_default_rejects_unknown_formats(spark, sf_smoke):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PythonException
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
-        resize_media,
-    )
-
-    docs = load_table(spark, sf_smoke, "documents").limit(1)
-    media = attach_binary_payload(docs, "doc_id", "text")
-    with pytest.raises((PythonException, Py4JJavaError), match="NotImplementedError"):
-        resize_media(media, 8, 8).collect()
-
-
 # ---------------------------------------------------------------------------
-# Real codecs: PPM/BMP decode to actual pixel bytes, PPM resizes for real.
+# Real codecs: PPM/BMP decode to actual pixel bytes.
 # ---------------------------------------------------------------------------
 
 # 2x2 RGB image: red, green / blue, white
@@ -161,44 +168,13 @@ def test_extract_features_decodes_ppm_and_bmp_for_real(spark):
     }
 
 
-def test_ppm_resize_real_nearest_neighbor(spark):
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
-        ppm_decode,
-        resize_media,
-    )
-
-    media = spark.createDataFrame(
-        [(7, bytearray(_PPM_2X2), None)],
-        "media_id long, content binary, "
-        "meta struct<mime string, width int, height int, duration_ms long, codec string>",
-    )
-    out = resize_media(media, 4, 4).collect()[0]
-    assert out["meta"]["width"] == 4 and out["meta"]["height"] == 4
-    img = ppm_decode(bytes(out["content"]))
-    assert (img["width"], img["height"]) == (4, 4)
-    # nearest-neighbor: each source pixel becomes a 2x2 block
-    px = img["pixels"]
-
-    def at(x, y):
-        o = (y * 4 + x) * 3
-        return tuple(px[o : o + 3])
-
-    assert at(0, 0) == at(1, 1) == (255, 0, 0)  # red block
-    assert at(2, 0) == at(3, 1) == (0, 255, 0)  # green block
-    assert at(0, 2) == at(1, 3) == (0, 0, 255)  # blue block
-    assert at(2, 2) == at(3, 3) == (255, 255, 255)  # white block
-
-
 def test_ppm_codec_roundtrip_properties():
-    """Property: encode→decode is identity on the raster, and a same-size
-    nearest-neighbor resize is the identity transform (canonical header)."""
+    """Property: encode→decode is identity on the raster."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
         ppm_decode,
-        ppm_encode,
-        ppm_resize,
     )
 
     @settings(max_examples=50, deadline=None)
@@ -215,26 +191,21 @@ def test_ppm_codec_roundtrip_properties():
         enc = ppm_encode(w, h, px)
         img = ppm_decode(enc)
         assert (img["width"], img["height"], img["pixels"]) == (w, h, px)
-        assert ppm_resize(enc, w, h) == enc
 
     check()
 
 
-def test_pil_decode_and_resize_when_available(spark):
+def test_pil_decode_when_available(spark):
     """Skipped-or-green by environment: with Pillow importable, PNG
-    payloads decode to real pixels and resize through the PIL path,
-    re-encoded as canonical P6 so the engine's own decoder can verify the
-    result; without Pillow the contract is the NotImplementedError path
-    (covered above)."""
+    payloads decode to real pixels; without Pillow the contract is the
+    NotImplementedError path (covered below)."""
     PIL = pytest.importorskip("PIL")
     import io
 
     from PIL import Image
 
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
-        builtin_resizer,
         decode_media,
-        ppm_decode,
     )
 
     im = Image.new("RGB", (4, 2))
@@ -246,11 +217,6 @@ def test_pil_decode_and_resize_when_available(spark):
     img = decode_media(png)
     assert (img["width"], img["height"]) == (4, 2)
     assert img["pixels"] == im.tobytes()
-
-    resized = builtin_resizer(png, 2, 1)
-    out = ppm_decode(resized)
-    assert (out["width"], out["height"]) == (2, 1)
-    assert len(out["pixels"]) == 2 * 1 * 3
 
 
 def test_pil_absent_keeps_notimplemented_contract():
@@ -270,137 +236,6 @@ def test_pil_absent_keeps_notimplemented_contract():
 
     with pytest.raises(NotImplementedError, match="Pillow"):
         decode_media(b"\xff\xd8\xff\xe0fake-jpeg-payload")
-
-
-def test_wav_roundtrip_and_audio_features(spark):
-    """Real PCM decode through the stdlib wave container: a synthesized
-    sine payload roundtrips bit-exactly and its signal statistics match
-    the closed-form values."""
-    import numpy as np
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    rate = 8000
-    t = np.arange(rate)  # 1 second
-    # 441 Hz (not a divisor of the rate): no sample lands exactly on zero,
-    # so the sign-product crossing count sees every crossing
-    sine = (10000 * np.sin(2 * np.pi * 441 * t / rate)).astype("<i2")
-    payload = multimodal.wav_encode(sine, sample_rate=rate)
-    dec = multimodal.wav_decode(payload)
-    assert dec["sample_rate"] == rate
-    assert dec["n_samples"] == rate
-    assert dec["duration_ms"] == 1000
-    assert np.array_equal(np.frombuffer(dec["pcm"], dtype="<i2"), sine)
-
-    silent = multimodal.wav_encode(np.zeros(100, dtype="<i2"), sample_rate=rate)
-    rows = [(1, bytearray(payload)), (2, bytearray(silent))]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    feats = {
-        r["media_id"]: r
-        for r in multimodal.extract_audio_features(media).collect()
-    }
-    # sine RMS = amplitude/sqrt(2) (within quantization), 441 Hz -> ~882
-    # zero crossings/second
-    assert abs(feats[1]["rms"] - 10000 / np.sqrt(2)) < 50
-    assert abs(feats[1]["zero_crossings"] - 882) <= 2
-    assert feats[1]["peak"] == 10000
-    assert feats[2]["rms"] == 0.0 and feats[2]["zero_crossings"] == 0
-
-
-def test_wav_decode_rejects_non_wav(spark):
-    import pytest as _pytest
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    with _pytest.raises(NotImplementedError):
-        multimodal.wav_decode(b"ID3\x03\x00mp3-ish payload")
-
-
-def test_stereo_zero_crossings_not_counted_across_channels(spark):
-    """Constant +A left / -A right stereo: neither channel crosses zero,
-    but the raw interleaved stream flips sign at every sample — the
-    counter must de-interleave."""
-    import numpy as np
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    frames = np.empty(200, dtype="<i2")
-    frames[0::2] = 1000   # left
-    frames[1::2] = -1000  # right
-    payload = multimodal.wav_encode(frames, sample_rate=8000, n_channels=2)
-    feats = multimodal.audio_feature_decoder(payload)
-    assert feats["n_channels"] == 2
-    assert feats["zero_crossings"] == 0
-
-
-def test_avi_roundtrip_real_frames(spark):
-    """Pure-Python AVI: encode 4 distinct RGB frames, decode them back
-    bit-exactly (DIB bottom-up BGR padding honored both ways)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    w, h = 3, 2  # odd row width exercises the 4-byte padding path
-    frames = [
-        bytes([(f * 40 + p) % 256 for p in range(w * h * 3)]) for f in range(4)
-    ]
-    payload = multimodal.avi_encode(frames, w, h, fps=10.0)
-    dec = multimodal.avi_decode(payload)
-    assert (dec["width"], dec["height"]) == (w, h)
-    assert dec["fps"] == pytest.approx(10.0)
-    assert dec["duration_ms"] == 400
-    assert dec["frames"] == frames
-
-
-def test_video_frame_sampling_feeds_image_operators(spark):
-    """The full video path: AVI → sampled frames as PPM payloads → the
-    image feature extractor, with the sampling cadence checked."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    w, h = 2, 2
-    # 20 frames at 10 fps = 2 s; constant color per frame = its index
-    frames = [bytes([f * 10] * (w * h * 3)) for f in range(20)]
-    payload = multimodal.avi_encode(frames, w, h, fps=10.0)
-    media = spark.createDataFrame(
-        [(5, bytearray(payload))], "media_id long, content binary"
-    )
-    sampled = multimodal.sample_video_frames(media, fps=1.0, max_frames=16)
-    rows = sorted(sampled.collect(), key=lambda r: r["ts_ms"])
-    # 2 s at 1 fps -> samples at 0 and 1000 ms -> frames 0 and 10
-    assert [r["ts_ms"] for r in rows] == [0, 1000]
-    assert [r["frame_idx"] for r in rows] == [0, 10]
-    # frames re-wrap as PPM: image feature extraction consumes them as-is
-    feat_in = sampled.select(
-        F.col("ts_ms").alias("media_id"), F.col("frame").alias("content")
-    )
-    feats = {r["media_id"]: r for r in extract_features(feat_in).collect()}
-    assert feats[0]["byte_mean"] == 0.0          # frame 0 is all zeros
-    assert feats[1000]["byte_mean"] == 100.0     # frame 10 is constant 100
-
-
-def test_avi_decode_rejects_non_avi(spark):
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    with pytest.raises(NotImplementedError):
-        multimodal.avi_decode(b"\x00\x00\x00 ftypmp42 not an avi")
-
-
-def test_frame_sampling_respects_max_frames_cap(spark):
-    """17 frames at 1 fps with max_frames=16: the floor-stride form emitted
-    17 samples; the ceiling stride honors the cap."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators import multimodal
-
-    frames = [bytes([f] * 12) for f in range(17)]
-    payload = multimodal.avi_encode(frames, 2, 2, fps=1.0)  # 17 s video
-    media = spark.createDataFrame(
-        [(1, bytearray(payload))], "media_id long, content binary"
-    )
-    n = multimodal.sample_video_frames(media, fps=1.0, max_frames=16).count()
-    assert n <= 16
-    # the expression plan obeys the same cap
-    df = spark.createDataFrame([(17_000,)], "duration_ms long")
-    plan_n = df.select(
-        F.size(multimodal.frame_sample_indices(F.col("duration_ms"), 1.0, 16))
-    ).head()[0]
-    assert plan_n <= 16
 
 
 # ---------------------------------------------------------------------------
@@ -423,7 +258,6 @@ def test_png_roundtrip_every_scanline_filter(filter_type):
     exercised per filter, not just on whatever a single encoder emits."""
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
         png_decode,
-        png_encode,
     )
 
     w, h = 9, 5
@@ -483,7 +317,6 @@ def test_png_dispatch_and_unsupported_shapes():
     from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
         decode_media,
         png_decode,
-        png_encode,
     )
 
     w, h = 3, 2
@@ -525,10 +358,6 @@ def test_png_feeds_feature_extraction(spark):
     )
 
     w, h = 4, 3
-    from vmware_sd_wan_velocloud_bi_intake_spark.operators.multimodal import (
-        png_encode,
-    )
-
     pixels = _gradient_rgb(w, h)
     df = spark.createDataFrame(
         [(1, bytearray(png_encode(w, h, pixels)))], "media_id long, content binary"

@@ -1,12 +1,10 @@
-"""The full training-data story in one pass: curate → LM-score → split →
-shard. Each stage is tested in isolation elsewhere (test_curation,
-test_lm, test_export); this pins the COMPOSITION — schema handoffs,
-row conservation, and the invariants a trainer relies on (no duplicate
-ids in shards, split disjointness survives the upstream filters)."""
+"""The full training-data story in one pass: curate → LM-score → split.
+Each stage is tested in isolation elsewhere (test_curation, test_lm,
+test_export); this pins the COMPOSITION — schema handoffs, row
+conservation, and the invariants a trainer relies on (no duplicate ids
+in a split, split disjointness survives the upstream filters)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -18,7 +16,7 @@ import pytest
 
 # slow tier (r14 re-tier, VERDICT r13 #2): end-to-end composition replication: test_pipeline.py::test_pipeline_end_to_end keeps the batch-pipeline class default
 @pytest.mark.slow
-def test_curate_score_split_shard(spark, sf_smoke, tmp_path):
+def test_curate_score_split(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents", spread=True)
     n_in = docs.count()
 
@@ -44,20 +42,12 @@ def test_curate_score_split_shard(spark, sf_smoke, tmp_path):
     n_train, n_val = train.count(), val.count()
     assert n_train + n_val == n_curated  # splits partition the corpus
 
-    path = str(tmp_path / "shards")
-    n_shards = export.write_training_shards(
-        train, path, "doc_id", rows_per_shard=100, seed=11
-    )
-    back = spark.read.parquet(path)
-    assert back.count() == n_train
-    # trainer invariants: unique ids, every shard present, text is scrubbed
-    assert back.select("doc_id").distinct().count() == n_train
-    shard_dirs = [d for d in os.listdir(path) if d.startswith("shard=")]
-    assert len(shard_dirs) == n_shards
-    leaked = back.where(F.col("text").rlike(r"[\w.+-]+@[\w-]+\.[\w.]+")).count()
+    # trainer invariants: unique ids, text is scrubbed
+    assert train.select("doc_id").distinct().count() == n_train
+    leaked = train.where(F.col("text").rlike(r"[\w.+-]+@[\w-]+\.[\w.]+")).count()
     assert leaked == 0
-    # the LM signal survived the pipeline: scored columns ride into shards
-    assert {"n_bigrams", "avg_log2p", "perplexity"} <= set(back.columns)
+    # the LM signal survived the pipeline: scored columns ride the split
+    assert {"n_bigrams", "avg_log2p", "perplexity"} <= set(train.columns)
 
 
 def test_split_membership_unchanged_by_curation(spark, sf_smoke):

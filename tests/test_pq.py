@@ -162,33 +162,6 @@ def test_pq_members_carry_codes_not_floats(spark, emb):
 
 
 @pytest.fixture(scope="module")
-def aniso(spark, emb):
-    """Anisotropic corpus: scale each dim by a ramp, then mix through a
-    fixed dense rotation so the variance is NOT axis-aligned (the case
-    where plain PQ's fixed subspace split misallocates codebook capacity).
-    """
-    scales = [0.2 + 3.0 * d / 64 for d in range(64)]
-    rng = np.random.default_rng(42)
-    Q, _ = np.linalg.qr(rng.standard_normal((64, 64)))
-    mixed = emb.select(
-        "vec_id",
-        pq.rotate_expr(
-            "embedding", [[float(x) for x in row] for row in Q]
-        ).alias("e1"),
-    ).select(
-        "vec_id",
-        F.expr(
-            "transform(e1, (x, i) -> x * element_at(array({}), i+1))".format(
-                ",".join(f"{s}D" for s in scales)
-            )
-        ).alias("embedding"),
-    ).cache()
-    mixed.count()
-    yield mixed
-    mixed.unpersist()
-
-
-@pytest.fixture(scope="module")
 def clustered(spark, emb):
     """Clustered corpus: pull each vector toward one of 20 fixed unit
     anchors (vec_id mod 20) — the regime real embedding corpora live in,
@@ -269,119 +242,6 @@ def test_residual_members_same_payload_and_refine_composes(spark, emb):
     assert hits > 0
 
 
-def test_opq_rotation_properties(emb):
-    R = pq.train_opq_rotation(emb, m=8)
-    Rm = np.asarray(R)
-    # orthonormal -> preserves every dot product / cosine
-    assert float(np.abs(Rm @ Rm.T - np.eye(64)).max()) < 1e-9
-    # deterministic retrain (fixed partitioning; sign gauge pinned)
-    assert R == pq.train_opq_rotation(emb, m=8)
-    with pytest.raises(ValueError, match="not divisible"):
-        pq.train_opq_rotation(emb, m=7)
-
-
-def test_opq_covariance_matches_local_numpy(spark, emb):
-    """The distributed (X^T X, sum x, n) partials must reproduce the plain
-    single-process covariance eigenbasis."""
-    X = np.stack(
-        [
-            np.asarray(r["v"])
-            for r in emb.select(
-                similarity.as_double_array(F.col("embedding")).alias("v")
-            ).collect()
-        ]
-    )
-    cov = np.cov(X, rowvar=False, bias=True)
-    evals_local = np.sort(np.linalg.eigvalsh(cov))[::-1]
-    R = np.asarray(pq.train_opq_rotation(emb, m=8))
-    # rows of R are eigen-directions: variance along each row must equal an
-    # eigenvalue; striping permutes but preserves the multiset
-    var_along = np.sort(np.einsum("ij,jk,ik->i", R, cov, R))[::-1]
-    assert np.allclose(np.sort(var_along), np.sort(evals_local), atol=1e-9)
-
-
-def test_opq_rotation_lifts_anisotropic_recall(spark, aniso):
-    """The OPQ claim, measured: on the mixed anisotropic corpus the
-    rotated index beats the plain one at identical knobs (measured 0.326
-    vs 0.207 recall@3; deterministic pipeline, floors guard regressions).
-    """
-    truth = similarity.cosine_topk_pairs_hof(aniso, k=3).collect()
-    c1, m1, b1 = pq.ivf_pq_index(aniso, m=8, ksub=16, train_iters=6)
-    r_plain = _recall_at_k(
-        pq.ann_ivf_pq_topk(aniso, c1, m1, b1, k=3, nprobe=4).collect(),
-        truth,
-        3,
-    )
-    R = pq.train_opq_rotation(aniso, m=8)
-    c2, m2, b2 = pq.ivf_pq_index(
-        aniso, m=8, ksub=16, train_iters=6, rotation=R
-    )
-    r_rot = _recall_at_k(
-        pq.ann_ivf_pq_topk(
-            aniso, c2, m2, b2, k=3, nprobe=4, rotation=R
-        ).collect(),
-        truth,
-        3,
-    )
-    print(f"\nOPQ anisotropic recall@3: plain={r_plain:.3f} rotated={r_rot:.3f}")
-    assert r_rot >= r_plain + 0.05, (r_rot, r_plain)
-    assert r_rot >= 0.28, r_rot
-
-
-@pytest.mark.parametrize("residual", [False, True])
-def test_append_equals_rebuild_at_fixed_quantizers(spark, emb, residual):
-    """ivf_pq_append at the index's frozen centroids/codebooks must encode
-    a batch to EXACTLY the rows the builder would have produced — so
-    members ∪ append(batch) is bit-identical to an index built over the
-    grown corpus with the same quantizers. Also partition-invariant:
-    append(A ∪ B) == append(A) ∪ append(B) (the encode is map-only, no
-    cross-batch state)."""
-    corpus = emb.where(F.col("vec_id") % 5 != 0)
-    batch = emb.where(F.col("vec_id") % 5 == 0)
-    cents, members, books = pq.ivf_pq_index(
-        corpus, n_cells=8, m=8, ksub=16, train_iters=4, residual=residual
-    )
-
-    def rows(df):
-        return sorted(
-            (r["cell"], r["vid"], tuple(r["codes"]), round(r["nrm"], 9))
-            for r in df.collect()
-        )
-
-    # the append path reproduces the builder's own encoding bit-for-bit
-    assert rows(
-        pq.ivf_pq_append(corpus, cents, books, residual=residual)
-    ) == rows(members)
-    # batch-split invariance on the new data
-    b1 = batch.where(F.col("vec_id") % 2 == 0)
-    b2 = batch.where(F.col("vec_id") % 2 == 1)
-    assert rows(pq.ivf_pq_append(batch, cents, books, residual=residual)) == sorted(
-        rows(pq.ivf_pq_append(b1, cents, books, residual=residual))
-        + rows(pq.ivf_pq_append(b2, cents, books, residual=residual))
-    )
-
-
-def test_appended_vectors_are_searchable(spark, emb):
-    """A vector that exists ONLY via append must come back as the top
-    neighbor of an identical query (recall through the grown index; the
-    query rides a shifted id so the search's self-exclusion doesn't
-    apply)."""
-    corpus = emb.where(F.col("vec_id") % 5 != 0)
-    batch = emb.where(F.col("vec_id") % 5 == 0).limit(10)
-    cents, members, books = pq.ivf_pq_index(
-        corpus, n_cells=8, m=8, ksub=16, train_iters=4
-    )
-    grown = members.unionByName(pq.ivf_pq_append(batch, cents, books))
-    queries = batch.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    hits = pq.ann_ivf_pq_topk(queries, cents, grown, books, k=1, nprobe=2)
-    got = {r["query_id"]: r["neighbor_id"] for r in hits.where("rk = 1").collect()}
-    batch_ids = {r["vec_id"] for r in batch.select("vec_id").collect()}
-    assert set(got) == {b + 1_000_000 for b in batch_ids}
-    assert all(got[q] == q - 1_000_000 for q in got)
-
-
 def test_cell_occupancy_profile_counts(spark, emb):
     cents, members, books = pq.ivf_pq_index(emb, n_cells=8, m=8, ksub=16)
     prof = pq.cell_occupancy_profile(members)
@@ -401,9 +261,7 @@ def test_occupancy_drift_trips_on_shift_not_in_distribution(spark, emb):
     cents, members, books = pq.ivf_pq_index(half, n_cells=8, m=8, ksub=16)
     baseline = pq.cell_occupancy_profile(members)
     # in-distribution: the held-out half of the SAME corpus
-    indist = pq.ivf_pq_append(
-        emb.where("vec_id % 2 = 1"), cents, books
-    )
+    indist = similarity.ivf_members(emb.where("vec_id % 2 = 1"), cents)
     ok = pq.occupancy_drift(baseline, indist)
     assert not ok["retrain"], ok
     # drifted: every vector pulled hard toward one fixed anchor (a new
@@ -420,7 +278,7 @@ def test_occupancy_drift_trips_on_shift_not_in_distribution(spark, emb):
             lambda v, x: F.lit(0.1) * v + x,
         ).alias("embedding"),
     )
-    drifted = pq.ivf_pq_append(shifted, cents, books)
+    drifted = similarity.ivf_members(shifted, cents)
     bad = pq.occupancy_drift(baseline, drifted)
     assert bad["retrain"], bad
     assert bad["tv_distance"] > ok["tv_distance"]

@@ -4,6 +4,9 @@ The reference converts names at the ingest/sink boundary with string loops
 (``Functions/helpers.py:23-36``). Under Spark this is a driver-side rename
 applied once per DataFrame at the bronze→silver boundary — never a row
 expression, so it costs nothing at any scale.
+
+No caller yet: the silver builders alias each column explicitly; this is
+the reference's ``Functions/helpers.py:23-36`` rename on its own.
 """
 
 from __future__ import annotations

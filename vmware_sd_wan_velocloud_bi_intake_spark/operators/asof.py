@@ -86,109 +86,3 @@ def asof_join(
         *left_cols,
         *[F.col(f"__asof_match.{c}").alias(c) for c in value_cols],
     )
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-    bucket_seconds: int = 7 * 24 * 3600,
-) -> DataFrame:
-    """Skew-proof as-of join: identical semantics to :func:`asof_join`, but
-    the shuffle key is (key, time-bucket) instead of key alone.
-
-    :func:`asof_join` windows by key, so a hot key (one customer with 10⁹
-    events) serializes into a single task. Here:
-
-    1. Both sides bucket on ``floor(ts / bucket)``; the per-(key, bucket)
-       window sees only that slice — a hot key spreads across as many tasks
-       as it has buckets.
-    2. A carry table — the last right value at the END of each (key, bucket)
-       — is computed per bucket and cascaded with a per-key window. That
-       window is tiny: one row per (key, non-empty bucket), not per event.
-    3. Left rows with no in-bucket match take the carry from the latest
-       earlier bucket (computed in the same small window, so a match
-       N buckets back needs no iteration).
-
-    Cost: one shuffle of both sides on (key, bucket) + one shuffle of the
-    bucket-summary table on key. Choose ``bucket_seconds`` ≈ the median gap
-    between right-side versions so carries stay short.
-    """
-    bucket_s = F.lit(int(bucket_seconds))
-
-    left_cols = list(left.columns)
-    left_types = dict(left.dtypes)
-    value_struct = F.struct(*[F.col(c) for c in value_cols])
-
-    right_side = right.select(
-        F.col(right_key).alias(_K),
-        F.col(right_ts).cast("timestamp").alias(_T),
-        F.lit(0).alias(_TAG),
-        value_struct.alias(_V),
-        *[F.lit(None).cast(left_types[c]).alias(c) for c in left_cols],
-    ).withColumn("__b", F.floor(F.unix_timestamp(_T) / bucket_s).cast("long"))
-    null_struct: Column = F.lit(None).cast(
-        right_side.schema[_V].dataType.simpleString()
-    )
-    left_side = left.select(
-        F.col(left_key).alias(_K),
-        F.col(left_ts).cast("timestamp").alias(_T),
-        F.lit(1).alias(_TAG),
-        null_struct.alias(_V),
-        *left_cols,
-    ).withColumn("__b", F.floor(F.unix_timestamp(_T) / bucket_s).cast("long"))
-
-    # 1. in-bucket pass: hot keys parallelize across buckets
-    w_in = (
-        Window.partitionBy(_K, "__b")
-        .orderBy(F.col(_T).asc(), F.col(_TAG).asc(), F.col(_V).asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    u = right_side.unionByName(left_side).withColumn(
-        "__in_bucket", F.last(_V, ignorenulls=True).over(w_in)
-    )
-
-    # 2. carry table: the value at the END of each (key, bucket) — max by
-    #    (time, value), matching the base ordering — cascaded over the union
-    #    of BOTH sides' buckets so left-only buckets inherit carries too.
-    #    O(non-empty buckets per key) rows, not O(events).
-    bucket_last = right_side.groupBy(_K, "__b").agg(
-        F.max(F.struct(F.col(_T).alias("t"), F.col(_V).alias("v")))["v"].alias(
-            "__last"
-        )
-    )
-    domain = (
-        right_side.select(_K, "__b")
-        .unionByName(left_side.select(_K, "__b"))
-        .distinct()
-    )
-    w_carry = (
-        Window.partitionBy(_K)
-        .orderBy(F.col("__b").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        domain.join(bucket_last, [_K, "__b"], "left")
-        .select(
-            _K,
-            "__b",
-            F.last("__last", ignorenulls=True).over(w_carry).alias("__carry"),
-        )
-    )
-
-    # left rows with an in-bucket match are done; the rest need only the
-    # carry row of their own bucket (which encodes all earlier buckets) —
-    # a left join against the tiny summary, then coalesce
-    out = (
-        u.filter(F.col(_TAG) == 1)
-        .join(carry, [_K, "__b"], "left")
-        .withColumn("__asof_match", F.coalesce(F.col("__in_bucket"), F.col("__carry")))
-    )
-    return out.select(
-        *left_cols,
-        *[F.col(f"__asof_match.{c}").alias(c) for c in value_cols],
-    )

@@ -142,9 +142,8 @@ def lsh_bucket_table(
     """(doc_id, sh, bucket) LSH index rows — one per document per band.
 
     Narrow (signature is an array fold, bucket ids explode in place). This
-    is the persistable dedup index: write it bucketed on ``bucket``
-    (sinks.bucketed) and incremental batches join against it without
-    re-processing the corpus (see :func:`near_dup_pairs_incremental`).
+    is the persistable dedup index: incremental batches join against it
+    without re-processing the corpus (see :func:`near_dup_pairs_incremental`).
     """
     idc, sh, sig, bucket = _lsh_row_exprs(
         doc_id, text, num_hashes, bands, shingle_n
@@ -186,7 +185,7 @@ def near_dup_pairs(
     **Degenerate-bucket cap**: a bucket holding more than ``max_bucket``
     members (viral boilerplate — one such string at 100 TB makes a single
     bucket's pair expansion quadratic in the corpus) is sidelined instead of
-    expanded; :func:`oversized_buckets` reports what was skipped. Members of
+    expanded. Members of
     a degenerate bucket are overwhelmingly *exact* duplicates, which the
     exact-dedup pass (:func:`exact_dedup_keys`) already catches — the cap
     bounds work without losing the survivors contract.
@@ -247,86 +246,17 @@ def _verified_pair_expr(threshold: float) -> Column:
     ).alias("p")
 
 
-def oversized_buckets(
-    df: DataFrame,
-    doc_id: str,
-    text: str,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = 1024,
-    band_rows: DataFrame | None = None,
-) -> DataFrame:
-    """The sideline channel for :func:`near_dup_pairs`'s degenerate-bucket cap.
-
-    Returns (bucket, n_members, sample_doc_id) for every LSH bucket whose
-    membership exceeds ``max_bucket`` — the buckets the pair expansion
-    refused to go quadratic on. Pipelines log/inspect these (they are almost
-    always a single boilerplate string) and rely on exact dedup for their
-    members.
-
-    Pass ``band_rows`` (a precomputed :func:`lsh_bucket_table` — ideally
-    persisted and shared with the near_dup_pairs run) to skip recomputing
-    the corpus-wide signature stage, the dominant cost at scale.
-    """
-    if band_rows is None:
-        band_rows = lsh_bucket_table(df, doc_id, text, num_hashes, bands, shingle_n)
-    return (
-        band_rows.groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_members"),
-            F.min("doc_id").alias("sample_doc_id"),
-        )
-        .where(F.col("n_members") > max_bucket)
-    )
-
-
 def bucket_summary(band_rows: DataFrame) -> DataFrame:
     """(bucket, n_members) membership summary of an LSH index.
 
-    Computed ONCE when the index is written (sinks.bucketed.write_lsh_index
-    co-writes it next to the index) and maintained additively on appends —
-    membership counts are associative, so a batch writer just sums its own
-    per-bucket counts into the summary. Incremental dedup runs then evaluate
+    Computed ONCE when the index is written and maintained additively on
+    appends — membership counts are associative, so a batch writer just
+    sums its own per-bucket counts into the summary. Incremental dedup runs then evaluate
     the degenerate-bucket cap against this compact table instead of
     re-aggregating the full index: O(|batch|) per run, not O(corpus).
     """
     return band_rows.groupBy("bucket").agg(
         F.count("*").cast("long").alias("n_members")
-    )
-
-
-def oversized_buckets_incremental(
-    new_rows: DataFrame,
-    corpus_summary: DataFrame,
-    max_bucket: int = 1024,
-) -> DataFrame:
-    """O(batch) sideline report for an incremental run.
-
-    The incremental cap sidelines buckets the BATCH touches whose combined
-    membership (writer-maintained summary + batch counts) exceeds
-    ``max_bucket``; this reports exactly those, from the same inputs the
-    cap reads — no corpus band rows needed (the full-run
-    :func:`oversized_buckets` over the unioned band rows, restricted to
-    batch-present buckets, agrees; asserted in tests).
-
-    Returns (bucket, n_members, sample_doc_id), n_members the combined
-    count, sample_doc_id from the batch side.
-    """
-    new_counts = new_rows.groupBy("bucket").agg(
-        F.count("*").cast("long").alias("_n_new"),
-        F.min("doc_id").alias("sample_doc_id"),
-    )
-    return (
-        new_counts.join(corpus_summary, "bucket", "left")
-        .select(
-            "bucket",
-            (F.coalesce(F.col("n_members"), F.lit(0)) + F.col("_n_new")).alias(
-                "n_members"
-            ),
-            "sample_doc_id",
-        )
-        .where(F.col("n_members") > max_bucket)
     )
 
 
@@ -349,9 +279,7 @@ def near_dup_pairs_incremental(
     num_hashes/bands/shingle_n). Only the new batch is shingled and hashed;
     the corpus contributes its precomputed (doc_id, sh, bucket) rows through
     an equi-join on ``bucket``. This is the daily-ingest shape at 100 TB:
-    cost scales with |new| × bucket-hit-rate, not with the corpus. If the
-    index was written bucketed on ``bucket`` (sinks.bucketed), the join
-    doesn't even shuffle the corpus side.
+    cost scales with |new| × bucket-hit-rate, not with the corpus.
 
     **Degenerate-bucket cap** — same contract as :func:`near_dup_pairs`:
     a bucket whose combined membership (corpus + new batch) exceeds
@@ -369,9 +297,7 @@ def near_dup_pairs_incremental(
     total the union count produced, so the equivalence property is
     unchanged. Without it the summary is derived from ``corpus_index``
     in-plan (correct, but re-aggregates the index every run — the shape the
-    summary exists to avoid at scale). Report sidelined buckets via
-    :func:`oversized_buckets` with
-    ``band_rows=corpus_index.unionByName(new_rows)``.
+    summary exists to avoid at scale).
 
     Pass ``new_rows`` — a precomputed :func:`lsh_bucket_table` of exactly
     the ``new_df`` docs (ideally persisted and shared with the caller's
@@ -467,7 +393,6 @@ def contamination_ratios(
     doc_id: str,
     text: str,
     shingle_n: int = 3,
-    broadcast_blocklist: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: n-gram overlap of each suspect document
     against the distinct shingle set of a blocklist corpus.
@@ -483,11 +408,6 @@ def contamination_ratios(
     shuffle on doc_id for the per-doc counts. Never an all-pairs join, never
     a corpus-sized build side.
 
-    ``broadcast_blocklist=False`` drops the hint and lets AQE choose — pass
-    a statistics-driven decision from ``plans.hints.broadcast_decision``
-    (profile_table over the blocklist) when the blocklist is not
-    small-by-contract (e.g. decontaminating against another full corpus).
-
     Returns (doc_id, n_shingles, n_hit, overlap) — one row per suspect doc.
     """
     b = (
@@ -500,7 +420,7 @@ def contamination_ratios(
         F.explode(shingles(F.col(text), shingle_n)).alias("shingle"),
     )
     return (
-        s.join(F.broadcast(b) if broadcast_blocklist else b, "shingle", "left")
+        s.join(F.broadcast(b), "shingle", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_shingles"),
@@ -667,25 +587,4 @@ def duplicate_components(
     raise RuntimeError(
         f"duplicate_components: no convergence after {max_iters} rounds — "
         "input does not look like a dedup pair graph"
-    )
-
-
-def component_survivors(
-    docs: DataFrame,
-    pairs: DataFrame,
-    doc_id: str = "doc_id",
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-) -> DataFrame:
-    """One surviving doc_id per duplicate cluster (cluster-canonical dedup).
-
-    Keeps the minimum doc_id of every connected component plus every doc
-    that appears in no pair. Unlike dropping each pair's ``doc_b`` (the
-    directional form), this is stable under chains: A~B, B~C keeps exactly
-    A whichever order pairs arrive in.
-    """
-    comp = duplicate_components(pairs, doc_a, doc_b)
-    losers = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
-    return docs.select(F.col(doc_id).alias("doc_id")).join(
-        losers, "doc_id", "left_anti"
     )

@@ -1,32 +1,21 @@
-"""Training-data export: deterministic global shuffle, split, shard writer.
+"""Training-data split: deterministic hash splits, made near-dup-clean.
 
 The last mile of a curation pipeline (after scrub/gate/dedup in
-``plans/curation.py``): hand the trainer a pseudo-randomly ordered,
-shard-sized, split-labeled corpus. Everything derives from content hashes —
-no RNG state, so the export is reproducible run-to-run, engine-to-engine,
-and at any parallelism; and split membership is a pure function of the
-document id, so a document keeps its split as the corpus grows (the
+``plans/curation.py``): label each document with a split. Split
+membership is a pure function of the document id — no RNG state — so the
+split is reproducible run-to-run, engine-to-engine and at any
+parallelism, and a document keeps its split as the corpus grows (the
 property that keeps eval sets uncontaminated across refreshes).
-
-Scale shapes:
-- :func:`with_shuffle_key` is a narrow projection (zero shuffle) — the
-  global pseudo-random order exists as a sortable key, materialized only
-  where consumed.
-- :func:`split_by_hash` is likewise narrow: a hash-bucket threshold per
-  row. Proportions are exact in expectation; variance is O(1/√n) — at
-  training-corpus sizes the realized skew is far below a percent.
-- :func:`write_training_shards` performs exactly ONE wide exchange
-  (repartition on the shard id) and sorts within each task — there is no
-  global sort; a total order across shards is pointless when the training
-  loader consumes shards independently.
+:func:`split_by_hash` is a narrow projection (a hash-bucket threshold per
+row); :func:`fix_split_leakage` then folds near-duplicate clusters that
+straddle splits into one split.
 
 Beyond-reference surface (no analog in the reference, which exports via
-MySQL upserts); same family as operators/sampling.py.
+MySQL upserts).
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
@@ -44,21 +33,6 @@ def _hash01(id_col: Column, seed: int) -> Column:
     """
     h = F.xxhash64(id_col.cast("string"), F.lit(seed))
     return (F.pmod(h, F.lit(_BUCKETS))).cast("double") / F.lit(float(_BUCKETS))
-
-
-def with_shuffle_key(
-    df: DataFrame, id_col: str, seed: int = 0, key_name: str = "shuffle_key"
-) -> DataFrame:
-    """Attach the deterministic pseudo-random sort key (narrow, no shuffle).
-
-    ``orderBy(key_name)`` then yields the same global permutation on every
-    run and any cluster layout — but prefer sorting within shards (see
-    :func:`write_training_shards`); a global sort is one range exchange you
-    rarely need.
-    """
-    return df.withColumn(
-        key_name, F.xxhash64(F.col(id_col).cast("string"), F.lit(seed))
-    )
 
 
 def split_by_hash(
@@ -91,101 +65,6 @@ def split_by_hash(
     return df.withColumn(split_name, labeled)
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    *,
-    n_shards: int | None = None,
-    rows_per_shard: int | None = None,
-    seed: int = 0,
-) -> int:
-    """Write ``path`` partitioned by ``shard=NNN``, one file per shard,
-    rows pseudo-randomly assigned and ordered. Returns the shard count.
-
-    Pass ``n_shards`` directly, or ``rows_per_shard`` to size shards to a
-    target (costs one count job). Shard assignment is the id-hash modulo —
-    every shard is a uniform random sample of the corpus, so data order
-    within an epoch has no curriculum bias even if the loader reads shards
-    sequentially. The single ``repartition`` on the shard id means each
-    shard is produced by exactly one task → exactly one parquet file, the
-    shape training loaders want (seekable, shard = unit of work).
-    """
-    if (n_shards is None) == (rows_per_shard is None):
-        raise ValueError("pass exactly one of n_shards / rows_per_shard")
-    if n_shards is None:
-        n = df.count()
-        n_shards = max(1, math.ceil(n / rows_per_shard))
-    key = F.xxhash64(F.col(id_col).cast("string"), F.lit(seed))
-    out = (
-        df.withColumn("shard", F.pmod(key, F.lit(n_shards)).cast("int"))
-        .withColumn("__order", key)
-        .repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "__order")
-        .drop("__order")
-    )
-    out.write.mode("overwrite").partitionBy("shard").parquet(path)
-    return n_shards
-
-
-def split_leakage_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    split_name: str = "split",
-    *,
-    threshold: float = 0.7,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = 1024,
-) -> DataFrame:
-    """Near-duplicate pairs that STRADDLE split boundaries — train/test
-    leakage the id-hash split cannot see.
-
-    :func:`split_by_hash` assigns splits by id, so two near-identical
-    documents with different ids can land in train AND val — the held-out
-    metric then partially measures memorization. This audit runs the
-    engine's verified near-dup detector (LSH recall → exact-Jaccard
-    precision, operators/dedup.py) and keeps only the cross-split pairs:
-    run it after splitting and either drop one side of each pair or fold
-    the pair into the same split before export.
-
-    Returns (doc_a, split_a, doc_b, split_b, jaccard) with
-    split_a != split_b. Scale shape is near_dup_pairs' own — bucketed,
-    never all-pairs; the split-label join adds two broadcast-sized probes
-    of the (id, split) projection, not a corpus shuffle.
-    """
-    from .dedup import near_dup_pairs
-
-    pairs = near_dup_pairs(
-        df,
-        id_col,
-        text_col,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        max_bucket=max_bucket,
-    )
-    labels = df.select(
-        F.col(id_col).alias("_lid"), F.col(split_name).alias("_lsplit")
-    )
-    return (
-        pairs.join(labels, pairs["doc_a"] == labels["_lid"])
-        .select("doc_a", "doc_b", "jaccard", F.col("_lsplit").alias("split_a"))
-        .join(labels, F.col("doc_b") == labels["_lid"])
-        .select(
-            "doc_a",
-            "split_a",
-            "doc_b",
-            F.col("_lsplit").alias("split_b"),
-            "jaccard",
-        )
-        .where(F.col("split_a") != F.col("split_b"))
-    )
-
-
 def fix_split_leakage(
     df: DataFrame,
     id_col: str,
@@ -199,15 +78,13 @@ def fix_split_leakage(
     shingle_n: int = 3,
     max_bucket: int = 1024,
 ) -> DataFrame:
-    """The ACTION to :func:`split_leakage_pairs`' audit: make the split
-    assignment near-dup-clean, so a re-audit (same LSH knobs) returns
-    empty.
+    """Make the split assignment near-dup-clean: afterwards no near-dup
+    pair (same LSH knobs) straddles two splits.
 
     Leakage is transitive — A(train)~B(val) and B~C(val) means moving B
     alone just moves the straddle to B~C — so the fix operates on whole
     duplicate CLUSTERS (``duplicate_components`` over the full near-dup
-    pair graph, operators/dedup.py), not on the cross-split pairs the
-    audit reports. Every cluster gets ONE canonical split: the split of
+    pair graph, operators/dedup.py), not on single cross-split pairs. Every cluster gets ONE canonical split: the split of
     its minimum-id member (the component label itself, so the canonical
     split is one join away and deterministic run-to-run).
 
@@ -226,15 +103,12 @@ def fix_split_leakage(
     carries a CAP CAVEAT: removing rows can shrink a bucket the fix's own
     pass sidelined back under ``max_bucket``, and the re-audit then
     expands pairs the fix never saw — one pass is a contraction, not
-    always a fixpoint. Use :func:`fix_split_leakage_until_clean` for the
-    guaranteed-clean drop form (it iterates; each round strictly removes
-    rows, so it terminates).
+    always a fixpoint; re-run it until clean.
 
     Scale: one near-dup pass (bucketed, never all-pairs) + O(log n)
     hash-min rounds over the pair graph + two joins against the tiny
     (clustered-id, split) projections — the corpus itself is touched by
-    exactly one join on ``id_col``. Cost is the audit's own near-dup pass
-    — run fix INSTEAD of audit-then-fix when you already know you'll act.
+    exactly one join on ``id_col``.
     """
     if mode not in ("refold", "drop"):
         raise ValueError(f"mode must be 'refold' or 'drop', got {mode!r}")
@@ -268,73 +142,3 @@ def fix_split_leakage(
         F.col("_canon_split").isNull()
         | (F.col("_canon_split") == F.col(split_name))
     ).drop("_canon_split")
-
-
-def fix_split_leakage_until_clean(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    split_name: str = "split",
-    *,
-    mode: str = "drop",
-    max_rounds: int = 5,
-    threshold: float = 0.7,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = 1024,
-) -> DataFrame:
-    """Iterate :func:`fix_split_leakage` until the audit is empty.
-
-    Needed for ``mode="drop"``: dropping rows can un-sideline a
-    previously over-``max_bucket`` bucket, exposing pairs the single pass
-    never clustered (the cap caveat documented there). Each drop round
-    strictly removes rows (or the audit is already empty), so the loop
-    terminates; ``max_rounds`` is a tripwire against a miswired corpus,
-    not a tuning knob — real corpora converge in one or two rounds
-    because cap-margin buckets are rare. ``mode="refold"`` converges in
-    one round by construction and is accepted for a uniform call site.
-
-    The intermediate frame is localCheckpointed between rounds so round
-    N+1's near-dup pass does not re-run round N's join lineage.
-
-    FIX-FIRST: each round runs fix → audit, not audit → fix → audit.
-    Every audit and every fix is a full corpus-scale near-dup pass, and
-    this function's caller has already decided to act (that is what
-    "until clean" means), so the leading audit would only confirm what
-    the first fix discovers anyway — refold converges in fix + audit =
-    2 passes instead of 3, and a dirty drop-mode corpus saves one full
-    pass per invocation. The trade: an already-clean corpus pays a
-    no-op fix it didn't need — callers who only SUSPECT leakage should
-    run :func:`split_leakage_pairs` alone first.
-    """
-    knobs = dict(
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        max_bucket=max_bucket,
-    )
-    if max_rounds <= 0:
-        # verify-only degradation (the pre-fix-first contract): no fixes
-        # allowed, so audit once and pass a clean corpus through
-        if split_leakage_pairs(df, id_col, text_col, split_name, **knobs).isEmpty():
-            return df
-        raise RuntimeError(
-            "fix_split_leakage_until_clean: corpus leaks and max_rounds=0 "
-            "allows no fix passes"
-        )
-    out = df
-    for _ in range(max_rounds):
-        out = fix_split_leakage(
-            out, id_col, text_col, split_name, mode=mode, **knobs
-        ).localCheckpoint(eager=True)
-        if split_leakage_pairs(
-            out, id_col, text_col, split_name, **knobs
-        ).isEmpty():
-            return out
-    raise RuntimeError(
-        f"fix_split_leakage_until_clean: audit not empty after "
-        f"{max_rounds} rounds — input does not look like a split-labeled "
-        "document corpus"
-    )

@@ -111,17 +111,14 @@ def train_bigram_lm(
     )
     if materialize:
         # r14 (§2.6): the vocabulary count and the counts checkpoint are
-        # two independent jobs over the same input — run the vocab pass
-        # on a pool thread while the checkpoint materializes instead of
-        # paying two serial driver actions
-        from concurrent.futures import ThreadPoolExecutor
+        # two independent jobs over the same input — run them together
+        # instead of paying two serial driver actions
+        from ..functions.conf import run_together
 
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            vf = pool.submit(inheritable_thread_target(vocab_job))
-            big_counts = big_counts.localCheckpoint(eager=True)
-            vocab_size = vf.result()
+        vocab_size, big_counts = run_together(
+            df.sparkSession,
+            [vocab_job, lambda: big_counts.localCheckpoint(eager=True)],
+        )
     else:
         vocab_size = vocab_job()
     bigrams = big_counts.filter(F.col("n_big") >= min_count)

@@ -1,42 +1,29 @@
 """Multimodal column support: opaque binary payloads + typed metadata.
 
 Beyond-reference surface (SURVEY.md §7 step 10). Media rides through the
-engine as ``binary`` content plus a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
-operators so the heavy per-item work stays columnar and partition-parallel.
+engine as ``binary`` content; decode and feature extraction run as an
+Arrow-batched ``mapInPandas`` operator so the heavy per-item work stays
+columnar and partition-parallel.
 
 Decode is REAL for the formats a pure-Python decoder can carry: binary PPM
 (P6), uncompressed 24-bit BMP, and 8-bit PNG (stdlib ``zlib`` inflate +
-all five scanline unfilters — the most common web-corpus image format
-needs no codec library) decode to actual pixel bytes (:func:`ppm_decode` /
-:func:`bmp_decode` / :func:`png_decode`, dispatched by magic bytes in
-:func:`decode_media`), and PPM resizes through a real nearest-neighbor
-resampler (:func:`ppm_resize`). JPEG/WebP (and 16-bit/interlaced PNG
-exotics) decode and resize
-automatically whenever Pillow is importable (optional dependency — the
-engine never requires it); PCM WAV audio decodes through the stdlib
-``wave`` container (:func:`wav_decode` → :func:`extract_audio_features`,
-real signal statistics over decoded samples); uncompressed-DIB AVI video
-demuxes and decodes pure-Python (:func:`avi_decode` →
-:func:`sample_video_frames`, emitting PPM frames the image operators
-consume directly; MJPEG frames ride the Pillow boundary). In a PIL-less
-environment like this one, remaining image formats — and compressed
-audio/video codecs — raise ``NotImplementedError`` unless a decoder is
-injected. The schema, batch shape, UDF signatures,
-frame-index math, and partitioning are shared by every path and tested
-with real pixels where possible.
+all five scanline unfilters) decode to actual pixel bytes
+(:func:`ppm_decode` / :func:`bmp_decode` / :func:`png_decode`, dispatched
+by magic bytes in :func:`decode_media`). JPEG/WebP (and 16-bit/interlaced
+PNG exotics) decode whenever Pillow is importable (optional dependency —
+the engine never requires it); otherwise they raise
+``NotImplementedError`` unless a decoder is injected.
 
 Scale notes: media rows are large and skew-prone; ``repartition`` by a
 size-aware bucket before decode keeps tasks balanced, and features (small)
 are split from content (large) immediately after extraction so downstream
 shuffles never move raw bytes.
 """
-
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = (
@@ -102,9 +89,24 @@ def ppm_decode(content: bytes) -> dict:
     return {"width": width, "height": height, "maxval": maxval, "pixels": pixels}
 
 
-def ppm_encode(width: int, height: int, pixels: bytes, maxval: int = 255) -> bytes:
-    """Inverse of :func:`ppm_decode` (canonical single-newline header)."""
-    return b"P6\n%d %d\n%d\n" % (width, height, maxval) + pixels
+def _dib_to_rgb(
+    raster: bytes, width: int, height: int, top_down: bool = False
+) -> bytes:
+    """Padded BGR DIB raster (the BMP pixel format) → top-down RGB."""
+    row_size = (width * 3 + 3) & ~3
+    out = bytearray(width * height * 3)
+    for row in range(height):
+        src_row = row if top_down else height - 1 - row
+        start = src_row * row_size
+        rowbytes = raster[start : start + width * 3]
+        if len(rowbytes) < width * 3:
+            raise ValueError("truncated DIB raster")
+        # BGR → RGB via strided slice assignment — no per-pixel objects
+        base = row * width * 3
+        out[base + 0 : base + width * 3 : 3] = rowbytes[2::3]
+        out[base + 1 : base + width * 3 : 3] = rowbytes[1::3]
+        out[base + 2 : base + width * 3 : 3] = rowbytes[0::3]
+    return bytes(out)
 
 
 def bmp_decode(content: bytes) -> dict:
@@ -237,76 +239,6 @@ def png_decode(content: bytes) -> dict:
     return {"width": w, "height": h, "maxval": 255, "pixels": pixels}
 
 
-def png_encode(width: int, height: int, pixels: bytes, filter_type: int = 0) -> bytes:
-    """Minimal stdlib RGB PNG writer (single IDAT, one filter for every
-    scanline) — the round-trip partner :func:`png_decode`'s tests drive
-    through all five filters; also a real PNG any viewer opens."""
-    import struct
-    import zlib
-
-    if len(pixels) != width * height * 3:
-        raise ValueError("png_encode: pixels must be RGB row-major")
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    stride = width * 3
-    raw = bytearray()
-    for y in range(height):
-        line = bytearray(pixels[y * stride : (y + 1) * stride])
-        prev = pixels[(y - 1) * stride : y * stride] if y else bytes(stride)
-        enc = bytearray(line)
-        if filter_type == 1:
-            for i in range(stride - 1, 2, -1):
-                enc[i] = (line[i] - line[i - 3]) & 0xFF
-        elif filter_type == 2:
-            for i in range(stride):
-                enc[i] = (line[i] - prev[i]) & 0xFF
-        elif filter_type == 3:
-            for i in range(stride):
-                left = line[i - 3] if i >= 3 else 0
-                enc[i] = (line[i] - ((left + prev[i]) >> 1)) & 0xFF
-        elif filter_type == 4:
-            for i in range(stride):
-                left = line[i - 3] if i >= 3 else 0
-                ul = prev[i - 3] if i >= 3 else 0
-                enc[i] = (line[i] - _paeth(left, prev[i], ul)) & 0xFF
-        elif filter_type != 0:
-            raise ValueError(f"bad filter {filter_type}")
-        raw.append(filter_type)
-        raw += enc
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _pil_rgb(content: bytes):
-    """The ONE Pillow boundary: bytes → RGB Image, or None when Pillow is
-    absent or cannot identify the payload. Every PIL-optional path
-    (decode, resize) goes through here so the availability/dispatch
-    contract cannot drift between call sites."""
-    try:
-        from PIL import Image, UnidentifiedImageError
-    except ImportError:
-        return None
-    import io
-
-    try:
-        with Image.open(io.BytesIO(content)) as im:
-            return im.convert("RGB")
-    except UnidentifiedImageError:
-        return None
-
-
 def _pil_decode(content: bytes) -> dict | None:
     """Pillow-backed decode (JPEG/PNG/…) when PIL is importable.
 
@@ -316,8 +248,16 @@ def _pil_decode(content: bytes) -> dict | None:
     the documented ``NotImplementedError`` contract, so environments
     without codec libraries behave exactly as before.
     """
-    rgb = _pil_rgb(content)
-    if rgb is None:
+    try:
+        from PIL import Image, UnidentifiedImageError
+    except ImportError:
+        return None
+    import io
+
+    try:
+        with Image.open(io.BytesIO(content)) as im:
+            rgb = im.convert("RGB")
+    except UnidentifiedImageError:
         return None
     return {
         "width": rgb.width,
@@ -336,9 +276,8 @@ def decode_media(content: bytes) -> dict:
     Pillow when importable); anything else tries Pillow if it is
     importable (:func:`_pil_decode` — JPEG/WebP/… with no injection
     needed). Only when no decoder applies does this raise
-    ``NotImplementedError`` — audio/video (and JPEG in a PIL-less
-    environment like this one) still need a decoder injected into
-    :func:`extract_features` in production.
+    ``NotImplementedError`` — other formats (and JPEG without Pillow)
+    need a decoder injected into :func:`extract_features`.
     """
     if content.startswith(b"P6"):
         return ppm_decode(content)
@@ -427,434 +366,3 @@ def extract_features(
     # features are tiny relative to content: project content away immediately
     # after this operator; never shuffle raw bytes downstream.
     return media.select("media_id", "content").mapInPandas(run, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "media_id long, content binary, "
-    "meta struct<mime string, width int, height int, duration_ms long, codec string>"
-)
-
-
-def fake_resizer(content: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for an image resizer: size-proportional
-    truncation/padding of the payload (real codecs aren't in this env)."""
-    target = max(1, (width * height) // 64)
-    if len(content) >= target:
-        return content[:target]
-    return content + b"\x00" * (target - len(content))
-
-
-def ppm_resize(content: bytes, width: int, height: int) -> bytes:
-    """Real nearest-neighbor resize for binary-PPM payloads (pure Python).
-
-    Decodes, resamples the raster with integer nearest-neighbor mapping,
-    re-encodes P6 — an actual image transformation, byte-checkable.
-    """
-    img = ppm_decode(content)
-    sw, sh, px = img["width"], img["height"], img["pixels"]
-    out = bytearray()
-    for y in range(height):
-        sy = min(sh - 1, (y * sh) // height)
-        row_base = sy * sw
-        for x in range(width):
-            sx = min(sw - 1, (x * sw) // width)
-            o = (row_base + sx) * 3
-            out += px[o : o + 3]
-    return ppm_encode(width, height, bytes(out), img["maxval"])
-
-
-def builtin_resizer(content: bytes, width: int, height: int) -> bytes:
-    """Magic-dispatched resize: PPM resizes for real; other image formats
-    resize through Pillow when it is importable (decode → NEAREST resample
-    → re-encode as canonical P6, so the output stays decodable by the
-    engine's own built-ins); otherwise an injected codec-backed resizer is
-    required."""
-    if content.startswith(b"P6"):
-        return ppm_resize(content, width, height)
-    rgb = _pil_rgb(content)
-    if rgb is not None:
-        from PIL import Image
-
-        out = rgb.resize((width, height), Image.Resampling.NEAREST)
-        return ppm_encode(width, height, out.tobytes())
-    raise NotImplementedError(
-        "no resizer for this payload (built-in: PPM P6; other image "
-        "formats resize automatically when Pillow is installed); inject a "
-        "codec-backed resizer for other formats"
-    )
-
-
-def resize_media(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize every media item to (width, height) via Arrow-batched UDF.
-
-    Same contract as :func:`extract_features`: ``resizer`` maps
-    (bytes, w, h) → bytes; the default :func:`builtin_resizer` resizes PPM
-    payloads for real (nearest-neighbor) and raises ``NotImplementedError``
-    per item for formats needing an absent codec library (inject
-    ``fake_resizer`` for format-agnostic plumbing tests, a PIL/ffmpeg-
-    backed resizer in production). Output keeps the (media_id, content,
-    meta) shape with meta.width/height updated, so resize composes with
-    decode/feature stages. Content stays partitioned where it was read —
-    resizing is pure map work, no shuffle.
-    """
-    import pandas as pd
-
-    if resizer is None:
-        resizer = builtin_resizer
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for m in pdf["meta"]:
-                m = dict(m) if m is not None else {}
-                m["width"], m["height"] = width, height
-                metas.append(m)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "content": [resizer(bytes(b), width, height) for b in pdf["content"]],
-                    "meta": metas,
-                }
-            )
-
-    return media.select("media_id", "content", "meta").mapInPandas(
-        run, RESIZED_SCHEMA
-    )
-
-
-def wav_decode(content: bytes) -> dict:
-    """REAL audio decode for PCM WAV containers — pure stdlib (``wave``),
-    no codec library. Returns sample_rate, n_channels, sample_width,
-    n_samples, duration_ms, and the raw PCM frame bytes."""
-    import io
-    import wave
-
-    if not (content[:4] == b"RIFF" and content[8:12] == b"WAVE"):
-        raise NotImplementedError(
-            "not a RIFF/WAVE payload; inject a codec-backed decoder for "
-            "compressed audio (mp3/ogg/flac)"
-        )
-    with wave.open(io.BytesIO(content), "rb") as w:
-        n = w.getnframes()
-        rate = w.getframerate()
-        return {
-            "sample_rate": rate,
-            "n_channels": w.getnchannels(),
-            "sample_width": w.getsampwidth(),
-            "n_samples": n,
-            "duration_ms": int(n * 1000 / rate) if rate else 0,
-            "pcm": w.readframes(n),
-        }
-
-
-def wav_encode(
-    samples, sample_rate: int = 16000, n_channels: int = 1
-) -> bytes:
-    """Build a 16-bit PCM WAV payload from an int16 iterable (fixture
-    builder for tests and the deterministic synthetic-audio path)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    arr = np.asarray(samples, dtype="<i2")
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(arr.tobytes())
-    return buf.getvalue()
-
-
-AUDIO_FEATURE_SCHEMA = (
-    "media_id long, sample_rate int, n_channels int, duration_ms long, "
-    "rms double, peak int, zero_crossings long"
-)
-
-
-def audio_feature_decoder(content: bytes) -> dict:
-    """Signal statistics over DECODED samples (16-bit PCM): RMS, peak,
-    zero-crossing count — the audio analog of :func:`pixel_feature_decoder`."""
-    import numpy as np
-
-    a = wav_decode(content)
-    if a["sample_width"] != 2:
-        raise NotImplementedError("audio features support 16-bit PCM only")
-    x = np.frombuffer(a["pcm"], dtype="<i2").astype("float64")
-    # crossings must be counted per channel on the de-interleaved signal:
-    # adjacent samples of the raw PCM stream alternate channels, and a
-    # sign flip between channels is not a crossing of either
-    nc = max(1, a["n_channels"])
-    ch = x[: (x.size // nc) * nc].reshape(-1, nc)
-    zc = int(((ch[:-1] * ch[1:]) < 0).sum()) if ch.shape[0] > 1 else 0
-    return {
-        "sample_rate": a["sample_rate"],
-        "n_channels": a["n_channels"],
-        "duration_ms": a["duration_ms"],
-        "rms": float(np.sqrt((x * x).mean())) if x.size else 0.0,
-        "peak": int(np.abs(x).max()) if x.size else 0,
-        "zero_crossings": zc,
-    }
-
-
-def extract_audio_features(
-    media: DataFrame,
-    decoder: Callable[[bytes], dict] | None = None,
-) -> DataFrame:
-    """Arrow-batched audio feature extraction — same plumbing contract as
-    :func:`extract_features` (map-only, content projected away after)."""
-    import pandas as pd
-
-    if decoder is None:
-        decoder = audio_feature_decoder
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decoder(bytes(b)) for b in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    **{
-                        k: [f[k] for f in feats]
-                        for k in (
-                            "sample_rate",
-                            "n_channels",
-                            "duration_ms",
-                            "rms",
-                            "peak",
-                            "zero_crossings",
-                        )
-                    },
-                }
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        run, AUDIO_FEATURE_SCHEMA
-    )
-
-
-def _dib_to_rgb(
-    raster: bytes, width: int, height: int, top_down: bool = False
-) -> bytes:
-    """Padded BGR DIB raster (the BMP / AVI '00db' frame format) → top-down
-    RGB. The ONE copy of the stride/padding conversion — :func:`bmp_decode`
-    and :func:`avi_decode` both route through it."""
-    row_size = (width * 3 + 3) & ~3
-    out = bytearray(width * height * 3)
-    for row in range(height):
-        src_row = row if top_down else height - 1 - row
-        start = src_row * row_size
-        rowbytes = raster[start : start + width * 3]
-        if len(rowbytes) < width * 3:
-            raise ValueError("truncated DIB raster")
-        # BGR → RGB via strided slice assignment — no per-pixel objects
-        base = row * width * 3
-        out[base + 0 : base + width * 3 : 3] = rowbytes[2::3]
-        out[base + 1 : base + width * 3 : 3] = rowbytes[1::3]
-        out[base + 2 : base + width * 3 : 3] = rowbytes[0::3]
-    return bytes(out)
-
-
-def _rgb_to_dib(pixels: bytes, width: int, height: int) -> bytes:
-    row_size = (width * 3 + 3) & ~3
-    out = bytearray(row_size * height)
-    for row in range(height):
-        src = (height - 1 - row) * width * 3
-        rowbytes = pixels[src : src + width * 3]
-        base = row * row_size
-        out[base + 0 : base + width * 3 : 3] = rowbytes[2::3]
-        out[base + 1 : base + width * 3 : 3] = rowbytes[1::3]
-        out[base + 2 : base + width * 3 : 3] = rowbytes[0::3]
-    return bytes(out)
-
-
-def avi_decode(content: bytes) -> dict:
-    """Pure-Python RIFF/AVI demux + frame decode.
-
-    Walks the RIFF chunk tree, reads the ``avih`` main header for
-    geometry/timing, and decodes every ``..db`` (uncompressed DIB) frame
-    to a top-down RGB raster; ``..dc`` (MJPEG) frames decode through the
-    optional Pillow boundary. Compressed streams without Pillow raise the
-    documented ``NotImplementedError``.
-
-    Returns {width, height, fps, duration_ms, frames: [RGB bytes]}.
-    """
-    import struct
-
-    if content[:4] != b"RIFF" or content[8:12] != b"AVI ":
-        raise NotImplementedError(
-            "not a RIFF/AVI payload; inject a codec-backed decoder for "
-            "other video containers"
-        )
-    avih = None
-    frames: list[tuple[bytes, bytes]] = []  # (kind, chunk payload)
-
-    def walk(buf: bytes, pos: int, end: int):
-        nonlocal avih
-        while pos + 8 <= end:
-            fourcc = buf[pos : pos + 4]
-            size = struct.unpack_from("<I", buf, pos + 4)[0]
-            body = pos + 8
-            if fourcc == b"LIST":
-                walk(buf, body + 4, body + size)  # skip the list type tag
-            elif fourcc == b"avih":
-                avih = buf[body : body + size]
-            elif fourcc[2:4] in (b"db", b"dc"):
-                frames.append((fourcc[2:4], buf[body : body + size]))
-            pos = body + size + (size & 1)  # chunks pad to even offsets
-
-    walk(content, 12, len(content))
-    if avih is None:
-        raise ValueError("AVI has no avih header")
-    usec_pf = struct.unpack_from("<I", avih, 0)[0]
-    width = struct.unpack_from("<I", avih, 32)[0]
-    height = struct.unpack_from("<I", avih, 36)[0]
-    rgb_frames = []
-    for kind, payload in frames:
-        if kind == b"db":
-            rgb_frames.append(_dib_to_rgb(payload, width, height))
-        else:  # MJPEG
-            rgb = _pil_rgb(payload)
-            if rgb is None:
-                raise NotImplementedError(
-                    "MJPEG AVI frames need Pillow (or an injected decoder)"
-                )
-            if (rgb.width, rgb.height) != (width, height):
-                # the '..db' path validates via _dib_to_rgb; an unchecked
-                # JPEG-vs-avih mismatch would feed row-misaligned pixels
-                # to every downstream consumer with no error
-                raise ValueError(
-                    f"MJPEG frame is {rgb.width}x{rgb.height} but avih "
-                    f"declares {width}x{height}"
-                )
-            rgb_frames.append(rgb.tobytes())
-    fps = 1_000_000 / usec_pf if usec_pf else 0.0
-    return {
-        "width": width,
-        "height": height,
-        "fps": fps,
-        "duration_ms": int(len(rgb_frames) * (usec_pf / 1000)),
-        "frames": rgb_frames,
-    }
-
-
-def avi_encode(
-    frames: list[bytes], width: int, height: int, fps: float = 10.0
-) -> bytes:
-    """Minimal uncompressed-DIB AVI writer (fixture builder + synthetic
-    video path): RIFF(hdrl(avih, strl(strh, strf)), movi('00db'...))."""
-    import struct
-
-    usec_pf = int(1_000_000 / fps)
-    dibs = [_rgb_to_dib(f, width, height) for f in frames]
-    frame_size = len(dibs[0]) if dibs else 0
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + struct.pack("<I", len(body)) + body + pad
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    avih = struct.pack(
-        "<14I",
-        usec_pf, frame_size * int(fps), 0, 0x10, len(dibs), 0, 1,
-        frame_size, width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        # dwScale=1, dwRate=fps → rate/scale is the frame rate
-        b"vids", b"DIB ", 0, 0, 0, 0, 1,
-        int(fps), 0, len(dibs), frame_size, 0, 0, 0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, frame_size, 0, 0, 0, 0
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", d) for d in dibs))
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-VIDEO_FRAME_SCHEMA = (
-    "media_id long, frame_idx int, ts_ms long, width int, height int, "
-    "frame binary"
-)
-
-
-def sample_video_frames(
-    media: DataFrame,
-    fps: float = 1.0,
-    max_frames: int = 16,
-    decoder: Callable[[bytes], dict] | None = None,
-) -> DataFrame:
-    """Evenly-spaced frame sampling over a video column — the execution of
-    the :func:`frame_sample_indices` plan: decode the container, keep the
-    frame nearest each sampled timestamp, emit one row per kept frame as
-    a PPM payload (so downstream image operators — `extract_features`,
-    `resize_media` — consume frames with no extra plumbing). Map-only."""
-    import pandas as pd
-
-    if decoder is None:
-        decoder = avi_decode
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "frame_idx", "ts_ms", "width", "height", "frame"
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                v = decoder(bytes(content))
-                n = len(v["frames"])
-                if n == 0 or v["fps"] <= 0:
-                    continue
-                frame_ms = 1000.0 / v["fps"]
-                dur = int(n * frame_ms)
-                # CEILING division: floor makes range() overshoot the cap
-                # by one (17 s at max 16 -> stride 1062 -> 17 samples)
-                stride = max(int(1000 / fps), -(-dur // max_frames))
-                for ts in range(0, dur, stride):
-                    idx = min(int(ts / frame_ms), n - 1)
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["ts_ms"].append(ts)
-                    rows["width"].append(v["width"])
-                    rows["height"].append(v["height"])
-                    rows["frame"].append(
-                        ppm_encode(v["width"], v["height"], v["frames"][idx])
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "content").mapInPandas(
-        run, VIDEO_FRAME_SCHEMA
-    )
-
-
-def frame_sample_indices(
-    duration_ms: Column, fps: float = 1.0, max_frames: int = 16
-) -> Column:
-    """Frame-sampling plan: evenly spaced frame timestamps (ms) per video.
-
-    Pure expression (no UDF): ``sequence`` over the duration with a stride
-    derived from fps, capped at ``max_frames`` — the sampling *plan* that a
-    decode UDF would consume.
-    """
-    stride = F.greatest(
-        F.lit(int(1000 / fps)),
-        # ceiling, not floor: a floor stride lets sequence() emit
-        # max_frames+1 timestamps when duration isn't a multiple
-        F.ceil(duration_ms / F.lit(max_frames)).cast("long"),
-    )
-    return F.when(
-        duration_ms.isNull() | (duration_ms <= 0), F.array().cast("array<long>")
-    ).otherwise(F.sequence(F.lit(0).cast("long"), duration_ms - 1, stride))

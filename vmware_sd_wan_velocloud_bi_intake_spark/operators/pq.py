@@ -268,8 +268,7 @@ def pq_score_expr(codes: str, lut: str, m: int) -> Column:
 
 def _residualize(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     """(cell, vid, nrm, r) with r = x̂ − centroid(cell) — the IVF-PQ
-    residual projection shared by the index builder and the append path
-    (codes from the two must come from the identical expression)."""
+    residual projection."""
     res_col = F.zip_with(
         F.transform(
             F.col("v"),
@@ -283,66 +282,6 @@ def _residualize(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def ivf_pq_append(
-    batch: DataFrame,
-    centroids: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-    rotation: list[list[float]] | None = None,
-    residual: bool = False,
-    round_decimals: int | None = None,
-) -> DataFrame:
-    """Encode a NEW batch at FROZEN quantizers → pq_members rows
-    (cell, vid, codes, nrm) to append to the index's members relation.
-
-    Real corpora grow; rebuilding the whole IVF-PQ index per batch is
-    O(corpus) work for O(batch) new data. This is the
-    ``lsh_bucket_table`` / ``semantic_dedup_incremental`` discipline
-    (operators/similarity.py) applied to IVF-PQ: the coarse quantizer and
-    codebooks are build-time artifacts — freeze them, broadcast-assign the
-    batch to cells, encode with the existing codebooks, and append. Cost
-    is O(batch × n_cells) assignment + O(batch) encode; the corpus is
-    never touched. Pass the SAME ``rotation``/``residual`` the index was
-    built with — codes from different spaces are not interchangeable
-    (guarded by the append-equals-rebuild test in tests/test_pq.py).
-
-    Standard caveat (faiss ships the same): appended vectors are encoded
-    at quantizers trained before they existed, so recall decays if the
-    batch distribution drifts — retrain + rebuild when drift accumulates
-    (monitor: :func:`cell_occupancy_profile` at build time →
-    :func:`occupancy_drift` per appended batch; it returns a ``retrain``
-    verdict at a documented TV-distance threshold).
-    """
-    from .similarity import _assign_cells
-
-    if rotation is not None:
-        batch = batch.withColumn(embedding, rotate_expr(embedding, rotation))
-    base = batch.select(
-        F.col(vec_id).alias("vid"),
-        as_double_array(F.col(embedding)).alias("v"),
-    ).withColumn("nrm", l2_norm(F.col("v")))
-    assigned = _assign_cells(base, centroids, round_decimals=round_decimals)
-    if not residual:
-        return assigned.select(
-            "cell",
-            "vid",
-            pq_encode_expr(
-                "v", codebooks, round_decimals=round_decimals
-            ).alias("codes"),
-            "nrm",
-        )
-    with_res = _residualize(assigned, centroids)
-    return with_res.select(
-        "cell",
-        "vid",
-        pq_encode_expr(
-            "r", codebooks, normalize=False, round_decimals=round_decimals
-        ).alias("codes"),
-        "nrm",
-    )
-
-
 def ivf_pq_index(
     emb: DataFrame,
     n_cells: int | None = None,
@@ -351,7 +290,6 @@ def ivf_pq_index(
     vec_id: str = "vec_id",
     embedding: str = "embedding",
     train_iters: int = 10,
-    rotation: list[list[float]] | None = None,
     residual: bool = False,
     round_decimals: int | None = None,
 ) -> tuple[DataFrame, DataFrame, list[list[list[float]]]]:
@@ -362,11 +300,6 @@ def ivf_pq_index(
     ``cell`` like the float IVF index. Cell assignment uses the trained
     spherical-k-means coarse quantizer from operators/similarity.
 
-    ``rotation`` (from :func:`train_opq_rotation`) moves the whole index
-    into the rotated space — coarse quantizer, codebooks, and codes; pass
-    the SAME matrix to :func:`ann_ivf_pq_topk`. Orthonormality preserves
-    cosines, so results are comparable against unrotated ground truth.
-
     ``residual=True`` is the standard IVF-PQ refinement (faiss's default
     ``IndexIVFPQ`` behavior): encode ``x̂ − centroid(cell)`` instead of
     ``x̂``. Residuals concentrate near the origin with far less variance
@@ -376,13 +309,10 @@ def ivf_pq_index(
     candidate). Codebooks train on residuals of the bounded sample, so
     the training funnel is unchanged. Pass ``residual=True`` to
     :func:`ann_ivf_pq_topk` as well — codes from the two spaces are not
-    interchangeable. Composes with ``rotation`` (everything lives in the
-    rotated space).
+    interchangeable.
     """
     from .similarity import _assign_cells, train_centroids
 
-    if rotation is not None:
-        emb = emb.withColumn(embedding, rotate_expr(embedding, rotation))
     base = emb.select(
         F.col(vec_id).alias("vid"),
         as_double_array(F.col(embedding)).alias("v"),
@@ -447,7 +377,6 @@ def ann_ivf_pq_topk(
     members: DataFrame | None = None,
     vec_id: str = "vec_id",
     embedding: str = "embedding",
-    rotation: list[list[float]] | None = None,
     residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ search: probe cells, ADC-score codes, optional exact rerank.
@@ -461,11 +390,6 @@ def ann_ivf_pq_topk(
     scores the RESIDUAL reconstruction, and ⟨q̂, centroid⟩ — already known
     analytically per probed cell — is added back once per (query, probe)
     pair, so the per-candidate hot path is unchanged (still ``m`` lookups).
-
-    Pass the index's ``rotation`` to probe/score in the rotated space the
-    codes live in. The refine rerank deliberately stays in the ORIGINAL
-    space (exact cosines are rotation-invariant), so the float members
-    relation never needs rotating.
 
     Shuffle shape: centroid broadcast → nprobe cells per query; the member
     join is keyed by cell (bucketed members ⇒ no corpus-side exchange);
@@ -481,12 +405,6 @@ def ann_ivf_pq_topk(
         F.col(vec_id).alias("query_id"),
         as_double_array(F.col(embedding)).alias("qv"),
     ).withColumn("qnrm", l2_norm(F.col("qv")))
-    # probe + LUT run in the index's space; `qv` stays original for refine
-    # (‖Rv‖ = ‖v‖, so qnrm serves both spaces)
-    probe_col = "qv"
-    if rotation is not None:
-        q = q.withColumn("qv_rot", rotate_expr("qv", rotation))
-        probe_col = "qv_rot"
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("cell_cos").desc(), F.col("cell")
     )
@@ -494,7 +412,7 @@ def ann_ivf_pq_topk(
         q.join(F.broadcast(centroids))
         .withColumn(
             "cell_cos",
-            dot(F.col(probe_col), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")),
+            dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")),
         )
         .withColumn("prn", F.row_number().over(probe_w))
         .where(F.col("prn") <= nprobe)
@@ -506,7 +424,7 @@ def ann_ivf_pq_topk(
         .select(
             "query_id",
             "qv",
-            pq_lut_expr(probe_col, codebooks).alias("lut"),
+            pq_lut_expr("qv", codebooks).alias("lut"),
             "cell",
             (F.col("cell_cos") * F.col("cnrm")).alias("cbase"),
         )
@@ -553,99 +471,6 @@ def ann_ivf_pq_topk(
     )
 
 
-def train_opq_rotation(
-    emb: DataFrame,
-    vec_id: str = "vec_id",
-    embedding: str = "embedding",
-    m: int = 8,
-) -> list[list[float]]:
-    """OPQ-lite rotation: PCA eigenbasis with eigen-dimensions STRIPED
-    across the PQ subspaces.
-
-    Real embeddings are anisotropic — a few directions carry most of the
-    variance. Plain PQ then wastes codebook capacity: whichever subspace
-    happens to hold the high-variance dims dominates quantization error.
-    The classic OPQ fix (Ge et al., the non-parametric variant's
-    initialization): rotate into the PCA basis, then deal eigen-dims
-    round-robin to subspaces (dim i → subspace i mod m) so each subspace
-    receives an even mix of high- and low-variance directions. An
-    orthonormal rotation preserves dot products, so rotating BOTH corpus
-    and queries leaves true cosines untouched — only quantization error
-    changes.
-
-    The covariance is distributed: each partition reduces its Arrow
-    batches to (XᵀX, Σx, n) partials via numpy — d×d doubles per
-    PARTITION, not per row — and the driver sums the partials and runs
-    the d×d eigendecomposition (64×64 here: microseconds). Deterministic
-    for a fixed partitioning (partial summation order follows partition
-    ids); the sign convention (largest-|component| positive) fixes the
-    eigenvector gauge.
-
-    Returns the d×d rotation R as nested lists; apply with
-    :func:`rotate_expr` (rows become ``R·v`` in the striped order).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    base = emb.select(as_double_array(F.col(embedding)).alias("v"))
-
-    def partials(batches):
-        for pdf in batches:
-            X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            yield pd.DataFrame(
-                {
-                    "xtx": [X.T @ X],
-                    "sx": [X.sum(axis=0)],
-                    "n": [len(X)],
-                }
-            )
-
-    rows = base.mapInPandas(
-        partials, "xtx array<array<double>>, sx array<double>, n long"
-    ).collect()
-    xtx = sum(np.asarray(r["xtx"]) for r in rows)
-    sx = sum(np.asarray(r["sx"]) for r in rows)
-    n = sum(r["n"] for r in rows)
-    mean = sx / max(n, 1)
-    cov = xtx / max(n, 1) - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)  # ascending eigenvalues
-    order = np.argsort(evals)[::-1]  # descending variance
-    evecs = evecs[:, order]
-    # deterministic sign: make each eigenvector's largest-|.| entry positive
-    for j in range(evecs.shape[1]):
-        i = int(np.argmax(np.abs(evecs[:, j])))
-        if evecs[i, j] < 0:
-            evecs[:, j] = -evecs[:, j]
-    d = evecs.shape[0]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    # striped allocation: output dim position for PCA component c is
-    # (c mod m)*dsub + c//m — subspace (c mod m) receives components
-    # c, c+m, c+2m, ... i.e. an even spread of the variance spectrum
-    dsub = d // m
-    perm = np.empty(d, dtype=np.int64)
-    for c in range(d):
-        perm[(c % m) * dsub + c // m] = c
-    R = evecs[:, perm].T  # rows of R are the (striped) eigen-directions
-    return [[float(x) for x in row] for row in R]
-
-
-def rotate_expr(v: str, rotation: list[list[float]]) -> Column:
-    """``R·v`` over the raw vector column named ``v`` — batched numpy
-    matmul (same kernel discipline as encode/LUT). Rotate corpus AND
-    queries with the SAME matrix; orthonormality preserves true cosines.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    R = np.asarray(rotation, dtype=np.float64)
-
-    @pandas_udf("array<double>")
-    def rot(vs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
-        return pd.Series(list(X @ R.T))
-
-    return rot(F.col(v))
-
-
 def cell_occupancy_profile(members: DataFrame) -> dict:
     """Per-cell occupancy of an IVF(-PQ) members relation, plus the skew
     statistics a drift monitor reads.
@@ -677,9 +502,9 @@ def occupancy_drift(
     retrain_threshold: float = 0.25,
 ) -> dict:
     """Distribution drift of an appended batch vs the index's build-time
-    occupancy — the monitor :func:`ivf_pq_append`'s caveat calls for.
+    occupancy.
 
-    Appends encode at quantizers trained before the batch existed; when
+    Appends assign at quantizers trained before the batch existed; when
     the batch's data distribution shifts, its coarse-cell histogram
     diverges from the corpus's (new-topic mass piles into a few
     ill-fitting cells). The statistic is total-variation distance between

@@ -35,6 +35,9 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     ``ndv_approx`` is HLL++ at default precision (±~2.3%); min/max are
     string-rendered for a heterogeneous long-form schema. Complex types
     get NULL ndv/min/max (nulls-only profile).
+
+    No pipeline calls it: kept as the full-scan reference that the merged
+    incremental statistics (operators/incstats.py) are checked against.
     """
     cols = columns if columns is not None else df.columns
     missing = [c for c in cols if c not in df.columns]

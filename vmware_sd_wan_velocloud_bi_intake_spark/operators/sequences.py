@@ -99,6 +99,9 @@ def qoe_outage_summary(
     - blackout_samples   := Σ run_len over those islands
     - *_minutes          := samples × 7.12 (exact: n·712/60 as one division;
       the reference rounds to 3 and coerces 0.0→0, powerbi_main_fun.py:1875-1882)
+
+    No caller yet: the catalog's events query fuses the same islands pass
+    with its other aggregates; this is the reference's QoE loop on its own.
     """
     islands = island_table(df, key, order, state)
     is_brown = (F.col(state) == STATE_RED) & (F.col("island_prev") == STATE_GREEN)

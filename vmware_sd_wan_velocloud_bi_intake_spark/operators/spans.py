@@ -59,9 +59,8 @@ _HASH_FNS = {
 
 
 def _tokens(text_col: str) -> Column:
-    # raw \S+ runs, exactly chunk_documents' tokenizer: output is training
-    # text, so casing/punctuation must survive (normalize_text would
-    # lowercase the corpus)
+    # raw \S+ runs: output is training text, so casing/punctuation must
+    # survive (normalize_text would lowercase the corpus)
     return F.regexp_extract_all(
         F.coalesce(F.col(text_col), F.lit("")), F.lit(r"\S+"), 0
     )
@@ -204,8 +203,8 @@ def remove_duplicate_spans(
 
     Documents with nothing to cut keep their ORIGINAL text byte-for-byte;
     a cut document's text is rebuilt from its surviving tokens, so its
-    whitespace runs collapse to single spaces (the chunk_documents
-    trade-off — inherent to token-array surgery, disclosed not hidden). A
+    whitespace runs collapse to single spaces (a trade-off inherent to
+    token-array surgery, disclosed not hidden). A
     document that was entirely duplicated content comes back as the empty
     string; the downstream quality gate is where such rows die, not a
     silent deletion here.

@@ -26,6 +26,10 @@ Semantics mirrored (file:line into the reference):
 - SNMPv3 enabled with profile fallback (snmpv3_status, :2264-2305)
 - business-policy counts: flat rules + per-segment rules
   (:1347-1362, process_segment_pb :2196-2227)
+
+No caller yet: feeding it means adding ``configuration`` to the edge
+fetch's projection, which changes the landed tables; until then it is the
+reference's config-stack branch (powerbi_main_fun.py:1982) on its own.
 """
 
 from __future__ import annotations

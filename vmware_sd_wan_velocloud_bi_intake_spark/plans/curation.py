@@ -196,8 +196,8 @@ def curate_corpus(
         bands=bands,
         shingle_n=shingle_n,
     )
-    # anti-join the component losers directly: component_survivors would
-    # re-scan exact_kept on its own side of an extra join for no reason
+    # one survivor per cluster: the component's minimum id; anti-join the
+    # rest directly
     comp = dedup.duplicate_components(pairs)
     losers = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
     near_kept = exact_kept.join(losers, "doc_id", "left_anti")

@@ -76,6 +76,9 @@ METRICS_SCHEMA = T.StructType(
 def bronze_gateways(
     spark: SparkSession, vcos: list[str], transport_factory
 ) -> DataFrame:
+    """Raw gateway payloads, one fetch task per VCO. No caller yet: the
+    catalog's g01 builds its gateways from the catalog tables; this is the
+    reference's ``gateway_script.py`` gateway fetch."""
     raw = fetch_payloads(
         spark,
         [{"vco": v} for v in vcos],
@@ -133,7 +136,9 @@ def gateway_metrics_max(
     """24 h status series → per-gateway max-aggregates (A14).
 
     One fetch task per (vco, gateway) with the interval pushed down (S4);
-    the rollup is a single groupBy keyed by gateway.
+    the rollup is a single groupBy keyed by gateway. No caller yet: the
+    catalog's g01 rolls its series up from the catalog tables; this is the
+    reference's ``gateway_script.py:252-262`` metrics pass.
     """
     # endpoint COLUMN straight from the silver gateways DataFrame — the
     # per-gateway fan-out is planned distributed, no driver round-trip

@@ -418,7 +418,10 @@ SELECT key, 'events_only' FROM (
 # for the accuracy suite in tests/test_sketches.py.
 # --------------------------------------------------------------------------
 def sketch_stats_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production shape: sketch-only aggregation, no exact anchors."""
+    """Production shape: sketch-only aggregation, no exact anchors.
+
+    No catalog entry runs it: kept as the raw sketch form whose estimates
+    tests check against the catalog's hash-checked exact anchors."""
     li = load_table(spark, sf_dir, "lineitem")
     # one quantile sketch evaluated at both fractions (the scalar form builds
     # a separate sketch buffer per call — measured ~2.5x dearer)

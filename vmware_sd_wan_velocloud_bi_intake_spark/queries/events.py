@@ -465,6 +465,8 @@ FROM pre
 # form is kept as the U3 implementation for the sequence property tests.
 # --------------------------------------------------------------------------
 def a09_score_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The standalone U3 quirk fold, kept as the subject of the sequence
+    property tests (the catalog runs the fold inside ``a09_score_intended``)."""
     ev = load_table(spark, sf_dir, "events")
     seq = ev.groupBy("user_id").agg(
         F.array_sort(

@@ -24,7 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.velocloud import gold_customer_rollup, silver_edges, silver_links
 from .base import Q

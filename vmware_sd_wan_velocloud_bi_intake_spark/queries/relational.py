@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.banding import band_by_thresholds, count_band
+from ..functions.banding import band_by_thresholds
 from ..functions.exact import dec
 from ..functions.sanitize import clamp_pct, sanitize_text, valid_name
 from ..sources.tables import load_table

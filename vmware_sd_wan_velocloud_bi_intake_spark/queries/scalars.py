@@ -264,11 +264,11 @@ def g01_gateway_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # behind json-explode/groupBy stages Catalyst can't size, so the hint
     # is explicit. Profile-justified rather than profiled per run:
     # tests/test_gateway_pipeline.py::test_g01_broadcasts_are_profile_justified
-    # runs plans/hints.broadcast_decision over both sides' actual
-    # profile_table output and asserts the decision AND the physical
-    # BroadcastHashJoin (re-profiling gateway-grain relations on every
-    # query run would re-execute their explode/groupBy subplans just to
-    # re-learn a bound the grain already guarantees).
+    # checks both sides' actual profile_table row counts against the
+    # fleet and asserts the physical BroadcastHashJoin (re-profiling
+    # gateway-grain relations on every query run would re-execute their
+    # explode/groupBy subplans just to re-learn a bound the grain already
+    # guarantees).
     per_gw = enriched.join(F.broadcast(met), "gateway_id", "left").join(
         F.broadcast(rel_cnt), "gateway_uuid", "left"
     )

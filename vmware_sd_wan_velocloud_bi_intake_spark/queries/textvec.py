@@ -50,14 +50,12 @@ _LM_TRAIN_MOD = 5
 def txt_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
-    # PII columns run over the RAW text — the production shape (rounds 2–5
-    # concatenated a synthetic contact line per row so the oracle would
-    # exercise all four patterns; that harness logic tripled the vehicle at
-    # sf0.1 and now lives in ``txt_pii_augmented`` below, oracle-verified at
-    # sf0.01 by tests/test_text_pipeline.py). On PII-free fixture text the
-    # raw-text chain still verifies ordering + the no-false-positive
-    # direction cross-engine via ``pii_md5``, and a no-match regexp_replace
-    # returns its input cheaply, so the chain rides the scan at ~zero cost.
+    # PII columns run over the RAW text — the production shape; every
+    # pattern is pinned on adversarial inputs by tests/test_text_pipeline.py.
+    # On PII-free fixture text the raw-text chain still verifies ordering +
+    # the no-false-positive direction cross-engine via ``pii_md5``, and a
+    # no-match regexp_replace returns its input cheaply, so the chain rides
+    # the scan at ~zero cost.
     # Stage the shared heavy intermediates (normalized text, its token
     # array, the bigram array) as real columns: CollapseProject keeps a
     # projection boundary when a produced non-cheap expression is consumed
@@ -268,69 +266,10 @@ FROM grams
 LEFT JOIN lms USING (doc_id)
 """
 
-# --------------------------------------------------------------------------
-# All-four-PII-pattern verification vehicle (pytest-only, outside the
-# 50-entry driver window — tests/test_text_pipeline.py runs it through the
-# identical compare() harness at sf0.01). The fixture text is PII-free word
-# salad, so the hot txt_profile vehicle redacting RAW text verifies only the
-# no-false-positive direction; this vehicle appends the SAME deterministic
-# doc_id-derived contact line (email + IP + separator phone + card digits +
-# bare E.164 run) on both engines and hash-compares the md5 of the redacted
-# string — every pattern verified end-to-end without riding the sf0.1 bench.
-# --------------------------------------------------------------------------
-def txt_pii_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    aug = F.concat(
-        F.col("text"),
-        F.lit(" contact u"),
-        F.col("doc_id").cast("string"),
-        F.lit("@ex.org ip 10.1.2."),
-        (F.col("doc_id") % 250).cast("string"),
-        F.lit(" card 4111222233334444 tel 555-123-4567 raw +15551234567"),
-    )
-    return docs.select(
-        "doc_id",
-        text.pii_count(aug).alias("n_pii"),
-        F.md5(text.redact_pii(aug)).alias("pii_md5"),
-    )
-
-
-TXT_PII_AUGMENTED_ORACLE = r"""
-WITH base AS (
-  SELECT
-    doc_id,
-    text || ' contact u' || CAST(doc_id AS VARCHAR) || '@ex.org ip 10.1.2.'
-      || CAST(doc_id % 250 AS VARCHAR)
-      || ' card 4111222233334444 tel 555-123-4567 raw +15551234567' AS aug
-  FROM documents
-), red AS (
-  -- sequential PII redaction, same pattern order as operators.text.PII_PATTERNS
-  SELECT *, regexp_replace(aug, '__PII_EMAIL__', '<EMAIL>', 'g') AS r1 FROM base
-), red2 AS (
-  SELECT *, regexp_replace(r1, '__PII_IP__', '<IP>', 'g') AS r2 FROM red
-), red3 AS (
-  SELECT *, regexp_replace(r2, '__PII_PHONE__', '<PHONE>', 'g') AS r3 FROM red2
-), red4 AS (
-  SELECT *, regexp_replace(r3, '__PII_NUM__', '<NUM>', 'g') AS r4 FROM red3
-)
-SELECT
-  doc_id,
-  len(regexp_extract_all(aug, '__PII_EMAIL__'))
-    + len(regexp_extract_all(r1, '__PII_IP__'))
-    + len(regexp_extract_all(r2, '__PII_PHONE__'))
-    + len(regexp_extract_all(r3, '__PII_NUM__')) AS n_pii,
-  md5(r4) AS pii_md5
-FROM red4
-"""
-
-
 # inject the PII pattern literals AFTER f-interpolation: the patterns contain
 # regex braces ({2,}) that an f-string would treat as replacement fields
 for _kind, _pat in text.PII_PATTERNS:
     TXT_PROFILE_ORACLE = TXT_PROFILE_ORACLE.replace(f"__PII_{_kind}__", _pat)
-    TXT_PII_AUGMENTED_ORACLE = TXT_PII_AUGMENTED_ORACLE.replace(
-        f"__PII_{_kind}__", _pat
-    )
 
 
 # --------------------------------------------------------------------------
@@ -768,60 +707,6 @@ FROM pct
 
 
 # --------------------------------------------------------------------------
-# Benchmark decontamination (beyond-ref): per-suspect-doc 3-gram overlap
-# against the distinct shingle set of an in-fixture "benchmark" blocklist
-# (doc_id % 41 == 0 — deterministic, so both engines build the identical
-# split). The blocklist shingle set BROADCASTS (benchmark suites are tiny at
-# any corpus size); the only wide dependency is one shuffle on doc_id.
-#
-# NOT in the driver catalog: the correctness window is pinned at the 50
-# consolidated entries (queries/catalog.py ORDER — every entry hash-checked
-# every round). This operator gets the SAME rigor through
-# tests/test_text_pipeline.py, which runs this query and this oracle through
-# the identical compare() harness at sf0.01.
-# --------------------------------------------------------------------------
-_DECON_THRESHOLD = 0.10
-
-
-def txt_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    block = docs.filter("doc_id % 41 = 0")
-    susp = docs.filter("doc_id % 41 != 0")
-    out = dedup.contamination_ratios(susp, block, "doc_id", "text", shingle_n=3)
-    return out.select(
-        "doc_id",
-        "n_shingles",
-        "n_hit",
-        F.round(F.col("overlap"), 6).alias("overlap_r6"),
-        (F.col("overlap") >= _DECON_THRESHOLD).alias("contaminated"),
-    )
-
-
-TXT_DECONTAMINATE_ORACLE = rf"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-  FROM documents
-), toks AS (SELECT doc_id, string_split_regex(t, '\s+') AS w FROM norm),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(w[i : i + 2], ' ') AS shingle
-  FROM toks,
-       LATERAL (SELECT unnest(generate_series(1, GREATEST(len(w) - 2, 1))) AS i)
-), block AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 41 = 0),
-susp AS (SELECT * FROM sh WHERE doc_id % 41 != 0)
-SELECT s.doc_id,
-       COUNT(*) AS n_shingles,
-       CAST(SUM(CASE WHEN b.shingle IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hit,
-       ROUND(SUM(CASE WHEN b.shingle IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-             / COUNT(*), 6) AS overlap_r6,
-       (SUM(CASE WHEN b.shingle IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-             / COUNT(*)) >= {_DECON_THRESHOLD} AS contaminated
-FROM susp s LEFT JOIN block b USING (shingle)
-GROUP BY s.doc_id
-"""
-
-
-# --------------------------------------------------------------------------
 # Multimodal byte-feature extraction (beyond-ref): binary payload + typed
 # metadata through the Arrow-batched mapInPandas decode path, with the
 # deterministic fake decoder (codecs absent in this environment). The
@@ -1253,7 +1138,9 @@ def _ivf_oracle(iters: int) -> str:
     frozen-book encode of every vector → ADC sum Σ_s ⟨q̂_s, book_s[code]⟩
     per surviving (query, neighbor) row, rounded like the engine."""
     return f"""{_lloyd_replay_prefix(iters)}{
-        _codebook_replay_sql(_PQ_M, _PQ_KSUB, _PQ_ITERS, 64 // _PQ_M)
+        _codebook_replay_sql(
+            _PQ_M, _PQ_KSUB, _PQ_ITERS, 64 // _PQ_M, rd=_PQ_RD
+        )
     }, pairs AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
   FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id <> b.vec_id
@@ -1368,6 +1255,9 @@ WHERE a.vec_id NOT IN (SELECT vec_id FROM losers)
 # keeps its driver-gated `dedup_semantic` row below.
 # --------------------------------------------------------------------------
 def dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streamed side of the semdedup ingest's two-phase SQL replay
+    (``SEMDEDUP_STREAM_ORACLE``): kept because it is the check that gates
+    streaming/semdedup.py, which ``tools/scale_check.py`` runs."""
     import os
 
     from ..streaming.ingestbase import run_file_ingest

@@ -1,24 +1,17 @@
-"""Small-file compaction: rewrite a parquet dataset into right-sized files.
+"""Parts-table compaction: fold a batch-keyed table's old partitions into
+one base partition.
 
-The operational reality of a 100 TB lake: streaming sinks, per-trigger
-micro-batches, and fine-grained upserts accrete thousands of KB-scale
-files per table; every downstream scan then pays a task per file and the
-NameNode/listing cost dwarfs the read. Compaction is the periodic rewrite
-into ``target_bytes``-sized files — the `OPTIMIZE` half of the lakehouse
-maintenance loop (the Z-order half lives in `operators/zorder.py`; pass
-``zorder_by`` to do both in one rewrite).
-
-Sizing reads the actual on-disk byte count (one directory listing, no data
-scan) and divides by the target; the rewrite is one `repartition` (or the
-Z-order range exchange) and the swap is the same staging-dir atomic
-replace as the upsert sink, so readers never observe a half-compacted
-table. Row-count identity is checked before the swap — a compaction that
-loses rows must fail loudly, not swap silently.
+Every ``foreachBatch`` ingest writes one ``_batch_id`` partition per
+micro-batch, so a long-lived stream's tables accrete O(batches)
+directories and every read pays that listing. Compaction folds the
+committed partitions into the reserved base partition — by re-aggregating
+(counts, sketches) or by concatenating rows (survivors, index rows) —
+verifies the staged copy, and swaps it in with the same rename protocol
+as the upsert sink, so readers never observe a half-compacted table.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import tempfile
@@ -26,8 +19,6 @@ import tempfile
 from pyspark.sql import SparkSession
 
 from .upsert import footer_schema, swap_into_place
-
-DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the HDFS-block-ish sweet spot
 
 BASE_PART = -1  # reserved _batch_id for a compacted parts-table base
 
@@ -199,129 +190,3 @@ def dataset_bytes(path: str) -> int:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     return total
-
-
-def plan_file_count(path: str, target_bytes: int = DEFAULT_TARGET_BYTES) -> int:
-    return max(1, math.ceil(dataset_bytes(path) / max(target_bytes, 1)))
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-    zorder_by: list[str] | None = None,
-    zorder_bits: int = 12,
-) -> int:
-    """Rewrite the dataset at ``path`` into ~``target_bytes`` files.
-
-    Returns the output file count. With ``zorder_by`` the rewrite clusters
-    on the Morton key (compaction is the natural moment to fix layout —
-    the data is being rewritten anyway, so the Z-order exchange is free
-    relative to a dedicated pass).
-    """
-    part_dirs = [
-        d
-        for d in os.listdir(path)
-        if "=" in d and os.path.isdir(os.path.join(path, d))
-    ]
-    if part_dirs:
-        # a flat rewrite would silently destroy the hive layout that
-        # partition-pruned readers and the ingests' batch-keyed dynamic
-        # overwrites depend on — compact each partition directory instead
-        raise ValueError(
-            f"compact_parquet: {path} is hive-partitioned "
-            f"(e.g. {part_dirs[0]}); compact per-partition directory"
-        )
-    df = spark.read.parquet(path)
-    n_files = plan_file_count(path, target_bytes)
-    n_before = df.count()
-    staging = tempfile.mkdtemp(
-        prefix=os.path.basename(path) + ".compact.",
-        dir=os.path.dirname(path) or ".",
-    )
-    try:
-        if zorder_by:
-            from ..operators.zorder import write_zordered
-
-            # zvalue needs >= 2^bucket_bits key values; clamp file count
-            # into the valid range instead of failing a tiny compaction
-            kbits = len(zorder_by) * zorder_bits
-            n_files = min(n_files, 1 << min(kbits, 30))
-            write_zordered(
-                df, staging, zorder_by, n_files=n_files, bits=zorder_bits
-            )
-        else:
-            df.repartition(n_files).write.mode("overwrite").parquet(staging)
-        n_after = spark.read.parquet(staging).count()
-        if n_after != n_before:
-            raise RuntimeError(
-                f"compact_parquet: row count changed {n_before} -> {n_after}; "
-                "refusing the swap"
-            )
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    # rename-based swap: a complete copy exists at every instant (the
-    # rmtree-then-replace form loses ALL copies if the replace fails and
-    # the cleanup then removes staging)
-    swap_into_place(staging, path)
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
-
-
-def _leaf_partition_dirs(path: str) -> list[str]:
-    """Hive leaf directories under ``path`` (every level is ``k=v``),
-    depth-first, deterministic order."""
-    leaves: list[str] = []
-
-    def walk(d: str) -> None:
-        subs = sorted(
-            s
-            for s in os.listdir(d)
-            if "=" in s and os.path.isdir(os.path.join(d, s))
-        )
-        if not subs:
-            if d != path:
-                leaves.append(d)
-            return
-        for s in subs:
-            walk(os.path.join(d, s))
-
-    walk(path)
-    return leaves
-
-
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-    zorder_by: list[str] | None = None,
-    zorder_bits: int = 12,
-) -> dict[str, int]:
-    """Compact a hive-partitioned dataset one leaf partition at a time.
-
-    Partition values live in the directory names, so each leaf can be
-    rewritten independently with the same staged-swap protocol as
-    :func:`compact_parquet` — the operation is atomic PER PARTITION (the
-    same granularity at which streaming sinks fragment the table and
-    commit their dynamic overwrites), and a crash leaves
-    every partition either old or new, never mixed. Leaves already at or
-    under their planned file count are skipped — the maintenance loop
-    touches only fragmented partitions, so repeated runs are cheap no-ops.
-
-    Returns {relative leaf dir: output file count} for the leaves
-    rewritten. ``zorder_by`` must not include partition columns (they are
-    constant within a leaf).
-    """
-    done: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(path):
-        files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-        if len(files) <= plan_file_count(leaf, target_bytes):
-            continue
-        done[os.path.relpath(leaf, path)] = compact_parquet(
-            spark,
-            leaf,
-            target_bytes=target_bytes,
-            zorder_by=zorder_by,
-            zorder_bits=zorder_bits,
-        )
-    return done

@@ -19,6 +19,10 @@ No database ships in this environment, so the connection is injected as a
 in-memory DBAPI; production passes ``lambda: mysql.connector.connect(...)``.
 Used from batch code directly or as ``df.writeStream.foreachBatch(
 jdbc_upsert_writer(...))`` for streaming upserts.
+
+No caller yet: the intake lands parquet (:mod:`sinks.upsert`); this
+restates the reference's MySQL sink (``fun_mysql_inserts.py``) for a
+database-backed deployment.
 """
 
 from __future__ import annotations

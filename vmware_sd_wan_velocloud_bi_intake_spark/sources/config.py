@@ -7,6 +7,10 @@ DataFrame feeding :func:`..sources.api.fetch_payloads` — the list is the
 unit of source parallelism (T6), so it is materialized as one row per
 endpoint and repartitioned across the cluster, never broadcast as closure
 state.
+
+No caller yet: ``run_pipeline`` takes its endpoint list as an argument;
+this is the reference's ``DataFiles/vco_list.yml`` reader for an entry
+point that starts from the file.
 """
 
 from __future__ import annotations

@@ -182,7 +182,8 @@ class FlakyLicenseTransport(FakeVcoTransport):
     ``licenses`` (the reference's observed ApiException shape on older VCOs,
     ``Functions/vco_calls.py:178-186``); every other call behaves like
     :class:`FakeVcoTransport`. Deterministic, hermetic, importable on
-    executors via the ``transport`` option.
+    executors via the ``transport`` option. A test fixture: it lives in the
+    package, beside the transport it extends, so executors can import it.
     """
 
     def __call__(self, method: str, params: dict) -> object:

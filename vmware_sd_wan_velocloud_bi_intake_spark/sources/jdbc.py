@@ -24,6 +24,10 @@ Two transports behind one calling convention:
 
 Both paths push the per-partition predicate to the database: the engine
 never transports rows a partition clause excludes.
+
+No caller yet: the intake lands parquet, not MySQL; this restates the
+reference's state reads (``fun_mysql_query.py``) for a database-backed
+deployment.
 """
 
 from __future__ import annotations

@@ -182,24 +182,6 @@ def check_sequence(knobs_path: str, fmt: str, batch_id: int, fp: str) -> None:
         )
 
 
-def replay_folded_head(knobs_path: str, fmt: str, batch_id: int, fp: str) -> bool:
-    """True when this batch is a checkpoint-lagged replay of a head batch
-    whose partitions a REBUILD already folded into the base — its content
-    is fully represented, so the caller must no-op (re-processing would
-    either duplicate rows or, where an own-batch exclusion is in play,
-    self-match everything into an empty partition). Records the head
-    before returning True so the checkpoint can commit and the stream
-    moves on. Call AFTER :func:`check_sequence` (fp equality at the head
-    is already enforced there)."""
-    from ..functions.artifacts import read_json_artifact
-
-    rt = read_json_artifact(knobs_path, fmt).get("rebuilt_through")
-    if rt is not None and batch_id <= rt:
-        record_head(knobs_path, fmt, batch_id, fp)
-        return True
-    return False
-
-
 def write_drift_part(
     spark, drift_dir: str, batch_id: int, tv: float, retrain: bool, threshold: float
 ) -> None:
@@ -222,7 +204,8 @@ def write_drift_part(
 
 
 def backfill_occupancy_baseline(spark, index_dir: str, fmt: str) -> None:
-    """Shared body of the two ingests' ``backfill_occupancy``: derive the
+    """Shared body of ``streaming.semdedup.backfill_occupancy`` (the remedy
+    its missing-baseline error names): derive the
     occupancy baseline from the FULL current members (their ``cell``
     column is all the profile needs — PQ members carry no vectors and
     don't have to) and seed the drift series with a base part. Run while
@@ -253,23 +236,6 @@ def backfill_occupancy_baseline(spark, index_dir: str, fmt: str) -> None:
     )
     write_drift_part(
         spark, os.path.join(root, "drift_parts"), BASE_PART, 0.0, False, threshold
-    )
-
-
-def drift_parts_history(spark, drift_dir: str) -> DataFrame:
-    """The monitor's raw series: one row per batch (batch, tv_distance,
-    retrain, retrain_threshold) plus the ``_batch_id`` write key."""
-    return spark.read.parquet(drift_dir)
-
-
-def drift_needs_retrain(spark, drift_dir: str) -> bool:
-    """True when any batch drifted past its threshold — answered from the
-    one-row drift parts alone, never a members scan."""
-    return not (
-        drift_parts_history(spark, drift_dir)
-        .where(F.col("retrain"))
-        .limit(1)
-        .isEmpty()
     )
 
 

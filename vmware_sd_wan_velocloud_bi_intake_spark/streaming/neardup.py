@@ -212,8 +212,7 @@ def make_near_dup_ingest(
     statistics part for its NOVEL rows (operators/incstats.py — same
     batch-keyed replay idempotency), so
     ``incstats.merged_stats(spark, stats_dir, [doc_id, text_col])`` is
-    always a gate-ready profile of the survivor corpus without scanning
-    it — feed it to ``publish_stream_snapshot(profile_rows=...)``.
+    always a profile of the survivor corpus without scanning it.
     """
     summary_dir = index_dir.rstrip("/") + "_summary_parts"
     knobs = {
@@ -604,7 +603,8 @@ def backfill_stats(
     Run it while the stream is STOPPED (the base must cover everything
     already committed); later compactions fold the base part forward like
     any other old part. One full scan of the survivors — paid once, at
-    upgrade, never per batch."""
+    upgrade, never per batch. No pipeline calls it: it is the remedy the
+    ingest's stats-coverage error names."""
     from ..operators.incstats import write_stats_part
 
     write_stats_part(
@@ -617,5 +617,6 @@ def backfill_stats(
 
 
 def read_survivors(spark, survivors_dir: str) -> DataFrame:
-    """The accumulated survivor corpus (drops the bookkeeping column)."""
+    """The accumulated survivor corpus (drops the bookkeeping column) —
+    the reader through which the ingest's output is checked."""
     return spark.read.parquet(survivors_dir).drop("_batch_id")

@@ -23,13 +23,14 @@ Scale: state lives in storage, not the state store. Per batch the work
 is one broadcast assignment + one cell-keyed join + the in-batch pair
 expansion (n²/cells, chunked BLAS kernel) — write the members bucketed
 on ``cell`` for an exchange-free corpus side at rest. The quantizer is
-frozen after the build batch, so cells drift as topics shift — the same
-retrain trade-off ``ivf_pq_append`` documents; monitor with
-``operators.pq.occupancy_drift`` over the members relation if the
-stream outlives its build distribution.
+frozen after the build batch, so cells drift as topics shift: every
+batch's ``operators.pq.occupancy_drift`` verdict against the build
+batch's cell histogram lands in ``<index_dir>/drift_parts``.
 
 Layout: ``<index_dir>/centroids`` (once), ``<index_dir>/members``
 ∂ _batch_id, ``<survivors_dir>`` ∂ _batch_id (original batch columns),
+``<index_dir>/occupancy.json`` (the build-time cell histogram),
+``<index_dir>/drift_parts`` ∂ _batch_id (one drift verdict per batch),
 ``<index_dir>_knobs.json`` (fingerprint + committed head).
 """
 
@@ -95,7 +96,6 @@ def make_semantic_dedup_ingest(
             check_sequence,
             fingerprint_is_empty,
             record_head,
-            replay_folded_head,
         )
 
         spark = batch_df.sparkSession
@@ -112,12 +112,6 @@ def make_semantic_dedup_ingest(
         )
         fp = batch_fingerprint(batch_df, vec_id)
         check_sequence(knobs_path, "semdedup-knobs/v1", batch_id, fp)
-        if replay_folded_head(knobs_path, "semdedup-knobs/v1", batch_id, fp):
-            # a rebuild folded this head batch's member rows into the base
-            # partition — they are no longer excluded by the own-batch
-            # filter, so a checkpoint-lagged replay would self-match every
-            # row and overwrite its survivors partition as EMPTY
-            return
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             # batches < batch_id are committed (foreachBatch serializes
             # epochs) — never this batch's own partition, so the
@@ -274,42 +268,28 @@ def make_semantic_dedup_ingest(
         # and would trip the monitor on a perfectly stationary stream —
         # the baseline is the full build batch for the same reason.
         # r14: the profile is ONE aggregation job over (batch_df, cents)
-        # with no dependency on the two writes below — run all three
-        # concurrently (§2.6) and join before the drift verdict that
-        # consumes the profile. A profile failure now surfaces after the
-        # two writes instead of before them; that partial-publish state
-        # is the same crash window the batch's replay already rewrites
-        # byte-identically (the seed_baseline path pins the build case).
-        # The pool is per BATCH and shut down with it: a pool per ingest
-        # would hold its thread for the process's lifetime.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
+        # with no dependency on the two writes below — run it beside them
+        # (§2.6) and join before the drift verdict that consumes the
+        # profile. A profile failure now surfaces after the two writes
+        # instead of before them; that partial-publish state is the same
+        # crash window the batch's replay already rewrites byte-identically
+        # (the seed_baseline path pins the build case).
+        from ..functions.conf import run_together
 
         novel = novel.persist()
-        pool = ThreadPoolExecutor(max_workers=1)
-        profile_future = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: cell_occupancy_profile(
-                    sim.ivf_members(
-                        batch_df,
-                        cents,
-                        vec_id=vec_id,
-                        embedding=embedding,
-                        round_decimals=round_decimals,
-                    )
+
+        def profile():
+            return cell_occupancy_profile(
+                sim.ivf_members(
+                    batch_df,
+                    cents,
+                    vec_id=vec_id,
+                    embedding=embedding,
+                    round_decimals=round_decimals,
                 )
             )
-        )
-        try:
-            member_rows = sim.ivf_members(
-                novel,
-                cents,
-                vec_id=vec_id,
-                embedding=embedding,
-                round_decimals=round_decimals,
-            )
 
+        def publish():
             # the two writes stay SEQUENTIAL relative to each other: both
             # materialize the persisted `novel` chain, and running them
             # concurrently would compute it twice before the cache
@@ -322,13 +302,22 @@ def make_semantic_dedup_ingest(
                 .parquet(survivors_dir)
             )
             (
-                member_rows.withColumn("_batch_id", F.lit(int(batch_id)))
+                sim.ivf_members(
+                    novel,
+                    cents,
+                    vec_id=vec_id,
+                    embedding=embedding,
+                    round_decimals=round_decimals,
+                )
+                .withColumn("_batch_id", F.lit(int(batch_id)))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
                 .parquet(members_dir)
             )
-            batch_profile = profile_future.result()
+
+        try:
+            batch_profile, _ = run_together(spark, [profile, publish])
             if building or seed_baseline:
                 # seed_baseline is the build batch REPLAYING across its
                 # own crash window: batch_profile is the same full-batch
@@ -358,7 +347,6 @@ def make_semantic_dedup_ingest(
             record_head(knobs_path, "semdedup-knobs/v1", batch_id, fp)
         finally:
             novel.unpersist()
-            pool.shutdown()
 
     return ingest
 
@@ -381,133 +369,14 @@ def backfill_occupancy(spark, index_dir: str) -> None:
     This backfill's survivor-derived profile is therefore only ever
     used for the legacy case, where the original build batch's
     pre-dedup rows are genuinely gone; the drift rule's RELATIVE
-    threshold absorbs the survivor-vs-full shift there."""
+    threshold absorbs the survivor-vs-full shift there. No pipeline calls
+    it: it is the remedy the ingest's missing-baseline error names."""
     from .ingestbase import backfill_occupancy_baseline
 
     backfill_occupancy_baseline(spark, index_dir, "semdedup-knobs/v1")
 
 
-def semantic_drift_history(spark, index_dir: str) -> DataFrame:
-    """The quantizer-drift series of a semantic-dedup index: one row per
-    batch's drift part (``ingestbase.drift_parts_history``)."""
-    from .ingestbase import drift_parts_history
-
-    return drift_parts_history(
-        spark, os.path.join(index_dir.rstrip("/"), "drift_parts")
-    )
-
-
-def semantic_needs_retrain(spark, index_dir: str) -> bool:
-    """True when any batch's cell histogram drifted past the threshold —
-    answered from the drift parts alone. The planned response is
-    :func:`rebuild_semantic_index`. Drift here degrades SemDeDup's
-    recall (ill-fitting cells separate semantic twins into different
-    clusters, so pairs stop being compared), never its precision —
-    survivors already admitted stay admitted."""
-    from .ingestbase import drift_needs_retrain
-
-    return drift_needs_retrain(
-        spark, os.path.join(index_dir.rstrip("/"), "drift_parts")
-    )
-
-
-def rebuild_semantic_index(spark, index_dir: str) -> None:
-    """The action :func:`semantic_needs_retrain` points to — retrain the
-    coarse quantizer and re-assign every member to the new cells.
-
-    Unlike the ANN rebuild this needs NO external corpus: semantic
-    members carry their raw vectors, so the rebuild reads them back,
-    retrains (``n_cells`` re-resolved from the CURRENT corpus size when
-    the knob was None — cells grow with the corpus, restoring the
-    n²/cells pair-space bound), re-assigns, and swaps the whole index
-    root in atomically (staging + ``swap_into_place``; a crash leaves
-    the original intact). Past survivor DECISIONS are history and stay
-    untouched — the rebuild improves which future pairs get compared,
-    it does not re-deduplicate the corpus. Run while the stream is
-    STOPPED after a clean stop; ``rebuilt_through`` makes a
-    checkpoint-lagged head-batch replay a safe no-op (its member rows
-    are folded into the base and would otherwise self-match into an
-    empty survivors partition)."""
-    import math as _math
-    import shutil
-    import tempfile
-
-    from ..functions.artifacts import atomic_write_json, read_json_artifact
-    from ..operators.pq import cell_occupancy_profile
-    from ..sinks.compact import BASE_PART
-    from .ingestbase import write_drift_part
-
-    root = index_dir.rstrip("/")
-    knobs_path = root + "_knobs.json"
-    stored = read_json_artifact(knobs_path, "semdedup-knobs/v1")
-    members = spark.read.parquet(os.path.join(root, "members")).drop("_batch_id")
-    corpus = members.select(
-        F.col("vid").alias(stored["vec_id"]),
-        F.col("v").alias(stored["embedding"]),
-    )
-    cells = stored["n_cells"] or max(
-        8, _math.ceil(_math.sqrt(corpus.count()))
-    )
-    cents = sim.train_centroids(
-        corpus,
-        cells,
-        vec_id=stored["vec_id"],
-        embedding=stored["embedding"],
-        iters=stored["train_iters"],
-        round_decimals=stored["round_decimals"],
-    )
-    reassigned = sim.ivf_members(
-        corpus,
-        cents,
-        vec_id=stored["vec_id"],
-        embedding=stored["embedding"],
-        round_decimals=stored["round_decimals"],
-    ).persist()
-    staging = tempfile.mkdtemp(
-        prefix=os.path.basename(root) + ".rebuild.",
-        dir=os.path.dirname(root) or ".",
-    )
-    try:
-        (
-            reassigned.withColumn("_batch_id", F.lit(BASE_PART))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .parquet(os.path.join(staging, "members"))
-        )
-        cents.write.mode("overwrite").parquet(os.path.join(staging, "centroids"))
-        atomic_write_json(
-            os.path.join(staging, "occupancy.json"),
-            {
-                "format": "ann-occupancy/v1",
-                "profile": cell_occupancy_profile(reassigned),
-            },
-        )
-        write_drift_part(
-            spark,
-            os.path.join(staging, "drift_parts"),
-            BASE_PART,
-            0.0,
-            False,
-            stored.get("retrain_threshold", 0.25),  # legacy knobs predate it
-        )
-        if stored.get("last_batch_id") is not None:
-            atomic_write_json(
-                knobs_path,
-                {
-                    **read_json_artifact(knobs_path, "semdedup-knobs/v1"),
-                    "rebuilt_through": int(stored["last_batch_id"]),
-                },
-            )
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        reassigned.unpersist()
-        raise
-    reassigned.unpersist()
-    from ..sinks.upsert import swap_into_place
-
-    swap_into_place(staging, root)
-
-
 def read_semantic_survivors(spark, survivors_dir: str) -> DataFrame:
-    """The accumulated semantically-deduped corpus (bookkeeping dropped)."""
+    """The accumulated semantically-deduped corpus (bookkeeping dropped) —
+    the reader through which the ingest's output is checked."""
     return spark.read.parquet(survivors_dir).drop("_batch_id")
