@@ -257,6 +257,26 @@ def test_checkpoint_cadence_does_not_change_training(spark, docs):
         bpe.train_bpe(docs, num_merges=2, checkpoint_every=0)
 
 
+def test_bpe_artifact_roundtrip(spark, docs, tmp_path):
+    """save_bpe → load_bpe must reproduce the merge table exactly, and a
+    reloaded tokenizer must encode identically to the in-memory one
+    (the artifact IS the tokenizer — crash-safe atomic write)."""
+    merges = bpe.train_bpe(docs, num_merges=6)
+    p = str(tmp_path / "tok" / "merges.json")
+    bpe.save_bpe(merges, p)
+    back = bpe.load_bpe(spark, p)
+    assert sorted(map(tuple, merges.collect())) == sorted(map(tuple, back.collect()))
+    a = {r["doc_id"]: r["tokens"] for r in bpe.bpe_encode(docs, merges).collect()}
+    b = {r["doc_id"]: r["tokens"] for r in bpe.bpe_encode(docs, back).collect()}
+    assert a == b
+    with pytest.raises(ValueError, match="bpe-merges/v1"):
+        import json
+        bad = str(tmp_path / "bad.json")
+        with open(bad, "w") as f:
+            json.dump({"format": "other"}, f)
+        bpe.load_bpe(spark, bad)
+
+
 def test_merge_pass_three_way_property(spark):
     """The txt_bpe oracle's core claim: one BPE merge sweep == SQL
     replace() on the chr(31)-doubled-separator symbol string. Pin it
@@ -489,3 +509,19 @@ def test_multi_sweep_key_encoding_is_injective_for_nul_symbols(spark):
     assert got[0]["m"] == ["a\x00b"]
     assert got[1]["m"] == ["a", "\x00b"]
     assert got[2]["m"] == ["a\x00", "\x00b"]
+
+
+def test_batched_trainer_artifact_roundtrip(spark, tmp_path):
+    """train_bpe_batched's merge table shares the trainer schema, so the
+    save/load artifact path and the encoder consume it unchanged."""
+    rows = [(i, "banana bandana cabana " * 3) for i in range(10)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    merges = bpe.train_bpe_batched(df, num_merges=6, merge_batch=3)
+    path = str(tmp_path / "bpe_batched.json")
+    bpe.save_bpe(merges, path)
+    again = bpe.load_bpe(spark, path)
+    assert sorted(map(tuple, merges.collect())) == sorted(
+        map(tuple, again.collect())
+    )
+    enc = bpe.bpe_encode(df.limit(3), again)
+    assert enc.count() == 3

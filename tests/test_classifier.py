@@ -113,7 +113,7 @@ def test_provenance_classifier_end_to_end(spark, sf_smoke):
     w, b = classifier.train_quality_classifier(
         docs, positive_sources={"src0", "src1"}, iters=4
     )
-    assert len(w) == 5  # text_features' width
+    assert len(w) == classifier.N_FEATURES
     scored = classifier.score_quality(docs, w, b)
     stats = scored.agg(
         F.min("p_quality"), F.max("p_quality"), F.count("*")
@@ -124,7 +124,16 @@ def test_provenance_classifier_end_to_end(spark, sf_smoke):
 
 def test_scoring_is_narrow(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents")
-    scored = classifier.score_quality(docs, [0.1] * 5, 0.0)
+    scored = classifier.score_quality(docs, [0.1] * classifier.N_FEATURES, 0.0)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "pythonUDF" not in plan.lower()
+
+
+def test_logreg_artifact_roundtrip(spark, tmp_path):
+    from vmware_sd_wan_velocloud_bi_intake_spark.operators import classifier
+
+    p = str(tmp_path / "m" / "quality.json")
+    classifier.save_logreg([0.1, -0.25, 3.5], -1.75, p)
+    w, b = classifier.load_logreg(p)
+    assert w == [0.1, -0.25, 3.5] and b == -1.75

@@ -1,7 +1,7 @@
 """Incremental mergeable statistics (operators/incstats.py): batching
 invariance (N parts fold to the same numbers as one), replay idempotency
-of the batch-keyed part writes, and agreement with the full-scan
-profile."""
+of the batch-keyed part writes, agreement with the full-scan profile, and
+the expectation-gate composition that is the module's reason to exist."""
 
 from __future__ import annotations
 
@@ -87,6 +87,51 @@ def test_all_null_and_empty_edges(spark, tmp_path):
         incstats.merged_stats(spark, str(tmp_path / "missing"), ["text"])
     with pytest.raises(ValueError, match="unknown columns"):
         incstats.stats_part(allnull, ["nope"])
+
+
+def test_incremental_profile_feeds_the_gate_and_snapshot(spark, tmp_path):
+    """The point of the module: a streaming corpus gates + publishes on
+    O(batches) merged stats instead of a full profile scan — including
+    the drift rules against a previous incremental baseline."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
+        ExpectationError,
+        check_expectations,
+    )
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.publish import (
+        publish_stream_snapshot,
+    )
+    from vmware_sd_wan_velocloud_bi_intake_spark.sinks import versioned
+
+    docs = _docs(spark).where(F.col("text").isNotNull())
+    surv = str(tmp_path / "surv")
+    parts = str(tmp_path / "stats")
+    b0 = docs.where("doc_id < 300")
+    (
+        b0.withColumn("_batch_id", F.lit(0))
+        .write.partitionBy("_batch_id").mode("overwrite").parquet(surv)
+    )
+    incstats.write_stats_part(b0, ["doc_id", "text"], parts, 0)
+    rules = [
+        {"column": "doc_id", "min_rows": 1, "max_null_frac": 0.0,
+         "min_row_ratio": 0.8},
+        {"column": "text", "max_null_frac": 0.0},
+    ]
+    prof0 = incstats.merged_stats(spark, parts, ["doc_id", "text"])
+    root = str(tmp_path / "root")
+    v1 = publish_stream_snapshot(
+        spark, surv, root, rules=rules, profile_rows=prof0
+    )
+    assert v1 == 1
+    assert versioned.version_profile(root) == prof0  # manifest carries it
+    # drift: a merged profile claiming far fewer rows trips the ratio
+    shrunk = [dict(r, n_rows=10) for r in prof0]
+    got = check_expectations(shrunk, rules, previous=prof0)
+    assert {v["rule"] for v in got} == {"min_row_ratio"}
+    with pytest.raises(ExpectationError, match="min_row_ratio"):
+        publish_stream_snapshot(
+            spark, surv, root, rules=rules, profile_rows=shrunk
+        )
+    assert versioned.latest_version(root) == 1
 
 
 # slow tier (r14 re-tier, VERDICT r13 #2): streaming maintenance replication: batching invariance + merged_stats parity stay default
@@ -175,6 +220,45 @@ def test_length_histogram_percentiles_and_merging(spark, tmp_path):
     assert ha["n_rows"] == 1000
 
 
+def test_p50_drift_rule_trips_on_halved_lengths(spark, tmp_path):
+    """The gate catches a halved median document length even when row
+    counts and null fractions hold — the distributional drift absolute
+    rules cannot see."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
+        check_expectations,
+    )
+
+    def corpus(scale):
+        return spark.range(500).select(
+            F.col("id").alias("doc_id"),
+            F.rpad(
+                F.lit("x"), ((F.col("id") % 200 + 50) * scale).cast("int"), "x"
+            ).alias("text"),
+        )
+
+    base_dir = str(tmp_path / "p_base")
+    half_dir = str(tmp_path / "p_half")
+    same_dir = str(tmp_path / "p_same")
+    incstats.write_stats_part(corpus(1), ["doc_id", "text"], base_dir, 0, length_of=["text"])
+    incstats.write_stats_part(corpus(1), ["doc_id", "text"], same_dir, 0, length_of=["text"])
+    # halve every document
+    halved = spark.range(500).select(
+        F.col("id").alias("doc_id"),
+        F.rpad(F.lit("x"), ((F.col("id") % 200 + 50) / 2).cast("int"), "x").alias("text"),
+    )
+    incstats.write_stats_part(halved, ["doc_id", "text"], half_dir, 0, length_of=["text"])
+    cols, lens = ["doc_id", "text"], ["text"]
+    base = incstats.merged_stats(spark, base_dir, cols, length_of=lens)
+    same = incstats.merged_stats(spark, same_dir, cols, length_of=lens)
+    half = incstats.merged_stats(spark, half_dir, cols, length_of=lens)
+    rules = [{"column": "len(text)", "min_p50_ratio": 0.7, "max_p50_ratio": 1.45}]
+    assert check_expectations(same, rules, previous=base) == []
+    got = check_expectations(half, rules, previous=base)
+    assert [v["rule"] for v in got] == ["min_p50_ratio"]
+    # no baseline → inert
+    assert check_expectations(half, rules, previous=None) == []
+
+
 def test_empty_batch_part_folds_as_zeros(spark, tmp_path):
     """An EMPTY batch's part stores its histogram as NULLs (F.sum over
     zero rows) and a NULL sketch — merged_stats must fold both as zeros,
@@ -218,6 +302,24 @@ def test_pre_upgrade_parts_merge_with_histogram_parts(spark, tmp_path):
         d2 = str(tmp_path / "nohist")
         incstats.write_stats_part(docs, ["doc_id"], d2, 0)
         incstats.merged_stats(spark, d2, ["doc_id"], length_of=["doc_id"])
+
+
+def test_p50_rule_fires_on_vanished_distribution(spark):
+    """prev had a distribution, current has none (empty histogram): a
+    configured percentile rule must VIOLATE, not silently skip."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
+        check_expectations,
+    )
+
+    prev = [{"column": "len(text)", "n_rows": 100, "n_nulls": 0,
+             "null_frac": 0.0, "ndv_approx": None, "p50_est": 150.0,
+             "p90_est": 230.0}]
+    now = [{"column": "len(text)", "n_rows": 0, "n_nulls": 0,
+            "null_frac": 0.0, "ndv_approx": None, "p50_est": None,
+            "p90_est": None}]
+    rules = [{"column": "len(text)", "min_p50_ratio": 0.7}]
+    got = check_expectations(now, rules, previous=prev)
+    assert [(v["rule"], v["actual"]) for v in got] == [("min_p50_ratio", None)]
 
 
 def test_stats_compaction_preserves_merged_result(spark, tmp_path):
@@ -283,6 +385,29 @@ def test_stats_enablement_is_fingerprinted(spark, tmp_path):
     assert merged["doc_id"]["n_rows"] == 2  # base part + batch 1's part
     with pytest.raises(ValueError, match="disabling statistics"):
         no_stats(docs.where("doc_id = 1"), 1)  # True -> False stays refused
+
+
+def test_p50_zero_baseline_is_real_not_missing(spark):
+    """A baseline median of 0.0 (majority-empty corpus — a real degenerate
+    state) must not silently disable the percentile drift rules: leaving
+    0 is infinite upward drift (max ratio fires), staying at 0 is ratio 1
+    (clean)."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
+        check_expectations,
+    )
+
+    def prof(p50):
+        return [{"column": "len(text)", "n_rows": 100, "n_nulls": 0,
+                 "null_frac": 0.0, "ndv_approx": None, "p50_est": p50,
+                 "p90_est": p50}]
+
+    rules = [{"column": "len(text)", "min_p50_ratio": 0.5,
+              "max_p50_ratio": 2.0}]
+    got = check_expectations(prof(10_000.0), rules, previous=prof(0.0))
+    assert [v["rule"] for v in got] == ["max_p50_ratio"]
+    assert check_expectations(prof(0.0), rules, previous=prof(0.0)) == []
+    # and a truly missing baseline estimate stays inert
+    assert check_expectations(prof(10.0), rules, previous=prof(None)) == []
 
 
 def test_stats_enablement_over_legacy_index_requires_backfill(spark, tmp_path):

@@ -72,9 +72,76 @@ def test_profile_rejects_duplicate_columns(spark, sf_smoke):
         profile_table(docs, ["doc_id", "doc_id"])
 
 
-def test_profile_max_len_is_length_not_max_value(spark):
+# ---------------------------------------------------------------------------
+# Profile-driven join strategy (plans/hints.py, round 6): the ANALYZE loop.
+# ---------------------------------------------------------------------------
+def test_profile_driven_broadcast_switch(spark, sf_smoke):
+    """profile_table output drives the join strategy: a genuinely small
+    dim fits a broadcast; the SAME relation with a profile claiming 100M
+    rows does not, and is left for AQE. (The plan-level hint switch is
+    asserted through a real operator in the decontamination test below.)"""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans import hints
+
+    nation = load_table(spark, sf_smoke, "nation")
+    prof = profile_table(nation).collect()
+    assert hints.broadcast_decision(prof) is True
+
+    # same relation, a profile that says 100M rows: no broadcast
+    fat = [{**dict(r.asDict()), "n_rows": 100_000_000} for r in prof]
+    assert hints.broadcast_decision(fat) is False
+
+
+def test_profile_driven_switch_reaches_decontamination(spark, sf_smoke):
+    """The decision plugs into a real operator: contamination_ratios
+    broadcasts its blocklist by default, and drops the hint when a
+    profile-driven decision says the 'blocklist' is another full corpus."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.operators import dedup
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans import hints
+
+    docs = load_table(spark, sf_smoke, "documents")
+    block = docs.limit(5)
+
+    def n_hints(decision):
+        plan = (
+            dedup.contamination_ratios(
+                docs, block, "doc_id", "text", broadcast_blocklist=decision
+            )
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        return plan.count("strategy=broadcast")
+
+    prof = profile_table(block.select("text")).collect()
+    assert n_hints(hints.broadcast_decision(prof)) == 1
+    fat = [{**dict(r.asDict()), "n_rows": 10_000_000_000} for r in prof]
+    assert n_hints(hints.broadcast_decision(fat)) == 0
+
+
+def test_estimated_bytes_uses_profiled_widths():
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.hints import (
+        estimated_bytes,
+    )
+
+    rows = [
+        {"column": "k", "dtype": "bigint", "n_rows": 100, "max_len": None},
+        {"column": "s", "dtype": "string", "n_rows": 100, "max_len": 4},
+    ]
+    # 8 (bigint) + 4+8 (string payload+header) = 20 bytes/row
+    assert estimated_bytes(rows) == 2000
+    assert estimated_bytes([]) == 0
+
+
+def test_estimated_bytes_uses_length_not_max_value(spark):
     """The width stat is the max string LENGTH, never len(max VALUE):
     'zz' sorts after a huge document but says nothing about row width."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.operators.profile import (
+        profile_table,
+    )
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.hints import (
+        estimated_bytes,
+    )
+
     df = spark.createDataFrame(
         [("a" * 50_000,), ("zz",)], "doc string"
     )
@@ -82,3 +149,5 @@ def test_profile_max_len_is_length_not_max_value(spark):
     doc = next(r for r in prof if r["column"] == "doc")
     assert doc["max_str"] == "zz"        # range stat: lexicographic max
     assert doc["max_len"] == 50_000      # width stat: longest value
+    # 2 rows x (50_000 + 8) — the 50 KB row drives the estimate
+    assert estimated_bytes(prof) == 2 * 50_008

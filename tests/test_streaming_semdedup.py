@@ -185,6 +185,41 @@ def test_rows_compaction_preserves_survivors(spark, emb, tmp_path):
     assert len(parts) < len(parts_u) and "_batch_id=-1" in parts
 
 
+def test_semantic_survivors_publish_as_versions(spark, emb, tmp_path):
+    """The release pipeline composes with embedding corpora too: the
+    semantic survivor table snapshots through the same gate into pinned
+    versions (vec_id profiled; the embedding column rides as a
+    complex-type nulls-only profile row)."""
+    from vmware_sd_wan_velocloud_bi_intake_spark.plans.publish import (
+        publish_stream_snapshot,
+    )
+    from vmware_sd_wan_velocloud_bi_intake_spark.sinks import versioned
+
+    idx = str(tmp_path / "sd_pub")
+    surv = str(tmp_path / "sd_pub_s")
+    root = str(tmp_path / "sd_releases")
+    ingest = make_semantic_dedup_ingest(idx, surv, **_KNOBS)
+    ingest(emb.where("vec_id % 2 = 0"), 0)
+    # the snapshot normalizes custom column names to doc_id/text — rules
+    # address the normalized names
+    rules = [{"column": "doc_id", "max_null_frac": 0.0, "min_rows": 10}]
+    v1 = publish_stream_snapshot(
+        spark, surv, root, doc_id="vec_id", text_col="embedding", rules=rules
+    )
+    assert v1 == 1
+    pinned = versioned.read_version(spark, root, v1)
+    assert {r["doc_id"] for r in pinned.select("doc_id").collect()} == (
+        _survivor_ids(spark, surv)
+    )
+    # the stream grows; the next snapshot pins v2 while v1 stays readable
+    ingest(emb.where("vec_id % 2 = 1"), 1)
+    v2 = publish_stream_snapshot(
+        spark, surv, root, doc_id="vec_id", text_col="embedding", rules=rules
+    )
+    assert v2 == 2
+    assert versioned.read_version(spark, root, 1).count() == pinned.count()
+
+
 def test_drift_monitor_trips_on_shifted_batch(spark, emb, tmp_path):
     """The quantizer-drift monitor: the build batch records no drift, a
     topic-shifted batch's verdict records a retrain."""

@@ -257,7 +257,7 @@ def train_bpe_batched(
     later winner — the resulting vocab overlap stays high (measured in
     tests/test_bpe.py and SCALE.md) because disjoint top pairs rarely
     interact. ``rank`` reflects application order and stays compatible
-    with :func:`bpe_encode`.
+    with :func:`bpe_encode` / :func:`save_bpe`.
 
     Jobs per vocab: ceil(num_merges / B) argmax jobs + periodic
     checkpoints at ``min_count_ratio=0`` — the throttle's early stop can
@@ -651,4 +651,48 @@ def bpe_encode(
     )
     return staged.mapInPandas(
         gen, schema="doc_id long, tokens array<string>, n_bpe_tokens long"
+    )
+
+
+def save_bpe(merges: DataFrame, path: str) -> None:
+    """Persist a trained merge table as a portable JSON artifact.
+
+    The table is bounded by ``num_merges`` (driver-held already — the
+    trainer built it from collected argmax rows), so this is a driver-side
+    JSON dump through the shared crash-safe writer
+    (functions/artifacts.py). The format is engine-neutral: any runtime
+    that applies ranked merges can consume it.
+    """
+    from ..functions.artifacts import atomic_write_json
+
+    rows = [
+        {
+            "rank": int(r["rank"]),
+            "left": r["left"],
+            "right": r["right"],
+            "pair_count": int(r["pair_count"]),
+        }
+        for r in merges.orderBy("rank").collect()
+    ]
+    atomic_write_json(
+        path, {"format": "bpe-merges/v1", "end_marker": END, "merges": rows}
+    )
+
+
+def load_bpe(spark, path: str) -> DataFrame:
+    """Inverse of :func:`save_bpe` — returns the merge table with the
+    exact trainer schema, ready for :func:`bpe_encode`."""
+    from ..functions.artifacts import read_json_artifact
+
+    payload = read_json_artifact(path, "bpe-merges/v1")
+    if payload.get("end_marker") != END:
+        raise ValueError(
+            f"artifact end marker {payload.get('end_marker')!r} != {END!r}"
+        )
+    rows = [
+        (int(r["rank"]), r["left"], r["right"], int(r["pair_count"]))
+        for r in payload["merges"]
+    ]
+    return spark.createDataFrame(
+        rows, "rank long, left string, right string, pair_count long"
     )

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from . import text
 from .similarity import spark_round_array
 
+N_FEATURES = 5
+
 # Full-batch-GD small-input arm (r13): feature tables at or under this
 # row count train driver-side (see train_logreg). A row is d doubles +
 # a label (~50 bytes at d=5), so the capped collect is bounded at tens
@@ -247,3 +249,27 @@ def score_quality(
         out_col,
         sigmoid(_dot_lit(text_features(F.col(text_col)), weights, bias)),
     )
+
+
+def save_logreg(weights: list[float], bias: float, path: str) -> None:
+    """Persist trained classifier weights as a JSON artifact via the
+    shared crash-safe writer (functions/artifacts.py). d+1 floats — the
+    whole model is driver-held by design."""
+    from ..functions.artifacts import atomic_write_json
+
+    atomic_write_json(
+        path,
+        {
+            "format": "logreg/v1",
+            "weights": [float(w) for w in weights],
+            "bias": float(bias),
+        },
+    )
+
+
+def load_logreg(path: str) -> tuple[list[float], float]:
+    """Inverse of :func:`save_logreg`."""
+    from ..functions.artifacts import read_json_artifact
+
+    payload = read_json_artifact(path, "logreg/v1")
+    return [float(w) for w in payload["weights"]], float(payload["bias"])

@@ -142,8 +142,9 @@ def lsh_bucket_table(
     """(doc_id, sh, bucket) LSH index rows — one per document per band.
 
     Narrow (signature is an array fold, bucket ids explode in place). This
-    is the persistable dedup index: incremental batches join against it
-    without re-processing the corpus (see :func:`near_dup_pairs_incremental`).
+    is the persistable dedup index: write it bucketed on ``bucket``
+    (sinks.bucketed) and incremental batches join against it without
+    re-processing the corpus (see :func:`near_dup_pairs_incremental`).
     """
     idc, sh, sig, bucket = _lsh_row_exprs(
         doc_id, text, num_hashes, bands, shingle_n
@@ -249,9 +250,10 @@ def _verified_pair_expr(threshold: float) -> Column:
 def bucket_summary(band_rows: DataFrame) -> DataFrame:
     """(bucket, n_members) membership summary of an LSH index.
 
-    Computed ONCE when the index is written and maintained additively on
-    appends — membership counts are associative, so a batch writer just
-    sums its own per-bucket counts into the summary. Incremental dedup runs then evaluate
+    Computed ONCE when the index is written (sinks.bucketed.write_lsh_index
+    co-writes it next to the index) and maintained additively on appends —
+    membership counts are associative, so a batch writer just sums its own
+    per-bucket counts into the summary. Incremental dedup runs then evaluate
     the degenerate-bucket cap against this compact table instead of
     re-aggregating the full index: O(|batch|) per run, not O(corpus).
     """
@@ -279,7 +281,9 @@ def near_dup_pairs_incremental(
     num_hashes/bands/shingle_n). Only the new batch is shingled and hashed;
     the corpus contributes its precomputed (doc_id, sh, bucket) rows through
     an equi-join on ``bucket``. This is the daily-ingest shape at 100 TB:
-    cost scales with |new| × bucket-hit-rate, not with the corpus.
+    cost scales with |new| × bucket-hit-rate, not with the corpus. If the
+    index was written bucketed on ``bucket`` (sinks.bucketed), the join
+    doesn't even shuffle the corpus side.
 
     **Degenerate-bucket cap** — same contract as :func:`near_dup_pairs`:
     a bucket whose combined membership (corpus + new batch) exceeds
@@ -393,6 +397,7 @@ def contamination_ratios(
     doc_id: str,
     text: str,
     shingle_n: int = 3,
+    broadcast_blocklist: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: n-gram overlap of each suspect document
     against the distinct shingle set of a blocklist corpus.
@@ -408,6 +413,11 @@ def contamination_ratios(
     shuffle on doc_id for the per-doc counts. Never an all-pairs join, never
     a corpus-sized build side.
 
+    ``broadcast_blocklist=False`` drops the hint and lets AQE choose — pass
+    a statistics-driven decision from ``plans.hints.broadcast_decision``
+    (profile_table over the blocklist) when the blocklist is not
+    small-by-contract (e.g. decontaminating against another full corpus).
+
     Returns (doc_id, n_shingles, n_hit, overlap) — one row per suspect doc.
     """
     b = (
@@ -420,7 +430,7 @@ def contamination_ratios(
         F.explode(shingles(F.col(text), shingle_n)).alias("shingle"),
     )
     return (
-        s.join(F.broadcast(b), "shingle", "left")
+        s.join(F.broadcast(b) if broadcast_blocklist else b, "shingle", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_shingles"),

@@ -2,7 +2,7 @@
 
 ``operators.profile.profile_table`` is one full scan; perfect per release,
 wrong per micro-batch: a streaming corpus would pay a growing full-corpus
-scan every time it wants fresh numbers. This module
+scan every time the expectation gate wants fresh numbers. This module
 keeps the statistics MERGEABLE instead — each batch writes one tiny part
 row (row count, per-column null count, and a Datasketches HLL sketch
 binary per column: ``hll_sketch_agg``, the union-exact sketch family
@@ -16,11 +16,17 @@ replay rewrite its own part byte-identically instead of double counting.
 
 Estimator note: ndv here is the Datasketches HLL estimate;
 ``profile_table`` uses Spark's HLL++ (``approx_count_distinct``). Both
-are ±~2% but they are DIFFERENT estimators — compare ndv only within one
-family. The merged output carries ``min_str``/``max_str``/``max_len`` as
-None: sketch parts don't track order statistics. ``length_of`` adds
-histogram rows (``len(col)``): √2-log-bin counts merge exactly, and
-their p50/p90 estimates carry the documented ±~19% bin resolution.
+are ±~2% but they are DIFFERENT estimators — drift-rule baselines must
+come from the same family (ratios of the same estimator are consistent;
+a mixed ratio adds the estimators' bias gap). The merged output carries
+``min_str``/``max_str``/``max_len`` as None: sketch parts don't track
+order statistics, so gates over incremental stats are limited to the
+row-count / null-fraction / ndv rule families (check_expectations
+reports a violation for value-range rules against a None — loud, not
+silent) — PLUS the percentile-ratio family over ``length_of`` histogram
+rows (``len(col)``): √2-log-bin counts merge exactly, and their
+p50/p90 estimates feed ``min_p50_ratio``-style drift rules with the
+documented ±~19% bin resolution.
 """
 
 from __future__ import annotations
@@ -101,8 +107,8 @@ def stats_part(
 
     ``length_of`` names string columns whose LENGTH distribution should
     also be tracked, as a fixed √2-log-bin histogram (``HIST_BINS``
-    longs) — bin counts merge EXACTLY by element-wise sum, giving
-    mergeable percentile estimates (a corpus whose median document
+    longs) — bin counts merge EXACTLY by element-wise sum, giving the
+    gate mergeable percentile estimates (a corpus whose median document
     length halves is a broken upstream even when row counts hold).
     """
     proj, aggs = _stats_aggs(df, columns, length_of)
@@ -201,8 +207,8 @@ def merged_stats(
     include_ndv: bool = True,
     schema=None,
 ) -> list[dict]:
-    """Fold every part into profile-shaped rows (``profile_table``'s
-    columns, as dicts): counts SUM — exactly, independent
+    """Fold every part into profile-shaped rows (the dict form
+    ``check_expectations`` consumes): counts SUM — exactly, independent
     of batching — and sketches UNION, whose ESTIMATE is
     batching-sensitive within the sketch's ±2% (Datasketches HLL
     promotes sparse→dense at representation-dependent points, so the

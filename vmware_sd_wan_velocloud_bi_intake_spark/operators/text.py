@@ -268,6 +268,116 @@ def fingerprint_from(norm: Column, length: int = 16) -> Column:
     return F.substring(F.md5(norm), 1, length)
 
 
+def pack_sequences(
+    df,
+    doc_id: str,
+    text: str,
+    budget: int,
+    partition_by: str | None = None,
+    drop_oversize: bool = False,
+    token_count_col: str | None = None,
+):
+    """Concat-and-chunk token packing — assign each document its position in
+    the fixed-length training sequences a pretraining pipeline would emit.
+
+    The standard packing shape: documents are concatenated in a
+    deterministic order (doc_id within ``partition_by``) and the token
+    stream is cut into chunks of exactly ``budget`` tokens; a document is
+    assigned to the chunk its FIRST token lands in, with ``start_offset``
+    giving its position inside that chunk (documents may span into following
+    chunks — ``end_chunk`` marks the last one touched). A prefix sum
+    expresses this EXACTLY — chunk boundaries are pure functions of the
+    cumulative token count, so no sequential fold is needed:
+
+        pack_id      = floor(tokens_before / budget)
+        start_offset = tokens_before % budget
+
+    ``drop_oversize=True`` removes documents longer than the budget first
+    (the filter-long-docs policy some pipelines prefer to spanning).
+
+    At 100 TB: with ``partition_by`` the whole computation is one shuffle on
+    the key plus one window — no driver state, no iteration. WITHOUT a key
+    the order is global, and a naive ``Window.partitionBy(lit(1))`` would
+    funnel the corpus through ONE task; instead the global path is a
+    distributed two-pass prefix sum — range-partition by doc_id, prefix-sum
+    within each physical partition, and add each partition's starting offset
+    (a per-partition-totals cumulative, #partitions rows, broadcast back).
+    Extra cost vs the keyed path is the range shuffle plus a tiny broadcast;
+    every stage stays parallel.
+
+    Returns (doc_id, <partition_by>, n_tokens, pack_id, start_offset,
+    end_chunk, pack_seq).
+    """
+    from pyspark.sql import Window
+
+    key = partition_by
+    # budget accounting defaults to whitespace tokens of ``text``; pass
+    # token_count_col to pack on a REAL tokenizer's counts instead (e.g.
+    # n_bpe_tokens from operators/bpe.bpe_encode — plans/tokenize.py)
+    n_tok = (
+        F.col(token_count_col).cast("long")
+        if token_count_col is not None
+        else token_count(F.col(text))
+    )
+    staged = df.select(
+        F.col(doc_id).alias("doc_id"),
+        *([F.col(key)] if key else []),
+        n_tok.alias("n_tokens"),
+    )
+    if drop_oversize:
+        staged = staged.filter(F.col("n_tokens") <= budget)
+    if key:
+        part_cols = [F.col(key)]
+        base = F.lit(0).cast("long")
+    else:
+        # two-pass global prefix sum: identical subtrees below share one
+        # range exchange (ReusedExchange); partition ids are deterministic
+        # (RangePartitioner samples with fixed per-partition seeds)
+        staged = staged.repartitionByRange(F.col("doc_id")).withColumn(
+            "__pid", F.spark_partition_id()
+        )
+        totals = staged.groupBy("__pid").agg(F.sum("n_tokens").alias("__pt"))
+        w_off = (
+            Window.orderBy("__pid")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offsets = totals.withColumn(
+            "__off", F.coalesce(F.sum("__pt").over(w_off), F.lit(0)).cast("long")
+        ).select("__pid", "__off")
+        staged = staged.join(F.broadcast(offsets), "__pid")
+        part_cols = [F.col("__pid")]
+        base = F.col("__off")
+    w = (
+        Window.partitionBy(*part_cols)
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    before = base + F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("long"))
+    packed = staged.withColumn(
+        "pack_id", F.floor(before / F.lit(budget)).cast("long")
+    ).withColumn("start_offset", F.pmod(before, F.lit(budget)).cast("long"))
+    # last chunk this document touches (empty docs stay in their start chunk)
+    end_tok = before + F.greatest(F.col("n_tokens"), F.lit(1)) - F.lit(1)
+    packed = packed.withColumn(
+        "end_chunk", F.floor(end_tok / F.lit(budget)).cast("long")
+    )
+    # pack_seq partitions on pack_id alone in the global path: a pack can
+    # span two physical partitions, and (__pid, pack_id) would restart the
+    # sequence at the boundary. Pack membership is bounded by the budget
+    # (every non-empty doc holds ≥1 token), so the pack_id shuffle is safe.
+    w_pack = (
+        Window.partitionBy(F.col(key), "pack_id").orderBy("doc_id")
+        if key
+        else Window.partitionBy("pack_id").orderBy("doc_id")
+    )
+    out_cols = ["doc_id"] + ([key] if key else []) + [
+        "n_tokens", "pack_id", "start_offset", "end_chunk",
+    ]
+    return packed.withColumn(
+        "pack_seq", F.row_number().over(w_pack)
+    ).select(*out_cols, "pack_seq")
+
+
 def _split_literal(col: Column, delimiter: str) -> Column:
     """``F.split`` treats its pattern as a REGEX; these operators rebuild
     text with ``array_join`` using the delimiter as a LITERAL, so the
@@ -364,3 +474,75 @@ def remove_boilerplate(
         .withColumnRenamed("doc_id", doc_id)
     )
     return out.select(*df.columns)
+
+
+def chunk_documents(
+    df,
+    doc_id: str,
+    text_col: str,
+    *,
+    chunk_tokens: int,
+    overlap_tokens: int = 0,
+):
+    """Split long documents into fixed-token-budget chunks with optional
+    overlap — the pre-tokenization step every pretraining pipeline runs on
+    documents longer than the model context (contrast :func:`pack_sequences`,
+    which packs SHORT documents UP to a budget; chunking cuts LONG ones
+    DOWN, and the two compose: chunk, then pack the chunks).
+
+    Returns (doc_id, chunk_id, n_chunks, chunk_text, n_chunk_tokens):
+    ``chunk_id`` is 0-based within the document and chunk boundaries fall
+    on whitespace-token edges. Consecutive chunks share ``overlap_tokens``
+    tokens so no cross-boundary context is ever fully lost (the standard
+    sliding-window rule; stride = chunk − overlap). Documents at or under
+    the budget come back as their own single chunk, so row lineage is
+    total: every input doc appears, every chunk maps to exactly one doc.
+    ``chunk_text`` preserves the original casing and characters; the one
+    lossy step is that whitespace RUNS collapse to single spaces (token
+    rejoin — newline structure does not survive a token-window cut).
+
+    Pure array expressions fused into the scan — tokenization is one
+    ``split``, chunks are ``slice`` windows over the token array via
+    ``transform(sequence(...))``, then one ``posexplode``. No shuffle, no
+    Python; at 100 TB this is scan-bound exactly like the profile ops.
+    """
+    if chunk_tokens <= 0:
+        raise ValueError("chunk_tokens must be positive")
+    if not 0 <= overlap_tokens < chunk_tokens:
+        raise ValueError("overlap_tokens must satisfy 0 <= overlap < chunk")
+    stride = chunk_tokens - overlap_tokens
+    # tokenize the RAW text (non-whitespace runs): chunk output is training
+    # text, so casing and punctuation must survive — normalize_text here
+    # would silently lowercase the whole corpus. Within a chunk, runs of
+    # whitespace collapse to single spaces (the one lossy step; inherent
+    # to token-array rejoin and disclosed above).
+    toks = F.regexp_extract_all(
+        F.coalesce(F.col(text_col), F.lit("")), F.lit(r"\S+"), 0
+    )
+    n = F.size(toks)
+    # number of stride-starts needed to cover n tokens: ceil((n-overlap)/stride),
+    # floored at 1 so empty/short docs yield exactly one chunk
+    n_chunks = F.greatest(
+        F.ceil((n - F.lit(overlap_tokens)).cast("double") / F.lit(stride)).cast(
+            "int"
+        ),
+        F.lit(1),
+    )
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.array_join(
+            F.slice(toks, i * stride + 1, chunk_tokens), " "
+        ),
+    )
+    staged = df.select(
+        F.col(doc_id).alias("doc_id"),
+        n_chunks.alias("n_chunks"),
+        F.posexplode(chunks).alias("chunk_id", "chunk_text"),
+    )
+    return staged.select(
+        "doc_id",
+        "chunk_id",
+        "n_chunks",
+        "chunk_text",
+        token_count(F.col("chunk_text")).alias("n_chunk_tokens"),
+    )

@@ -212,7 +212,8 @@ def make_near_dup_ingest(
     statistics part for its NOVEL rows (operators/incstats.py — same
     batch-keyed replay idempotency), so
     ``incstats.merged_stats(spark, stats_dir, [doc_id, text_col])`` is
-    always a profile of the survivor corpus without scanning it.
+    always a gate-ready profile of the survivor corpus without scanning
+    it — feed it to ``publish_stream_snapshot(profile_rows=...)``.
     """
     summary_dir = index_dir.rstrip("/") + "_summary_parts"
     knobs = {
