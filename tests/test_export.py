@@ -86,7 +86,7 @@ def test_fix_split_leakage_refold_reaudits_clean(spark):
     df = _leaky_corpus(spark)
     assert _leaks(df, **_LEAK_KNOBS)
     fixed = export.fix_split_leakage(
-        df, "doc_id", "text", mode="refold", **_LEAK_KNOBS
+        df, "doc_id", "text", **_LEAK_KNOBS
     )
     assert _leaks(fixed, **_LEAK_KNOBS) == []
     got = {r["doc_id"]: r["split"] for r in fixed.collect()}
@@ -98,26 +98,6 @@ def test_fix_split_leakage_refold_reaudits_clean(spark):
     assert fixed.count() == df.count()  # refold never drops rows
 
 
-def test_fix_split_leakage_drop_reaudits_clean(spark):
-    """drop mode: labels never change; cluster members whose split differs
-    from the canonical one are removed; re-audit clean."""
-    df = _leaky_corpus(spark)
-    fixed = export.fix_split_leakage(
-        df, "doc_id", "text", mode="drop", **_LEAK_KNOBS
-    )
-    assert _leaks(fixed, **_LEAK_KNOBS) == []
-    got = {r["doc_id"]: r["split"] for r in fixed.collect()}
-    # val-side members of the straddling cluster dropped; 4/5 (same-split
-    # cluster) and singletons survive with original labels
-    assert got == {0: "train", 3: "val", 4: "train", 5: "train", 6: "train"}
-
-
-def test_fix_split_leakage_mode_validation(spark):
-    df = _leaky_corpus(spark)
-    with pytest.raises(ValueError, match="refold"):
-        export.fix_split_leakage(df, "doc_id", "text", mode="nope")
-
-
 def test_fix_split_leakage_end_to_end_with_hash_split(spark, sf_smoke):
     """Fixture-scale composition: id-hash split → refold → audit clean."""
     docs = load_table(spark, sf_smoke, "documents")
@@ -125,7 +105,7 @@ def test_fix_split_leakage_end_to_end_with_hash_split(spark, sf_smoke):
         docs, "doc_id", {"train": 0.8, "val": 0.2}, seed=3
     )
     fixed = export.fix_split_leakage(
-        labeled, "doc_id", "text", mode="refold", **_LEAK_KNOBS
+        labeled, "doc_id", "text", **_LEAK_KNOBS
     )
     assert _leaks(fixed, **_LEAK_KNOBS) == []
     assert fixed.count() == labeled.count()

@@ -1,7 +1,8 @@
-"""Incremental mergeable statistics (operators/incstats.py): batching
-invariance (N parts fold to the same numbers as one), replay idempotency
-of the batch-keyed part writes, agreement with the full-scan profile, and
-the expectation-gate composition that is the module's reason to exist."""
+"""Incremental mergeable statistics (operators/incstats.py), written
+through ``write_stats_parts_split``, the writer the catalog's
+``inc_stats_merge`` runs: batching invariance (N parts fold to the same
+numbers as one), replay idempotency of the batch-keyed part writes,
+agreement with the full-scan profile, and mixed-era parts."""
 
 from __future__ import annotations
 
@@ -25,8 +26,9 @@ def test_merged_stats_match_full_scan_profile(spark, tmp_path):
     docs = _docs(spark)
     parts = str(tmp_path / "parts")
     for i in range(4):
-        incstats.write_stats_part(
-            docs.where(F.col("doc_id") % 4 == i), ["doc_id", "text"], parts, i
+        incstats.write_stats_parts_split(
+            docs.where(F.col("doc_id") % 4 == i), ["doc_id", "text"], parts,
+            F.lit(i),
         )
     got = {r["column"]: r for r in incstats.merged_stats(spark, parts, ["doc_id", "text"])}
     want = {r["column"]: r for r in profile_table(docs, ["doc_id", "text"]).collect()}
@@ -51,10 +53,11 @@ def test_batching_invariance(spark, tmp_path):
     docs = _docs(spark)
     one = str(tmp_path / "one")
     four = str(tmp_path / "four")
-    incstats.write_stats_part(docs, ["doc_id", "text"], one, 0)
+    incstats.write_stats_parts_split(docs, ["doc_id", "text"], one, F.lit(0))
     for i in range(4):
-        incstats.write_stats_part(
-            docs.where(F.col("doc_id") % 4 == i), ["doc_id", "text"], four, i
+        incstats.write_stats_parts_split(
+            docs.where(F.col("doc_id") % 4 == i), ["doc_id", "text"], four,
+            F.lit(i),
         )
     a = {r["column"]: r for r in incstats.merged_stats(spark, one, ["doc_id", "text"])}
     b = {r["column"]: r for r in incstats.merged_stats(spark, four, ["doc_id", "text"])}
@@ -67,10 +70,16 @@ def test_batching_invariance(spark, tmp_path):
 def test_part_replay_is_idempotent(spark, tmp_path):
     docs = _docs(spark)
     parts = str(tmp_path / "replay")
-    incstats.write_stats_part(docs.where("doc_id < 200"), ["doc_id"], parts, 0)
-    incstats.write_stats_part(docs.where("doc_id >= 200"), ["doc_id"], parts, 1)
+    incstats.write_stats_parts_split(
+        docs.where("doc_id < 200"), ["doc_id"], parts, F.lit(0)
+    )
+    incstats.write_stats_parts_split(
+        docs.where("doc_id >= 200"), ["doc_id"], parts, F.lit(1)
+    )
     before = incstats.merged_stats(spark, parts, ["doc_id"])
-    incstats.write_stats_part(docs.where("doc_id >= 200"), ["doc_id"], parts, 1)
+    incstats.write_stats_parts_split(
+        docs.where("doc_id >= 200"), ["doc_id"], parts, F.lit(1)
+    )
     assert incstats.merged_stats(spark, parts, ["doc_id"]) == before
 
 
@@ -79,117 +88,16 @@ def test_all_null_and_empty_edges(spark, tmp_path):
         F.col("id").alias("doc_id"), F.lit(None).cast("string").alias("text")
     )
     parts = str(tmp_path / "nulls")
-    incstats.write_stats_part(allnull, ["text"], parts, 0)
+    incstats.write_stats_parts_split(allnull, ["text"], parts, F.lit(0))
     got = incstats.merged_stats(spark, parts, ["text"])[0]
     assert got["n_nulls"] == 50 and got["ndv_approx"] == 0
     assert got["null_frac"] == 1.0
     with pytest.raises(FileNotFoundError):
         incstats.merged_stats(spark, str(tmp_path / "missing"), ["text"])
     with pytest.raises(ValueError, match="unknown columns"):
-        incstats.stats_part(allnull, ["nope"])
-
-
-def test_incremental_profile_feeds_the_gate_and_snapshot(spark, tmp_path):
-    """The point of the module: a streaming corpus gates + publishes on
-    O(batches) merged stats instead of a full profile scan — including
-    the drift rules against a previous incremental baseline."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
-        ExpectationError,
-        check_expectations,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.publish import (
-        publish_stream_snapshot,
-    )
-    from vmware_sd_wan_velocloud_bi_intake_spark.sinks import versioned
-
-    docs = _docs(spark).where(F.col("text").isNotNull())
-    surv = str(tmp_path / "surv")
-    parts = str(tmp_path / "stats")
-    b0 = docs.where("doc_id < 300")
-    (
-        b0.withColumn("_batch_id", F.lit(0))
-        .write.partitionBy("_batch_id").mode("overwrite").parquet(surv)
-    )
-    incstats.write_stats_part(b0, ["doc_id", "text"], parts, 0)
-    rules = [
-        {"column": "doc_id", "min_rows": 1, "max_null_frac": 0.0,
-         "min_row_ratio": 0.8},
-        {"column": "text", "max_null_frac": 0.0},
-    ]
-    prof0 = incstats.merged_stats(spark, parts, ["doc_id", "text"])
-    root = str(tmp_path / "root")
-    v1 = publish_stream_snapshot(
-        spark, surv, root, rules=rules, profile_rows=prof0
-    )
-    assert v1 == 1
-    assert versioned.version_profile(root) == prof0  # manifest carries it
-    # drift: a merged profile claiming far fewer rows trips the ratio
-    shrunk = [dict(r, n_rows=10) for r in prof0]
-    got = check_expectations(shrunk, rules, previous=prof0)
-    assert {v["rule"] for v in got} == {"min_row_ratio"}
-    with pytest.raises(ExpectationError, match="min_row_ratio"):
-        publish_stream_snapshot(
-            spark, surv, root, rules=rules, profile_rows=shrunk
+        incstats.write_stats_parts_split(
+            allnull, ["nope"], str(tmp_path / "nope"), F.lit(0)
         )
-    assert versioned.latest_version(root) == 1
-
-
-# slow tier (r14 re-tier, VERDICT r13 #2): streaming maintenance replication: batching invariance + merged_stats parity stay default
-@pytest.mark.slow
-def test_ingest_maintains_stats_parts(spark, tmp_path):
-    """stats_dir wires incstats into the streaming ingest: each batch's
-    NOVEL rows publish a part, merged stats always equal a fresh
-    full-scan profile of the survivors table, and a batch replay leaves
-    the stats byte-identical (part rewritten against the same novel
-    set)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.neardup import (
-        make_near_dup_ingest,
-        read_survivors,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "watches from the warm windowsill in the morning sun"
-    )
-    rows = [
-        (0, base),
-        (1, base + " extra"),
-        (2, "completely different content about spark shuffles and "
-            "partitions and the catalyst optimizer pipeline stages"),
-        (3, base + " again today"),
-        (4, "numbers one two three four five six seven eight nine ten"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = str(tmp_path / "sidx")
-    surv = str(tmp_path / "ssurv")
-    stats = str(tmp_path / "sstats")
-    ingest = make_near_dup_ingest(
-        idx, surv, stats_dir=stats,
-        threshold=0.4, num_hashes=4, bands=2, shingle_n=3,
-    )
-    ingest(docs.where("doc_id < 3"), 0)
-    ingest(docs.where("doc_id >= 3"), 1)
-    merged = {
-        r["column"]: r
-        for r in incstats.merged_stats(
-            spark, stats, ["doc_id", "text"], length_of=["text"]
-        )
-    }
-    full = {
-        r["column"]: r
-        for r in profile_table(
-            read_survivors(spark, surv), ["doc_id", "text"]
-        ).collect()
-    }
-    for c in ("doc_id", "text"):
-        assert merged[c]["n_rows"] == full[c]["n_rows"]
-        assert merged[c]["n_nulls"] == full[c]["n_nulls"]
-    # the ingest tracks text lengths too — a gate-ready histogram row
-    assert merged["len(text)"]["p50_est"] is not None
-    args = (spark, stats, ["doc_id", "text"])
-    before = incstats.merged_stats(*args, length_of=["text"])
-    ingest(docs.where("doc_id >= 3"), 1)  # replay
-    assert incstats.merged_stats(*args, length_of=["text"]) == before
 
 
 def test_length_histogram_percentiles_and_merging(spark, tmp_path):
@@ -203,11 +111,13 @@ def test_length_histogram_percentiles_and_merging(spark, tmp_path):
     )
     one = str(tmp_path / "h_one")
     four = str(tmp_path / "h_four")
-    incstats.write_stats_part(docs, ["doc_id", "text"], one, 0, length_of=["text"])
+    incstats.write_stats_parts_split(
+        docs, ["doc_id", "text"], one, F.lit(0), length_of=["text"]
+    )
     for i in range(4):
-        incstats.write_stats_part(
+        incstats.write_stats_parts_split(
             docs.where(F.col("doc_id") % 4 == i),
-            ["doc_id", "text"], four, i, length_of=["text"],
+            ["doc_id", "text"], four, F.lit(i), length_of=["text"],
         )
     a = incstats.merged_stats(spark, one, ["doc_id", "text"], length_of=["text"])
     b = incstats.merged_stats(spark, four, ["doc_id", "text"], length_of=["text"])
@@ -220,67 +130,6 @@ def test_length_histogram_percentiles_and_merging(spark, tmp_path):
     assert ha["n_rows"] == 1000
 
 
-def test_p50_drift_rule_trips_on_halved_lengths(spark, tmp_path):
-    """The gate catches a halved median document length even when row
-    counts and null fractions hold — the distributional drift absolute
-    rules cannot see."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
-        check_expectations,
-    )
-
-    def corpus(scale):
-        return spark.range(500).select(
-            F.col("id").alias("doc_id"),
-            F.rpad(
-                F.lit("x"), ((F.col("id") % 200 + 50) * scale).cast("int"), "x"
-            ).alias("text"),
-        )
-
-    base_dir = str(tmp_path / "p_base")
-    half_dir = str(tmp_path / "p_half")
-    same_dir = str(tmp_path / "p_same")
-    incstats.write_stats_part(corpus(1), ["doc_id", "text"], base_dir, 0, length_of=["text"])
-    incstats.write_stats_part(corpus(1), ["doc_id", "text"], same_dir, 0, length_of=["text"])
-    # halve every document
-    halved = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        F.rpad(F.lit("x"), ((F.col("id") % 200 + 50) / 2).cast("int"), "x").alias("text"),
-    )
-    incstats.write_stats_part(halved, ["doc_id", "text"], half_dir, 0, length_of=["text"])
-    cols, lens = ["doc_id", "text"], ["text"]
-    base = incstats.merged_stats(spark, base_dir, cols, length_of=lens)
-    same = incstats.merged_stats(spark, same_dir, cols, length_of=lens)
-    half = incstats.merged_stats(spark, half_dir, cols, length_of=lens)
-    rules = [{"column": "len(text)", "min_p50_ratio": 0.7, "max_p50_ratio": 1.45}]
-    assert check_expectations(same, rules, previous=base) == []
-    got = check_expectations(half, rules, previous=base)
-    assert [v["rule"] for v in got] == ["min_p50_ratio"]
-    # no baseline → inert
-    assert check_expectations(half, rules, previous=None) == []
-
-
-def test_empty_batch_part_folds_as_zeros(spark, tmp_path):
-    """An EMPTY batch's part stores its histogram as NULLs (F.sum over
-    zero rows) and a NULL sketch — merged_stats must fold both as zeros,
-    not crash (the fully-duplicate-micro-batch case the ingest hits)."""
-    docs = _docs(spark, 100)
-    parts = str(tmp_path / "empties")
-    incstats.write_stats_part(
-        docs.where("doc_id < 0"), ["doc_id", "text"], parts, 0,
-        length_of=["text"],
-    )
-    got = incstats.merged_stats(spark, parts, ["doc_id", "text"], length_of=["text"])
-    by = {r["column"]: r for r in got}
-    assert by["doc_id"]["n_rows"] == 0 and by["doc_id"]["ndv_approx"] == 0
-    assert by["len(text)"]["p50_est"] is None
-    # a later real batch merges cleanly over the empty one
-    incstats.write_stats_part(docs, ["doc_id", "text"], parts, 1, length_of=["text"])
-    got2 = {r["column"]: r for r in incstats.merged_stats(
-        spark, parts, ["doc_id", "text"], length_of=["text"])}
-    assert got2["doc_id"]["n_rows"] == 100
-    assert got2["len(text)"]["p50_est"] is not None
-
-
 def test_pre_upgrade_parts_merge_with_histogram_parts(spark, tmp_path):
     """Parts written before a length_of upgrade lack the histogram
     column; the merged read must neither fail nor bind the wrong schema
@@ -288,9 +137,11 @@ def test_pre_upgrade_parts_merge_with_histogram_parts(spark, tmp_path):
     (the hist row's own n_rows says how many)."""
     docs = _docs(spark, 200)
     parts = str(tmp_path / "mixed")
-    incstats.write_stats_part(docs.where("doc_id < 100"), ["doc_id", "text"], parts, 0)
-    incstats.write_stats_part(
-        docs.where("doc_id >= 100"), ["doc_id", "text"], parts, 1,
+    incstats.write_stats_parts_split(
+        docs.where("doc_id < 100"), ["doc_id", "text"], parts, F.lit(0)
+    )
+    incstats.write_stats_parts_split(
+        docs.where("doc_id >= 100"), ["doc_id", "text"], parts, F.lit(1),
         length_of=["text"],
     )
     got = {r["column"]: r for r in incstats.merged_stats(
@@ -300,188 +151,5 @@ def test_pre_upgrade_parts_merge_with_histogram_parts(spark, tmp_path):
     with pytest.raises(ValueError, match="length histogram"):
         # a dir where NO writer ever passed length_of fails loudly
         d2 = str(tmp_path / "nohist")
-        incstats.write_stats_part(docs, ["doc_id"], d2, 0)
+        incstats.write_stats_parts_split(docs, ["doc_id"], d2, F.lit(0))
         incstats.merged_stats(spark, d2, ["doc_id"], length_of=["doc_id"])
-
-
-def test_p50_rule_fires_on_vanished_distribution(spark):
-    """prev had a distribution, current has none (empty histogram): a
-    configured percentile rule must VIOLATE, not silently skip."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
-        check_expectations,
-    )
-
-    prev = [{"column": "len(text)", "n_rows": 100, "n_nulls": 0,
-             "null_frac": 0.0, "ndv_approx": None, "p50_est": 150.0,
-             "p90_est": 230.0}]
-    now = [{"column": "len(text)", "n_rows": 0, "n_nulls": 0,
-            "null_frac": 0.0, "ndv_approx": None, "p50_est": None,
-            "p90_est": None}]
-    rules = [{"column": "len(text)", "min_p50_ratio": 0.7}]
-    got = check_expectations(now, rules, previous=prev)
-    assert [(v["rule"], v["actual"]) for v in got] == [("min_p50_ratio", None)]
-
-
-def test_stats_compaction_preserves_merged_result(spark, tmp_path):
-    """compact_stats_parts folds old parts into the -1 base: part count
-    bounded, merged_stats identical for counts/histograms (sketch ndv
-    within its documented tolerance), idempotent re-run."""
-    docs = _docs(spark, 300)
-    parts = str(tmp_path / "c_stats")
-    for i in range(4):
-        incstats.write_stats_part(
-            docs.where(F.col("doc_id") % 4 == i), ["doc_id", "text"],
-            parts, i, length_of=["text"],
-        )
-    before = incstats.merged_stats(spark, parts, ["doc_id", "text"], length_of=["text"])
-    assert incstats.compact_stats_parts(spark, parts, 4) is True
-    ids = {
-        r["_batch_id"]
-        for r in spark.read.parquet(parts).select("_batch_id").distinct().collect()
-    }
-    assert ids == {-1}
-    after = incstats.merged_stats(spark, parts, ["doc_id", "text"], length_of=["text"])
-    for b, a in zip(before, after):
-        for k in ("column", "n_rows", "n_nulls", "null_frac"):
-            assert b[k] == a[k]
-        if "p50_est" in b:
-            assert b["p50_est"] == a["p50_est"] and b["p90_est"] == a["p90_est"]
-        if b.get("ndv_approx") is not None:
-            assert a["ndv_approx"] == pytest.approx(b["ndv_approx"], rel=0.05)
-    assert incstats.compact_stats_parts(spark, parts, 4) is False  # idempotent
-    assert incstats.compact_stats_parts(spark, str(tmp_path / "nope"), 4) is False
-
-
-def test_stats_enablement_is_fingerprinted(spark, tmp_path):
-    """Enabling stats_dir MID-stream would make merged stats a bogus
-    partial baseline — the knobs fingerprint must refuse it until a
-    backfill covers the existing survivors (the sanctioned transition),
-    and must refuse DISABLING outright (the symmetric hole: later
-    batches would stop writing parts)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.neardup import (
-        backfill_stats,
-        make_near_dup_ingest,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "some document body with words"), (1, "another body of words here")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "fp_idx")
-    surv = str(tmp_path / "fp_surv")
-    knobs = dict(threshold=0.9, num_hashes=4, bands=2, shingle_n=3)
-    no_stats = make_near_dup_ingest(idx, surv, **knobs)
-    no_stats(docs.where("doc_id = 0"), 0)
-    stats = str(tmp_path / "fp_stats")
-    with_stats = make_near_dup_ingest(idx, surv, stats_dir=stats, **knobs)
-    with pytest.raises(ValueError, match="backfill"):
-        with_stats(docs.where("doc_id = 1"), 1)  # uncovered: refused
-    backfill_stats(spark, surv, stats, ["doc_id", "text"], length_of=["text"])
-    with_stats(docs.where("doc_id = 1"), 1)  # covered: transition recorded
-    merged = {
-        r["column"]: r
-        for r in incstats.merged_stats(spark, stats, ["doc_id", "text"])
-    }
-    assert merged["doc_id"]["n_rows"] == 2  # base part + batch 1's part
-    with pytest.raises(ValueError, match="disabling statistics"):
-        no_stats(docs.where("doc_id = 1"), 1)  # True -> False stays refused
-
-
-def test_p50_zero_baseline_is_real_not_missing(spark):
-    """A baseline median of 0.0 (majority-empty corpus — a real degenerate
-    state) must not silently disable the percentile drift rules: leaving
-    0 is infinite upward drift (max ratio fires), staying at 0 is ratio 1
-    (clean)."""
-    from vmware_sd_wan_velocloud_bi_intake_spark.plans.expectations import (
-        check_expectations,
-    )
-
-    def prof(p50):
-        return [{"column": "len(text)", "n_rows": 100, "n_nulls": 0,
-                 "null_frac": 0.0, "ndv_approx": None, "p50_est": p50,
-                 "p90_est": p50}]
-
-    rules = [{"column": "len(text)", "min_p50_ratio": 0.5,
-              "max_p50_ratio": 2.0}]
-    got = check_expectations(prof(10_000.0), rules, previous=prof(0.0))
-    assert [v["rule"] for v in got] == ["max_p50_ratio"]
-    assert check_expectations(prof(0.0), rules, previous=prof(0.0)) == []
-    # and a truly missing baseline estimate stays inert
-    assert check_expectations(prof(10.0), rules, previous=prof(None)) == []
-
-
-def test_stats_enablement_over_legacy_index_requires_backfill(spark, tmp_path):
-    """The pre-fingerprint upgrade hole: an index built before the knobs
-    file existed has survivors but no stats parts. Enabling stats_dir on
-    it must be REFUSED (recording stats=True there would gate every later
-    release against a partial bogus baseline) until backfill_stats writes
-    a base part covering the current survivors — after which merged stats
-    equal a full-scan profile."""
-    import os
-
-    from vmware_sd_wan_velocloud_bi_intake_spark.streaming.neardup import (
-        backfill_stats,
-        make_near_dup_ingest,
-        read_survivors,
-    )
-
-    docs = _docs(spark, 40)
-    idx = str(tmp_path / "legacy_idx")
-    surv = str(tmp_path / "legacy_surv")
-    knobs = dict(threshold=0.9, num_hashes=4, bands=2, shingle_n=3)
-    legacy = make_near_dup_ingest(idx, surv, **knobs)
-    legacy(docs.where("doc_id < 20"), 0)
-    os.remove(idx + "_knobs.json")  # pre-fingerprint index: no knobs file
-    stats = str(tmp_path / "legacy_stats")
-    upgraded = make_near_dup_ingest(idx, surv, stats_dir=stats, **knobs)
-    with pytest.raises(ValueError, match="backfill"):
-        upgraded(docs.where("doc_id >= 20"), 1)
-    assert not os.path.exists(idx + "_knobs.json")  # refusal wrote nothing
-    backfill_stats(spark, surv, stats, ["doc_id", "text"], length_of=["text"])
-    upgraded(docs.where("doc_id >= 20"), 1)  # covered now: proceeds
-    merged = {
-        r["column"]: r
-        for r in incstats.merged_stats(
-            spark, stats, ["doc_id", "text"], length_of=["text"]
-        )
-    }
-    full = {
-        r["column"]: r
-        for r in profile_table(
-            read_survivors(spark, surv), ["doc_id", "text"]
-        ).collect()
-    }
-    for c in ("doc_id", "text"):
-        assert merged[c]["n_rows"] == full[c]["n_rows"]
-        assert merged[c]["n_nulls"] == full[c]["n_nulls"]
-
-
-def test_split_writer_matches_per_batch_writer(spark, tmp_path):
-    """write_stats_parts_split (the one-pass backfill form) must produce a
-    parts table merged_stats folds identically to N write_stats_part
-    calls — grouped aggregates == per-group global aggregates, including
-    the histogram bins, and the HLL estimates agree at this cardinality
-    (same sketch family, same per-part inputs)."""
-    docs = _docs(spark)
-    a = str(tmp_path / "per_batch")
-    b = str(tmp_path / "split")
-    for i in range(4):
-        incstats.write_stats_part(
-            docs.where(F.col("doc_id") % 4 == i),
-            ["doc_id", "text"],
-            a,
-            i,
-            length_of=["text"],
-        )
-    incstats.write_stats_parts_split(
-        docs, ["doc_id", "text"], b, F.col("doc_id") % 4, length_of=["text"]
-    )
-    ga = incstats.merged_stats(spark, a, ["doc_id", "text"], length_of=["text"])
-    gb = incstats.merged_stats(spark, b, ["doc_id", "text"], length_of=["text"])
-    assert ga == gb
-    # same part keys on disk
-    import os
-
-    assert {d for d in os.listdir(a) if d.startswith("_batch_id=")} == {
-        d for d in os.listdir(b) if d.startswith("_batch_id=")
-    }

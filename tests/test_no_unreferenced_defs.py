@@ -10,7 +10,9 @@ its own definition, anywhere in the package, ``tests/``, ``tools/``,
 - an attribute name (``mod.foo``),
 - a ``from … import foo`` name that the importing file then uses (loads
   it, or names it in a string); in an ``__init__.py`` every imported name
-  counts, since a package re-exports what it imports,
+  counts, since a package re-exports what it imports. A top-level import
+  counts only while some live top-level statement of its file uses the
+  name: an import whose users are all dead definitions is dead with them,
 - a string constant that is a bare identifier (``"foo"``: catalog tables,
   ``getattr``, ``__all__``).
 
@@ -45,7 +47,7 @@ REFERENCE_ROOTS = (
 CHECKED_FILES = {ROOT / "bench.py", *(ROOT / "tools").glob("*.py")}
 # definitions reached from tests alone; lower it when a change deletes
 # some or gives them a caller, never raise it
-TEST_ONLY_CEILING = 65
+TEST_ONLY_CEILING = 60
 
 
 def _python_files(root: Path) -> list[Path]:
@@ -113,33 +115,63 @@ def _is_dunder(name: str) -> bool:
 def unreferenced_definitions(roots=REFERENCE_ROOTS) -> list[str]:
     """``file:line name`` for every checked top-level definition that
     nothing under ``roots`` references."""
-    # each top-level statement is one "owner" of the references inside it;
-    # a checked definition's own statement is dropped once it is found dead
-    owners = []  # (defined names, refs, (file, line))
+    files = []
     for root in roots:
         for path in _python_files(root):
             tree = ast.parse(path.read_text(), filename=str(path))
             checked = path in CHECKED_FILES or PACKAGE in path.parents
-            used = None if path.name == "__init__.py" else _used_names(tree)
-            for stmt in tree.body:
-                names = [
-                    n for n in _defined_names(stmt) if not _is_dunder(n)
-                ] if checked else []
-                where = (str(path.relative_to(ROOT)), stmt.lineno)
-                owners.append((names, _referenced_names(stmt, used), where))
-    # how many live owners reference each name
-    uses = Counter(r for _, refs, _ in owners for r in refs)
+            files.append((str(path.relative_to(ROOT)), tree, checked))
+    return _dead_definitions(files)
+
+
+def _dead_definitions(files) -> list[str]:
+    """The scan over ``(name, tree, checked)`` files; see the module doc."""
+    # each top-level statement is one "owner" of the references inside it;
+    # a checked definition's own statement is dropped once it is found dead
+    owners = []  # (defined names, refs, (file, line), names it uses)
+    imports = []  # (file, bound name, imported name) of top-level imports
+    for name, tree, checked in files:
+        is_init = Path(name).name == "__init__.py"
+        used = None if is_init else _used_names(tree)
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ImportFrom) and not is_init:
+                imports += [(name, a.asname or a.name, a.name) for a in stmt.names]
+                continue
+            names = [
+                n for n in _defined_names(stmt) if not _is_dunder(n)
+            ] if checked else []
+            where = (name, stmt.lineno)
+            refs = _referenced_names(stmt, used)
+            owners.append((names, refs, where, _used_names(stmt)))
+    # how many live owners of each file use each name: a file's top-level
+    # import of a name lives while that count does
+    local_uses = Counter(
+        (f, n) for _, _, (f, _), used in owners for n in used
+    )
+    live_imports = {
+        i for i, (f, bound, _) in enumerate(imports) if local_uses[f, bound]
+    }
+    # how many live owners and live imports reference each name
+    uses = Counter(r for _, refs, _, _ in owners for r in refs)
+    uses.update(imports[i][2] for i in live_imports)
     dead: dict[int, list[str]] = {}
     found = True
     while found:
         found = False
-        for i, (names, refs, _) in enumerate(owners):
+        for i, (names, refs, (f, _), used) in enumerate(owners):
             if not names or i in dead:
                 continue
             # dead: no owner but (perhaps) this statement itself uses a name
             if all(uses[n] == (n in refs) for n in names):
                 dead[i] = names
                 uses.subtract(refs)
+                local_uses.subtract((f, n) for n in used)
+                found = True
+        for i in sorted(live_imports):
+            f, bound, imported = imports[i]
+            if not local_uses[f, bound]:
+                live_imports.discard(i)
+                uses[imported] -= 1
                 found = True
     return [
         f"{path}:{line} {name}"
@@ -173,3 +205,18 @@ def test_unused_import_is_not_a_reference():
     assert "b" in refs and "a" not in refs
     # in an __init__.py (used=None) every import is a re-export
     assert {"a", "b"} <= _referenced_names(tree, None)
+
+
+def test_import_used_only_inside_a_dead_def_is_not_a_reference():
+    files = {
+        "lib.py": "def helper():\n    pass\n\n\ndef kept():\n    pass\n",
+        "mid.py": (
+            "from lib import helper, kept\n\n\n"
+            "def dead():\n    return helper()\n\n\nkept()\n"
+        ),
+    }
+    dead = _dead_definitions(
+        [(name, ast.parse(src), True) for name, src in files.items()]
+    )
+    # the import keeps `helper` looking used only while `dead` lives
+    assert dead == ["lib.py:1 helper", "mid.py:4 dead"]

@@ -403,7 +403,12 @@ def test_compact_summary_parts_noop_cases(spark, tmp_path):
 def test_knob_fingerprint_blocks_mismatched_ingest(spark, tmp_path):
     """A second ingest sharing the index with DIFFERENT LSH knobs must
     fail its first batch loudly (band rows from different shapes are not
-    comparable); same-knob ingests — new process, replay — keep working."""
+    comparable); same-knob ingests — new process, replay — keep working,
+    also over a fingerprint that still carries a key the ingest no longer
+    sends (``"stats": false``, written by ingests that had a statistics
+    option)."""
+    import json
+
     import pytest as _pytest
 
     docs = _docs(spark)
@@ -411,6 +416,11 @@ def test_knob_fingerprint_blocks_mismatched_ingest(spark, tmp_path):
     surv = str(tmp_path / "surv_knobs")
     ingest = make_near_dup_ingest(idx, surv, **_KNOBS)
     ingest(docs.where("doc_id < 3"), 0)
+    with open(idx + "_knobs.json") as f:
+        stored = json.load(f)
+    stored["stats"] = False
+    with open(idx + "_knobs.json", "w") as f:
+        json.dump(stored, f)
     # a fresh builder with identical knobs (restart) proceeds
     again = make_near_dup_ingest(idx, surv, **_KNOBS)
     again(docs.where("doc_id >= 3"), 1)
@@ -422,6 +432,8 @@ def test_knob_fingerprint_blocks_mismatched_ingest(spark, tmp_path):
     with _pytest.raises(ValueError, match="knobs differ"):
         bad(docs.where("doc_id = 5"), 2)
     assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before
+    with open(idx + "_knobs.json") as f:
+        assert json.load(f)["stats"] is False
 
 
 # default tier: the rows-compaction parity check the semdedup ingest's

@@ -5,8 +5,7 @@ applied to single files): a writer that dies mid-write leaves only an
 unreferenced tmp file, never a torn artifact. Centralized so a future
 hardening (fsync-before-rename, tmp collision policy) lands everywhere at
 once instead of drifting across copies — BPE merge tables, classifier
-weights, ingest knobs, and the versioned-dataset manifests/pointers all
-write through here.
+weights and ingest knobs all write through here.
 """
 
 from __future__ import annotations

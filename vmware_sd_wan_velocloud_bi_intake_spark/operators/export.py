@@ -71,7 +71,6 @@ def fix_split_leakage(
     text_col: str,
     split_name: str = "split",
     *,
-    mode: str = "refold",
     threshold: float = 0.7,
     num_hashes: int = 8,
     bands: int = 4,
@@ -88,30 +87,20 @@ def fix_split_leakage(
     its minimum-id member (the component label itself, so the canonical
     split is one join away and deterministic run-to-run).
 
-    ``mode="refold"`` RELABELS every clustered document to its cluster's
-    canonical split (keeps all rows; val loses/gains a few near-dup
-    documents — re-check split sizes if the eval budget is tight).
-    ``mode="drop"`` instead DROPS clustered documents whose split differs
-    from the canonical one (keeps labels stable at the cost of rows —
-    the "drop val-side members" policy when train must not change).
-
-    Both modes leave un-clustered documents (the overwhelming majority)
-    untouched. ``refold`` guarantees the re-audit is empty: the row set
-    is unchanged, so the LSH pass (including which degenerate buckets the
-    ``max_bucket`` cap sidelines) is identical, and every near-dup pair
-    lies inside one cluster whose members now share one split. ``drop``
-    carries a CAP CAVEAT: removing rows can shrink a bucket the fix's own
-    pass sidelined back under ``max_bucket``, and the re-audit then
-    expands pairs the fix never saw — one pass is a contraction, not
-    always a fixpoint; re-run it until clean.
+    Every clustered document is RELABELED to its cluster's canonical
+    split (keeps all rows; val loses/gains a few near-dup documents —
+    re-check split sizes if the eval budget is tight); un-clustered
+    documents (the overwhelming majority) are untouched. The re-audit is
+    guaranteed empty: the row set is unchanged, so the LSH pass
+    (including which degenerate buckets the ``max_bucket`` cap sidelines)
+    is identical, and every near-dup pair lies inside one cluster whose
+    members now share one split.
 
     Scale: one near-dup pass (bucketed, never all-pairs) + O(log n)
     hash-min rounds over the pair graph + two joins against the tiny
     (clustered-id, split) projections — the corpus itself is touched by
     exactly one join on ``id_col``.
     """
-    if mode not in ("refold", "drop"):
-        raise ValueError(f"mode must be 'refold' or 'drop', got {mode!r}")
     from .dedup import duplicate_components, near_dup_pairs
 
     pairs = near_dup_pairs(
@@ -132,13 +121,10 @@ def fix_split_leakage(
         ),
         "component",
     ).select(F.col("doc_id").alias(id_col), "_canon_split")
-    out = df.join(canon, id_col, "left")
-    if mode == "refold":
-        return out.withColumn(
-            split_name,
-            F.coalesce(F.col("_canon_split"), F.col(split_name)),
-        ).drop("_canon_split")
-    return out.where(
-        F.col("_canon_split").isNull()
-        | (F.col("_canon_split") == F.col(split_name))
-    ).drop("_canon_split")
+    return (
+        df.join(canon, id_col, "left")
+        .withColumn(
+            split_name, F.coalesce(F.col("_canon_split"), F.col(split_name))
+        )
+        .drop("_canon_split")
+    )

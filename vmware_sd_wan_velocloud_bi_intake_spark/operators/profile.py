@@ -36,8 +36,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     string-rendered for a heterogeneous long-form schema. Complex types
     get NULL ndv/min/max (nulls-only profile).
 
-    No pipeline calls it: kept as the full-scan reference that the merged
-    incremental statistics (operators/incstats.py) are checked against.
+    No pipeline calls it: kept as the full-scan reference that
+    tests/test_incstats.py and tests/test_gateway_pipeline.py compare against.
     """
     cols = columns if columns is not None else df.columns
     missing = [c for c in cols if c not in df.columns]

@@ -615,10 +615,8 @@ def inc_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # /tmp-litter fix as the streamed vehicles); the parts must be
     # REWRITTEN each run — the write path is part of what the hash gates
     parts_dir = os.path.join(_stream_scratch_dir("inc_stats_"), "parts")
-    # the one-pass backfill writer: both batch parts from one grouped
-    # aggregation (identical parts table to two write_stats_part calls —
-    # grouped aggregates ≡ per-group global aggregates; the per-batch
-    # streaming write path is pinned by tests/test_incstats.py). The
+    # the one-pass writer: both batch parts from one grouped
+    # aggregation (its merge is pinned by tests/test_incstats.py). The
     # split rule is data-independent (doc_id parity): merged statistics
     # are split-INVARIANT, so a midpoint computed from the data would
     # buy nothing but one extra aggregate job per run.

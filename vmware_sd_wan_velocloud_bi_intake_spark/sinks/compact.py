@@ -64,7 +64,7 @@ def compact_parts(
     ``before_batch_id`` into ONE base partition at the reserved id
     :data:`BASE_PART` — the shared crash-safety skeleton behind
     ``streaming.neardup.compact_summary_parts`` and
-    ``operators.incstats.compact_stats_parts``.
+    :func:`compact_rows_parts`.
 
     The protocol (identical for every parts table, which is why it lives
     once, next to the swap it uses): read the parts, split old/keep at

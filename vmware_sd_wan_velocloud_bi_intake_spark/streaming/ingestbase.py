@@ -11,8 +11,8 @@ live once:
   a misconfigured redeploy fails its FIRST batch loudly instead of
   silently growing the index with incomparable rows. Keys a legacy
   fingerprint predates are claimed by the first writer that knows them
-  (record, don't reject), with an optional pre-claim hook for claims
-  that need more than recording (e.g. neardup's stats-coverage check).
+  (record, don't reject); stored keys the ingest no longer sends are
+  ignored.
 
 - **Batch-id collision guard**: batch-keyed dynamic partition overwrite
   makes replays idempotent, but Spark numbers batches per CHECKPOINT —
@@ -102,29 +102,17 @@ def check_knobs(
     knobs: dict,
     *,
     mismatch_hint: str,
-    on_claim: Callable[[list[str]], None] | None = None,
-    transitions: dict[str, Callable] | None = None,
 ) -> None:
     """Validate (or create) the index's knobs fingerprint.
 
-    ``knobs`` must include ``{"format": fmt}``. ``on_claim(keys)`` runs
-    before a fresh file is written (keys = every knob) or before legacy
-    missing keys are claimed (keys = just those) — raise inside it to
-    refuse the claim; nothing is written on refusal.
-
-    ``transitions`` maps a knob name to a validator ``fn(old, new)`` for
-    changes that CAN be legitimate with extra checks (e.g. enabling
-    statistics after a coverage backfill): a changed value for such a key
-    is routed through its validator instead of the blanket refusal — the
-    validator raises to refuse, returns to allow, and an allowed change
-    is recorded back into the fingerprint. Every other changed key still
-    refuses with ``mismatch_hint``.
+    ``knobs`` must include ``{"format": fmt}``. A changed value for any
+    key refuses with ``mismatch_hint``. Stored keys that ``knobs`` does
+    not carry (knobs an older ingest fingerprinted and this one no
+    longer sends) are ignored and kept in the file.
     """
     from ..functions.artifacts import atomic_write_json, read_json_artifact
 
     if not os.path.exists(knobs_path):
-        if on_claim is not None:
-            on_claim(sorted(k for k in knobs if k != "format"))
         atomic_write_json(knobs_path, knobs)
         return
     stored = read_json_artifact(knobs_path, fmt)
@@ -133,12 +121,6 @@ def check_knobs(
         for k, v in knobs.items()
         if k != "format" and k in stored and stored[k] != v
     }
-    allowed = {}
-    for k in list(changed):
-        if transitions and k in transitions:
-            old, new = changed.pop(k)
-            transitions[k](old, new)  # raises to refuse
-            allowed[k] = new
     if changed:
         raise ValueError(
             f"ingest knobs differ from the index's fingerprint "
@@ -146,11 +128,8 @@ def check_knobs(
         )
     # keys a legacy fingerprint predates: first writer to know about
     # them claims them — record, don't reject
-    missing = [k for k in knobs if k != "format" and k not in stored]
-    if missing and on_claim is not None:
-        on_claim(missing)
-    if missing or allowed:
-        atomic_write_json(knobs_path, {**stored, **knobs, **allowed})
+    if any(k != "format" and k not in stored for k in knobs):
+        atomic_write_json(knobs_path, {**stored, **knobs})
 
 
 def check_sequence(knobs_path: str, fmt: str, batch_id: int, fp: str) -> None:

@@ -56,9 +56,9 @@ estimated from their on-disk bytes (a listing, no job). A small batch over
 a small corpus runs at one partition; a wide batch or a large summary gets
 the partitions its bytes need. On the perfbench stream corpus a 200-doc
 batch is 9 Spark jobs and a compaction batch 15 (SCALE.md, "stream: the
-near-dup batch sized to its rows"): the summary, index, survivors and
-stats compactions run concurrently (``functions.conf.run_together``, a
-pool per call that closes before the call returns).
+near-dup batch sized to its rows"): the summary, index and survivors
+compactions run concurrently (``functions.conf.run_together``, a pool per
+call that closes before the call returns).
 """
 
 from __future__ import annotations
@@ -97,8 +97,6 @@ def _summary(spark, parts_dir: str, exclude_batch_id: int) -> DataFrame | None:
         F.sum("n_members").cast("long").alias("n_members")
     )
 
-
-_BASE_PART = -1  # reserved _batch_id for the compacted summary base
 
 # In-memory bytes per on-disk parquet byte of the index and summary
 # tables: dictionary and run-length encoding shrink band rows (one doc's
@@ -175,7 +173,6 @@ def make_near_dup_ingest(
     shingle_n: int = 3,
     max_bucket: int = 1024,
     compact_summary_every: int | None = 64,
-    stats_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` body: ``fn(batch_df, batch_id)``.
 
@@ -195,25 +192,17 @@ def make_near_dup_ingest(
     than the current batch are rolled into one base partition: the
     summary by refold (:func:`compact_summary_parts`), the band-row
     index and the survivors table by row-preserving concatenation
-    (``sinks.compact.compact_rows_parts``), and the stats parts when
-    enabled — without this a long-lived stream's every read pays an
-    O(batches) partition listing. The tables compact concurrently, each
-    with its own staging, verify and swap, after the guards and before
-    the batch's reads are planned. Pass None to disable (e.g. when an
-    external maintenance job owns compaction).
+    (``sinks.compact.compact_rows_parts``) — without this a long-lived
+    stream's every read pays an O(batches) partition listing. The tables
+    compact concurrently, each with its own staging, verify and swap,
+    after the guards and before the batch's reads are planned. Pass None
+    to disable (e.g. when an external maintenance job owns compaction).
 
     Each call runs the fingerprint guard first, then the rest of the
     batch under a conf scope sized from the batch's rows and text bytes
     (both from the fingerprint's job) and the index and summary's on-disk
     bytes, and restores the session's confs on the way out, also when it
     raises.
-
-    ``stats_dir``: when set, each batch also publishes an incremental
-    statistics part for its NOVEL rows (operators/incstats.py — same
-    batch-keyed replay idempotency), so
-    ``incstats.merged_stats(spark, stats_dir, [doc_id, text_col])`` is
-    always a gate-ready profile of the survivor corpus without scanning
-    it — feed it to ``publish_stream_snapshot(profile_rows=...)``.
     """
     summary_dir = index_dir.rstrip("/") + "_summary_parts"
     knobs = {
@@ -230,64 +219,8 @@ def make_near_dup_ingest(
         # silently incomparable even though every LSH knob matches
         "doc_id": doc_id,
         "text_col": text_col,
-        # stats coverage is part of the stream's identity: enabling
-        # stats_dir MID-stream would make merged_stats a profile of only
-        # the post-enablement batches — a bogus drift baseline the gate
-        # can't distinguish from a collapse. Same misconfiguration class
-        # the LSH fingerprint exists for, so it rides the same file.
-        "stats": stats_dir is not None,
     }
     knobs_path = index_dir.rstrip("/") + "_knobs.json"
-
-    def _require_stats_coverage() -> None:
-        """Refuse to CLAIM stats=True over an index whose survivors the
-        stats parts do not cover — the r7→r8 upgrade hole: a
-        pre-fingerprint index has no knobs file, so the claim branch
-        below would otherwise record stats=True while merged_stats sees
-        only post-upgrade batches, and every later drift ratio gates
-        against that partial bogus baseline. A base part (−1, written by
-        :func:`backfill_stats` or compaction) covers any batch set."""
-        if stats_dir is None or not os.path.isdir(survivors_dir):
-            return
-        surv = {d for d in os.listdir(survivors_dir) if d.startswith("_batch_id=")}
-        if not surv:
-            return
-        st: set[str] = set()
-        if os.path.isdir(stats_dir):
-            st = {d for d in os.listdir(stats_dir) if d.startswith("_batch_id=")}
-        if f"_batch_id={_BASE_PART}" in st:
-            return
-        missing = sorted(surv - st)
-        if missing:
-            raise ValueError(
-                f"near-dup ingest: stats_dir={stats_dir!r} does not cover "
-                f"existing survivor batches {missing[:8]}"
-                f"{'…' if len(missing) > 8 else ''} — enabling statistics "
-                "over a pre-existing index needs a backfill first "
-                "(streaming.neardup.backfill_stats writes one base part "
-                "over the current survivors), otherwise merged_stats "
-                "would silently profile only post-enablement batches"
-            )
-
-    def _on_claim(keys: list[str]) -> None:
-        if "stats" in keys:
-            _require_stats_coverage()
-
-    def _stats_transition(old: bool, new: bool) -> None:
-        """Enabling statistics on an index fingerprinted WITHOUT them is
-        legitimate once the parts cover the existing survivors (the
-        backfill_stats upgrade path) — without this route every
-        post-fingerprint index would need a rebuild just to turn stats
-        on. Disabling stays refused: later batches would stop writing
-        parts and merged_stats would silently become a partial profile."""
-        if old is False and new is True:
-            _require_stats_coverage()
-            return
-        raise ValueError(
-            "near-dup ingest: disabling statistics mid-stream would leave "
-            "merged_stats a partial profile of only the pre-disable "
-            "batches; keep stats_dir set (or rebuild the index)"
-        )
 
     # per-stream hoisted pieces — built ONCE per ingest instead of once
     # per micro-batch. Column expressions are immutable and reusable
@@ -331,10 +264,6 @@ def make_near_dup_ingest(
             lambda: compact_rows_parts(spark, index_dir, batch_id),
             lambda: compact_rows_parts(spark, survivors_dir, batch_id),
         ]
-        if stats_dir is not None:
-            from ..operators.incstats import compact_stats_parts
-
-            jobs.append(lambda: compact_stats_parts(spark, stats_dir, batch_id))
         run_together(spark, jobs)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -354,12 +283,9 @@ def make_near_dup_ingest(
             "neardup-knobs/v1",
             knobs,
             mismatch_hint=(
-                "band rows from different LSH shapes are not comparable "
-                "(and stats coverage must span the whole stream); rebuild "
-                "the index or restore the original configuration"
+                "band rows from different LSH shapes are not comparable; "
+                "rebuild the index or restore the original configuration"
             ),
-            on_claim=_on_claim,
-            transitions={"stats": _stats_transition},
         )
         # batch-id collision guard: the own-batch replay exclusion below
         # assumes batch ids are unique for the index's LIFETIME, but
@@ -535,8 +461,8 @@ def make_near_dup_ingest(
                 .persist()
             )
 
-            # the index write, the summary part, and the stats part are
-            # INDEPENDENT sinks over already-persisted relations — run
+            # the index write and the summary part are INDEPENDENT
+            # sinks over already-persisted relations — run
             # them concurrently instead of serially (guide §2.6). Each
             # write is still its own batch-keyed idempotent dynamic
             # overwrite, so the crash-window states are exactly the ones
@@ -565,19 +491,6 @@ def make_near_dup_ingest(
                     .partitionBy("_batch_id")
                     .parquet(summary_dir)
                 )
-                if stats_dir is not None:
-                    from ..operators.incstats import write_stats_part
-
-                    # length_of: the text-length histogram rides every
-                    # part, so snapshot gates get distributional drift
-                    # rules (p50/p90 ratios) for free
-                    write_stats_part(
-                        novel.drop("_batch_id"),
-                        [doc_id, text_col],
-                        stats_dir,
-                        batch_id,
-                        length_of=[text_col],
-                    )
 
             run_together(spark, [_write_index, _write_summary])
         finally:
@@ -587,34 +500,6 @@ def make_near_dup_ingest(
                 rows.unpersist()
 
     return ingest
-
-
-def backfill_stats(
-    spark,
-    survivors_dir: str,
-    stats_dir: str,
-    columns: list[str],
-    *,
-    length_of: list[str] | None = None,
-) -> None:
-    """One-time upgrade path for enabling ``stats_dir`` on an index that
-    predates statistics: write a single BASE stats part (``_batch_id`` =
-    −1) over the current survivor corpus, so ``merged_stats`` covers
-    pre-enablement batches too and the ingest's coverage check passes.
-    Run it while the stream is STOPPED (the base must cover everything
-    already committed); later compactions fold the base part forward like
-    any other old part. One full scan of the survivors — paid once, at
-    upgrade, never per batch. No pipeline calls it: it is the remedy the
-    ingest's stats-coverage error names."""
-    from ..operators.incstats import write_stats_part
-
-    write_stats_part(
-        read_survivors(spark, survivors_dir),
-        columns,
-        stats_dir,
-        _BASE_PART,
-        length_of=length_of,
-    )
 
 
 def read_survivors(spark, survivors_dir: str) -> DataFrame:
